@@ -180,13 +180,3 @@ def file_extension(col: Column | str, default: str = ".jpg") -> Column:
     """
     ext = F.regexp_extract(_c(col), r"(\.[A-Za-z0-9]+)(?:\?|$)", 1)
     return F.when(ext == "", F.lit(default)).otherwise(ext)
-
-
-def coalesce_blank(col: Column | str, *fallbacks: Column | str) -> Column:
-    """COALESCE that also treats '' as missing —
-    ``row.get(k) or fallback``
-    (utils/product_collection_img_array_processor.py:126,
-    utils/importer/ETL.py:524-529).
-    """
-    exprs = [clean_string(col)] + [clean_string(f) for f in fallbacks]
-    return F.coalesce(*exprs)

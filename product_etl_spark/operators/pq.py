@@ -14,12 +14,10 @@ Design (Spark-first):
 
 - Codebooks are DRIVER STATE by contract: m*k*dsub floats (e.g.
   8*16*8 = 1024) — the same "k·dim is small" contract as IVF
-  centroids. They inline into Catalyst literal expressions, so both
-  encode and ADC are PURE MAP operators: no join, no shuffle
-  (plan-asserted in tests/test_pq.py). The scoring lambdas evaluate
-  as CodegenFallback expressions (see _code_expr for why that beats
-  the unrolled form janino rejects); pq_encode_fast is the
-  Arrow-batched numpy path for bulk throughput.
+  centroids. They ship inside the closures of two Arrow-batched
+  pandas UDF kernels (``V.pq_codes_udf`` and ``V.adc_dist2_udf`` in
+  functions/vectors.py), so both encode and ADC are PURE MAP
+  operators: no join, no shuffle (plan-asserted in tests/test_pq.py).
 - ``md5_codebooks`` gives deterministic, engine-portable codebooks
   (the ``hyperplanes`` recipe from similarity.py) so the DuckDB
   oracle can reproduce encode/ADC bit-for-bit; ``train_codebooks``
@@ -44,9 +42,10 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from product_etl_spark.functions import vectors as V
 
 Codebooks = list[list[list[float]]]  # [subspace][code][dim_within_sub]
 
@@ -91,124 +90,14 @@ def _sub(emb_col: str, s: int, dsub: int) -> F.Column:
     return F.slice(F.col(emb_col), s * dsub + 1, dsub)
 
 
-def _c2_literal(centroid: list[float]) -> float:
-    """||c||^2 as a left-fold in element order (the same order both
-    engines would use) — computed once in Python, embedded as one
-    literal."""
-    acc = 0.0
-    for v in centroid:
-        acc = acc + float(v) * float(v)
-    return acc
-
-
-def _code_expr(emb_col: str, s: int, codebooks: Codebooks) -> F.Column:
-    """0-based code for subspace s: FIRST index of the min score
-    (``||c||^2 - 2<x,c>``; the ``||x||^2`` term is constant across
-    the argmin so squared-L2 ordering is preserved) over the k literal
-    centroids — ties -> lowest code via struct array_min ordering by
-    (score, code), identical to DuckDB's list_position on the min.
-
-    Shape: ONE transform-lambda over a literal array of
-    (c2, centroid) structs, with the dot as aggregate(zip_with(...)).
-    Higher-order functions are CodegenFallback (interpreted), which
-    here is DELIBERATE: the fully unrolled element_at form compiled
-    to a ~16k-line single processNext() that janino rejected — the
-    stage fell back to interpreted ANYWAY and paid a multi-second
-    failed compile per plan. The lambda form has the same IEEE fold
-    order (elementwise products left-folded from 0.0), a tiny tree,
-    and no compile at all. The THROUGHPUT path for bulk encoding is
-    pq_encode_fast (Arrow-batched numpy)."""
-    return F.expr(_code_sql(emb_col, s, codebooks))
-
-
-def _code_sql(emb_col: str, s: int, codebooks: Codebooks) -> str:
-    """SQL-string form of _code_expr, so callers can compose it inside
-    larger guarded expressions (pq_encode wraps the m-code array in
-    sq._row_guard, which is string-level)."""
-    dsub = len(codebooks[0][0])
-    start = s * dsub + 1
-    book = ", ".join(
-        f"named_struct('c2', {_c2_literal(c)!r}D, 'cent', array("
-        + ", ".join(f"{float(v)!r}D" for v in c)
-        + "))"
-        for c in codebooks[s]
-    )
-    dot = (
-        f"aggregate(zip_with(slice({emb_col}, {start}, {dsub}), b.cent, "
-        "(x, y) -> CAST(x AS DOUBLE) * y), CAST(0.0 AS DOUBLE), "
-        "(acc, v) -> acc + v)"
-    )
-    return (
-        f"CAST(array_min(transform(array({book}), (b, i) -> "
-        f"named_struct('score', (b.c2 - (2.0D * {dot})), 'code', i)"
-        ")).code AS INT)"
-    )
-
-
-def _pq_codes_arrow_udf(codebooks: Codebooks, dim: int, fn_name: str = "pq_encode"):
-    """Arrow-batched PQ encode, BIT-IDENTICAL to the ``_code_sql``
-    expression path (r15 verdict item 4, guide §4.2): per subspace,
-    the k dot products fold left-to-right via ``np.cumsum`` over the
-    elementwise product rows (cumsum must emit every prefix, so it
-    cannot reassociate — the `_dot64_exact_udf` argument), the score
-    is the same two IEEE ops (``c2 - (2.0 * dot)``) with the SAME
-    ``_c2_literal`` left-fold constants, and ``np.argmin`` returns
-    the FIRST minimum exactly like the struct ``array_min`` tie rule.
-    The old interpreted CodegenFallback lambdas evaluated m*k folds
-    per ROW in the JVM's tree walker; here they run as m vectorized
-    batch kernels (verified equal on every sf0.1 row before the swap;
-    oracle hashes unchanged).
-
-    The ``sq._row_guard`` contract rides along: wrong-length or
-    NULL-element rows RAISE with the same message shape. One
-    deliberate tightening: a NaN element also raises — Arrow lands
-    NULL elements as NaN, so the two are indistinguishable here, and
-    a NaN embedding would have encoded to garbage under the old
-    guard anyway. Defined as a closure so cloudpickle ships it BY
-    VALUE (workers need no importable package)."""
-    m, k, dsub = _check_books(codebooks, dim)
-    C_rows = [[list(map(float, c)) for c in b] for b in codebooks]
-    c2_rows = [[_c2_literal(c) for c in b] for b in codebooks]
-
-    @F.pandas_udf("array<int>")
-    def _codes(xs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        va = xs.values
-        n = len(va)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        ok = True
-        try:
-            X = np.stack(va).astype(np.float64, copy=False)
-            ok = X.shape[1] == dim and not np.isnan(X).any()
-        except Exception:  # noqa: BLE001 — ragged/None rows
-            ok = False
-        if not ok:
-            for v in va:
-                bad = (
-                    v is None
-                    or len(v) != dim
-                    or np.isnan(np.asarray(v, dtype=np.float64)).any()
-                )
-                if bad:
-                    size = "NULL" if v is None else str(len(v))
-                    raise ValueError(
-                        f"{fn_name}: embedding must be {dim} non-null "
-                        f"floats, got size {size}"
-                    )
-            raise ValueError(f"{fn_name}: embedding guard failed")
-        C = np.asarray(C_rows, dtype=np.float64)  # (m, k, dsub)
-        c2 = np.asarray(c2_rows, dtype=np.float64)  # (m, k)
-        codes = np.empty((n, m), dtype=np.int32)
-        for s in range(m):
-            Xs = X[:, s * dsub:(s + 1) * dsub]  # (n, dsub)
-            prod = Xs[:, None, :] * C[s][None, :, :]  # (n, k, dsub)
-            dots = np.cumsum(prod, axis=2)[:, :, -1]  # left fold
-            codes[:, s] = np.argmin(c2[s][None, :] - 2.0 * dots, axis=1)
-        return pd.Series(list(codes))
-
-    return _codes
+# Why encode and ADC run as Arrow kernels and not as Catalyst
+# expressions: the fully unrolled element_at form of the m*k score
+# folds compiled to a ~16k-line method that janino rejected, so the
+# stage fell back to interpreted execution AND paid a multi-second
+# failed compile per plan; the zip_with/aggregate lambda form avoided
+# the compile but ran every fold per ROW in the interpreter
+# (CodegenFallback). The kernels keep the same IEEE fold order with
+# neither cost — do not "inline" them back into unrolled SQL.
 
 
 def pq_encode(
@@ -217,168 +106,25 @@ def pq_encode(
     codebooks: Codebooks,
     out_col: str = "pq_code",
     dim: int = 64,
-    check_dim: bool = True,
 ) -> DataFrame:
-    """Map-only PQ encode: ``out_col`` is an array<int> of m codes.
-    No shuffle, no UDF — m*k literal score expressions evaluated
-    JVM-side. At m=8,k=16 the array fits 4 bits per
+    """Map-only PQ encode: ``out_col`` is an array<int> of m codes,
+    computed by one Arrow-batched pandas UDF (``V.pq_codes_udf``) with
+    no join and no shuffle. At m=8,k=16 the array fits 4 bits per
     entry; stored as int for parquet simplicity (dictionary encoding
-    collapses it on disk). ``check_dim=False`` skips the first()
-    probe for callers that already validated the frame (the training
-    loop re-encodes the same persisted corpus every round)."""
-    m, _, _ = _check_books(codebooks, dim)
-    # Loud dim guard (similarity._check_dim recipe): a short or
-    # NULL-element slice yields NULL scores, NULL sorts FIRST in the
-    # struct array_min, so every corrupt row would encode as code 0 —
-    # silently poisoning every downstream ADC/dedup rank. The guard is
-    # therefore PER-ROW (sq._row_guard: size == dim AND no NULL
-    # elements, else raise_error) on batch AND streaming — a short row
-    # hiding behind a valid first row must fail the job, not encode.
-    # Batch additionally keeps the eager first() probe so an
-    # obviously-wrong frame fails at build time, before any job runs.
+    collapses it on disk).
+
+    Loud dim guard: the kernel RAISES on any NULL, wrong-length or
+    NULL/NaN-element row, on batch AND streaming frames — a corrupt
+    row hiding behind valid ones must fail the job, not encode to a
+    plausible code. Batch frames also get the eager first() probe
+    (similarity._check_dim), so an obviously-wrong frame fails at
+    build time, before any job runs."""
+    _check_books(codebooks, dim)
     from product_etl_spark.operators.similarity import _check_dim
 
-    # Arrow-batched cumsum kernel (r16, guide §4.2) — bit-identical
-    # scores/ties to the old _code_sql interpreted lambdas (see
-    # _pq_codes_arrow_udf; equality verified on every sf0.1 row) with
-    # the per-row _row_guard contract enforced inside the kernel, so
-    # BOTH check_dim paths keep the fail-loudly behavior. The eager
-    # first() probe stays on the batch path so an obviously-wrong
-    # frame still fails at build time, before any job runs.
-    codes = _pq_codes_arrow_udf(codebooks, dim)(F.col(emb_col))
-    if check_dim and not df.isStreaming:
+    if not df.isStreaming:
         _check_dim(df, emb_col, dim)
-    return df.withColumn(out_col, codes)
-
-
-def pq_encode_fast(
-    df: DataFrame,
-    emb_col: str,
-    codebooks: Codebooks,
-    out_col: str = "pq_code",
-    dim: int = 64,
-) -> DataFrame:
-    """Arrow-batched numpy encode — the bulk-throughput path for
-    index builds: one einsum per batch instead of per-row interpreted
-    lambdas. At 200k x 64 dims on local[32] the measured gap over the
-    expression path is ~1.4x (Arrow transfer of the embeddings
-    dominates; tools/bench_pq.py) and grows with batch size and
-    vector width. Same argmin score (``||c||^2 - 2<x,c>``) and
-    the same ties->lowest-code rule (np.argmin returns the first
-    minimum), but numpy's dot uses pairwise summation while the
-    expression path folds left — on an exact score tie at the double
-    ULP level the chosen code can differ. Use ``pq_encode`` where
-    bit-parity with the DuckDB oracle is the contract; this
-    everywhere else."""
-    import numpy as np
-
-    m, k, dsub = _check_books(codebooks, dim)
-    from product_etl_spark.operators.similarity import _check_dim
-
-    _check_dim(df, emb_col, dim)
-    C = np.asarray(codebooks, dtype=np.float64)  # (m, k, dsub)
-    c2 = np.einsum("mkd,mkd->mk", C, C)  # (m, k)
-    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
-
-    out_schema = StructType(
-        df.schema.fields
-        + [StructField(out_col, ArrayType(IntegerType()))]
-    )
-
-    def encode_batches(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                pdf[out_col] = []
-                yield pdf
-                continue
-            X = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[emb_col]]
-            ).reshape(n, m, dsub)
-            dots = np.einsum("nmd,mkd->nmk", X, C)  # (n, m, k)
-            codes = np.argmin(c2[None, :, :] - 2.0 * dots, axis=2)
-            pdf = pdf.copy()
-            pdf[out_col] = [row.astype("int32") for row in codes]
-            yield pdf
-
-    return df.mapInPandas(encode_batches, out_schema)
-
-
-def _adc_dist2_arrow_udf(codebooks: Codebooks, dim: int):
-    """Arrow-batched asymmetric squared distance, BIT-IDENTICAL to
-    the generated zip_with/aggregate expression chain (r15 verdict
-    item 4, guide §4.2): per subspace the (x - c)^2 terms fold
-    left-to-right via ``np.cumsum`` (cannot reassociate), and the m
-    subspace terms accumulate in subspace order exactly like the
-    generated ``((0 + t0) + t1) ...`` SQL tree. Replaces m
-    interpreted CodegenFallback folds per ROW with m vectorized
-    batch kernels (equality verified on every sf0.1 scored pair
-    before the swap; q116 oracle hash unchanged).
-
-    NULL semantics mirror the expression chain where reachable: a
-    NULL query embedding or NULL code array yields NULL (row-exact
-    fallback); a NULL *element* inside an otherwise-valid row lands
-    as NaN on the vectorized path (the `_dot64_exact_udf` caveat —
-    unobservable behind pq_encode's row guard and pq_adc_topk's
-    query-side dim check). Closure-defined so cloudpickle ships it
-    by value."""
-    m, k, dsub = _check_books(codebooks, dim)
-    C_rows = [[list(map(float, c)) for c in b] for b in codebooks]
-
-    @F.pandas_udf("double")
-    def _adc(xq: pd.Series, xc: pd.Series) -> pd.Series:
-        import numpy as np
-
-        vq, vc = xq.values, xc.values
-        try:
-            Q = np.stack(vq).astype(np.float64, copy=False)
-            Kc = np.stack(vc).astype(np.int64, copy=False)
-            if Q.shape[1] != dim or Kc.shape[1] != m:
-                raise ValueError("shape")
-            C = np.asarray(C_rows, dtype=np.float64)
-            total = np.zeros(len(vq))
-            for s in range(m):
-                cent = C[s][Kc[:, s]]  # (n, dsub) gather
-                d = Q[:, s * dsub:(s + 1) * dsub] - cent
-                total = total + np.cumsum(d * d, axis=1)[:, -1]
-            return pd.Series(total)
-        except Exception:  # noqa: BLE001 — NULL/ragged rows: row-exact
-            out = []
-            for qv, cv in zip(vq, vc):
-                if qv is None or cv is None:
-                    out.append(None)
-                    continue
-                if len(cv) < m:
-                    # element_at past the end raises under ANSI — keep
-                    # the expression chain's loudness
-                    raise ValueError(
-                        f"pq ADC: code array holds {len(cv)} entries, "
-                        f"need {m}"
-                    )
-                total, bad = 0.0, False
-                for s in range(m):
-                    code = cv[s]
-                    if code is None or len(qv) < (s + 1) * dsub:
-                        # NULL code -> NULL centroid; short slice ->
-                        # zip_with NULL pad: either poisons the fold
-                        bad = True
-                        break
-                    cent = C_rows[s][int(code)]
-                    acc = 0.0
-                    for j in range(dsub):
-                        x = qv[s * dsub + j]
-                        if x is None:
-                            bad = True
-                            break
-                        dd = float(x) - cent[j]
-                        acc = acc + dd * dd
-                    if bad:
-                        break
-                    total = total + acc
-                out.append(None if bad else total)
-            return pd.Series(out, dtype="float64")
-
-    return _adc
+    return df.withColumn(out_col, V.pq_codes_udf(codebooks)(F.col(emb_col)))
 
 
 def _with_adc_dist2(
@@ -388,37 +134,12 @@ def _with_adc_dist2(
     codebooks: Codebooks,
     out_col: str = "adc_dist2",
 ) -> DataFrame:
-    """Asymmetric squared distance: full-precision query subvector vs
-    the corpus row's code-selected centroid, looked up by indexing a
-    literal array-of-arrays (pure expression, no join). Generated as
-    Spark SQL strings (py4j Column construction costs seconds per
-    query for trees this size; one F.expr is a single round-trip and
-    a fast JVM parse). The selected
-    centroid per subspace goes through an INTERMEDIATE ``_cent{s}``
-    column: it is referenced in the distance terms, and
-    CollapseProject deliberately keeps multiply-referenced non-cheap
-    aliases, so the 16x-k*dsub codebook literal lands in the analyzed
-    plan ONCE per subspace instead of 16x. Term order matches the
-    generated oracle SQL exactly.
-
-    The distance itself is deliberately a zip_with/aggregate lambda,
-    NOT an unrolled element_at chain: the scoring projection gets
-    fused under the top-k window's pre-shuffle Sort
-    (WindowGroupLimit partial), and the unrolled form inflated that
-    single sort_addToSorter method past what janino can compile —
-    the stage then fell back to FULLY interpreted execution AND paid
-    a multi-second failed compile per query. The lambda evaluates as
-    a CodegenFallback expression inside an otherwise small, compiled
-    stage. IEEE fold order is identical either way (element order,
-    left fold from 0.0)."""
-    m, dsub = len(codebooks), len(codebooks[0][0])
-    # Arrow-batched cumsum kernel (r16, guide §4.2) — bit-identical
-    # folds and subspace accumulation order (see _adc_dist2_arrow_udf;
-    # equality verified on every sf0.1 scored pair). The old
-    # generated-SQL chain stays documented above because its janino
-    # lesson still governs anyone tempted to unroll: this kernel
-    # removes the interpreted per-row folds entirely instead.
-    udf = _adc_dist2_arrow_udf(codebooks, m * dsub)
+    """Asymmetric squared distance: full-precision query embedding vs
+    the corpus row's code-selected centroids, by one Arrow-batched
+    pandas UDF (``V.adc_dist2_udf``) whose term order matches the
+    generated oracle SQL (``pq_adc_oracle_terms``) exactly."""
+    _check_books(codebooks, len(codebooks) * len(codebooks[0][0]))
+    udf = V.adc_dist2_udf(codebooks)
     return df.withColumn(out_col, udf(F.col(q_emb), F.col(code_col)))
 
 
@@ -508,10 +229,13 @@ def train_codebooks(
     from product_etl_spark.operators.similarity import _check_dim
 
     corpus = corpus.select(emb_col).persist()
-    _check_dim(corpus, emb_col, dim)  # once; the loop skips it
+    # probe once; each round applies the encode kernel directly
+    _check_dim(corpus, emb_col, dim)
     try:
         for _ in range(n_iters):
-            coded = pq_encode(corpus, emb_col, books, dim=dim, check_dim=False)
+            coded = corpus.withColumn(
+                "pq_code", V.pq_codes_udf(books)(F.col(emb_col))
+            )
             exploded = coded.select(
                 F.explode(
                     F.array(
@@ -549,7 +273,7 @@ def quantization_error(
     _check_books(codebooks, dim)
     coded = pq_encode(df, emb_col, codebooks, dim=dim)
     # reconstruction error IS the asymmetric distance of a vector to
-    # its own code — reuse the ADC expression
+    # its own code — reuse the ADC kernel
     row = (
         _with_adc_dist2(coded, emb_col, "pq_code", codebooks, out_col="_re")
         .select(F.avg("_re").alias("mse"))
@@ -572,12 +296,12 @@ def build_ivf_pq_index(
     dim: int = 64,
 ) -> DataFrame:
     """The IVF-PQ index frame: (neighbor_id, list_id, pq_code) — one
-    map-only pass (literal-argmin list assignment + literal-codebook
+    map-only pass (literal-argmin list assignment + Arrow-kernel
     encode, no shuffle). BUILD ONCE, QUERY MANY: persist this (or
     write it partitioned by list_id, the write_ivf_index recipe) —
-    the combined assign+encode projection is a large expression tree,
-    and re-deriving it inside every query's AQE re-optimizations
-    costs far more than materializing the 4-bytes-per-row result."""
+    the assign expression tree is large, and re-deriving it inside
+    every query's AQE re-optimizations costs far more than
+    materializing the 4-bytes-per-row result."""
     from product_etl_spark.operators.similarity import _with_list_id
 
     return pq_encode(
@@ -598,7 +322,6 @@ def _probe_lists(
     in-memory and persisted IVF-PQ query paths so probe tie-breaking
     and the query-side dim guard live in ONE place. Returns
     (query_id, _q_emb, list_id)."""
-    from product_etl_spark.functions import vectors as V
     from product_etl_spark.operators.similarity import _check_dim
 
     _check_dim(queries, query_emb, dim)
@@ -642,7 +365,7 @@ def knn_ivf_pq(
     200k vectors, tools/bench_pq.py).
 
     Composition of audited parts: ivf_assign (literal-argmin map),
-    pq_encode (literal map), the query->probe-list broadcast join
+    pq_encode (Arrow-kernel map), the query->probe-list broadcast join
     from knn_ivf, and the bounded single-window ADC top-k from
     pq_adc_topk (``n_salt>1`` engages the salted two-phase rank)."""
     coded = (
@@ -783,7 +506,7 @@ def knn_ivf_pq_index(
 
 def _sql_sub_score(emb: str, s: int, dsub: int, centroid: list[float]) -> str:
     """``||c||^2 - 2<x,c>`` with the dot left-folded in element
-    order — the exact arithmetic the _code_expr lambda performs for
+    order — the exact arithmetic ``V.pq_codes_udf`` performs for
     Spark, so the IEEE double matches bit-for-bit."""
     dot = "CAST(0.0 AS DOUBLE)"
     for j, v in enumerate(centroid):
@@ -791,7 +514,7 @@ def _sql_sub_score(emb: str, s: int, dsub: int, centroid: list[float]) -> str:
             f"({dot} + (CAST({emb}[{s * dsub + j + 1}] AS DOUBLE)"
             f" * CAST({float(v)!r} AS DOUBLE)))"
         )
-    c2 = _c2_literal(centroid)
+    c2 = V.sq_norm_fold(centroid)
     return (
         f"(CAST({c2!r} AS DOUBLE) - (CAST(2.0 AS DOUBLE) * {dot}))"
     )

@@ -11,15 +11,15 @@
   trade-off (probe neighboring buckets for higher recall).
 
 Hyperplanes are md5-derived constants (portable + reproducible in
-the DuckDB oracle); vector math is zip_with/aggregate — JVM-side,
-no UDF.
+the DuckDB oracle); norms are zip_with/aggregate expressions and
+per-pair dots run on the bit-exact Arrow kernel ``V.dot_udf``
+(functions/vectors.py).
 """
 
 from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -209,7 +209,7 @@ def knn_bruteforce(
     ).select(
         query_id_col,
         F.col(id_col).alias("neighbor_id"),
-        V.safe_cosine(_dot64_exact_udf()(F.col("_q_emb"), F.col(emb_col)), F.col("_q_norm"), F.col("_c_norm")).alias("sim"),
+        V.safe_cosine(V.dot_udf()(F.col("_q_emb"), F.col(emb_col)), F.col("_q_norm"), F.col("_c_norm")).alias("sim"),
     )
     return topk_per_key(
         sims,
@@ -534,7 +534,7 @@ def knn_ivf(
     ).select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
-        V.safe_cosine(_dot64_exact_udf()(F.col("_q_emb"), F.col(emb_col)), F.col("_q_norm"), F.col("_c_norm")).alias("sim"),
+        V.safe_cosine(V.dot_udf()(F.col("_q_emb"), F.col(emb_col)), F.col("_q_norm"), F.col("_c_norm")).alias("sim"),
     )
     return topk_per_key(
         sims,
@@ -572,7 +572,7 @@ def knn_lsh(
     ).select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
-        V.safe_cosine(_dot64_exact_udf()(F.col("_q_emb"), F.col(emb_col)), F.col("_q_norm"), F.col("_c_norm")).alias("sim"),
+        V.safe_cosine(V.dot_udf()(F.col("_q_emb"), F.col(emb_col)), F.col("_q_norm"), F.col("_c_norm")).alias("sim"),
     )
     return topk_per_key(
         sims,
@@ -581,71 +581,6 @@ def knn_lsh(
         k,
         rank_col="rn",
     ).select("query_id", "neighbor_id", F.round("sim", 4).alias("cos_sim"))
-
-
-def _dot64_exact_udf(nondeterministic: bool = False):
-    """Arrow-batched dot product BIT-IDENTICAL to ``V.dot``'s
-    interpreted fold (guide §4.2: hand whole batches to vectorized
-    native code; here without giving up the exact-hash contract).
-    ``V.dot`` casts each float to double, multiplies in double, and
-    folds left with ``acc + x`` from 0.0 — ``np.cumsum`` over the
-    elementwise product row is the SAME left-to-right IEEE addition
-    chain (cumsum must emit every prefix, so it cannot reassociate),
-    so the last prefix equals the fold bit-for-bit (verified: 0
-    mismatches over 41k real pairs + all norms at sf0.1). Defined as
-    a closure so cloudpickle ships it BY VALUE — Python workers need
-    no importable product_etl_spark on their path (driver contract).
-
-    Mirrors ``zip_with`` length semantics: unequal lengths pad with
-    NULL, which poisons the fold — return NULL; empty arrays fold to
-    the 0.0 seed. NULL contract caveat (r15 ADVICE): a NULL *element*
-    inside an equal-length pair reaches the vectorized path as NaN
-    (Arrow has no per-element null lane in the numpy conversion), so
-    the kernel yields NaN where ``V.dot``'s fold yields NULL. Every
-    current caller consumes the dot through ``safe_cosine`` whose
-    ``V.norm`` leg nulls the same rows, so the difference is
-    unobservable; a future caller filtering on the RAW dot must not
-    rely on NULL-vs-NaN distinction for in-array nulls (the row-exact
-    fallback below does return NULL for them). ``nondeterministic=True``
-    marks the UDF so a
-    FILTER directly on its output is not duplicated below the Python
-    node (guide §4.4) — pass it ONLY at such sites: the marker also
-    blocks subtree deduplication/exchange reuse, which quadrupled the
-    recall audits' broadcast-join legs when applied blanket
-    (measured: q202 2.4s -> 10s)."""
-    @F.pandas_udf("double")
-    def _dot(xa: pd.Series, xb: pd.Series) -> pd.Series:
-        import numpy as np
-
-        va, vb = xa.values, xb.values
-        try:
-            A = np.stack(va).astype(np.float64, copy=False)
-            B = np.stack(vb).astype(np.float64, copy=False)
-            if A.shape != B.shape:
-                raise ValueError("ragged")
-            if A.shape[1] == 0:
-                return pd.Series(np.zeros(len(va)))
-            return pd.Series(np.cumsum(A * B, axis=1)[:, -1])
-        except Exception:  # noqa: BLE001 — ragged/None rows: row-exact path
-            out = []
-            for a, b in zip(va, vb):
-                if a is None or b is None or len(a) != len(b):
-                    out.append(None)
-                    continue
-                acc = 0.0
-                for x, y in zip(a, b):
-                    if x is None or y is None:
-                        # a NULL element poisons V.dot's fold to NULL;
-                        # float(None) would instead kill the task — at
-                        # 100 TB one corrupt row must not fail the
-                        # stage (r15 verdict item 2)
-                        acc = None
-                        break
-                    acc += float(x) * float(y)
-                out.append(acc)
-            return pd.Series(out, dtype="float64")
-
-    return _dot.asNondeterministic() if nondeterministic else _dot
 
 
 def cosine_near_dup_pairs(
@@ -691,8 +626,8 @@ def cosine_near_dup_pairs(
     # Per-PAIR dot via the Arrow-batched bit-exact kernel: the
     # interpreted zip_with/aggregate fold was the block's O(cell^2)
     # hot loop (guide §4.2); sim values are unchanged bit-for-bit
-    # (see _dot64_exact_udf), so oracle parity is unaffected.
-    dot64 = _dot64_exact_udf(nondeterministic=True)
+    # (see V.dot_udf), so oracle parity is unaffected.
+    dot64 = V.dot_udf(nondeterministic=True)
     return (
         a.join(b, ["_blk"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -801,7 +736,7 @@ def knn_ivf_index(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
         V.safe_cosine(
-            _dot64_exact_udf()(F.col("_q_emb"), F.col(emb_col)),
+            V.dot_udf()(F.col("_q_emb"), F.col(emb_col)),
             F.col("_q_norm"),
             F.col("_c_norm"),
         ).alias("sim"),
@@ -813,194 +748,6 @@ def knn_ivf_index(
         k,
         rank_col="rn",
     ).select("query_id", "neighbor_id", F.round("sim", 4).alias("cos_sim"))
-
-
-def cosine_near_dup_pairs_fast(
-    corpus: DataFrame,
-    emb_col: str,
-    id_col: str,
-    block_col: str,
-    threshold: float = 0.9,
-    max_block_rows: int = 8192,
-    chunk_rows: int = 1024,
-) -> DataFrame:
-    """Arrow-batched numpy twin of ``cosine_near_dup_pairs`` — the
-    BULK-THROUGHPUT path for SemDeDup sweeps (the pq_encode_fast
-    pattern): one normalized matmul per block instead of an
-    interpreted zip_with per pair. Measured 4.6x on q92's workload
-    (1.37 s -> 0.30 s at sf0.1, 2k vectors / ~5 label blocks — Arrow
-    transfer dominates at this size; the gap widens with block size
-    since BLAS matmul replaces a per-pair interpreted lambda).
-
-    Same semantics: (id_a < id_b) within-block pairs with cosine >=
-    threshold, zero-norm embeddings score 0 (the safe_cosine rule).
-    numpy's pairwise-summed dot differs from the expression path in
-    the last ulp, so sims can disagree below ~1e-12 — use the
-    expression path where bit-parity with an oracle is the contract,
-    this one everywhere else.
-
-    Scale contract: one pandas group per block value; a block larger
-    than ``max_block_rows`` RAISES (pre-split skewed blocks upstream,
-    operators/skew.py) — memory per group is bounded by
-    ``chunk_rows x block`` sims, O(chunk * n) not O(n^2), via
-    row-chunked matmuls."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    src = corpus.select(block_col, id_col, emb_col)
-    out_schema = StructType(
-        [
-            src.schema[block_col],
-            StructField("id_a", src.schema[id_col].dataType),
-            StructField("id_b", src.schema[id_col].dataType),
-            StructField("cos_sim", DoubleType()),
-        ]
-    )
-
-    def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n > max_block_rows:
-            raise ValueError(
-                f"cosine_near_dup_pairs_fast: block "
-                f"{pdf[block_col].iloc[0]!r} has {n} rows > "
-                f"max_block_rows={max_block_rows}; pre-split skewed "
-                "blocks (operators/skew.py) before the sweep"
-            )
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        X = np.array(
-            [np.asarray(v, dtype=np.float64) for v in pdf[emb_col]]
-        )
-        norms = np.linalg.norm(X, axis=1)
-        safe = norms.copy()
-        safe[safe == 0.0] = 1.0
-        U = X / safe[:, None]
-        U[norms == 0.0] = 0.0  # zero-norm rows -> sim 0 with everything
-        ids = pdf[id_col].to_numpy()
-        blk = pdf[block_col].iloc[0]
-        out_a, out_b, out_s = [], [], []
-        for lo in range(0, n, chunk_rows):
-            hi = min(lo + chunk_rows, n)
-            S = U[lo:hi] @ U.T  # (hi-lo, n)
-            for r in range(hi - lo):
-                i = lo + r
-                row = S[r, i + 1 :]  # ids sorted -> j > i means id_b > id_a
-                hits = np.nonzero(row >= threshold)[0]
-                if hits.size:
-                    out_a.extend([ids[i]] * hits.size)
-                    out_b.extend(ids[i + 1 :][hits])
-                    out_s.extend(row[hits])
-        return pd.DataFrame(
-            {
-                block_col: [blk] * len(out_a),
-                "id_a": np.asarray(out_a),
-                "id_b": np.asarray(out_b),
-                "cos_sim": np.round(np.asarray(out_s, dtype=np.float64), 4),
-            }
-        ) if out_a else pd.DataFrame(
-            {block_col: [], "id_a": [], "id_b": [], "cos_sim": []}
-        )
-
-    return src.groupBy(block_col).applyInPandas(per_block, out_schema)
-
-
-def knn_bruteforce_fast(
-    corpus: DataFrame,
-    queries: DataFrame,
-    emb_col: str,
-    id_col: str,
-    query_id_col: str = "query_id",
-    k: int = 5,
-    max_queries: int = 4096,
-) -> DataFrame:
-    """Arrow-batched numpy twin of ``knn_bruteforce`` (the
-    cosine_near_dup_pairs_fast pattern): queries collect to the
-    driver (BOUNDED — ``max_queries`` raises on violation, the same
-    small-query contract the expression path broadcasts under), the
-    corpus streams through mapInPandas computing a per-batch partial
-    top-k, and one final bounded window merges partials. The shuffle
-    carries at most ``k x n_batches x n_queries`` candidate rows —
-    never the corpus.
-
-    numpy's pairwise dot differs from the interpreted fold in the
-    last ulp, so a tie at the 4th decimal can order differently; use
-    the expression path where oracle bit-parity is the contract, this
-    one for bulk sweeps."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    q_rows = queries.select(id_col, emb_col).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"knn_bruteforce_fast: {len(q_rows)} queries exceed the "
-            f"small-query contract ({max_queries}); batch them or use "
-            "an index (knn_ivf / knn_ivf_pq)"
-        )
-    if not q_rows:
-        raise ValueError("knn_bruteforce_fast: empty query set")
-    q_ids = np.array([r[id_col] for r in q_rows])
-    Q = np.array([np.asarray(r[emb_col], dtype=np.float64) for r in q_rows])
-    qn = np.linalg.norm(Q, axis=1)
-    qn_safe = np.where(qn == 0.0, 1.0, qn)
-    UQ = Q / qn_safe[:, None]
-    UQ[qn == 0.0] = 0.0
-
-    src = corpus.select(id_col, emb_col)
-    out_schema = StructType(
-        [
-            StructField(query_id_col, src.schema[id_col].dataType),
-            StructField("neighbor_id", src.schema[id_col].dataType),
-            StructField("sim", DoubleType()),
-        ]
-    )
-
-    def partial_topk(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            X = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[emb_col]]
-            )
-            norms = np.linalg.norm(X, axis=1)
-            safe = np.where(norms == 0.0, 1.0, norms)
-            U = X / safe[:, None]
-            U[norms == 0.0] = 0.0
-            ids = pdf[id_col].to_numpy()
-            S = UQ @ U.T  # (n_q, n)
-            # self-matches excluded like the expression path
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(q_ids)):
-                row = S[qi]
-                mask = ids != q_ids[qi]
-                cand_idx = np.nonzero(mask)[0]
-                if cand_idx.size == 0:
-                    continue
-                take = min(k, cand_idx.size)
-                # top-k by (sim desc, id asc): argsort on (-sim, id)
-                order = np.lexsort((ids[cand_idx], -row[cand_idx]))[:take]
-                sel = cand_idx[order]
-                out_q.extend([q_ids[qi]] * take)
-                out_n.extend(ids[sel])
-                out_s.extend(row[sel])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        query_id_col: np.asarray(out_q),
-                        "neighbor_id": np.asarray(out_n),
-                        "sim": np.asarray(out_s, dtype=np.float64),
-                    }
-                )
-
-    partials = src.mapInPandas(partial_topk, out_schema)
-    return topk_per_key(
-        partials,
-        [query_id_col],
-        [F.desc("sim"), F.asc("neighbor_id")],
-        k,
-        rank_col="rn",
-    ).select(query_id_col, "neighbor_id", F.round("sim", 4).alias("cos_sim"))
 
 
 # ------------------------------------------------------- exact Lloyd step
@@ -1365,7 +1112,7 @@ def incremental_semdedup(
         "list_id",
         F.col("_mid"),
         V.safe_cosine(
-            _dot64_exact_udf()(F.col("_emb"), F.col("_memb")),
+            V.dot_udf()(F.col("_emb"), F.col("_memb")),
             F.col("_nrm"),
             F.col("_mnrm"),
         ).alias("_sim"),

@@ -1,5 +1,6 @@
 """Mergeable-sketch pre-aggregation (Apache DataSketches via the
-Spark 4 built-in `hll_*` / `theta_*` / `kll_*` functions).
+Spark 4 built-in `hll_*` / `theta_*` functions) plus portable
+hash-sample sketches (KMV overlap, bottom-k quantile sample).
 
 THE 100 TB pattern: scan the raw data ONCE into kilobyte-sized
 per-segment sketch partials, persist those, and answer every later
@@ -82,66 +83,6 @@ def theta_overlap(
             F.theta_sketch_estimate(F.theta_difference("a", "b")).alias("n_only_a"),
         )
     )
-
-
-def kll_partials(
-    df: DataFrame, group_cols: list[str], col: str, k: int = 200
-) -> DataFrame:
-    """Per-group KLL quantile sketches over a double column
-    (column ``sketch``): mergeable percentiles — the pre-aggregated
-    form of approx_percentile whose partials can be stored and
-    combined across ingest batches.
-
-    EVIDENCE SCOPE — local-only, NON-PORTABLE twin: KLL's compaction
-    coin-flips are engine-private (Spark's Datasketches build), so no
-    other engine can reproduce a sketch byte-for-byte and no ANSI
-    oracle can verify one — correctness is pinned by pytest rank-error
-    bounds only (tests/test_sketches.py). The CROSS-ENGINE quantile
-    path of record is the bottom-k sample
-    (``quantile_sample_partials`` / q169): a pure md5 predicate any
-    engine rebuilds cell-for-cell, driver-hash-verified. Prefer KLL
-    only when both writer and every reader are Spark and the tighter
-    space/error tradeoff matters; prefer q169's sample whenever a
-    replica, another engine, or an auditor must verify the state."""
-    return df.groupBy(*group_cols).agg(
-        F.kll_sketch_agg_double(F.col(col).cast("double"), F.lit(k)).alias("sketch")
-    )
-
-
-def kll_quantiles(
-    sketch_df: DataFrame, coarser_cols: list[str], probs: list[float]
-) -> DataFrame:
-    """Merge KLL partials to ``coarser_cols`` granularity and read
-    quantiles at ``probs`` (one output column per prob). Same
-    evidence scope as ``kll_partials``: Spark-only state, pytest
-    rank-error bounds; the portable/verifiable path is
-    ``quantile_sample_merge`` + ``quantile_sample_estimate``."""
-    # kll_sketch_merge_double is a binary scalar (left, right), not an
-    # aggregate: fold the group's partials with a JVM-side aggregate()
-    # HOF. The folded list is sketch-count-sized (days/batches), never
-    # data-sized, so collect_list here is a metadata-scale array.
-    merged = (
-        sketch_df.groupBy(*coarser_cols)
-        .agg(F.collect_list("sketch").alias("_sk"))
-        .withColumn(
-            "sketch",
-            F.aggregate(
-                F.slice(F.col("_sk"), 2, F.greatest(F.size("_sk") - 1, F.lit(0))),
-                F.element_at("_sk", 1),
-                lambda acc, x: F.kll_sketch_merge_double(acc, x),
-            ),
-        )
-    )
-    cols = [
-        # fixed-precision names: 0.5 -> p50, 1.0 -> p100 (a naive
-        # str-mangle gives ambiguous 'p5' and undotted-unselectable
-        # 'p1.0')
-        F.kll_sketch_get_quantile_double("sketch", F.lit(p)).alias(
-            f"p{int(round(p * 100)):02d}"
-        )
-        for p in probs
-    ]
-    return merged.select(*coarser_cols, *cols)
 
 
 #: Standard HLL alpha constants (Flajolet et al. 2007) for small m;
@@ -380,10 +321,10 @@ def quantile_sample_partials(
     UNIQUE row key is smallest per group, carrying ``val_col``.
     Output: (group..., hv, val), at most k rows per group.
 
-    This is the quantile member of the portable-sketch family: KLL
-    (kll_partials) stays the fast binary default, but its compaction
-    coin-flips make it engine-private; this sample is a pure hash
-    predicate, so any md5-capable engine rebuilds it cell-for-cell
+    This is the quantile member of the portable-sketch family: Spark's
+    built-in KLL sketch is smaller, but its compaction coin-flips make
+    it engine-private and unverifiable by an oracle; this sample is a
+    pure hash predicate, so any md5-capable engine rebuilds it cell-for-cell
     and a replica can VERIFY a sketch it didn't build. Hashing the
     unique key (not the value) keeps the sample uniform over ROWS —
     duplicated values occupy independent slots — which is what makes
@@ -492,8 +433,8 @@ def quantile_sample_estimate(
     for a deterministic row but an order-independent VALUE). One
     window sort over <= k rows per group plus one groupBy; every
     comparison is integer, so two engines cannot disagree on which
-    value is surfaced. Output column names follow the kll_quantiles
-    convention (0.5 -> p50)."""
+    value is surfaced. Output column names are fixed-precision
+    (0.5 -> p50, 1.0 -> p100)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(*group_cols).orderBy("val", "hv")

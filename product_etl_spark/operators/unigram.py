@@ -118,7 +118,7 @@ def min_pieces_costs(
 
     Scale shape: the piece inventory is vocab-bounded (collected and
     broadcast — raises over ``max_vocab_collect`` rather than
-    silently driver-OOMing, the knn_bruteforce_fast convention); the
+    silently driver-OOMing, the loud-bound convention); the
     DP is a map-only Arrow-batched stage over the DISTINCT-word
     frame, memoized per batch, O(len x max_piece_len) per word.
     """

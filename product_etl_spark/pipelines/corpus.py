@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from product_etl_spark.functions import text as T
@@ -151,13 +151,3 @@ def curate_corpus(
             train.agg(F.sum("n_tokens")).collect()[0][0] or 0
         )
     return train, val, rep
-
-
-def curate_documents_table(
-    spark: SparkSession, sf_dir: str, **kwargs
-) -> tuple[DataFrame, DataFrame, dict]:
-    """Convenience entry over the standard documents table."""
-    from product_etl_spark.session import load_tables
-
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    return curate_corpus(docs, "text", "doc_id", **kwargs)

@@ -54,19 +54,6 @@ def check_no_orphans(
     return CheckResult(f"no_orphans:{name}", n == 0, f"{n} orphans")
 
 
-def check_completeness(
-    df: DataFrame, col: str, min_pct: float, name: str
-) -> CheckResult:
-    """Column completeness percentage (verify_collections.py:49-66)."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"), F.count(col).alias("nn")
-    ).collect()[0]
-    pct = 100.0 * row["nn"] / row["n"] if row["n"] else 100.0
-    return CheckResult(
-        f"completeness:{name}.{col}", pct >= min_pct, f"{pct:.1f}% >= {min_pct}%"
-    )
-
-
 def check_inheritance(
     product: DataFrame, collection: DataFrame, name: str = "product_url_inheritance"
 ) -> CheckResult:

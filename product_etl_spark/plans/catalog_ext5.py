@@ -55,11 +55,12 @@ _Q115_SQL = f"""
 def q115_pq_codes(spark, sf_dir):
     """PQ-encode every embedding with the deterministic md5 codebooks
     (m=8 subspaces x k=16 centroids over 64 dims -> 4 bytes/vector,
-    a 64x corpus compression). PURE MAP — no join, no shuffle, no
-    UDF; the m*k squared-distance argmins are literal Catalyst
-    expressions inside whole-stage codegen (plan-asserted in
-    tests/test_pq.py). Codes surface as a '-'-joined string so the
-    driver hash is engine-portable."""
+    a 64x corpus compression). PURE MAP — no join, no shuffle
+    (plan-asserted in tests/test_pq.py); the m*k squared-distance
+    argmins run in one Arrow-batched pandas UDF (one ArrowEvalPython
+    node) whose left folds match the oracle SQL bit-for-bit. Codes
+    surface as a '-'-joined string so the driver hash is
+    engine-portable."""
     emb = _t(spark, sf_dir, "embeddings")
     coded = PQ.pq_encode(emb, "embedding", _BOOKS, dim=_DIM)
     return coded.select(

@@ -17,7 +17,7 @@ type-guard pattern — bad cells become NULL, not job failures).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 #: SQL type name (as written in the mapping's Type column, lowercased)
@@ -140,7 +140,3 @@ def translation_fields(
             field = raw_col.strip().lower().replace(" ", "_")
             out.append((raw_col, field))
     return out
-
-
-def apply_projection(df: DataFrame, cols: list[Column]) -> DataFrame:
-    return df.select(*cols)

@@ -30,16 +30,6 @@ from pyspark.sql import functions as F
 from product_etl_spark.functions import cleaners as C  # noqa: F401  (re-export for sinks)
 
 
-def read_event_stream(
-    spark: SparkSession, path: str, schema: str | None = None
-) -> DataFrame:
-    """File-source stream of event parquet/json drops."""
-    reader = spark.readStream
-    if schema:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
 def stream_events_rollup(
     events: DataFrame,
     window: str = "1 hour",

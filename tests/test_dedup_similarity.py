@@ -685,82 +685,22 @@ def test_canonical_by_quality_keeps_longest_then_lowest_id(spark):
     assert final.count("Exchange") == 1
 
 
-def test_cosine_fast_path_matches_expression_path(spark, sf_dir):
-    """The numpy blocked sweep must produce the same pair set and the
-    same (4-decimal) sims as the oracle-exact expression path on the
-    real embeddings table, including the zero-norm rule and the
-    skewed-block guard."""
-    import pytest
-
-    from product_etl_spark.operators.similarity import (
-        cosine_near_dup_pairs,
-        cosine_near_dup_pairs_fast,
-    )
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    slow = {
-        (r["label"], r["id_a"], r["id_b"]): r["cos_sim"]
-        for r in cosine_near_dup_pairs(
-            e, "embedding", "vec_id", "label", threshold=0.3
-        ).collect()
-    }
-    fast = {
-        (r["label"], r["id_a"], r["id_b"]): r["cos_sim"]
-        for r in cosine_near_dup_pairs_fast(
-            e, "embedding", "vec_id", "label", threshold=0.3
-        ).collect()
-    }
-    assert set(fast) == set(slow)
-    for k in slow:
-        assert abs(fast[k] - slow[k]) <= 1e-4  # one 4th-decimal ulp
-
-    # zero-norm embeddings pair at sim 0 (excluded at threshold 0.3)
-    import pyspark.sql.functions as F2
+def test_cosine_near_dup_pairs_zero_norm(spark):
+    """Zero-norm embeddings pair at sim 0 with everything (the
+    safe_cosine rule), so at threshold 0.3 only the real pair
+    survives."""
+    from product_etl_spark.operators.similarity import cosine_near_dup_pairs
 
     z = spark.createDataFrame(
         [(1, 100, [0.0, 0.0]), (1, 101, [1.0, 0.0]), (1, 102, [1.0, 0.0])],
         "label int, vec_id int, embedding array<float>",
     )
-    got = cosine_near_dup_pairs_fast(
+    got = cosine_near_dup_pairs(
         z, "embedding", "vec_id", "label", threshold=0.3
     ).collect()
-    assert [(r["id_a"], r["id_b"]) for r in got] == [(101, 102)]
-
-    with pytest.raises(Exception, match="max_block_rows"):
-        cosine_near_dup_pairs_fast(
-            e, "embedding", "vec_id", "label", threshold=0.3,
-            max_block_rows=5,
-        ).collect()
-    _ = F2
-
-
-def test_knn_fast_matches_expression_path(spark, sf_dir):
-    """knn_bruteforce_fast must return the same neighbors/sims as the
-    expression path on the real embeddings (ulp-level ties aside),
-    and enforce its query-set bound."""
-    import pytest
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") < 10)
-    slow = {
-        (r["query_id"], r["neighbor_id"]): r["cos_sim"]
-        for r in S.knn_bruteforce(emb, qs, "embedding", "vec_id", k=5).collect()
-    }
-    fast = {
-        (r["query_id"], r["neighbor_id"]): r["cos_sim"]
-        for r in S.knn_bruteforce_fast(
-            emb, qs, "embedding", "vec_id", k=5
-        ).collect()
-    }
-    assert set(fast) == set(slow)
-    for key in slow:
-        assert abs(fast[key] - slow[key]) <= 1e-4
-    with pytest.raises(ValueError, match="small-query contract"):
-        S.knn_bruteforce_fast(emb, emb, "embedding", "vec_id", max_queries=3)
-    with pytest.raises(ValueError, match="empty query set"):
-        S.knn_bruteforce_fast(
-            emb, emb.filter(F.lit(False)), "embedding", "vec_id"
-        )
+    assert [(r["id_a"], r["id_b"], r["cos_sim"]) for r in got] == [
+        (101, 102, 1.0)
+    ]
 
 
 def test_set_similarity_prefix_filter_lossless_at_boundary(spark):

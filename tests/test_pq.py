@@ -206,26 +206,6 @@ def test_train_codebooks_deterministic(planted):
     assert a == b
 
 
-def test_encode_fast_matches_expression_path(planted):
-    """The Arrow/numpy bulk encoder must produce the same codes as
-    the oracle-parity expression path (ties at double-ULP level are
-    the only theoretical divergence; none exist on this data)."""
-    books = PQ.md5_codebooks(8, 16, 8)
-    slow = {
-        r["vec_id"]: list(r["pq_code"])
-        for r in PQ.pq_encode(planted, "embedding", books).select(
-            "vec_id", "pq_code"
-        ).collect()
-    }
-    fast = {
-        r["vec_id"]: list(r["pq_code"])
-        for r in PQ.pq_encode_fast(planted, "embedding", books).select(
-            "vec_id", "pq_code"
-        ).collect()
-    }
-    assert slow == fast
-
-
 def test_query_dim_mismatch_raises(spark, planted):
     """A query frame with wrong-dim embeddings must fail LOUDLY —
     otherwise NULL distances sort NULLS FIRST and the top-k is

@@ -273,7 +273,7 @@ def test_semdedup_degenerate_cell_guard(spark):
     """A planted degenerate cell (all vectors collapsing onto one
     list_id) must FAIL the job loudly before the O(cell^2) pair join
     when it exceeds max_cell_size — the loud-guard convention
-    (interval_overlap_pairs, knn_bruteforce_fast, association_rules)
+    (interval_overlap_pairs, association_rules)
     — and run IDENTICALLY with the bound lifted."""
     import pytest
 

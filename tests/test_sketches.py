@@ -62,31 +62,6 @@ def test_theta_overlap_exact_below_nominal_entries(spark, sf_dir):
     assert got.n_only_a == len(viewers - buyers)
 
 
-def test_kll_quantiles_within_rank_error(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    partials = SK.kll_partials(
-        ev.withColumn("day", F.to_date("ts")), ["day", "event_type"], "value"
-    )
-    got = {
-        r.event_type: (r.p25, r.p50, r.p75)
-        for r in SK.kll_quantiles(partials, ["event_type"], [0.25, 0.5, 0.75]).collect()
-    }
-    vals = {
-        r.event_type: r.qs
-        for r in ev.groupBy("event_type")
-        .agg(F.expr("percentile(value, array(0.25, 0.5, 0.75))").alias("qs"))
-        .collect()
-    }
-    for t, (q25, q50, q75) in got.items():
-        e25, e50, e75 = vals[t]
-        # KLL k=200 rank error ~1.65%; value tolerance via neighborhood
-        span = max(1e-9, e75 - e25)
-        assert abs(q25 - e25) <= 0.2 * span
-        assert abs(q50 - e50) <= 0.2 * span
-        assert abs(q75 - e75) <= 0.2 * span
-        assert q25 <= q50 <= q75
-
-
 def test_hll_portable_merge_equals_full_and_bounded_error(spark):
     """Portable register-row HLL: per-batch partials MAXed together
     must equal the single-pass build (register-identical, therefore

@@ -69,11 +69,6 @@ def main():
     coded.select(F.sum(F.element_at("pq_code", 1))).collect()
     t_encode = time.time() - t0
 
-    t0 = time.time()
-    coded_fast = PQ.pq_encode_fast(corpus, "embedding", books, dim=DIM)
-    coded_fast.select(F.sum(F.element_at("pq_code", 1))).collect()
-    t_encode_fast = time.time() - t0
-
     queries = corpus.filter(F.col("vec_id") < NQ).persist()
     queries.count()
     rest = corpus.filter(F.col("vec_id") >= NQ)
@@ -145,8 +140,6 @@ def main():
                 "n_vectors": n,
                 "encode_sec": round(t_encode, 2),
                 "encode_vecs_per_sec": round(n / t_encode),
-                "encode_fast_sec": round(t_encode_fast, 2),
-                "encode_fast_vecs_per_sec": round(n / t_encode_fast),
                 "adc_topk_sec": round(t_adc, 2),
                 "ivfpq_index_build_sec": round(t_index, 2),
                 "ivfpq_topk_sec": round(t_ivfpq, 2),
