@@ -492,9 +492,11 @@ def connected_components(
         nodes. Shuffles the edge frame (not a label frame) per round.
 
     Both return identical (id, component) labelings (asserted in
-    tests on chain/hub/fixture graphs). Intermediate frames are
-    localCheckpointed to cut the growing lineage, which otherwise
-    re-executes the whole chain per round. The checkpoint is LAZY and
+    tests on chain/hub/fixture graphs), and both raise RuntimeError
+    rather than return a partial labeling when ``max_iter`` rounds end
+    short of the fixpoint. Intermediate frames are localCheckpointed
+    to cut the growing lineage, which otherwise re-executes the whole
+    chain per round. The checkpoint is LAZY and
     the convergence check is the action that materializes it: the
     changed-label count rides the update frame itself (a ``_chg``
     column summed by the same job), so each round submits ONE Spark
@@ -591,6 +593,12 @@ def connected_components(
         labels = updated.select("id", "component")
         if not changed:
             break
+    else:
+        raise RuntimeError(
+            "connected_components(propagation): labels still changing "
+            f"after max_iter={max_iter} rounds; raise max_iter or use "
+            "algorithm='star'"
+        )
     return labels
 
 
@@ -665,6 +673,11 @@ def _star_components(
         )
         if chain == 0:
             break
+    else:
+        raise RuntimeError(
+            "connected_components(star): not contracted to stars "
+            f"after max_iter={max_iter} rounds; raise max_iter"
+        )
     return edges.select(F.col("u").alias("id"), F.col("v").alias("component")).unionByName(
         edges.select(F.col("v").alias("id"), F.col("v").alias("component")).distinct()
     )

@@ -32,7 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from product_etl_spark.operators.upsert import _table_write_lock
+from product_etl_spark.fs import (
+    drop_table,
+    staging,
+    swap_in,
+    table_exists,
+    table_write_lock,
+)
 
 
 def _checkpointed_keys(subject_keys: DataFrame) -> DataFrame:
@@ -58,12 +64,6 @@ def _erase_keyed_table(
     partitioned appends with a mixed layout); the rerun is still
     idempotent (absent table -> 0)."""
     import os
-    import shutil
-    import uuid
-
-    from product_etl_spark.fs import require_local, table_exists
-
-    require_local(path, "erase_subjects")
 
     def _batch_dir_committed() -> bool:
         # the streaming fold writers commit PER-BATCH dirs
@@ -79,7 +79,7 @@ def _erase_keyed_table(
             for d in os.listdir(path)
         )
 
-    with _table_write_lock(path):
+    with table_write_lock(path, "erase_subjects"):
         if not table_exists(spark, path) and not _batch_dir_committed():
             return 0
         current = spark.read.parquet(path)
@@ -88,29 +88,22 @@ def _erase_keyed_table(
         if n_hit == 0:
             return 0  # no rewrite for untouched tables
         kept = current.join(F.broadcast(keys), cond, "left_anti")
-        staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-        writer = kept.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(staging)
-        # A FULLY-erased table writes no data files at all (just
-        # _SUCCESS); swapping that in would leave an unreadable dir
-        # (UNABLE_TO_INFER_SCHEMA on read, and a later partitioned
-        # append would conflict with any schema-stub file). Erased to
-        # nothing == table ABSENT: stores probe existence first
-        # (read_signature_store -> None == fresh), so absence is the
-        # faithful empty state.
-        has_rows = any(
-            not e.startswith(("_", ".")) for e in os.listdir(staging)
-        )
-        backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(path, backup)
-        if has_rows:
-            os.rename(staging, path)
-        else:
-            shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(backup, ignore_errors=True)
-        spark.catalog.refreshByPath(path)
+        with staging(path) as staged:
+            writer = kept.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(staged)
+            # A FULLY-erased table writes no data files at all (just
+            # _SUCCESS); swapping that in would leave an unreadable dir
+            # (UNABLE_TO_INFER_SCHEMA on read, and a later partitioned
+            # append would conflict with any schema-stub file). Erased
+            # to nothing == table ABSENT: stores probe existence first
+            # (read_signature_store -> None == fresh), so absence is
+            # the faithful empty state.
+            if any(not e.startswith(("_", ".")) for e in os.listdir(staged)):
+                swap_in(spark, staged, path)
+            else:
+                drop_table(spark, path)
         return n_hit
 
 
@@ -282,9 +275,7 @@ def erase_from_inverted_index(
             spark, doclens_path, keys, "doc_id", None
         ),
     }
-    with _table_write_lock(stats_path):
-        from product_etl_spark.fs import table_exists
-
+    with table_write_lock(stats_path, "erase_from_inverted_index"):
         if table_exists(spark, doclens_path):
             dl = spark.read.parquet(doclens_path)
             agg = dl.agg(
@@ -301,20 +292,7 @@ def erase_from_inverted_index(
             stats = spark.createDataFrame(
                 [(new_n, new_avgdl)], "n_docs long, avgdl double"
             )
-            _swap_in(spark, stats, stats_path)
+            with staging(stats_path) as staged:
+                stats.write.mode("overwrite").parquet(staged)
+                swap_in(spark, staged, stats_path)
     return report
-
-
-def _swap_in(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Staged write + atomic rename swap (caller holds the lock)."""
-    import os
-    import shutil
-    import uuid
-
-    staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(staging)
-    backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup, ignore_errors=True)
-    spark.catalog.refreshByPath(path)

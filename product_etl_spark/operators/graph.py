@@ -234,7 +234,8 @@ def k_core(
     frame, localCheckpoint per round cuts lineage. Rounds are
     bounded by the peeling depth (degeneracy ordering length /
     batch peel: all sub-k nodes drop together each round, so depth
-    is the number of 'onion layers', typically << n)."""
+    is the number of 'onion layers', typically << n). Raises
+    RuntimeError if ``max_iter`` rounds end while nodes still drop."""
     und = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -261,6 +262,11 @@ def k_core(
         und = pruned
         if dropped == 0:
             break
+    else:
+        raise RuntimeError(
+            f"k_core: still peeling after max_iter={max_iter} rounds; "
+            "raise max_iter"
+        )
     sym = und.unionByName(
         und.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )

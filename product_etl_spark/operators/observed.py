@@ -4,12 +4,9 @@ The Spark-native answer to "validate the batch you are loading
 without scanning it twice": ``Observation`` metrics are accumulated
 ON the write job itself (plain aggregate expressions evaluated as
 the rows stream through), so the load and its audit are ONE pass —
-at 100 TB the difference between one scan and two. The publish is
-staged: data lands in a staging directory, the observed metrics are
-checked against the caller's predicates, and only a fully-passing
-batch is atomically renamed into place — a failing batch leaves NO
-published table and the staging dir is removed (write-AUDIT-publish,
-literally).
+at 100 TB the difference between one scan and two. Only a batch
+whose observed metrics pass the caller's predicates is published, by
+the ``fs`` staged swap (write-AUDIT-publish, literally).
 
 Reference parity: the reference validates after loading with
 separate SELECTs (utils/importer/verify_collections.py:33-66 and
@@ -59,22 +56,13 @@ def write_with_quality_gate(
     "n_rows": (F.count(F.lit(1)), lambda v: v > 0)}``. All aggregate
     expressions are evaluated by the write job itself (``df.observe``
     — no second scan, asserted structurally in tests via a scan-count
-    listener). If every predicate passes, the staged directory is
-    atomically renamed into ``path`` (backup-swap, the upsert
-    convention) and the observed metric dict is returned; otherwise
-    the staging dir is deleted, ``path`` is untouched (a failing
-    batch cannot publish even partially), and QualityGateError
-    carries the failing values.
-
-    Runs under the table write lock: a gate-passing publish is a
-    table swap like any MERGE, and two concurrent loads of one path
-    must serialize."""
-    import os
-    import shutil
+    listener). If every predicate passes, the staged output is
+    swapped into ``path`` under the table write lock and the observed
+    metric dict is returned; otherwise ``path`` is untouched and
+    QualityGateError carries the failing values."""
     import uuid
 
-    from product_etl_spark.fs import require_local
-    from product_etl_spark.operators.upsert import _table_write_lock
+    from product_etl_spark.fs import staging, swap_in, table_write_lock
 
     if not checks:
         raise ValueError(
@@ -88,44 +76,28 @@ def write_with_quality_gate(
             "append-shaped loads gate the batch into a staging "
             "table and MERGE it (operators/upsert.py)"
         )
-    require_local(path, "write_with_quality_gate")
     spark = df.sparkSession
     obs = Observation(f"quality_gate_{uuid.uuid4().hex[:8]}")
     observed = df.observe(
         obs, *[agg.alias(name) for name, (agg, _) in checks.items()]
     )
-    with _table_write_lock(path):
-        staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-        published = False
-        try:
-            writer = observed.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(staging)
-            metrics = dict(obs.get)
-            failures = {
-                name: metrics[name]
-                for name, (_, pred) in checks.items()
-                if not pred(metrics[name])
-            }
-            if failures:
-                raise QualityGateError(failures, metrics)
-            if os.path.exists(path):
-                backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
-                os.rename(path, backup)
-                os.rename(staging, path)
-                published = True
-                shutil.rmtree(backup, ignore_errors=True)
-            else:
-                os.rename(staging, path)
-                published = True
-            spark.catalog.refreshByPath(path)
-        finally:
-            # ANY non-publish exit (gate failure, a user predicate
-            # that raises, a write error) must not leave staging
-            # litter beside the table
-            if not published:
-                shutil.rmtree(staging, ignore_errors=True)
+    with (
+        table_write_lock(path, "write_with_quality_gate"),
+        staging(path) as staged,
+    ):
+        writer = observed.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staged)
+        metrics = dict(obs.get)
+        failures = {
+            name: metrics[name]
+            for name, (_, pred) in checks.items()
+            if not pred(metrics[name])
+        }
+        if failures:
+            raise QualityGateError(failures, metrics)
+        swap_in(spark, staged, path)
     return metrics
 
 

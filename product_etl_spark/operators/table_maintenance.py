@@ -9,9 +9,9 @@ over 2000 files scans orders of magnitude slower than over 2.
 Retention is the other half of table maintenance: expired partitions
 should disappear by DIRECTORY, without reading a byte of data.
 
-Both operate on hive-partitioned local parquet layouts and publish by
-rename (the repo's staging-swap discipline, ``fs.require_local`` —
-on object stores a transactional format's OPTIMIZE / retention job
+Both operate on hive-partitioned local parquet layouts, under the
+table write lock, and compaction publishes through ``fs.swap_in`` (on
+object stores a transactional format's OPTIMIZE / retention job
 replaces these, as with the MERGE writers).
 
 Reference parity: the reference runs manual cleanup SQL over its
@@ -24,13 +24,12 @@ from __future__ import annotations
 import math
 import os
 import shutil
-import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from product_etl_spark.fs import require_local
+from product_etl_spark.fs import require_local, staging, swap_in, table_write_lock
 
 
 @dataclass
@@ -88,33 +87,29 @@ def compact_partitions(
     Scale shape: selection is a metadata listing (no data read);
     only SELECTED partitions are read and rewritten, each as its own
     job — untouched partitions are never listed by Spark, never read,
-    never rewritten. Publish is the per-directory rename swap
-    (individually atomic; a crash mid-loop leaves some partitions
-    compacted and some not, and the next run converges — compaction
-    is idempotent). Parquet-size note: ``target_bytes`` is compared
-    against on-disk (encoded) bytes, so output files land near the
-    target without decode-size guesswork.
+    never rewritten. Each partition is swapped in on its own; a crash
+    mid-loop leaves some partitions compacted and some not, and the
+    next run converges — compaction is idempotent. Parquet-size note:
+    ``target_bytes`` is compared against on-disk (encoded) bytes, so
+    output files land near the target without decode-size guesswork.
     """
-    require_local(path, "compact_partitions")
-    todo = [
-        s
-        for s in partition_file_stats(path)
-        if s.n_files >= min_files
-    ]
-    for s in todo:
-        n_out = max(1, math.ceil(s.total_bytes / target_bytes))
-        staging = f"{s.dir}__compact_{uuid.uuid4().hex[:8]}"
-        (
-            spark.read.parquet(s.dir)
-            .repartition(n_out)
-            .write.mode("error")
-            .parquet(staging)
-        )
-        backup = f"{s.dir}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(s.dir, backup)
-        os.rename(staging, s.dir)
-        shutil.rmtree(backup, ignore_errors=True)
-    spark.catalog.refreshByPath(path)
+    with table_write_lock(path, "compact_partitions"):
+        todo = [
+            s
+            for s in partition_file_stats(path)
+            if s.n_files >= min_files
+        ]
+        for s in todo:
+            n_out = max(1, math.ceil(s.total_bytes / target_bytes))
+            with staging(s.dir) as staged:
+                (
+                    spark.read.parquet(s.dir)
+                    .repartition(n_out)
+                    .write.mode("error")
+                    .parquet(staged)
+                )
+                swap_in(spark, staged, s.dir)
+        spark.catalog.refreshByPath(path)
     return todo
 
 
@@ -132,15 +127,15 @@ def expire_partitions(
     Values arrive as the RAW directory strings, hive-unescaped only
     for '=' splitting — compare strings, not parsed dates, unless
     the caller parses explicitly."""
-    require_local(path, "expire_partitions")
     removed = []
     prefix = f"{partition_col}="
-    for cur, dirs, _files in os.walk(path):
-        for d in list(dirs):
-            if d.startswith(prefix) and not keep(d[len(prefix):]):
-                shutil.rmtree(os.path.join(cur, d), ignore_errors=True)
-                removed.append(
-                    os.path.relpath(os.path.join(cur, d), path)
-                )
-                dirs.remove(d)
+    with table_write_lock(path, "expire_partitions"):
+        for cur, dirs, _files in os.walk(path):
+            for d in list(dirs):
+                if d.startswith(prefix) and not keep(d[len(prefix):]):
+                    shutil.rmtree(os.path.join(cur, d), ignore_errors=True)
+                    removed.append(
+                        os.path.relpath(os.path.join(cur, d), path)
+                    )
+                    dirs.remove(d)
     return sorted(removed)

@@ -11,10 +11,9 @@ Spark-first realization without Delta (not available in this
 container; the same API maps 1:1 onto ``MERGE INTO`` where Delta /
 Iceberg is present — noted per method):
 
-- new table state = updates ∪ (current ⟕anti updates), written to a
-  fresh directory, then atomically swapped in. Write-audit-publish —
-  atomic per table, task-retry safe because ids are deterministic
-  (ids.py).
+- new table state = updates ∪ (current ⟕anti updates), published
+  through ``fs`` (staged write, rename swap, table lock); task-retry
+  safe because ids are deterministic (ids.py).
 - ``mode='insert_only'`` reproduces ON CONFLICT DO NOTHING: existing
   keys win; only genuinely new keys are appended.
 - audit timestamps (created_on/modified_on) follow the reference's
@@ -25,187 +24,21 @@ Iceberg is present — noted per method):
 At 100 TB the swap rewrites only the partitions containing updated
 keys when the table is partitioned (``partition_cols``): the current
 side is pruned to touched partitions before the merge and only those
-partition directories are swapped — untouched partitions are neither
-read nor rewritten. Contract: a key's partition values must be stable
-across updates (true for all our tables — partitions derive from the
-natural key); a moved key would leave its old row behind in the old
-partition.
+partition directories are swapped. Contract: a key's partition values
+must be stable across updates (true for all our tables — partitions
+derive from the natural key); a moved key would leave its old row
+behind in the old partition.
 """
 
 from __future__ import annotations
 
-import json
+import glob
 import os
-import shutil
-import time
-import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-class ConcurrentWriteError(RuntimeError):
-    """A second writer attempted to MERGE into a table another writer
-    currently holds. The staging-swap publish is single-writer per
-    table path: two interleaved read-merge-swap cycles would silently
-    drop one side's rows (lost update), so the second writer fails
-    LOUDLY instead. The reference gets this from Postgres row locks
-    inside one transaction (ETL.py:620-626 single-txn commit); on a
-    real lake deployment a table format (Delta/Iceberg optimistic
-    commit) replaces this lock."""
-
-
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    return True
-
-
-#: A lock directory with no readable owner.json is normally a writer
-#: crashed between mkdir and the metadata rename — an instant-wide
-#: window — so it may only be broken once older than this.
-_ORPHAN_LOCK_SECONDS = 300.0
-
-
-def _break_stale_lock(lock_dir: str, expected: dict | None) -> bool:
-    """Atomically break a lock OBSERVED stale, verifying after the
-    rename that the directory captured is the same stale lock that was
-    observed — not a fresh LIVE lock a faster breaker re-created in
-    between. Winning the rename alone is not enough: breaker A may
-    observe dead owner P, breaker B breaks P's lock and re-acquires,
-    and A's rename would then capture B's live lock (two writers in
-    the critical section — the exact lost update this lock prevents).
-
-    ``expected`` is the owner dict read before deciding to break, or
-    None for the metadata-less-orphan case. After the rename the
-    tombstone's owner.json must match ``expected`` (pid AND ts — ts is
-    the per-acquisition nonce, so a recycled pid cannot alias); for
-    the orphan case the tombstone must still be metadata-less AND
-    still older than the orphan threshold (dir mtime survives rename).
-    On mismatch the directory is renamed back and the lock reported
-    contended. Returns True only when the observed stale lock was
-    removed."""
-    tombstone = f"{lock_dir}.stale.{uuid.uuid4().hex}"
-    try:
-        os.rename(lock_dir, tombstone)
-    except OSError:  # lost the breaker race: lock is contended
-        return False
-    got: dict | None
-    try:
-        with open(os.path.join(tombstone, "owner.json")) as f:
-            got = json.load(f)
-    except (OSError, ValueError):
-        got = None
-    if expected is None:
-        try:
-            age = time.time() - os.stat(tombstone).st_mtime
-        except OSError:
-            age = 0.0
-        same = got is None and age >= _ORPHAN_LOCK_SECONDS
-    else:
-        same = (
-            got is not None
-            and got.get("pid") == expected.get("pid")
-            and got.get("ts") == expected.get("ts")
-        )
-    if not same:
-        # captured someone else's LIVE lock: put it back and report
-        # contention. If an acquirer mkdir'd lock_dir in the gap the
-        # put-back fails; dropping the tombstone then releases the
-        # stolen owner's lock early — the narrowest remaining window,
-        # and strictly better than keeping a lock nobody can release.
-        try:
-            os.rename(tombstone, lock_dir)
-        except OSError:
-            shutil.rmtree(tombstone, ignore_errors=True)
-        return False
-    shutil.rmtree(tombstone, ignore_errors=True)
-    return True
-
-
-@contextmanager
-def _table_write_lock(path: str):
-    """Advisory single-writer lock for the read-merge-swap cycle:
-    an atomically-created ``{path}__lock`` directory holding the
-    owner's pid. A concurrent writer raises ConcurrentWriteError; a
-    lock whose owner process is dead on this host (crashed writer) is
-    broken automatically — crash convergence, not manual cleanup.
-    The lock covers the WHOLE cycle (read of current state through
-    swap), not just the rename: the lost-update window is the read,
-    not the publish.
-
-    Stale locks are broken ATOMICALLY by renaming the lock dir to a
-    unique tombstone, then VERIFYING the captured directory is the
-    observed stale lock (owner pid+ts match, or still-old orphan) —
-    see _break_stale_lock. The rename alone makes exactly one of N
-    racing breakers win while the dir exists, but a breaker whose
-    observation predates another breaker's break+re-acquire could
-    otherwise capture the winner's fresh LIVE lock; the post-rename
-    owner check renames such a capture back and reports contention.
-    Ownership metadata is published at acquisition via temp-write +
-    atomic rename; a crash inside that one-rename window leaves a
-    metadata-less lock, which is treated as held until it is
-    ``_ORPHAN_LOCK_SECONDS`` old (lock-dir mtime) and then breakable."""
-    lock_dir = f"{path}__lock"
-    meta = os.path.join(lock_dir, "owner.json")
-
-    def _acquire():
-        parent = os.path.dirname(os.path.abspath(path))
-        os.makedirs(parent, exist_ok=True)
-        os.mkdir(lock_dir)  # atomic: exactly one creator wins
-        tmp = os.path.join(lock_dir, f".owner.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"pid": os.getpid(), "ts": time.time()}, f)
-        os.replace(tmp, meta)  # publish ownership atomically
-
-    try:
-        _acquire()
-    except FileExistsError:
-        owner_alive, owner, info = True, "<unreadable>", None
-        try:
-            with open(meta) as f:
-                info = json.load(f)
-            owner = f"pid {info.get('pid')} since {info.get('ts')}"
-            owner_alive = _pid_alive(int(info["pid"]))
-        except (OSError, ValueError, KeyError, TypeError):
-            # no readable owner: ownerless crash artifact, breakable
-            # only once old enough that no live acquirer can still be
-            # inside the mkdir->rename window
-            info = None
-            try:
-                age = time.time() - os.stat(lock_dir).st_mtime
-                owner_alive = age < _ORPHAN_LOCK_SECONDS
-                owner = f"<no metadata, {age:.0f}s old>"
-            except OSError:
-                owner_alive = True  # vanished mid-probe: contended
-        if owner_alive:
-            raise ConcurrentWriteError(
-                f"table {path!r} is locked by another writer ({owner}); "
-                "concurrent MERGEs into one table path would lose "
-                "updates — serialize the writers or move the table to "
-                "a format with optimistic commits (Delta/Iceberg)"
-            )
-        if not _break_stale_lock(lock_dir, info):
-            raise ConcurrentWriteError(
-                f"table {path!r}: lost the race to break a stale lock "
-                "— another writer is active"
-            )
-        try:
-            _acquire()  # a racing breaker may still beat us
-        except FileExistsError:
-            raise ConcurrentWriteError(
-                f"table {path!r}: lost the race to re-acquire a stale "
-                "lock — another writer is active"
-            ) from None
-    try:
-        yield
-    finally:
-        shutil.rmtree(lock_dir, ignore_errors=True)
+from product_etl_spark.fs import staging, swap_in, table_exists, table_write_lock
 
 
 def _with_audit(updates: DataFrame, current: DataFrame | None, keys: list[str]):
@@ -219,8 +52,6 @@ def _with_audit(updates: DataFrame, current: DataFrame | None, keys: list[str]):
     upd = updates
     if "created_on" not in upd.columns:
         upd = upd.withColumn("created_on", now)
-    if "modified_on" not in upd.columns:
-        upd = upd.withColumn("modified_on", now)
     upd = upd.withColumn("modified_on", now)
     if current is not None and "created_on" in current.columns:
         detect_change = "modified_on" in current.columns and all(
@@ -270,28 +101,16 @@ def upsert_parquet(
     handle obtained *before* a later merge goes stale (the swap
     replaces the directory) and must be re-read.
 
-    Concurrency: single-writer per table path, ENFORCED — the whole
-    read-merge-swap cycle runs under an advisory lock
-    (``{path}__lock``); a second concurrent writer raises
-    ConcurrentWriteError instead of silently losing one side's rows,
-    and a crashed writer's stale lock is broken automatically when
-    its pid is gone. Concurrent merges to *different* tables are safe
-    and used by run_ingest. Multi-writer tables are table-format
-    territory — Delta/Iceberg MERGE with optimistic concurrency
-    replaces this writer unchanged at the call site.
+    Concurrency: the whole read-merge-swap cycle runs under
+    ``fs.table_write_lock``; a second concurrent writer of the same
+    path raises ConcurrentWriteError. Concurrent merges to *different*
+    tables are safe and used by run_ingest.
 
     ``updates`` must be unique per key; we enforce with
     ``dropDuplicates(keys)`` (deterministic inputs make the kept row
     deterministic — ids are uuid5, and callers pre-aggregate).
     """
-    from product_etl_spark.fs import require_local, table_exists
-
-    # Loud-and-early on remote URIs: the publish step below renames
-    # directories, and os.path probes on s3://... would silently
-    # report "absent" and downgrade every MERGE to an initial
-    # overwrite. Hadoop-FS probe + local-only publish instead.
-    require_local(path, "upsert_parquet")
-    with _table_write_lock(path):
+    with table_write_lock(path, "upsert_parquet"):
         return _merge_and_publish(
             spark, updates, path, keys, mode, partition_cols, audit
         )
@@ -306,9 +125,7 @@ def _merge_and_publish(
     partition_cols: list[str] | None,
     audit: bool,
 ) -> DataFrame:
-    """The read-merge-swap cycle, called under _table_write_lock."""
-    from product_etl_spark.fs import table_exists
-
+    """The read-merge-swap cycle, called under table_write_lock."""
     current = None
     if table_exists(spark, path):
         current = spark.read.parquet(path)
@@ -344,47 +161,23 @@ def _merge_and_publish(
     order = col_order + [c for c in new_state.columns if c not in col_order]
     new_state = new_state.select(*order)
 
-    # Write-audit-publish: write to a staging dir, then swap — the
-    # whole directory for unpartitioned tables, only the touched
-    # partition directories for the pruned path.
-    staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-    writer = new_state.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staging)
-
-    if prune:
-        _swap_touched_partitions(staging, path, len(partition_cols))
-    else:
-        backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(path):
-            os.rename(path, backup)
-        os.rename(staging, path)
-        if os.path.exists(backup):
-            shutil.rmtree(backup, ignore_errors=True)
-    # Invalidate any cached file listings for this path: DataFrames
-    # created before the swap would otherwise try to read the
-    # replaced files on their next action.
-    spark.catalog.refreshByPath(path)
+    # Write-audit-publish: swap the whole directory for unpartitioned
+    # tables, only the touched partition directories for the pruned
+    # path (untouched partitions are never listed, read or modified).
+    # Each partition swap is atomic; a failure mid-loop leaves a mix
+    # of old and new partitions that the idempotent rerun converges.
+    with staging(path) as staged:
+        writer = new_state.write.mode("overwrite")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(staged)
+        if prune:
+            pattern = os.path.join(staged, *(["*=*"] * len(partition_cols)))
+            for leaf in glob.glob(pattern):
+                rel = os.path.relpath(leaf, staged)
+                swap_in(spark, leaf, os.path.join(path, rel))
+            # the per-leaf refreshes do not cover listings of the root
+            spark.catalog.refreshByPath(path)
+        else:
+            swap_in(spark, staged, path)
     return spark.read.parquet(path)
-
-
-def _swap_touched_partitions(staging: str, path: str, n_levels: int) -> None:
-    """Move every leaf partition directory from ``staging`` over its
-    counterpart under ``path``; untouched partition dirs are never
-    listed, read, or modified. Per-partition swaps are individually
-    atomic (rename); a failure mid-loop leaves a mix of old/new
-    partitions that the next idempotent MERGE rerun converges."""
-    import glob
-
-    pattern = os.path.join(staging, *(["*=*"] * n_levels))
-    for leaf in glob.glob(pattern):
-        rel = os.path.relpath(leaf, staging)
-        dst = os.path.join(path, rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        backup = f"{dst}__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(dst):
-            os.rename(dst, backup)
-        os.rename(leaf, dst)
-        shutil.rmtree(backup, ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)

@@ -8,7 +8,6 @@ from product_etl_spark.pipelines.maintenance import (  # noqa: F401
     relink_products_by_master_code,
     snapshot_table,
 )
-from product_etl_spark.pipelines.profiling import profile_table  # noqa: F401
 from product_etl_spark.pipelines.translation import (  # noqa: F401
     run_translation_sweep,
     translate_pending,

@@ -178,8 +178,8 @@ def compact_table(
     """Small-files compaction + optional layout sort.
 
     Incremental MERGE runs leave many small files; at 100 TB small
-    files dominate scan planning time. Publishes via local rename
-    (require_local guards remote URIs — object stores use a table
+    files dominate scan planning time. Publishes through the ``fs``
+    staged swap under the table write lock (object stores use a table
     format's OPTIMIZE instead). Rewrite the table at
     ~``target_file_mb`` per file; ``sort_cols`` clusters rows so
     parquet min/max statistics give data skipping on those columns
@@ -187,29 +187,21 @@ def compact_table(
     predicates, which covers the reference's lookup patterns:
     master_code, sku).
     """
-    import shutil
-    import uuid as _uuid
+    import pathlib
 
-    from product_etl_spark.fs import require_local
+    from product_etl_spark.fs import staging, swap_in, table_write_lock
 
-    require_local(path, "compact_table")
-    df = spark.read.parquet(path)
-    n_bytes = sum(
-        f.stat().st_size
-        for f in __import__("pathlib").Path(path).rglob("*.parquet")
-    )
-    n_files = max(1, n_bytes // (target_file_mb * 1024 * 1024))
-    out = df.repartition(int(n_files))
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
-    staging = f"{path}__compact_{_uuid.uuid4().hex[:8]}"
-    out.write.mode("overwrite").parquet(staging)
-    backup = f"{path}__old_{_uuid.uuid4().hex[:8]}"
-    import os as _os
-
-    _os.rename(path, backup)
-    _os.rename(staging, path)
-    shutil.rmtree(backup, ignore_errors=True)
+    with table_write_lock(path, "compact_table"), staging(path) as staged:
+        df = spark.read.parquet(path)
+        n_bytes = sum(
+            f.stat().st_size for f in pathlib.Path(path).rglob("*.parquet")
+        )
+        n_files = max(1, n_bytes // (target_file_mb * 1024 * 1024))
+        out = df.repartition(int(n_files))
+        if sort_cols:
+            out = out.sortWithinPartitions(*sort_cols)
+        out.write.mode("overwrite").parquet(staged)
+        swap_in(spark, staged, path)
     return spark.read.parquet(path)
 
 
@@ -247,36 +239,30 @@ def add_audit_columns(
     literal/string, or None to use the table directory's mtime (the
     best on-disk approximation of "when these rows appeared", and
     deterministic across reruns). Columns already present are left
-    untouched (IF NOT EXISTS semantics); the rewrite is
-    write-audit-publish like the MERGE writer. The trigger half needs
-    no retrofit here — every subsequent ``upsert_parquet`` refreshes
-    modified_on exactly on payload change.
+    untouched (IF NOT EXISTS semantics); the rewrite is published
+    like the MERGE writer's. The trigger half needs no retrofit here
+    — every subsequent ``upsert_parquet`` refreshes modified_on
+    exactly on payload change.
     """
     import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
     from datetime import datetime, timezone
 
-    from product_etl_spark.fs import require_local
+    from product_etl_spark.fs import staging, swap_in, table_write_lock
 
-    require_local(path, "add_audit_columns")
-    df = spark.read.parquet(path)
-    missing = [c for c in ("created_on", "modified_on") if c not in df.columns]
-    if not missing:
-        return df  # IF NOT EXISTS: nothing to do
-    if backfill is None:
-        mtime = _os.stat(path).st_mtime
-        backfill = datetime.fromtimestamp(mtime, tz=timezone.utc)
-    stamp = F.lit(backfill).cast("timestamp")
-    for c in missing:
-        df = df.withColumn(c, stamp)
-    staging = f"{path}__audit_{_uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(staging)
-    backup = f"{path}__old_{_uuid.uuid4().hex[:8]}"
-    _os.rename(path, backup)
-    _os.rename(staging, path)
-    _shutil.rmtree(backup, ignore_errors=True)
-    spark.catalog.refreshByPath(path)
+    with table_write_lock(path, "add_audit_columns"):
+        df = spark.read.parquet(path)
+        missing = [c for c in ("created_on", "modified_on") if c not in df.columns]
+        if not missing:
+            return df  # IF NOT EXISTS: nothing to do
+        if backfill is None:
+            mtime = _os.stat(path).st_mtime
+            backfill = datetime.fromtimestamp(mtime, tz=timezone.utc)
+        stamp = F.lit(backfill).cast("timestamp")
+        for c in missing:
+            df = df.withColumn(c, stamp)
+        with staging(path) as staged:
+            df.write.mode("overwrite").parquet(staged)
+            swap_in(spark, staged, path)
     return spark.read.parquet(path)
 
 

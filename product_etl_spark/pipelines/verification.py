@@ -23,20 +23,18 @@ class CheckResult:
     details: str
 
 
-def check_counts(tables: dict[str, DataFrame]) -> list[CheckResult]:
-    """Row-count sanity (verify_collections.py:33-44)."""
-    out = []
-    for name, df in tables.items():
-        n = df.count()
-        out.append(CheckResult(f"count:{name}", n >= 0, f"{n} rows"))
-    return out
-
-
 def check_unique_keys(df: DataFrame, keys: list[str], name: str) -> CheckResult:
     """Natural-key uniqueness (the reference's UNIQUE constraints,
-    backup_before_fix.sql:28806,28830,28854)."""
-    total = df.count()
-    distinct = df.select(*keys).distinct().count()
+    backup_before_fix.sql:28806,28830,28854), in one action: rows per
+    key group summed against the number of groups. NULL keys group
+    together, as under ``distinct()``."""
+    row = (
+        df.groupBy(*keys)
+        .count()
+        .agg(F.sum("count").alias("total"), F.count(F.lit(1)).alias("distinct"))
+        .first()
+    )
+    total, distinct = row["total"] or 0, row["distinct"]
     return CheckResult(
         f"unique:{name}({','.join(keys)})",
         total == distinct,
@@ -76,7 +74,7 @@ def run_warehouse_checks(tables: dict[str, DataFrame]) -> list[CheckResult]:
     schemas.NATURAL_KEYS, FKs per the entity map SURVEY.md §1.4)."""
     from product_etl_spark.schemas import NATURAL_KEYS
 
-    results = check_counts(tables)
+    results = []
     for name, keys in NATURAL_KEYS.items():
         if name in tables:
             results.append(check_unique_keys(tables[name], keys, name))

@@ -1638,14 +1638,13 @@ def rebuild_shard_totals_state(
 
     Scale shape: one map-side-combined groupBy per batch over that
     batch's manifest partition only (n_shards rows out), published
-    by the same staged-rename swap as ``compact_partitions`` —
-    idempotent, convergent under crash-mid-loop. State stays
-    n_shards rows per batch; history manifests are read once each,
-    never joined."""
+    by ``fs.swap_in`` per batch — idempotent, convergent under
+    crash-mid-loop. State stays n_shards rows per batch; history
+    manifests are read once each, never joined."""
     import os
     import shutil
-    import uuid
 
+    from product_etl_spark.fs import staging, swap_in
     from product_etl_spark.operators.sampling import shard_weight_totals
 
     for d in (manifest_dir, state_dir):
@@ -1669,14 +1668,10 @@ def rebuild_shard_totals_state(
         batch_id = int(name.split("=", 1)[1])
         part = spark.read.parquet(f"{manifest_dir}/{name}")
         totals = shard_weight_totals(part, weight_col)
-        staging = f"{state_dir}/{name}__rebuild_{uuid.uuid4().hex[:8]}"
-        totals.coalesce(1).write.mode("error").parquet(staging)
         target = f"{state_dir}/{name}"
-        backup = f"{target}__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(target):
-            os.rename(target, backup)
-        os.rename(staging, target)
-        shutil.rmtree(backup, ignore_errors=True)
+        with staging(target) as staged:
+            totals.coalesce(1).write.mode("error").parquet(staged)
+            swap_in(spark, staged, target)
         rebuilt.append(batch_id)
     # a batch whose EVERY row was erased loses its manifest partition
     # in the rewrite — its state partial must go too, or the fold

@@ -875,6 +875,24 @@ def test_star_components_equal_propagation_on_fixtures(spark):
     assert star2 == prop2
 
 
+def test_connected_components_raise_at_cap(spark):
+    """A 41-node chain (diameter 40) needs more propagation rounds
+    than max_iter=10 allows: the operator must raise, not return the
+    partial 30-component labeling. Star contraction converges on the
+    same chain within the same cap, and raises when given too few
+    rounds."""
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match=r"propagation.*max_iter=10\b"):
+        D.connected_components(chain, max_iter=10)
+    star = D.connected_components(chain, algorithm="star", max_iter=10)
+    assert star.count() == 41
+    assert star.select("component").distinct().collect() == [(0,)]
+    with pytest.raises(RuntimeError, match=r"star.*max_iter=1\b"):
+        D.connected_components(chain, algorithm="star", max_iter=1)
+
+
 @pytest.mark.slow
 def test_star_components_long_chain_and_hub(spark):
     """The shapes star contraction exists for: a 60-node path (the

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from product_etl_spark.operators.erasure import apply_suppression, erase_subjects
-from product_etl_spark.operators.upsert import ConcurrentWriteError, _table_write_lock
+from product_etl_spark.fs import ConcurrentWriteError, table_write_lock
 
 
 def _write(spark, path, rows, schema):
@@ -49,7 +49,7 @@ def test_erasure_respects_single_writer_lock(spark, tmp_path):
     t1 = str(tmp_path / "tbl")
     _write(spark, t1, [(1, "a")], "custkey int, v string")
     subjects = spark.createDataFrame([(1,)], "k int")
-    with _table_write_lock(t1):  # an upsert holds the table
+    with table_write_lock(t1):  # an upsert holds the table
         with pytest.raises(ConcurrentWriteError):
             erase_subjects(spark, subjects, [{"path": t1, "key_col": "custkey"}])
     # table untouched by the failed erasure

@@ -100,6 +100,20 @@ def test_k_core_matches_bruteforce_peel(spark):
     assert _brute_k_core(edge_list, 5) == {}
 
 
+def test_k_core_raises_at_cap(spark):
+    """A 6-node path peels one layer from each end per round (three
+    peeling rounds, then a round that drops nothing): max_iter=2 must
+    raise instead of returning the half-peeled graph."""
+    from product_etl_spark.operators.graph import k_core
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match=r"k_core.*max_iter=2\b"):
+        k_core(edges, 2, max_iter=2)
+    assert k_core(edges, 2, max_iter=4).count() == 0
+
+
 def test_association_rules_hand_check(spark):
     """Baskets {x,y},{x,y},{x,z},{w}: only (x,y) clears min_pair_count
     -> support 2/4, confidence_a_to_b 2/3 (x is the antecedent by item

@@ -82,6 +82,12 @@ def test_consistency_report(spark):
 def test_checks_catch_violations(spark):
     df = spark.createDataFrame([("a", 1), ("a", 2)], "k string, v int")
     assert not check_unique_keys(df, ["k"], "t").ok
+    # NULL keys group together, as under distinct(): two NULLs collide
+    nulls = spark.createDataFrame(
+        [(None, 1), (None, 2), ("b", 3)], "k string, v int"
+    )
+    dup_null = check_unique_keys(nulls, ["k"], "t")
+    assert not dup_null.ok and dup_null.details == "3 rows / 2 distinct"
     child = spark.createDataFrame([("x", "missing")], "id string, fk string")
     parent = spark.createDataFrame([("other",)], "pk string")
     assert not check_no_orphans(child, parent, "fk", "pk", "t").ok
@@ -177,27 +183,6 @@ def test_snapshot_table(spark, tmp_path):
     snap = snapshot_table(spark, path, tag="prefix")
     assert spark.read.parquet(snap).count() == 10
     assert spark.read.parquet(path).count() == 10
-
-
-def test_profile_table(spark):
-    from product_etl_spark.pipelines.profiling import profile_table
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(1, "a", None), (2, "b", 5.0), (3, None, 7.5), (4, "b", None)],
-        "id int, s string, v double",
-    )
-    prof = {r["column"]: r for r in profile_table(df).collect()}
-    assert prof["id"]["n_rows"] == 4 and prof["id"]["n_nulls"] == 0
-    assert prof["s"]["n_nulls"] == 1 and prof["s"]["null_pct"] == 25.0
-    assert prof["v"]["n_nulls"] == 2
-    assert prof["id"]["min_value"] == "1" and prof["id"]["max_value"] == "4"
-    assert prof["s"]["approx_distinct"] == 2
-    # array columns profiled for nulls only (no ordering/distinct)
-    df2 = df.withColumn("arr", F.array(F.col("id")))
-    prof2 = {r["column"]: r for r in profile_table(df2).collect()}
-    assert prof2["arr"]["approx_distinct"] is None
-    assert prof2["arr"]["n_nulls"] == 0
 
 
 def test_sku_repair_rekeys_children_and_rewrites_paths(spark):

@@ -10,11 +10,8 @@ import os
 
 import pytest
 
-from product_etl_spark.operators.upsert import (
-    ConcurrentWriteError,
-    _table_write_lock,
-    upsert_parquet,
-)
+from product_etl_spark.fs import ConcurrentWriteError, table_write_lock
+from product_etl_spark.operators.upsert import upsert_parquet
 
 
 def _df(spark, rows):
@@ -25,7 +22,7 @@ def test_second_writer_fails_loudly(spark, tmp_path):
     path = str(tmp_path / "tbl")
     upsert_parquet(spark, _df(spark, [(1, "a")]), path, ["k"])
     # writer A holds the lock mid-cycle; writer B's merge must raise
-    with _table_write_lock(path):
+    with table_write_lock(path):
         with pytest.raises(ConcurrentWriteError, match="locked by another"):
             upsert_parquet(spark, _df(spark, [(2, "b")]), path, ["k"])
     # table state is writer A's era, untouched by the failed writer
@@ -39,7 +36,7 @@ def test_interleaved_upserts_serialize_not_lose(spark, tmp_path):
     after A completes, both updates survive."""
     path = str(tmp_path / "tbl")
     upsert_parquet(spark, _df(spark, [(1, "a")]), path, ["k"])
-    with _table_write_lock(path):  # simulate A mid-merge
+    with table_write_lock(path):  # simulate A mid-merge
         with pytest.raises(ConcurrentWriteError):
             upsert_parquet(spark, _df(spark, [(2, "b")]), path, ["k"])
     # B retries after A's cycle finished
@@ -89,7 +86,7 @@ def test_orphan_metadata_less_lock_breaks_after_age(spark, tmp_path):
     leaves a metadata-less lock. Fresh -> assumed held (a live
     acquirer may be inside that instant-wide window); older than
     _ORPHAN_LOCK_SECONDS -> breakable."""
-    from product_etl_spark.operators import upsert as U
+    from product_etl_spark import fs as U
 
     path = str(tmp_path / "tbl")
     lock_dir = f"{path}__lock"
@@ -109,7 +106,7 @@ def test_stale_break_is_atomic_loser_reports_contended(
     exactly one wins; the loser (rename raises) must treat the lock
     as contended and raise — never rmtree the winner's fresh lock
     (the old rmtree-then-mkdir shape handed the lock to both)."""
-    from product_etl_spark.operators import upsert as U
+    from product_etl_spark import fs as U
 
     path = str(tmp_path / "tbl")
     lock_dir = f"{path}__lock"
@@ -136,7 +133,7 @@ def test_owner_metadata_published_at_acquisition(tmp_path):
     atomic rename inside _acquire), not only after later code runs —
     otherwise a crash leaves an ownerless forever-held lock."""
     path = str(tmp_path / "tbl")
-    with _table_write_lock(path):
+    with table_write_lock(path):
         meta = os.path.join(f"{path}__lock", "owner.json")
         with open(meta) as f:
             assert json.load(f)["pid"] == os.getpid()
@@ -150,7 +147,7 @@ def test_break_verifies_owner_never_steals_fresh_live_lock(tmp_path):
     check (pid+ts must match the observed stale owner) must rename
     the captured live lock BACK and report contention, leaving B's
     lock intact."""
-    from product_etl_spark.operators import upsert as U
+    from product_etl_spark import fs as U
 
     lock_dir = str(tmp_path / "tbl__lock")
     dead = {"pid": 2**22 + 12345, "ts": 0.0}
@@ -169,7 +166,7 @@ def test_break_verifies_owner_never_steals_fresh_live_lock(tmp_path):
 
 
 def test_break_succeeds_when_observed_owner_still_stands(tmp_path):
-    from product_etl_spark.operators import upsert as U
+    from product_etl_spark import fs as U
 
     lock_dir = str(tmp_path / "tbl__lock")
     dead = {"pid": 2**22 + 12345, "ts": 0.0}
@@ -186,7 +183,7 @@ def test_orphan_break_rejects_fresh_metadata_less_lock(tmp_path):
     threshold — a fresh acquirer inside its mkdir->rename window is
     metadata-less too, and must not be swallowed by a breaker whose
     'old orphan' observation is outdated."""
-    from product_etl_spark.operators import upsert as U
+    from product_etl_spark import fs as U
 
     # fresh metadata-less dir (a live acquirer mid-window): rejected
     lock_dir = str(tmp_path / "a__lock")
