@@ -1,5 +1,6 @@
-"""Filesystem probes that work on ANY Hadoop-supported URI, and the
-one path by which a table directory gets replaced.
+"""Filesystem probes that work on ANY Hadoop-supported URI, a table
+read that runs no schema-inference job, and the one path by which a
+table directory gets replaced.
 
 Probes. ``os.path.exists`` silently answers False for s3://, hdfs://,
 abfs:// paths, which would turn MERGE upserts into initial overwrites
@@ -7,12 +8,25 @@ and resume anti-joins into full recomputes with no error.
 ``fs_exists`` / ``table_exists`` go through the session's Hadoop
 FileSystem API instead, so they resolve any configured scheme.
 
+Read. ``read_table`` opens a committed table without a schema
+inference job. A bare ``spark.read.parquet(path)`` submits one Spark
+job only to read a footer, yet Spark already wrote the table's exact
+row schema into every footer, under the key
+``org.apache.spark.sql.parquet.row.metadata``. For a flat local table
+the driver reads it from the first part file with pyarrow and hands
+it to ``spark.read.schema``: the files describe themselves, so the
+read plans with no job. Any other table (URI scheme, partition
+directories, no part file, or parquet some other writer produced) is
+read the plain way. The MERGE (current state and returned frame), the
+incremental rollup's state read, ``read_stage_table`` and the
+translation sweep read through it.
+
 Publish. Every writer that rewrites or deletes a table in place (MERGE,
 subject erasure, quality-gated load, compaction, audit retrofit,
 partition retention, shard-state rebuild) does it the same way:
 
     with table_write_lock(path, "op"):   # covers read through publish
-        current = spark.read.parquet(path)
+        current = read_table(spark, path)
         with staging(path) as tmp:        # deleted unless published
             new_state.write.parquet(tmp)
             swap_in(spark, tmp, path)     # rename swap + refreshByPath
@@ -36,7 +50,8 @@ import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _scheme(path: str) -> str:
@@ -59,6 +74,43 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     job-commit marker ``_SUCCESS`` is probed, not the bare directory,
     so a half-written (crashed) output does not count as present."""
     return fs_exists(spark, path.rstrip("/") + "/_SUCCESS")
+
+
+#: The footer key under which Spark stores a parquet file's row
+#: schema as JSON.
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark row schema in the footer of the first part file of
+    the committed, flat, local table at ``path``; None when ``path``
+    is anything else or the footer carries no Spark schema."""
+    if _scheme(path) or not os.path.exists(os.path.join(path, "_SUCCESS")):
+        return None
+    entries = sorted(os.listdir(path))
+    if any(
+        os.path.isdir(os.path.join(path, e))
+        for e in entries
+        if not e.startswith(("_", "."))
+    ):
+        return None  # partition directories: Spark discovers them
+    parts = [e for e in entries if e.startswith("part-") and e.endswith(".parquet")]
+    if not parts:
+        return None
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(os.path.join(path, parts[0])).metadata or {}
+    raw = meta.get(_SPARK_ROW_SCHEMA)
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from the
+    table's own footer when ``_footer_schema`` finds one, so no
+    inference job runs. Same schema and rows either way."""
+    schema = _footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def require_local(path: str, op: str) -> None:

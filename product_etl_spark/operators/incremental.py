@@ -41,8 +41,8 @@ def read_stage_table(spark: SparkSession, path: str) -> DataFrame | None:
     reference's per-stage skip flags + read-back
     (utils/details_translator/db_orchestrator.py:240-258).
     """
-    from product_etl_spark.fs import table_exists
+    from product_etl_spark.fs import read_table, table_exists
 
     if not table_exists(spark, path):
         return None
-    return spark.read.parquet(path)
+    return read_table(spark, path)

@@ -16,10 +16,10 @@ definition of additive state.
 
 from __future__ import annotations
 
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from product_etl_spark.fs import read_table, table_exists
 from product_etl_spark.operators.upsert import upsert_parquet
 
 
@@ -48,10 +48,8 @@ def incremental_rollup(
     # to the single-batch aggregate's type so the state schema cannot
     # drift merge-over-merge.
     stable = dict(partial.dtypes)
-    from product_etl_spark.fs import table_exists
-
     if table_exists(spark, path):
-        cur = spark.read.parquet(path)
+        cur = read_table(spark, path)
         affected = cur.join(partial.select(*keys).distinct(), keys, "left_semi")
         merged = (
             affected.unionByName(partial)
@@ -65,9 +63,4 @@ def incremental_rollup(
         )
     else:
         merged = partial
-    # The MERGE writer references `merged` twice (anti-join build side
-    # + union branch): materialize it once so the batch aggregate and
-    # the state semi-join don't re-execute inside the write action.
-    # State-table scale (aggregate keys), so this is metadata-sized.
-    merged = merged.localCheckpoint(eager=True)
     return upsert_parquet(spark, merged, path, keys, audit=False)

@@ -11,15 +11,18 @@ Spark-first realization without Delta (not available in this
 container; the same API maps 1:1 onto ``MERGE INTO`` where Delta /
 Iceberg is present — noted per method):
 
-- new table state = updates ∪ (current ⟕anti updates), published
-  through ``fs`` (staged write, rename swap, table lock); task-retry
-  safe because ids are deterministic (ids.py).
+- new table state = one full outer join of the deduplicated updates
+  with the current state on the keys, then one projection that picks
+  each column from the winning side; published through ``fs`` (staged
+  write, rename swap, table lock); task-retry safe because ids are
+  deterministic (ids.py).
 - ``mode='insert_only'`` reproduces ON CONFLICT DO NOTHING: existing
   keys win; only genuinely new keys are appended.
 - audit timestamps (created_on/modified_on) follow the reference's
   trigger semantics (utils/importer/add_timestamps.py:62-126):
   created_on is preserved from the current row on update, modified_on
-  is refreshed only for rows actually written.
+  is refreshed only for rows actually written. The same projection
+  computes them, so the current state is scanned once.
 
 At 100 TB the swap rewrites only the partitions containing updated
 keys when the table is partitioned (``partition_cols``): the current
@@ -38,47 +41,77 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from product_etl_spark.fs import staging, swap_in, table_exists, table_write_lock
+from product_etl_spark.fs import (
+    read_table,
+    staging,
+    swap_in,
+    table_exists,
+    table_write_lock,
+)
 
 
-def _with_audit(updates: DataFrame, current: DataFrame | None, keys: list[str]):
-    """Apply created_on/modified_on trigger semantics
-    (add_timestamps.py:62-126): keep created_on of existing rows;
-    modified_on refreshes ONLY when the row's payload actually changed
-    (null-safe struct compare against the current row) — so a rerun
-    over identical input is byte-identical, audit columns included."""
+def _stamped(updates: DataFrame, audit: bool) -> DataFrame:
+    """``updates`` with the audit columns of a row written now: its own
+    created_on if it has one, else now; modified_on now."""
+    if not audit:
+        return updates
     now = F.current_timestamp()
-    payload = [c for c in updates.columns if c not in ("created_on", "modified_on")]
-    upd = updates
-    if "created_on" not in upd.columns:
-        upd = upd.withColumn("created_on", now)
-    upd = upd.withColumn("modified_on", now)
-    if current is not None and "created_on" in current.columns:
-        detect_change = "modified_on" in current.columns and all(
-            c in current.columns for c in payload
-        )
-        old_cols = [*keys, F.col("created_on").alias("_old_created_on")]
-        if detect_change:
-            old_cols += [
-                F.struct(*[F.col(c) for c in payload]).alias("_old_payload"),
-                F.col("modified_on").alias("_old_modified_on"),
-            ]
-        old = current.select(*old_cols)
-        upd = upd.join(old, on=keys, how="left").withColumn(
-            "created_on", F.coalesce("_old_created_on", "created_on")
-        )
-        if detect_change:
-            unchanged = F.struct(*[F.col(c) for c in payload]).eqNullSafe(
-                F.col("_old_payload")
-            )
-            upd = upd.withColumn(
-                "modified_on",
-                F.when(unchanged, F.col("_old_modified_on")).otherwise(
-                    F.col("modified_on")
-                ),
-            ).drop("_old_payload", "_old_modified_on")
-        upd = upd.drop("_old_created_on")
-    return upd
+    if "created_on" not in updates.columns:
+        updates = updates.withColumn("created_on", now)
+    return updates.withColumn("modified_on", now)
+
+
+def _outer_merge(
+    upd: DataFrame, current: DataFrame, keys: list[str], mode: str, audit: bool
+) -> DataFrame:
+    """The new state: a full outer join of ``upd`` (unique per key)
+    with ``current`` on ``keys``, projected once. A row comes from the
+    update side where that side wins (``upsert``: any update;
+    ``insert_only``: an update with no current row), else from the
+    current side; a column the winning side lacks is NULL. NULL keys
+    never match. Columns: the update side's, then the current-only ones.
+
+    Update rows get the trigger semantics of add_timestamps.py:62-126:
+    created_on is kept from the matched current row; modified_on keeps
+    the current value when the payload is equal under a null-safe
+    struct compare, so a rerun over identical input is byte-identical,
+    audit columns included."""
+    u_cols, c_cols = upd.columns, current.columns
+    # positional renames: both sides share column names
+    u = upd.toDF(*[f"_u{i}" for i in range(len(u_cols))]).withColumn("_u", F.lit(True))
+    c = current.toDF(*[f"_c{i}" for i in range(len(c_cols))]).withColumn("_c", F.lit(True))
+    U = {n: F.col(f"_u{i}") for i, n in enumerate(u_cols)}
+    C = {n: F.col(f"_c{i}") for i, n in enumerate(c_cols)}
+    on = U[keys[0]] == C[keys[0]]
+    for k in keys[1:]:
+        on = on & (U[k] == C[k])
+    joined = u.join(c, on, "full_outer")
+    matched = F.col("_c").isNotNull()
+    from_upd = F.col("_u").isNotNull() if mode == "upsert" else ~matched
+
+    if audit:
+        now = F.current_timestamp()
+        created = U.get("created_on", now)
+        modified = now
+        if "created_on" in c_cols:
+            created = F.coalesce(C["created_on"], created)
+            payload = [n for n in u_cols if n not in ("created_on", "modified_on")]
+            if "modified_on" in c_cols and all(n in c_cols for n in payload):
+                unchanged = F.struct(*[U[n].alias(n) for n in payload]).eqNullSafe(
+                    F.struct(*[C[n].alias(n) for n in payload])
+                )
+                modified = F.when(matched & unchanged, C["modified_on"]).otherwise(now)
+        U = {**U, "created_on": created, "modified_on": modified}
+
+    def pick(n: str) -> F.Column:
+        if n not in C:
+            return F.when(from_upd, U[n])
+        if n not in U:
+            return F.when(~from_upd, C[n])
+        return F.when(from_upd, U[n]).otherwise(C[n])
+
+    out_cols = [*U, *(n for n in c_cols if n not in U)]
+    return joined.select(*[pick(n).alias(n) for n in out_cols])
 
 
 def upsert_parquet(
@@ -126,9 +159,7 @@ def _merge_and_publish(
     audit: bool,
 ) -> DataFrame:
     """The read-merge-swap cycle, called under table_write_lock."""
-    current = None
-    if table_exists(spark, path):
-        current = spark.read.parquet(path)
+    current = read_table(spark, path) if table_exists(spark, path) else None
 
     # Partition-pruned path: only read/merge/rewrite the partitions
     # the updates actually touch.
@@ -144,20 +175,12 @@ def _merge_and_publish(
         col_order += [c for c in ("created_on", "modified_on") if c not in col_order]
 
     upd = updates.dropDuplicates(keys)
-    if audit:
-        upd = _with_audit(upd, current, keys)
-    upd = upd.select(*col_order)
-
     if current is None:
-        new_state = upd
-    elif mode == "insert_only":
-        fresh = upd.join(current.select(*keys).distinct(), keys, "left_anti")
-        new_state = current.unionByName(fresh, allowMissingColumns=True)
+        new_state = _stamped(upd, audit)
     else:
-        kept = current.join(upd.select(*keys).distinct(), keys, "left_anti")
-        new_state = kept.unionByName(upd, allowMissingColumns=True)
-    # Stable column order across merges (joins move key columns to
-    # the front; the table schema must not drift run-to-run).
+        new_state = _outer_merge(upd, current, keys, mode, audit)
+    # Stable column order across merges (the table schema must not
+    # drift run-to-run): then the current table's other columns.
     order = col_order + [c for c in new_state.columns if c not in col_order]
     new_state = new_state.select(*order)
 
@@ -180,4 +203,4 @@ def _merge_and_publish(
             spark.catalog.refreshByPath(path)
         else:
             swap_in(spark, staged, path)
-    return spark.read.parquet(path)
+    return read_table(spark, path)

@@ -354,6 +354,19 @@ def run_ingest(
     same input is a no-op by construction.
     """
     templates, variants = split_master_variants(raw)
+    split = []
+    if write:
+        # All 11 table plans start from the split: cache it, so that
+        # the export is read and the window run once, before the merge
+        # threads start, not in each MERGE; released after the merges.
+        # Coalesced to the export's partitions: the cached plan would
+        # otherwise keep the window's spark.sql.shuffle.partitions
+        # (an empty frame can have none).
+        n = max(raw.rdd.getNumPartitions(), 1)
+        split = [df.coalesce(n).persist() for df in (templates, variants)]
+        for df in split:
+            df.count()
+        templates, variants = split
 
     collections = build_collections(templates)
     products = build_products(variants, collections)
@@ -381,21 +394,24 @@ def run_ingest(
     if write:
         from concurrent.futures import ThreadPoolExecutor
 
-        result.tables["lang"] = seed_lang_table(spark, warehouse)
-
         def merge(item):
             name, df = item
             return name, upsert_parquet(
                 spark, df, f"{warehouse}/{name}", keys=NATURAL_KEYS[name]
             )
 
-        # The 11 output tables are independent: submit their MERGE
-        # jobs concurrently (Spark's scheduler interleaves them; on a
-        # cluster this keeps executors busy instead of draining
-        # between small jobs). Thread count bounded — each thread
-        # holds a job's driver-side state.
-        to_write = [(n, df) for n, df in result.tables.items() if n != "lang"]
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            for name, merged in pool.map(merge, to_write):
-                result.tables[name] = merged
+        # The lang seed and the 11 output tables are independent:
+        # submit their MERGE jobs concurrently (Spark's scheduler
+        # interleaves them; on a cluster this keeps executors busy
+        # instead of draining between small jobs). Thread count
+        # bounded — each thread holds a job's driver-side state.
+        try:
+            with ThreadPoolExecutor(max_workers=4) as pool:
+                lang = pool.submit(seed_lang_table, spark, warehouse)
+                for name, merged in pool.map(merge, list(result.tables.items())):
+                    result.tables[name] = merged
+                result.tables["lang"] = lang.result()
+        finally:
+            for df in split:
+                df.unpersist()
     return result

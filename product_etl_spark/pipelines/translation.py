@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from product_etl_spark import ids
+from product_etl_spark.fs import read_table
 from product_etl_spark.operators.incremental import read_stage_table
 from product_etl_spark.operators.upsert import upsert_parquet
 
@@ -155,7 +156,7 @@ def run_translation_sweep(
     compute pending rows, translate, MERGE them in (insert-only — a
     concurrent run that already wrote a translation wins, matching ON
     CONFLICT DO NOTHING), return the new table state."""
-    translations = spark.read.parquet(translations_path)
+    translations = read_table(spark, translations_path)
     new_rows = translate_pending(
         spark, translations, translator, src_lang, dst_lang, cache_path
     )

@@ -175,7 +175,7 @@ def test_translations_sidecar(ingested):
 def test_run_twice_idempotent(spark, raw_csv, warehouse, ingested):
     """Rerunning the identical input is byte-identical INCLUDING audit
     columns: change-detection preserves modified_on when the payload
-    didn't change (upsert._with_audit null-safe struct compare)."""
+    didn't change (the MERGE's null-safe struct compare)."""
     before = {
         name: sorted(map(str, df.collect()))
         for name, df in ingested.tables.items()
@@ -203,3 +203,37 @@ def test_dry_run_builds_without_writing(spark, raw_csv, tmp_path):
     # writer's keyed dropDuplicates is what collapses it on write)
     assert result.tables["product"].count() == 5
     assert not os.path.exists(wh)
+
+
+def test_empty_export_frame(spark, raw_csv, tmp_path):
+    """An export frame with no partitions at all (``limit(0)``) still
+    ingests: every table is written, empty."""
+    raw = read_raw_products(spark, raw_csv).limit(0)
+    result = run_ingest(spark, raw, str(tmp_path / "wh"))
+    assert result.tables["product"].count() == 0
+    assert result.tables["lang"].count() > 0
+
+
+#: Spark jobs one refresh of the fixture submits: 44 with footer-schema
+#: table reads, the one-join MERGE and the split cached once
+#: (the anti-join MERGE with schema-inference reads took 108).
+REFRESH_JOBS = 44
+
+
+def _job_ids(spark) -> set[int]:
+    """Ids of every job in the status store, the merge threads' too."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def test_refresh_job_count_gate(spark, raw_csv, tmp_path):
+    """A refresh must not submit more Spark jobs than it does today: a
+    reintroduced schema-inference read or anti join fails here."""
+    wh = str(tmp_path / "wh")
+    run_ingest(spark, read_raw_products(spark, raw_csv), wh)
+    before = _job_ids(spark)
+    run_ingest(spark, read_raw_products(spark, raw_csv), wh)
+    n = len(_job_ids(spark) - before)
+    assert n <= REFRESH_JOBS, f"refresh submitted {n} jobs, gate is {REFRESH_JOBS}"

@@ -20,6 +20,7 @@ from product_etl_spark.pipelines.verification import (
     check_inheritance,
     check_no_orphans,
     check_unique_keys,
+    collect_checks,
     run_warehouse_checks,
 )
 
@@ -80,20 +81,70 @@ def test_consistency_report(spark):
 
 
 def test_checks_catch_violations(spark):
+    def alone(check):
+        return collect_checks([check])[0]
+
     df = spark.createDataFrame([("a", 1), ("a", 2)], "k string, v int")
-    assert not check_unique_keys(df, ["k"], "t").ok
+    assert not alone(check_unique_keys(df, ["k"], "t")).ok
     # NULL keys group together, as under distinct(): two NULLs collide
     nulls = spark.createDataFrame(
         [(None, 1), (None, 2), ("b", 3)], "k string, v int"
     )
-    dup_null = check_unique_keys(nulls, ["k"], "t")
+    dup_null = alone(check_unique_keys(nulls, ["k"], "t"))
     assert not dup_null.ok and dup_null.details == "3 rows / 2 distinct"
     child = spark.createDataFrame([("x", "missing")], "id string, fk string")
     parent = spark.createDataFrame([("other",)], "pk string")
-    assert not check_no_orphans(child, parent, "fk", "pk", "t").ok
+    assert not alone(check_no_orphans(child, parent, "fk", "pk", "t")).ok
     p = spark.createDataFrame([("p1", "c1", "http://wrong")], "id string, collection_id string, url string")
     c = spark.createDataFrame([("c1", "http://right")], "id string, url string")
-    assert not check_inheritance(p, c).ok
+    assert not alone(check_inheritance(p, c)).ok
+
+
+def test_warehouse_checks_names_order_and_details(spark):
+    """The one-action audit reports every check, in order, with the
+    same name, verdict and details text as each check run alone."""
+    product = spark.createDataFrame(
+        [
+            ("p1", "s1", "c1", "http://a"),
+            ("p2", "s1", "c9", None),
+            ("p3", "s3", "c2", "http://x"),
+        ],
+        "id string, sku string, collection_id string, url string",
+    )
+    collection = spark.createDataFrame(
+        [("c1", "m1", "http://a"), ("c2", "m2", "http://b"), ("c3", None, None)],
+        "id string, master_code string, url string",
+    )
+    links = spark.createDataFrame(
+        [("p1", "v1"), ("p9", "v1")], "product_id string, value_id string"
+    )
+    tables = {
+        "product_collection": collection,
+        "product": product,
+        "product_attribute_product": links,
+    }
+    got = [(r.name, r.ok, r.details) for r in run_warehouse_checks(tables)]
+    assert got == [
+        ("unique:product_collection(master_code)", True, "3 rows / 3 distinct"),
+        ("unique:product(sku)", False, "3 rows / 2 distinct"),
+        ("unique:product_attribute_product(product_id,value_id)", True, "2 rows / 2 distinct"),
+        ("no_orphans:product->collection", False, "1 orphans"),
+        ("product_url_inheritance", False, "1 mismatched"),
+        ("no_orphans:attr_link->product", False, "1 orphans"),
+    ]
+    alone = [
+        collect_checks([check])[0]
+        for check in (
+            check_unique_keys(collection, ["master_code"], "product_collection"),
+            check_unique_keys(product, ["sku"], "product"),
+            check_unique_keys(links, ["product_id", "value_id"], "product_attribute_product"),
+            check_no_orphans(product, collection, "collection_id", "id", "product->collection"),
+            check_inheritance(product, collection),
+            check_no_orphans(links, product, "product_id", "id", "attr_link->product"),
+        )
+    ]
+    assert got == [(r.name, r.ok, r.details) for r in alone]
+    assert run_warehouse_checks({}) == []
 
 
 def test_warehouse_audit_on_ingest_fixture(spark, tmp_path):
