@@ -763,14 +763,21 @@ def canonical_by_quality(
 
 
 def positional_shingles(
-    df: DataFrame, text_col: str, id_col: str, n: int = 5
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int = 5,
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """(id, pos, sh) rows: EVERY word n-gram with its 0-based token
     position (NOT distinct — the span-coverage input needs all
     occurrences). Same row-wise construction as exploded_shingles
-    (explode tokens once + n-1 LEAD windows, codegen; lowercased)."""
+    (explode tokens once + n-1 LEAD windows, codegen; lowercased).
+    ``keep`` names per-document columns of ``df`` carried onto every
+    row after ``id``."""
     tok = df.select(
         F.col(id_col),
+        *keep,
         F.posexplode(T.tokens(F.lower(F.col(text_col)))).alias("pos", "tok"),
     )
     w = Window.partitionBy(id_col).orderBy("pos")
@@ -781,12 +788,13 @@ def positional_shingles(
     return (
         tok.select(
             F.col(id_col),
+            *keep,
             "pos",
             F.concat_ws(" ", *parts).alias("sh"),
             last.alias("_last"),
         )
         .filter(F.col("_last").isNotNull())
-        .select(id_col, "pos", "sh")
+        .select(id_col, *keep, "pos", "sh")
     )
 
 

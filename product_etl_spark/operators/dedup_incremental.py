@@ -783,22 +783,20 @@ def incremental_span_excision(
 
 # ------------------------------------------ suffix-span probe store (r13)
 #
-# Incremental twin of the suffix-array exact-substring family
+# Incremental twin of the exact duplicated-span family
 # (operators/suffixes.py, q212/q214): "which spans of a NEW batch are
 # shared verbatim (>= min_len tokens) with the accepted corpus?" —
-# without rescanning accepted text. The store is NOT a suffix rank
-# table (ranks are total orders; appending would re-rank history):
-# by the suffix module's proven cover-equality contract, a suffix
-# shares a >= min_len-token prefix with another document iff its
-# leading min_len-gram occurs in that document — so for a FIXED
-# min_len the distinct-gram inventory is a complete sufficient
-# statistic of the rank store, and it is append-only. Per-batch cost
-# is one equi-join on the gram key against a vocabulary-sized store;
-# merged islands of the matched gram starts equal the suffix
-# operator's maximal spans interval-for-interval (both are the
-# maximal intervals of the same covered-position set — pinned in
-# tests/test_suffixes.py against suffix_duplicated_spans on the
-# combined corpus).
+# without rescanning accepted text. By the suffix module's
+# cover-equality contract a position starts a shared span of
+# >= min_len tokens iff its min_len-window occurs in another
+# document, so for a FIXED min_len the distinct-window inventory is a
+# complete sufficient statistic of history, and it is append-only.
+# The probe runs the batch operators' own gate
+# (suffixes._shared_window_positions) with the store joined in: one
+# batch-window aggregate plus one equi-join on the window key against
+# a vocabulary-sized store; the merged islands equal
+# suffix_duplicated_spans over the combined corpus restricted to the
+# batch (pinned in tests/test_dedup_incremental.py).
 
 
 def build_suffix_span_index(
@@ -834,52 +832,6 @@ def build_suffix_span_index(
     )
 
 
-def _suffix_probe_dup_positions(
-    index: DataFrame | None,
-    batch: DataFrame,
-    text_col: str,
-    id_col: str,
-    min_len: int,
-) -> DataFrame:
-    """(id, pos, _d=min_len) rows at every batch gram start whose
-    gram is shared with history (stored with a DIFFERENT owner) or
-    with another batch document — the covered-position generator all
-    three probe surfaces share."""
-    from product_etl_spark.operators.dedup import positional_shingles
-
-    grams = positional_shingles(batch, text_col, id_col, min_len)
-    # "shared by >= 2 batch docs" == min(id) != max(id): single-phase
-    # map-side-combined aggregate, no COUNT(DISTINCT) dedup level
-    # (r16, guide §2.3)
-    bdf = grams.groupBy("sh").agg(
-        F.min(F.col(id_col)).alias("_bi0"),
-        F.max(F.col(id_col)).alias("_bi1"),
-    )
-    if index is not None:
-        joined = grams.join(
-            bdf.join(
-                index.select("sh", F.col("keep").alias("_skeep")),
-                "sh",
-                "left",
-            ),
-            "sh",
-        )
-        dup = joined.filter(
-            (F.col("_bi0") != F.col("_bi1"))
-            | (
-                F.col("_skeep").isNotNull()
-                & (F.col("_skeep") != F.col(id_col))
-            )
-        )
-    else:
-        dup = grams.join(
-            bdf.filter(F.col("_bi0") != F.col("_bi1")), "sh"
-        )
-    return dup.select(
-        F.col(id_col), "pos", F.lit(min_len).cast("bigint").alias("_d")
-    )
-
-
 def probe_suffix_spans(
     index: DataFrame | None,
     batch: DataFrame,
@@ -904,22 +856,15 @@ def probe_suffix_spans(
     vocabulary-sized store on the gram key, per-doc island windows
     (doc-bounded). Nothing rescans accepted text; nothing is
     corpus^2."""
-    from product_etl_spark.operators.suffixes import _merged_spans
+    from product_etl_spark.operators.suffixes import (
+        _shared_window_positions,
+        _span_rows,
+    )
 
-    dup = _suffix_probe_dup_positions(
-        index, batch, text_col, id_col, min_len
+    dup = _shared_window_positions(
+        batch, text_col, id_col, min_len, store=index
     )
-    return (
-        _merged_spans(dup, id_col, min_len)
-        .select(
-            F.col(id_col),
-            F.col("span_start").cast("bigint").alias("span_start"),
-            (F.col("_se") - F.col("span_start"))
-            .cast("bigint")
-            .alias("span_len"),
-        )
-        .orderBy(id_col, "span_start")
-    )
+    return _span_rows(dup, id_col, min_len)
 
 
 def probe_suffix_excision(
@@ -943,10 +888,13 @@ def probe_suffix_excision(
     carries _d = min_len, so the islands ARE the union of the old
     exploded intervals)."""
     from product_etl_spark.operators.dedup import _excise_intervals
-    from product_etl_spark.operators.suffixes import _merged_spans
+    from product_etl_spark.operators.suffixes import (
+        _merged_spans,
+        _shared_window_positions,
+    )
 
-    dup = _suffix_probe_dup_positions(
-        index, batch, text_col, id_col, min_len
+    dup = _shared_window_positions(
+        batch, text_col, id_col, min_len, store=index
     )
     spans = _merged_spans(dup, id_col, min_len)
     return _excise_intervals(batch, text_col, id_col, spans)

@@ -165,9 +165,7 @@ def global_sort_ranks_counted(
     Returns ``(ranked_df, total_rows)``: the offsets collect already
     sums every partition, so the frame's row count comes for free —
     callers that would otherwise fire a separate ``COUNT(*)`` job on
-    the same frame (the suffix doubling loop's per-round all-distinct
-    early-stop check re-evaluated the distinct a second time just to
-    count it) take this instead, one pass per round instead of two.
+    the same frame take this instead: one pass instead of two.
 
     ONE exchange (r15, guide §2.4): the per-partition row numbers
     come from ``sortWithinPartitions`` + ``monotonically_increasing_id``

@@ -1,97 +1,71 @@
-"""Distributed suffix-array exact-substring dedup — the EXACT rung of
-the Lee et al. 2022 ("Deduplicating Training Data Makes Language
-Models Better", ExactSubstr) family: arbitrary-length cross-document
-duplicated spans from distributed suffix RANKING, upgrading the
-fixed-n gram approximation (dedup.crossdoc_dup_span_coverage, q147 /
-remove_duplicate_spans, q177) to true suffix semantics.
+"""Exact cross-document duplicated spans — the ExactSubstr rung of
+Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
+Better"): the maximal token intervals of each document that lie
+inside text shared verbatim (>= ``min_len`` tokens) with another
+document, with their TRUE arbitrary lengths (q212 names them, q214
+excises them, q217 is q212's twin entry), and the cross-source
+variant where "another document" means a document of another color
+(q215 measures benchmark contamination, q216 excises it).
 
 The reference pipeline (pandas+psycopg2 row loops) computes no dedup
-at all; this operator extends the training-data-pipeline surface per
+at all; this module extends the training-data-pipeline surface per
 the build brief and the r11 verdict's item 4.
 
-Two suffix constructions, identical results (pytest-pinned to agree
-with each other and with brute force):
+**The cover-equality contract is the implementation.** For
+L = ``min_len``, a token lies inside a verbatim span of length
+d >= L shared with another document exactly when some L-token window
+covering it occurs in another document: a shared span of length d
+holds d - L + 1 shared L-windows that together cover it, and a shared
+L-window is itself a shared span of length L. So the union of the
+shared L-windows [pos, pos + L) IS the union of the shared spans,
+interval for interval — the maximal merged islands carry the true
+span lengths — and no suffix has to be sorted to find them. One hash
+aggregate answers the question per window
+(``_shared_window_positions``):
 
-- **'blocked'** (default): per-document suffix blocks — every suffix
-  materializes as its token-id array and Spark's native lexicographic
-  array ordering sorts the whole corpus in one two-level global rank;
-  LCP is one first-mismatch expression. Cost: sum(len*(len+1)/2)
-  token ids — the right trade for BOUNDED documents (loud-guarded by
-  max_doc_tokens), and ~5x fewer Spark jobs than doubling.
-- **'doubling'**: the prefix-doubling ranks described below —
-  document-length-agnostic, O(log repeat) linear rounds; the path
-  for unbounded documents.
+1. ``dedup.positional_shingles(df, text, id, L)`` emits every
+   lowercased L-token window with its start position;
+2. ONE ``groupBy`` on the window text takes the min and max of the
+   window's key — the doc id, or on the cross-color path
+   ``struct(isnull(color), color)``, so NULL counts as one color
+   (``eqNullSafe`` semantics: two NULL-color documents never see
+   each other, NULL against 'bench' does). A window is shared when
+   min != max: a map-side-combined single-phase aggregate, no
+   COUNT(DISTINCT) level;
+3. shared windows join back to their positions as intervals
+   (id, pos, _d = L); ``_merged_spans`` merges them per document
+   (gaps-and-islands) and the removal operators excise the islands
+   with ``dedup._excise_intervals``.
 
-Doubling algorithm (all-DataFrame, no single-task stage):
+The incremental probe (``dedup_incremental.probe_suffix_spans`` /
+``probe_suffix_excision``, q218/q219) runs the same gate with its
+gram store joined in — one implementation for batch and probe.
 
-1. **Suffixes are per-document token tails** — suffix (doc, p) is
-   doc's tokens from p to ITS OWN end. No corpus concatenation, no
-   sentinel alphabet: a short tail simply runs out, which the rank
-   construction encodes with a -1 pad, so cross-document span
-   continuation is impossible by construction.
-2. **Prefix doubling** (Manber–Myers, the classic MapReduce suffix-
-   sort): level-0 ranks are a dense rank of the token vocabulary
-   (vocabulary-bounded shuffle); level-l ranks are the dense rank of
-   the pair (rank[p], rank[p + 2^(l-1)] | -1) — each round is one
-   positional equi-join plus one distinct + global_sort_ranks dense
-   rank (repartitionByRange two-level ranks — never a single-task
-   window). Rounds stop at the STABLE PARTITION: when a doubling
-   refines nothing (distinct-rank count unchanged), equal rank is
-   exactly "identical complete tails" and no later round can refine
-   (the doubling map's fixed point), so the loop exits in
-   O(log longest-repeat) rounds — same convergence-fused discipline
-   as the q156/q164 closures.
-3. **LCP of adjacent suffix pairs** in suffix order by binary
-   lifting over the retained level tables (descending level; add
-   2^l when both shifted ranks exist and agree). Equal-final-rank
-   pairs are identical tails — their LCP is the tail length
-   directly; distinct pairs clip at the shorter tail, which also
-   absorbs the truncated-rank overshoot exactly (the min() is the
-   true LCP, proven in the module test against brute force).
-4. **Longest cross-document shared prefix per position**: in suffix
-   order, the nearest DIFFERENT-document neighbor above any row is
-   the row just before its run of consecutive same-doc rows (any
-   non-run row has a different doc), so d(p) = max(up, down) needs
-   only (a) run ids — ONE distributed prefix-sum of run starts (the
-   global_sort_ranks two-level offsets pattern, generalized to
-   sums), (b) running mins of the adjacent-LCP array WITHIN each
-   run (runs are bounded by a single document's suffix count, the
-   same doc-sized bound as the reconstruction collect_lists), and
-   (c) run-boundary LCPs fetched by a dense run_id+1 equi-join —
-   no global window anywhere.
-5. **Maximal duplicated spans**: positions with d >= min_len emit
-   [pos, pos+d); per-doc gaps-and-islands (the q147 merge) yields
-   the maximal merged intervals and their TRUE lengths.
+Behaviour changes against the suffix-sort constructions this module
+used to hold (per-document suffix blocks, 'blocked', and prefix
+doubling, 'doubling' — both deleted with their ``method``,
+``max_rounds`` and ``max_doc_tokens`` parameters):
 
-Cross-check contract (the reason q212's oracle can be plain SQL):
-for token coverage — and interval-for-interval for the merged
-spans — the suffix method at ``min_len`` L EQUALS the gram method
-at n = L: a duplicated L-gram extends to a shared suffix prefix
->= L, and conversely every L-sub-gram of a shared span of length
-d >= L is itself cross-doc duplicated, so the two interval unions
-coincide. tests/test_suffixes.py asserts this equality against
-dedup.crossdoc_dup_span_coverage on planted fixtures and real
-corpus slices, plus brute force.
+- no ``max_doc_tokens`` guard: nothing is quadratic in a document's
+  length any more — the window frame is O(tokens x L) for documents
+  of any length, so a 3,000-token document simply runs;
+- no ``max_rounds`` raise: there are no doubling rounds to exhaust;
+- NULL doc ids: a NULL-id document is never "another document"
+  (min/max skip NULL keys, exactly as the SQL oracles'
+  ``COUNT(DISTINCT doc_id)`` does). The blocked construction paired
+  such documents with real ones and could report a span running
+  past the end of its document.
 
-Scale shape (why this survives 100 TB): every round of the doubling
-is a linear equi-join + a two-level dense rank (the cost model of a
-distributed sort, paid O(log repeat-length) times); the LCP lifting
-is 2 linear joins per retained level; runs/islands windows are
-doc-bounded; the only driver state is the per-partition offset maps
-(#partitions-sized) and the per-round distinct counts. Nothing is
-ever corpus^2; no single-task window exists in the plan.
+Scale shape: one window-text aggregate (map-side combine; the
+aggregate is window-vocabulary-sized after the combine), one
+equi-join back on the window text, per-document island windows over
+only the duplicated positions. No global sort, no driver-side state,
+nothing corpus^2. At large L, key the aggregate and the join on
+``text.hash64(sh)`` instead of the window text (8-byte keys).
 
-Behavior change (r13, called out per ADVICE): ``max_doc_tokens``
-defaulted to 4096 through r12 and is 2048 since r13 across all six
-public suffix operators. Documents of 2049-4096 tokens that
-previously processed under the default ``method='blocked'`` now
-raise the loud length guard — callers with such documents must pass
-``max_doc_tokens=4096`` explicitly (the guard exists because the
-blocked method materializes per-doc suffix arrays, quadratic in doc
-length) or switch to ``method='doubling'``, which has no document
-length bound. No in-repo caller relied on the old default (catalog
-corpora are < 2048 tokens; the long-doc volume drive passes
-method='doubling' explicitly).
+The distributed scans ``_prefix_sum`` / ``_segmented_prefix_sum``
+(and their bucket helpers) live here for historical reasons; the
+sampling and profiling operators use them.
 """
 
 from __future__ import annotations
@@ -100,8 +74,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from product_etl_spark.functions import text as T
-from product_etl_spark.operators.linkage import (
-    global_sort_ranks_counted,
+from product_etl_spark.operators.dedup import (
+    _excise_intervals,
+    positional_shingles,
 )
 
 
@@ -200,8 +175,7 @@ def _segmented_prefix_sum(
 ) -> DataFrame:
     """Distributed inclusive prefix sum of ``val_col`` along
     ``order_col`` WITHIN each segment — the segmented sibling of
-    ``_prefix_sum`` and the SUM analogue of
-    ``_segmented_running_mins``: ONE repartitionByRange on
+    ``_prefix_sum``: ONE repartitionByRange on
     (segments, order), per-(partition, segment) running-sum windows
     (parallel), then cross-partition carries computed on the
     (partition, segment)-sized summary frame — a window PARTITIONED
@@ -246,892 +220,58 @@ def _segmented_prefix_sum(
     )
 
 
-def _with_prev_row(
-    df: DataFrame,
-    rank_col: str,
-    n_rows: int,
-    cols: list[str],
-    prefix: str = "_prev_",
-    keep_pid: str | None = None,
-) -> DataFrame:
-    """Attach each row's PREDECESSOR-in-rank values of ``cols`` as
-    ``<prefix><col>`` (null for rank 1) — the adjacent-suffix pairing
-    both LCP constructions need, WITHOUT the full two-sided self-join
-    on ``rank_col`` (which shuffled the fat suffix frame twice).
-    Shape (r15, guide §2.4): dense buckets from the rank
-    (``_dense_pid``), one hash exchange, per-bucket ``lag`` windows;
-    the ~buckets rows whose predecessor lives in the previous bucket
-    are patched by a BROADCAST join against the bucket-last rows —
-    driver/executor state is buckets-sized, never row-sized.
-
-    Correctness note: a lag of null on a bucket-first row is exactly
-    the rows the boundary frame patches; a GENUINE null value in a
-    lagged column stays null because non-first rows never match the
-    boundary frame (its keys are bucket-first ranks only).
-
-    ``keep_pid`` (r15, guide §2.4): expose the bucket column under
-    this name instead of dropping it. ``_d_from_sa`` hashes on the
-    SAME ``_dense_pid`` bucket id (same ``_n_buckets``/``n_rows``),
-    so a caller that threads the kept column through to it lets
-    Catalyst prove the clustering and elide the second full-data
-    hash exchange — the window here establishes the partitioning
-    once for both scans."""
-    if n_rows <= 0:
-        out = df
-        for c in cols:
-            out = out.withColumn(prefix + c, F.lit(None).cast(dict(df.dtypes)[c]))
-        if keep_pid is not None:
-            out = out.withColumn(keep_pid, F.lit(0).cast("bigint"))
-        return out
-    buckets = _n_buckets(df.sparkSession, n_rows)
-    pid = _dense_pid(rank_col, buckets, n_rows)
-    w = Window.partitionBy("_wpid").orderBy(rank_col)
-    out = df.withColumn("_wpid", pid)
-    for c in cols:
-        out = out.withColumn(prefix + c, F.lag(F.col(c)).over(w))
-    # bucket-last rows, keyed by their successor's rank: the rows the
-    # lag cannot see across the bucket boundary
-    succ_pid = F.expr(f"(({rank_col}) * {buckets}) div {n_rows}")
-    bnd = df.filter(succ_pid != pid).select(
-        (F.col(rank_col) + F.lit(1)).alias("_bnd_rank"),
-        *[F.col(c).alias(f"_bnd_{c}") for c in cols],
-    )
-    out = out.join(
-        F.broadcast(bnd), F.col(rank_col) == F.col("_bnd_rank"), "left"
-    )
-    for c in cols:
-        out = out.withColumn(
-            prefix + c, F.coalesce(F.col(prefix + c), F.col(f"_bnd_{c}"))
-        )
-    out = out.drop("_bnd_rank", *[f"_bnd_{c}" for c in cols])
-    if keep_pid is None:
-        return out.drop("_wpid")
-    return out.withColumnRenamed("_wpid", keep_pid)
-
-
-def _shifted_ranks(
-    cur: DataFrame,
-    id_col: str,
-    offsets: list[int],
-    out_cols: list[str],
-    pad,
-) -> DataFrame:
-    """(id, pos, _r, out_cols[i] = _r at pos + offsets[i]) by
-    SCATTER-REGROUP: each (id, pos, _r) row is emitted once per slot
-    it feeds (slot 0 = its own position; slot i = the left-shifted
-    target pos - offsets[i-1]) and one groupBy(id, pos) pivots the
-    slots back into columns. ONE hash exchange of len(offsets)+1
-    narrow rows with map-side combine — a document's positions are
-    contiguous in the upstream checkpointed token frame, so the
-    slots of a target mostly collapse before the wire — instead of
-    one self-join (two corpus exchanges + a sort) per offset.
-    Missing shifts (target's source past the tail) coalesce to
-    ``pad``, which must sort/compare below every real rank value.
-    Work stays keyed on (id, pos): no per-document task, documents
-    of any length stay spread across partitions.
-
-    PRECONDITIONS (unchecked contracts, r15 ADVICE): (1) ``id_col``
-    is non-null on every row — the groupBy would merge all NULL-id
-    rows into one pseudo-document where the old self-join's
-    NULL != NULL never matched (in-module callers feed posexplode
-    output keyed by real doc ids; NULL-id docs never reach here);
-    (2) positions are DENSE 0..len-1 per id — a gap would fabricate
-    an (id, pos) row with NULL ``_r`` (posexplode guarantees
-    density)."""
-    emits = [
-        cur.select(
-            F.col(id_col),
-            F.col("pos"),
-            F.lit(0).alias("_slot"),
-            F.col("_r").alias("_rv"),
-        )
-    ]
-    for i, off in enumerate(offsets, start=1):
-        emits.append(
-            cur.select(
-                F.col(id_col),
-                (F.col("pos") - F.lit(off)).alias("pos"),
-                F.lit(i).alias("_slot"),
-                F.col("_r").alias("_rv"),
-            )
-        )
-    allc = emits[0]
-    for e in emits[1:]:
-        allc = allc.unionByName(e)
-    # negative targets have no receiving position; every kept target
-    # has its own slot-0 row (positions are dense 0..len-1), so the
-    # regroup reproduces exactly the original row set
-    agged = (
-        allc.filter(F.col("pos") >= 0)
-        .groupBy(id_col, "pos")
-        .agg(
-            F.max(F.when(F.col("_slot") == 0, F.col("_rv"))).alias("_r"),
-            *[
-                F.max(
-                    F.when(F.col("_slot") == i, F.col("_rv"))
-                ).alias(c)
-                for i, c in enumerate(out_cols, start=1)
-            ],
-        )
-    )
-    return agged.select(
-        id_col,
-        "pos",
-        "_r",
-        *[F.coalesce(F.col(c), pad).alias(c) for c in out_cols],
-    )
-
-
-def _suffix_rank_tables(
-    tok: DataFrame,
-    id_col: str,
-    max_rounds: int,
-    stop_prefix: int | None = None,
-) -> tuple[DataFrame, list[DataFrame], int]:
-    """Prefix-doubling suffix ranks over per-doc token tails.
-
-    ``tok``: (id, pos, _tk) — already lowercased, checkpointed.
-    Returns (final_ranks, [level tables 0..L], L) where level-l ranks
-    discriminate tail prefixes of length min(2^l, tail). Raises
-    loudly if the partition has not stabilized by ``max_rounds`` —
-    raise the bound deliberately, don't discover an unconverged rank
-    table as silently-wrong spans.
-
-    TWO doubling levels ride each round (r14 verdict item 4): one
-    join of the current table with its offset/2*offset/3*offset
-    shifts builds the quad (r, r@+o, r@+2o, r@+3o), whose dense rank
-    is the level-L+2 table directly ((rank2o(p), rank2o(p+2o)) and
-    the raw quad are order-isomorphic, so the dense ranks are
-    IDENTICAL to two sequential rounds'). The intermediate ODD
-    level's table is an equality-faithful STRUCT projection of the
-    same checkpointed quad — binary lifting only ever tests rank
-    EQUALITY, and struct(r, r@+o) equality IS level-L+1 prefix
-    equality — so odd levels cost no counted rank, no join-back and
-    no checkpoint. Per two levels: one checkpointed join + one
-    counted rank + one join-back instead of two of each. The stable
-    partition can be detected one level later than the sequential
-    loop (a stop at an odd level surfaces at the next even one);
-    the extra table is refinement-free and equality-faithful, so
-    spans are unchanged — pytest-pinned identical to blocked.
-
-    ``stop_prefix`` (r15): stop as soon as the top table
-    discriminates prefixes of ``stop_prefix`` tokens — the capped-LCP
-    callers (see _position_dup_lengths) never look past that length,
-    so the stabilization loop over the longest REPEAT collapses to
-    ceil(log2(stop_prefix)) levels. When the stop lands on an ODD
-    level, only the single +offset shift is joined (no quad, no
-    counted rank): the (r, r@+offset) struct is both equality- AND
-    ORDER-faithful for the level (-1 pad sorts before every real
-    rank, exactly the shorter-tail-first lexicographic convention),
-    so it can serve as the final sort key directly."""
-    # Level 0 ranks ARE the token strings (r15): the doubling ladder
-    # only needs level-0 to be equality- and order-faithful, and the
-    # token string itself is both — the old dense-vocab assignment
-    # (distinct + global rank + join-back + eager checkpoint) bought
-    # nothing. Round 1's quad dense-ranks string quads instead of
-    # int quads and every later level is bigint as before. The only
-    # cost is losing the free vocab count for the round-1
-    # stabilization check (nd_prev starts unknown); that check
-    # becomes active from round 2 — one possibly-redundant round on
-    # degenerate corpora, nothing else.
-    nd_prev = None
-    cur = tok.select(id_col, "pos", F.col("_tk").alias("_r"))
-    tables = [cur]
-    if stop_prefix is not None and stop_prefix <= 1:
-        # level 0 already discriminates 1-token prefixes
-        return cur, tables, 0
-    n_pos = tok.count()
-    offset = 1
-    level = 0
-    while level < max_rounds:
-        # missing-shift pad: must sort BEFORE every real value of the
-        # current level's rank type — "" for the string level 0 (no
-        # token is empty), -1 for the 1-based bigint ranks after
-        pad = F.lit("") if level == 0 else F.lit(-1)
-        if stop_prefix is not None and 2 * offset >= stop_prefix:
-            # the ODD level (prefix 2*offset) already covers the cap:
-            # one +offset SHIFT, struct projection, done — no quad,
-            # no counted rank, no join-back (see docstring). The
-            # shift is the scatter-regroup below (r15, guide §2.4):
-            # ONE hash exchange instead of a self-join's two.
-            pair = _shifted_ranks(
-                cur, id_col, [offset], ["_r2"], pad
-            ).select(
-                id_col,
-                "pos",
-                F.struct("_r", F.col("_r2")).alias("_r"),
-            )
-            tables.append(pair)
-            return pair, tables, len(tables) - 1
-        # (r, r@+o, r@+2o, r@+3o) built by SCATTER-REGROUP rather
-        # than three sequential self-joins (r15, guide §2.3/§2.4):
-        # every rank row is emitted once per slot it feeds (its own
-        # position and the three left-shifted targets) and ONE
-        # groupBy(id, pos) pivots the slots back into columns — one
-        # hash exchange of 4x narrow rows with map-side combine
-        # (a doc's positions are contiguous in the checkpointed token
-        # frame, so slots of one target collapse before the wire)
-        # instead of six corpus-sized join exchanges + three sorts.
-        quad = _shifted_ranks(
-            cur,
-            id_col,
-            [offset, 2 * offset, 3 * offset],
-            ["_r2", "_r3", "_r4"],
-            pad,
-        ).localCheckpoint(eager=True)
-        # the ODD level (prefix length 2*offset) never needs dense
-        # ranks: binary lifting only tests EQUALITY, and the raw
-        # (r, r@+offset) struct is equality-faithful — a free
-        # projection of the quad just checkpointed
-        tables.append(
-            quad.select(
-                id_col, "pos", F.struct("_r", "_r2").alias("_r")
-            )
-        )
-        # the counted rank fuses the all-distinct early-stop check
-        # into the rank pass itself: its offsets collect totals the
-        # distinct-key frame, so no separate COUNT job (and no second
-        # evaluation of the distinct) per round — r13 verdict item 4.
-        # r16 note (measured, kept deliberately): a join-free
-        # segmented dense rank over the range-sorted FULL quad (run-
-        # start prefix counting) was built and REJECTED — at bench
-        # scale the distinct collapses the corpus to few enough keys
-        # that AQE BROADCASTS the rank table (join-back ~free), while
-        # the segmented form range-sorts every corpus position's
-        # string quad: q217 10.0s -> 14.0s median, jobs 31 -> 32/rep.
-        # This distinct+rank+join shape is also the scale-adaptive
-        # one: small nd -> broadcast, huge nd -> SMJ.
-        keys = quad.select("_r", "_r2", "_r3", "_r4").distinct()
-        kr, nd = global_sort_ranks_counted(
-            keys, ["_r", "_r2", "_r3", "_r4"], "_nr"
-        )
-        cur = (
-            quad.join(kr, ["_r", "_r2", "_r3", "_r4"])
-            .select(
-                id_col, "pos", F.col("_nr").cast("bigint").alias("_r")
-            )
-            .localCheckpoint(eager=True)
-        )
-        tables.append(cur)
-        level += 2
-        if stop_prefix is not None and 4 * offset >= stop_prefix:
-            # the even level (prefix 4*offset) covers the cap
-            return cur, tables, len(tables) - 1
-        # nd == nd_prev: no refinement happened across the two
-        # levels — ranks are stable (remaining ties are identical
-        # tails; the doubling map's fixed point argument covers the
-        # intermediate level too). nd == n_pos: every position
-        # already has a UNIQUE rank, so no later round can change
-        # anything either. The top-level equal-rank short-circuit
-        # stays correct (equality at an all-distinct level is
-        # simply vacuous).
-        if nd == nd_prev or nd == n_pos:
-            return cur, tables, len(tables) - 1
-        nd_prev = nd
-        offset *= 4
-    raise RuntimeError(
-        f"suffix ranks did not stabilize within {max_rounds} doubling "
-        f"levels (repeated spans longer than {1 << max_rounds} tokens); "
-        "raise max_rounds deliberately"
-    )
-
-
-def _position_dup_lengths(
+def _shared_window_positions(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    max_rounds: int,
-    method: str = "blocked",
-    max_doc_tokens: int = 2048,
+    min_len: int,
     color_col: str | None = None,
-    cap: int | None = None,
+    store: DataFrame | None = None,
 ) -> DataFrame:
-    """Per token position: (id, pos, _d) where _d is the length of
-    the longest prefix of the suffix at (id, pos) that also occurs
-    in a document of a DIFFERENT COLOR (default color = the doc id
-    itself, i.e. any other document; 0 when none) — steps 1-4 of the
-    module algorithm, by either construction method (pytest-pinned
-    to agree).
-
-    ``cap`` (r15, guide §1.2 "don't compute what you throw away"):
-    when the CALLER only consumes _d through ``_d >= min_len`` and
-    the interval union of ``[pos, pos + _d)`` — true of every public
-    operator in this module — pass ``cap = min_len`` and the whole
-    construction is clipped at ``cap`` tokens: the blocked method
-    materializes/sorts ``min(tail, cap)``-token arrays instead of
-    whole tails (O(corpus·cap), not O(Σ len²/2) ids), and the
-    doubling method stops at ``2^level >= cap`` rounds and replaces
-    the binary-lifting LCP joins with ONE rank-table equality (the
-    two-overlapping-windows trick). Outputs are IDENTICAL by the
-    module's cover-equality contract: min(_d, cap) >= cap iff
-    _d >= cap, and the union of [pos, pos+min(_d,cap)) over kept
-    positions equals the union of the uncapped intervals — every
-    token of a shared span of length d >= cap sits inside SOME kept
-    position's cap-length window (the same argument that makes the
-    suffix family interval-equal to the cap-gram family, module
-    docstring). ``cap=None`` keeps the full construction (true
-    per-position _d magnitudes)."""
-    if method == "blocked":
-        sa, n_sfx = _position_dup_lengths_blocked(
-            df, text_col, id_col, max_doc_tokens, cap, color_col
-        )
-    elif method == "doubling":
-        sa, n_sfx = _position_dup_lengths_doubling(
-            df, text_col, id_col, max_rounds, cap
-        )
-    else:
-        raise ValueError(f"unknown suffix method {method!r}")
+    """(id, pos, _d = min_len) at every ``min_len``-token window
+    start whose window also occurs in a document with a different key
+    — the doc id, or the NULL-safe color when ``color_col`` is given
+    (module docstring). ``store`` is the incremental probe's gram
+    index (sh, keep): a window stored under an owner other than the
+    position's own document counts as shared too."""
     if color_col is None:
-        # cross-DOC semantics: the color IS the doc id
-        sa = sa.withColumn(
-            "_start",
-            F.col("_ida").isNull() | (F.col("_ida") != F.col(id_col)),
-        )
-        return _d_from_sa(sa, id_col, n_sfx)
-    # cross-COLOR (e.g. corpus-vs-benchmark source) semantics; the
-    # fused _d_from_sa scan is run-length-agnostic (one source
-    # dominating a corpus-sized suffix-order region never becomes a
-    # single window task), so both semantics share one path
-    if method == "blocked":
-        # the blocked construction threads each row's color and its
-        # rank-predecessor's through as columns (r15) — no attach-by-
-        # join (the old shape shuffled the suffix frame twice here)
-        sa = sa.withColumn(
-            "_start", ~F.col("_clra").eqNullSafe(F.col("_clr"))
-        ).drop("_clr", "_clra")
-        return _d_from_sa(sa, id_col, n_sfx)
-    colors = df.select(
-        F.col(id_col), F.col(color_col).alias("_clr")
-    ).distinct()
-    ca = colors.select(
-        F.col(id_col).alias("_ida"), F.col("_clr").alias("_clra")
-    )
-    sa = (
-        sa.join(colors, id_col)
-        .join(ca, "_ida", "left")
-        .withColumn(
-            "_start", ~F.col("_clra").eqNullSafe(F.col("_clr"))
-        )
-    )
-    return _d_from_sa(sa, id_col, n_sfx)
-
-
-def _position_dup_lengths_blocked(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_doc_tokens: int,
-    cap: int | None = None,
-    color_col: str | None = None,
-) -> DataFrame:
-    """Bounded-document-block suffix construction: each suffix
-    materializes as its token ARRAY (a slice of the document's token
-    sequence — strings, not vocab ids: contiguity of shared prefixes
-    holds under any total token order, so no id assignment is needed)
-    and Spark's native lexicographic array ordering sorts all
-    suffixes in ONE two-level global rank — no doubling rounds; the
-    adjacent-pair LCP is a single first-mismatch expression
-    (array_position over a zip_with equality mask), no lifting joins.
-
-    Cost model: sum over docs of len*(len+1)/2 token ids
-    materialized — the right trade when documents are BOUNDED (web
-    pages, chat turns, code files after splitting): ~50x the corpus
-    for 100-token docs, one sort, a handful of jobs. Any document
-    longer than ``max_doc_tokens`` FAILS loudly (assert_true — the
-    quadratic-per-doc regime must be chosen, not discovered): switch
-    to method='doubling', whose O(log repeat) linear rounds don't
-    care about document length, or split the document upstream."""
-    # Suffixes sort as arrays of token STRINGS (r15, guide §1.2/§2.4):
-    # the result only depends on suffixes that share a prefix being
-    # CONTIGUOUS in the sort, which lexicographic array order gives
-    # under ANY total order on tokens — string order works as well as
-    # dense vocab ranks. That deletes the whole id-assignment front
-    # end the previous shape paid (posexplode + vocab distinct +
-    # global rank + join-back + groupBy/collect_list re-assembly:
-    # four exchanges and an offsets collect) — the token array from
-    # the scan IS the document array, so everything up to the one
-    # mandatory global suffix sort is now a pure map.
-    # ``color_col`` (r15): the caller's cross-color semantics only
-    # need each suffix row's own color and its rank-predecessor's —
-    # carried here as plain columns (plus one more lag column below),
-    # they cost nothing, where the old attach-by-join shape shuffled
-    # the full suffix frame twice (two SortMergeJoins) after the fact.
-    clr = ["_clr"] if color_col is not None else []
-    docarr = df.select(
-        F.col(id_col),
-        *([F.col(color_col).alias("_clr")] if color_col is not None else []),
-        T.tokens(F.lower(F.col(text_col))).alias("_ids"),
-    ).select(
-        F.col(id_col), *clr, "_ids", F.size("_ids").alias("_dl")
-    ).filter(F.col("_dl") > 0)
-    guard = F.assert_true(
-        F.col("_dl") <= F.lit(max_doc_tokens),
-        F.concat(
-            F.lit(
-                "suffix blocked method: document holds > "
-                f"{max_doc_tokens} tokens (id="
-            ),
-            F.col(id_col).cast("string"),
-            F.lit(
-                "); per-doc suffix blocks are O(len^2) — use "
-                "method='doubling' (document-length-agnostic), split "
-                "the document upstream (packing.chunk_documents, "
-                "q118), or raise max_doc_tokens deliberately"
-            ),
-        ),
-    )
-    docarr = docarr.withColumn(
-        "_ids", F.when(guard.isNull(), F.col("_ids"))
-    )
-    # cap: materialize only the first ``cap`` tokens of each suffix —
-    # the LCP below then computes min(true LCP, cap), which is all the
-    # interval-union consumers can observe (see _position_dup_lengths)
-    slice_len = "_dl - pos" if cap is None else f"least({int(cap)}, _dl - pos)"
-    suf = docarr.select(
-        F.col(id_col),
-        *clr,
-        F.explode(F.sequence(F.lit(0), F.col("_dl") - 1)).alias("pos"),
-        F.col("_dl"),
-        F.expr(f"slice(_ids, pos + 1, {slice_len})").alias("_sfx"),
-    ).select(
-        id_col, *clr, "pos",
-        (F.col("_dl") - F.col("pos")).alias("_tail"), "_sfx"
-    )
-    saf, n_sfx = global_sort_ranks_counted(
-        suf, ["_sfx", id_col, "pos"], "_s"
-    )
-    # adjacent-suffix pairing via the lag-with-boundary helper — one
-    # exchange instead of shuffling the fat array frame twice for a
-    # self-join on _s (r15, guide §2.4)
-    prev = _with_prev_row(
-        saf, "_s", n_sfx, ["_sfx", "_tail", id_col, *clr], keep_pid="_pid"
-    )
-    mism = F.expr(
-        f"array_position(zip_with(_prev__sfx, _sfx,"
-        " (x, y) -> NOT (x <=> y)), true)"
-    )
-    sa = prev.select(
-        id_col,
-        *clr,
-        *([F.col("_prev__clr").alias("_clra")] if clr else []),
-        "pos",
-        "_s",
-        "_pid",
-        "_tail",
-        F.when(F.col("_prev__sfx").isNull(), F.lit(0))
-        .when(mism > 0, (mism - 1).cast("bigint"))
-        .otherwise(
-            # no mismatch within the materialized arrays: LCP is the
-            # shorter array's length — min(tails) uncapped, and
-            # additionally clipped at ``cap`` when suffixes were
-            # truncated (the arrays are min(tail, cap) tokens long)
-            (
-                F.least("_prev__tail", "_tail")
-                if cap is None
-                else F.least(F.lit(cap), F.col("_prev__tail"), F.col("_tail"))
-            ).cast("bigint")
-        )
-        .alias("_lcp"),
-        F.col(f"_prev_{id_col}").alias("_ida"),
-    )
-    return sa, n_sfx
-
-
-def _position_dup_lengths_doubling(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_rounds: int,
-    cap: int | None = None,
-) -> DataFrame:
-    """Prefix-doubling construction (steps 1-4 of the module
-    algorithm) — document-length-agnostic: O(log repeat) linear
-    rounds, the scale path when documents are NOT bounded.
-
-    ``cap`` (r15, see _position_dup_lengths): the rank loop stops at
-    ``2^level >= cap`` (no stabilization sweep over the longest
-    repeat), and the log-depth binary-lifting LCP joins collapse to
-    ONE rank-class equality per adjacent pair: LCP >= cap iff both
-    tails >= cap and the pair agrees on rank_L at positions p and
-    p + (cap - 2^L), L = floor(log2(cap)) — the classic
-    two-overlapping-windows decomposition; for power-of-two caps the
-    second window is the first (zero extra joins). Downstream only
-    ever tests ``_d >= cap`` and unions [pos, pos+_d), so the
-    {0, cap} flag is observationally identical to the true LCP."""
-    tok = (
-        df.select(
-            F.col(id_col),
-            F.posexplode(T.tokens(F.lower(F.col(text_col)))).alias(
-                "pos", "_tk"
-            ),
-        )
-        .localCheckpoint(eager=True)
-    )
-    final, tables, top = _suffix_rank_tables(
-        tok, id_col, max_rounds, stop_prefix=cap
-    )
-    dl = tok.groupBy(id_col).agg(F.count(F.lit(1)).alias("_dl"))
-    ranked, n_sfx = global_sort_ranks_counted(
-        final, ["_r", id_col, "pos"], "_s"
-    )
-    saf = (
-        ranked.join(dl, id_col)
-        .select(
-            id_col,
-            "pos",
-            "_r",
-            "_s",
-            (F.col("_dl") - F.col("pos")).alias("_tail"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    if cap is not None:
-        L = cap.bit_length() - 1  # floor(log2(cap)), cap >= 1
-        o = cap - (1 << L)
-        covered = 1 << top
-        kcols = ["_k1"]
-        joined = False
-        if covered < cap:
-            # stabilization ended the loop before reaching the cap:
-            # equal top rank now means IDENTICAL complete tails, so
-            # LCP = min(tails) and the tails >= cap guard suffices
-            keyed = saf.withColumn("_k1", F.col("_r"))
-        elif o == 0 and L == top:
-            # the catalog case (cap a power of two, loop stopped
-            # exactly at it): the order rank IS the cap-class key
-            keyed = saf.withColumn("_k1", F.col("_r"))
-        else:
-            t1 = tables[L].select(
-                F.col(id_col), F.col("pos"), F.col("_r").alias("_k1")
-            )
-            keyed = saf.join(t1, [id_col, "pos"])
-            joined = True
-            if o > 0:
-                t2 = tables[L].select(
-                    F.col(id_col),
-                    (F.col("pos") - F.lit(o)).alias("pos"),
-                    F.col("_r").alias("_k2"),
-                )
-                keyed = keyed.join(t2, [id_col, "pos"], "left")
-                kcols = ["_k1", "_k2"]
-        if joined:
-            # _with_prev_row references its input twice (rows +
-            # boundary frame); pin the join result once
-            keyed = keyed.localCheckpoint(eager=False)
-        prev = _with_prev_row(
-            keyed, "_s", n_sfx, [id_col, "_tail", *kcols], keep_pid="_pid"
-        )
-        flag = (
-            (F.col("_tail") >= F.lit(cap))
-            & (F.col("_prev__tail") >= F.lit(cap))
-            & (F.col("_k1") == F.col("_prev__k1"))
-        )
-        if "_k2" in kcols:
-            flag = flag & F.col("_k2").eqNullSafe(F.col("_prev__k2"))
-        sa = prev.select(
-            F.col(id_col),
-            "pos",
-            "_s",
-            "_pid",
-            "_tail",
-            F.when(F.col(f"_prev_{id_col}").isNull(), F.lit(0))
-            .when(flag, F.lit(cap))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-            .alias("_lcp"),
-            F.col(f"_prev_{id_col}").alias("_ida"),
-        )
-        return sa, n_sfx
-    # adjacent-suffix pairing via the lag-with-boundary helper — one
-    # exchange instead of a two-sided self-join on _s (r15, §2.4);
-    # the frame KEEPS the row's own columns, so the final join-back
-    # onto saf disappears too
-    prev = _with_prev_row(
-        saf, "_s", n_sfx, [id_col, "pos", "_r", "_tail"]
-    )
-    pairs = prev.select(
-        "_s",
-        F.col(id_col).alias("_idb"),
-        F.col("pos").alias("_posb"),
-        F.col("_r").alias("_rb"),
-        F.col("_tail").alias("_tailb"),
-        F.col(f"_prev_{id_col}").alias("_ida"),
-        F.col("_prev_pos").alias("_posa"),
-        F.col("_prev__r").alias("_ra"),
-        F.col("_prev__tail").alias("_taila"),
-        F.lit(0).cast("bigint").alias("_acc"),
-    )
-    # binary lifting, descending level; level `top` is the stable
-    # permutation-or-identical-tails table — equal there means
-    # identical tails, short-circuited below, so lift top-1..0
-    for lvl in range(top - 1, -1, -1):
-        t = tables[lvl]
-        ta = t.select(
-            F.col(id_col).alias("_ida"),
-            F.col("pos").alias("_pla"),
-            F.col("_r").alias("_rla"),
-        )
-        tb = t.select(
-            F.col(id_col).alias("_idb"),
-            F.col("pos").alias("_plb"),
-            F.col("_r").alias("_rlb"),
-        )
-        pairs = (
-            pairs.withColumn("_pla", F.col("_posa") + F.col("_acc"))
-            .withColumn("_plb", F.col("_posb") + F.col("_acc"))
-            .join(ta, ["_ida", "_pla"], "left")
-            .join(tb, ["_idb", "_plb"], "left")
-            .withColumn(
-                "_acc",
-                F.when(
-                    F.col("_rla").isNotNull()
-                    & F.col("_rlb").isNotNull()
-                    & (F.col("_rla") == F.col("_rlb")),
-                    F.col("_acc") + F.lit(1 << lvl),
-                ).otherwise(F.col("_acc")),
-            )
-            .drop("_pla", "_plb", "_rla", "_rlb")
-        )
-    sa = pairs.select(
-        F.col("_idb").alias(id_col),
-        F.col("_posb").alias("pos"),
-        "_s",
-        F.col("_tailb").alias("_tail"),
-        F.when(F.col("_ida").isNull(), F.lit(0).cast("bigint"))
-        .when(
-            F.col("_ra") == F.col("_rb"),
-            F.least("_taila", "_tailb").cast("bigint"),
-        )
-        .otherwise(
-            F.least("_acc", "_taila", "_tailb").cast("bigint")
-        )
-        .alias("_lcp"),
-        "_ida",
-    )
-    return sa, n_sfx
-
-
-def _segmented_running_mins(
-    df: DataFrame,
-    order_col: str,
-    seg_col: str,
-    val_col: str,
-    fwd_col: str,
-    bwd_col: str,
-) -> DataFrame:
-    """Distributed INCLUSIVE running mins of ``val_col`` within each
-    ``seg_col`` segment along the total order ``order_col``, BOTH
-    directions in one pass — the segmented-scan sibling of
-    ``_prefix_sum``: ONE repartitionByRange on the order, per-
-    (partition, segment) local window mins in both orders (same
-    shuffle, two sort-free frames), then cross-partition carries
-    computed on the (partition, segment)-sized summary frame — a
-    window PARTITIONED BY SEGMENT over at most #partitions rows per
-    segment, never over the rows themselves. The forward carry is
-    the min over strictly-LOWER pids, the backward carry over
-    strictly-HIGHER pids (pid is monotone in the order). Safe for
-    segments of ANY length — the reason the cross-color path can't
-    use plain per-run windows (one color can dominate a corpus-sized
-    suffix-order run)."""
-    parts = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    ranged = df.repartitionByRange(
-        parts, F.col(order_col).asc()
-    ).withColumn("_pid", F.spark_partition_id())
-    wf = Window.partitionBy("_pid", seg_col).orderBy(
-        F.col(order_col).asc()
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    wb = Window.partitionBy("_pid", seg_col).orderBy(
-        F.col(order_col).desc()
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    local = (
-        ranged.withColumn("_lf", F.min(F.col(val_col)).over(wf))
-        .withColumn("_lb", F.min(F.col(val_col)).over(wb))
-        .localCheckpoint(eager=True)
-    )
-    pm = local.groupBy("_pid", seg_col).agg(
-        F.min(F.col(val_col)).alias("_pm")
-    )
-    wcf = Window.partitionBy(seg_col).orderBy(
-        F.col("_pid").asc()
-    ).rowsBetween(Window.unboundedPreceding, -1)
-    wcb = Window.partitionBy(seg_col).orderBy(
-        F.col("_pid").desc()
-    ).rowsBetween(Window.unboundedPreceding, -1)
-    carry = pm.select(
-        "_pid",
-        seg_col,
-        F.min("_pm").over(wcf).alias("_cf"),
-        F.min("_pm").over(wcb).alias("_cb"),
-    )
-    big = F.lit(1 << 62)
-    return (
-        local.join(carry, ["_pid", seg_col])
-        .withColumn(
-            fwd_col, F.least(F.col("_lf"), F.coalesce(F.col("_cf"), big))
-        )
-        .withColumn(
-            bwd_col, F.least(F.col("_lb"), F.coalesce(F.col("_cb"), big))
-        )
-        .drop("_pid", "_lf", "_lb", "_cf", "_cb")
-    )
-
-
-def _d_from_sa(sa: DataFrame, id_col: str, n_rows: int) -> DataFrame:
-    """Step 4 shared by both construction methods and both color
-    semantics: from the suffix-ordered frame (id, pos, _s, _tail,
-    _lcp = LCP to the previous suffix, _start = previous suffix has a
-    different color), compute _d = longest shared prefix with any
-    OTHER-color suffix via the nearest-different-color run machinery.
-
-    FUSED single-exchange segmented scan (r15, guide §2.4): run ids,
-    the inclusive forward per-run min, and the exclusive following
-    per-run min all ride ONE hash exchange on a dense bucket id
-    derived from the suffix rank (``_dense_pid`` — previously this
-    was a two-exchange prefix sum FOLLOWED BY either per-run windows
-    (one more exchange) or the two-exchange segmented-min scan).
-    Cross-bucket carries: only a bucket's FIRST group (local run 0)
-    can continue a run from an earlier bucket and only its LAST group
-    can continue into the next, so the carries are a buckets-sized
-    driver scan folded into the same offsets collect — never a
-    row-frame join. Safe for runs of ANY length (one color dominating
-    a corpus-sized suffix-order region never becomes one window
-    task), so ONE code path serves both the doc-color and
-    source-color semantics."""
-    big = F.lit(1 << 62)
-    if n_rows <= 0:
-        return sa.select(
-            F.col(id_col),
-            "pos",
-            "_tail",
-            F.lit(None).cast("bigint").alias("_d"),
-        )
-    base = sa.withColumn("_sv", F.col("_start").cast("int"))
-    if "_pid" not in sa.columns:
-        buckets = _n_buckets(sa.sparkSession, n_rows)
-        base = base.withColumn("_pid", _dense_pid("_s", buckets, n_rows))
-    # else: the caller kept _with_prev_row's bucket column (same
-    # _dense_pid over the same _n_buckets(n_rows)) — identical values,
-    # and when the lineage preserved the clustering Catalyst elides
-    # this scan's hash exchange entirely (guide §2.4)
-    w1 = Window.partitionBy("_pid").orderBy("_s")
-    local1 = base.withColumn("_lrun", F.sum("_sv").over(w1)).withColumn(
-        # starts strictly AFTER this row in the bucket: 0 marks the
-        # bucket's last group (the only one that can continue right)
-        "_fs",
-        F.coalesce(
-            F.sum("_sv").over(
-                w1.rowsBetween(1, Window.unboundedFollowing)
-            ),
-            F.lit(0),
-        ),
-    )
-    wg = Window.partitionBy("_pid", "_lrun").orderBy("_s")
-    local = (
-        local1.withColumn(
-            "_lf",
-            F.min("_lcp").over(
-                wg.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        .withColumn(
-            "_lt",
-            F.min("_lcp").over(
-                wg.rowsBetween(1, Window.unboundedFollowing)
-            ),
-        )
-        .localCheckpoint(eager=False)
-    )
-    # ONE buckets-sized collect (also the checkpoint's materializing
-    # action): per-bucket start counts -> global run offsets, plus
-    # the first/last-group mins -> cross-bucket carry chains.
-    bnd = (
-        local.groupBy("_pid")
-        .agg(
-            F.sum("_sv").alias("_n"),
-            F.min(F.when(F.col("_lrun") == 0, F.col("_lcp"))).alias(
-                "_pm0"
-            ),
-            F.min(F.when(F.col("_fs") == 0, F.col("_lcp"))).alias(
-                "_pml"
-            ),
-        )
-        .collect()
-    )
-    bnd = sorted(bnd, key=lambda r: r["_pid"])
-    INF = 1 << 62
-    runoff: dict[int, int] = {}
-    fwd: dict[int, int] = {}
-    bwd: dict[int, int] = {}
-    acc = 0
-    open_min = INF
-    for r in bnd:
-        pid = r["_pid"]
-        runoff[pid] = acc
-        # min over earlier buckets' pieces of the run continuing into
-        # this bucket (consumed only by rows with _lrun == 0)
-        fwd[pid] = open_min
-        pml = r["_pml"] if r["_pml"] is not None else INF
-        if (r["_n"] or 0) > 0:
-            open_min = pml
-        else:
-            open_min = min(open_min, pml)
-        acc += r["_n"] or 0
-    open_min = INF
-    for r in reversed(bnd):
-        pid = r["_pid"]
-        # min over later buckets' pieces of the run continuing out of
-        # this bucket (consumed only by rows with _fs == 0)
-        bwd[pid] = open_min
-        if r["_pm0"] is None:
-            # bucket begins with a start row: no run crosses its left
-            # boundary — the chain breaks here
-            open_min = INF
-        elif (r["_n"] or 0) > 0:
-            open_min = r["_pm0"]
-        else:
-            open_min = min(open_min, r["_pm0"])
-    if runoff:
-        roff = F.create_map(
-            *[F.lit(x) for kv in runoff.items() for x in kv]
-        )
-        fmap = F.create_map(*[F.lit(x) for kv in fwd.items() for x in kv])
-        bmap = F.create_map(*[F.lit(x) for kv in bwd.items() for x in kv])
-        run_expr = (roff[F.col("_pid")] + F.col("_lrun")).cast("bigint")
-        fcarry = F.when(F.col("_lrun") == 0, fmap[F.col("_pid")]).otherwise(
-            big
-        )
-        bcarry = F.when(F.col("_fs") == 0, bmap[F.col("_pid")]).otherwise(
-            big
-        )
+        grams = positional_shingles(df, text_col, id_col, min_len)
+        key = F.col(id_col)
     else:
-        run_expr = F.lit(None).cast("bigint")
-        fcarry = big
-        bcarry = big
-    scored_in = (
-        local.withColumn("_run", run_expr)
-        .withColumn("_up", F.least(F.col("_lf"), fcarry))
-        .withColumn(
-            "_tm", F.least(F.coalesce(F.col("_lt"), big), bcarry)
-        )
-    )
-    run_starts = scored_in.filter(F.col("_start")).select(
-        (F.col("_run") - F.lit(1)).alias("_run"),
-        F.col("_lcp").alias("_nb"),
-    )
-    scored = scored_in.join(run_starts, "_run", "left").select(
-        id_col,
-        "pos",
-        "_tail",
-        F.greatest(
-            F.col("_up"),
-            F.when(F.col("_nb").isNull(), F.lit(0)).otherwise(
-                F.least(F.col("_tm"), F.col("_nb"))
+        grams = positional_shingles(
+            df.withColumn(
+                "_key", F.struct(F.isnull(color_col), F.col(color_col))
             ),
-        ).alias("_d"),
+            text_col,
+            id_col,
+            min_len,
+            keep=("_key",),
+        )
+        key = F.col("_key")
+    ranges = grams.groupBy("sh").agg(
+        F.min(key).alias("_k0"), F.max(key).alias("_k1")
     )
-    return scored
+    shared = ~F.col("_k0").eqNullSafe(F.col("_k1"))
+    if store is None:
+        dup = grams.join(ranges.filter(shared), "sh")
+    else:
+        dup = grams.join(
+            ranges.join(
+                store.select("sh", F.col("keep").alias("_skeep")),
+                "sh",
+                "left",
+            ),
+            "sh",
+        ).filter(
+            shared
+            | (
+                F.col("_skeep").isNotNull()
+                & (F.col("_skeep") != F.col(id_col))
+            )
+        )
+    return dup.select(
+        F.col(id_col), "pos", F.lit(min_len).cast("bigint").alias("_d")
+    )
 
 
 def _merged_spans(
@@ -1158,33 +298,9 @@ def _merged_spans(
     )
 
 
-def suffix_duplicated_spans(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    min_len: int = 8,
-    max_rounds: int = 16,
-    method: str = "blocked",
-    max_doc_tokens: int = 2048,
-) -> DataFrame:
-    """MAXIMAL cross-document duplicated spans, exactly: one row per
-    maximal merged token interval that lies inside text shared
-    verbatim (length >= ``min_len``) with at least one OTHER
-    document — (id, span_start, span_len), span_start 0-based,
-    ordered by (id, span_start). This is the surface the gram
-    family cannot produce: TRUE span lengths of arbitrary size, not
-    fixed-n windows. Interval-for-interval equal to the merged
-    islands of the n=min_len gram method (module contract).
-
-    ``method``: 'blocked' (default — per-doc suffix arrays sorted by
-    Spark's native array ordering; right for bounded documents,
-    loud-guarded by ``max_doc_tokens``) or 'doubling' (prefix
-    doubling; document-length-agnostic). Both produce identical
-    results (pytest-pinned)."""
-    dup = _position_dup_lengths(
-        df, text_col, id_col, max_rounds, method, max_doc_tokens,
-        cap=min_len,
-    )
+def _span_rows(dup: DataFrame, id_col: str, min_len: int) -> DataFrame:
+    """(id, span_start, span_len) per maximal merged interval of
+    ``dup``, ordered by (id, span_start) — q212's output surface."""
     return (
         _merged_spans(dup, id_col, min_len)
         .select(
@@ -1198,33 +314,25 @@ def suffix_duplicated_spans(
     )
 
 
-def suffix_dup_coverage(
+def _coverage(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    min_len: int = 8,
-    max_rounds: int = 16,
-    method: str = "blocked",
-    max_doc_tokens: int = 2048,
+    spans: DataFrame,
+    color_col: str | None = None,
 ) -> DataFrame:
-    """Per-document duplicated-token coverage from the TRUE suffix
-    spans — same surface as dedup.crossdoc_dup_span_coverage
-    (id, n_tokens, covered, coverage) and provably equal to it at
-    n = min_len (module contract; pytest-asserted), while also
-    exposing the exact span inventory via suffix_duplicated_spans."""
-    dup = _position_dup_lengths(
-        df, text_col, id_col, max_rounds, method, max_doc_tokens,
-        cap=min_len,
-    )
-    spans = _merged_spans(dup, id_col, min_len)
+    """(id[, color], n_tokens, covered, coverage) for EVERY document
+    of ``df``: ``covered`` sums the lengths of its merged spans."""
     covered = spans.groupBy(id_col).agg(
         F.sum(F.col("_se") - F.col("span_start")).alias("_cov")
     )
+    color = [] if color_col is None else [F.col(color_col).alias("color")]
     base = df.select(
-        F.col(id_col), T.token_count(F.col(text_col)).alias("n_tokens")
+        F.col(id_col), *color, T.token_count(F.col(text_col)).alias("n_tokens")
     )
     return base.join(covered, id_col, "left").select(
         id_col,
+        *(["color"] if color else []),
         "n_tokens",
         F.coalesce(F.col("_cov"), F.lit(0)).cast("bigint").alias("covered"),
         F.when(F.col("n_tokens") <= 0, F.lit(0.0))
@@ -1239,43 +347,48 @@ def suffix_dup_coverage(
     )
 
 
-def suffix_remove_duplicates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    min_len: int = 8,
-    max_rounds: int = 16,
-    method: str = "blocked",
-    max_doc_tokens: int = 2048,
+def suffix_duplicated_spans(
+    df: DataFrame, text_col: str, id_col: str, min_len: int = 8
 ) -> DataFrame:
-    """Suffix-exact span REMOVAL — the excision rung on TRUE suffix
-    semantics: every token inside a cross-document duplicated span of
-    length >= ``min_len`` is excised from EVERY document holding it
-    (the conservative boilerplate-strip variant of Lee et al. 2022
-    ExactSubstr; the keeper-preserving variant — lowest-id doc keeps
-    its copy — is ``dedup.remove_duplicate_spans``/q177's gram rule).
+    """MAXIMAL cross-document duplicated spans, exactly: one row per
+    maximal merged token interval that lies inside text shared
+    verbatim (length >= ``min_len``) with at least one OTHER
+    document — (id, span_start, span_len), span_start 0-based,
+    ordered by (id, span_start). TRUE span lengths of arbitrary size,
+    not fixed-n windows: the merged islands of the shared
+    ``min_len``-windows (module contract)."""
+    dup = _shared_window_positions(df, text_col, id_col, min_len)
+    return _span_rows(dup, id_col, min_len)
+
+
+def suffix_dup_coverage(
+    df: DataFrame, text_col: str, id_col: str, min_len: int = 8
+) -> DataFrame:
+    """Per-document duplicated-token coverage of the exact spans —
+    same surface as dedup.crossdoc_dup_span_coverage
+    (id, n_tokens, covered, coverage) and equal to it at
+    n = min_len (module contract; pytest-asserted), while
+    suffix_duplicated_spans exposes the span inventory itself."""
+    dup = _shared_window_positions(df, text_col, id_col, min_len)
+    spans = _merged_spans(dup, id_col, min_len)
+    return _coverage(df, text_col, id_col, spans)
+
+
+def suffix_remove_duplicates(
+    df: DataFrame, text_col: str, id_col: str, min_len: int = 8
+) -> DataFrame:
+    """Exact span REMOVAL: every token inside a cross-document
+    duplicated span of length >= ``min_len`` is excised from EVERY
+    document holding it (the conservative boilerplate-strip variant
+    of Lee et al. 2022 ExactSubstr; the keeper-preserving variant —
+    lowest-id doc keeps its copy — is ``dedup.remove_duplicate_spans``
+    / q177's gram rule).
 
     Output: (id, text_clean, n_tokens, n_removed) — same surface and
-    reconstruction tail (``dedup._excise_positions``) as the gram
-    removal ops; by the module's coverage-equality contract the
-    removed POSITION SET equals the gram method's covered set at
-    n = min_len, which is what q214's plain-SQL oracle replays.
-
-    Scale shape (r16): the span frame's cost (see module docstring)
-    plus one span-count-bounded groupBy and one doc-id join — the
-    covered positions are excised by a positional higher-order
-    filter against the doc's merged-interval array
-    (dedup._excise_intervals), so the old interval explode +
-    (id, pos) distinct + anti-join + doc reconstruction groupBy
-    (three corpus-sized exchanges) never materialize. The removal
-    set is identical: _merged_spans' islands ARE the union of the
-    [pos, pos+_d) intervals the old path exploded."""
-    from product_etl_spark.operators.dedup import _excise_intervals
-
-    dup = _position_dup_lengths(
-        df, text_col, id_col, max_rounds, method, max_doc_tokens,
-        cap=min_len,
-    )
+    reconstruction tail as the gram removal ops: the merged islands
+    excise positionally per document (``dedup._excise_intervals``:
+    one span-count-bounded groupBy and one doc-id join)."""
+    dup = _shared_window_positions(df, text_col, id_col, min_len)
     spans = _merged_spans(dup, id_col, min_len)
     return _excise_intervals(df, text_col, id_col, spans)
 
@@ -1286,65 +399,25 @@ def suffix_shared_span_coverage(
     id_col: str,
     color_col: str,
     min_len: int = 8,
-    max_rounds: int = 16,
-    method: str = "blocked",
-    max_doc_tokens: int = 2048,
 ) -> DataFrame:
     """Cross-SOURCE exact-span contamination: per document, the
     coverage of tokens inside verbatim spans of >= ``min_len`` tokens
     shared with a document of a DIFFERENT ``color_col`` value (e.g.
     corpus vs held-out benchmark) — true-span benchmark
     decontamination, upgrading fixed-n gram collision (q112) to
-    arbitrary-length suffix semantics. Same-color duplication is
-    deliberately invisible: a corpus document copying another corpus
-    document is dedup's business (q212), not contamination.
+    arbitrary-length spans. Same-color duplication is deliberately
+    invisible: a corpus document copying another corpus document is
+    dedup's business (q212), not contamination. NULL is one color.
 
     Output: (id, color, n_tokens, covered, coverage) for EVERY
-    document; filter by color for the corpus-side report. By the
-    module's cover-equality contract the covered set equals the
-    cross-color duplicated n-gram cover at n = min_len, which is what
-    the q215 oracle replays in plain SQL.
-
-    Scale shape: the suffix construction of the chosen method, then
-    the nearest-different-COLOR machinery with SEGMENTED two-level
-    scans (`_segmented_running_min`) instead of per-run windows —
-    same-color runs in suffix order can be corpus-sized when one
-    source dominates, so the scans' cross-partition carries ride a
-    (partition, run)-bounded summary frame, never the rows."""
-    dup = _position_dup_lengths(
-        df,
-        text_col,
-        id_col,
-        max_rounds,
-        method,
-        max_doc_tokens,
-        color_col=color_col,
-        cap=min_len,
+    document; filter by color for the corpus-side report. The covered
+    set is the cross-color shared ``min_len``-window cover, which is
+    what the q215 oracle replays in plain SQL."""
+    dup = _shared_window_positions(
+        df, text_col, id_col, min_len, color_col=color_col
     )
     spans = _merged_spans(dup, id_col, min_len)
-    covered = spans.groupBy(id_col).agg(
-        F.sum(F.col("_se") - F.col("span_start")).alias("_cov")
-    )
-    base = df.select(
-        F.col(id_col),
-        F.col(color_col).alias("color"),
-        T.token_count(F.col(text_col)).alias("n_tokens"),
-    )
-    return base.join(covered, id_col, "left").select(
-        id_col,
-        "color",
-        "n_tokens",
-        F.coalesce(F.col("_cov"), F.lit(0)).cast("bigint").alias("covered"),
-        F.when(F.col("n_tokens") <= 0, F.lit(0.0))
-        .otherwise(
-            F.round(
-                F.coalesce(F.col("_cov"), F.lit(0)).cast("double")
-                / F.col("n_tokens").cast("double"),
-                4,
-            )
-        )
-        .alias("coverage"),
-    )
+    return _coverage(df, text_col, id_col, spans, color_col)
 
 
 def suffix_remove_contaminated(
@@ -1354,44 +427,24 @@ def suffix_remove_contaminated(
     color_col: str,
     target_color,
     min_len: int = 8,
-    max_rounds: int = 16,
-    method: str = "blocked",
-    max_doc_tokens: int = 2048,
 ) -> DataFrame:
     """Benchmark-contamination REMOVAL: excise from every
     ``target_color`` document (the training corpus) all tokens inside
     verbatim spans of >= ``min_len`` tokens shared with a document of
     a DIFFERENT color (the held-out benchmark) — the removal rung of
     the decontamination ladder (q112 flags gram collisions, q215
-    measures true-span coverage, this excises), on exact suffix
-    semantics. Non-target documents (the benchmark itself) pass
-    through untouched so eval sets are never mutilated.
+    measures true-span coverage, this excises). Non-target documents
+    (the benchmark itself) pass through untouched so eval sets are
+    never mutilated.
 
     Output: (id, text_clean, n_tokens, n_removed) for target-color
     documents only — same surface and reconstruction tail as the
-    dedup removal ops; the removed position set equals the
-    cross-color gram cover at n = min_len (module contract), which
-    the q216 oracle replays.
-
-    Scale shape (r16): the q215 position frame (segmented scans — see
-    suffix_shared_span_coverage) plus one span-count-bounded groupBy
-    and one doc-id join — interval excision via
-    dedup._excise_intervals (see suffix_remove_duplicates): the old
-    interval explode + (id, pos) distinct + anti-join + doc
-    reconstruction groupBy never materialize. Non-target spans drop
-    at the join (the old anti-join ignored them the same way)."""
-    from product_etl_spark.operators.dedup import _excise_intervals
-
+    dedup removal ops; the removed position set is the cross-color
+    window cover, which the q216 oracle replays. Non-target spans
+    drop at ``_excise_intervals``' doc-id join."""
     target = df.filter(F.col(color_col) == F.lit(target_color))
-    dup = _position_dup_lengths(
-        df,
-        text_col,
-        id_col,
-        max_rounds,
-        method,
-        max_doc_tokens,
-        color_col=color_col,
-        cap=min_len,
+    dup = _shared_window_positions(
+        df, text_col, id_col, min_len, color_col=color_col
     )
     spans = _merged_spans(dup, id_col, min_len)
     return _excise_intervals(target, text_col, id_col, spans)

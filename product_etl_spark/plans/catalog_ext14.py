@@ -4,9 +4,8 @@ the driver-hashable sufficient-statistics surface the r11 verdict
 asked for so the one remaining pytest-only numeric family gets a
 hash row) and the suffix-automaton-free exact duplicated-substring
 surface (q212, operators/suffixes — arbitrary-length cross-document
-duplicated spans from distributed suffix ranking, upgrading the
-fixed-n gram approximation of q147/q177 to the exact Lee et al. 2022
-semantics).
+duplicated spans, upgrading the fixed-n gram approximation of
+q147/q177 to the exact Lee et al. 2022 semantics).
 
 Reference parity note: the reference (pandas+psycopg2 row loops,
 ETL.py / main.py) computes none of this; these rows extend the
@@ -105,33 +104,26 @@ def q213_pca_gram_moments(spark, sf_dir):
     """,
 )
 def q212_suffix_duplicated_spans(spark, sf_dir):
-    """EXACT cross-document duplicated spans from distributed suffix
-    ranking (suffixes.suffix_duplicated_spans; Lee et al. 2022
-    ExactSubstr semantics): one row per MAXIMAL merged token
-    interval (>= 8 tokens) shared verbatim with another document,
-    with its TRUE arbitrary length — the upgrade over the fixed-n
-    gram rung (q147 measures, q177 removes; this names the spans).
+    """EXACT cross-document duplicated spans
+    (suffixes.suffix_duplicated_spans; Lee et al. 2022 ExactSubstr
+    semantics): one row per MAXIMAL merged token interval
+    (>= 8 tokens) shared verbatim with another document, with its
+    TRUE arbitrary length — the upgrade over the fixed-n gram rung
+    (q147 measures, q177 removes; this names the spans).
 
-    The oracle is plain SQL by the module's proven contract: the
-    merged islands of duplicated 8-grams equal the suffix method's
-    maximal intervals INTERVAL-FOR-INTERVAL (a duplicated 8-gram
-    extends to a shared suffix prefix >= 8; every 8-sub-gram of a
-    shared span is itself duplicated — the two interval unions
-    coincide). tests/test_suffixes.py pins the same equality against
-    brute force and the gram operator; the Spark side never computes
-    a gram.
+    The module's cover-equality contract is both the oracle and the
+    implementation: a token lies in a shared span of >= 8 tokens
+    exactly when an 8-token window covering it occurs in another
+    document, so the merged islands of the shared 8-windows ARE the
+    maximal spans, interval for interval. tests/test_suffixes.py pins
+    the operator against a brute-force longest-shared-prefix model.
 
-    Scale shape: the default 'blocked' construction — per-document
-    suffix blocks (documents are bounded here; loud-guarded at
-    max_doc_tokens) sorted by Spark's native lexicographic array
-    ordering in ONE two-level global rank, adjacent-pair LCP as a
-    single first-mismatch expression, nearest-different-doc via
-    doc-bounded run windows + one distributed prefix sum, islands
-    per doc. The 'doubling' twin (prefix-doubling ranks, O(log
-    repeat) linear rounds, binary-lifting LCP) is the
-    document-length-agnostic path; both are pytest-pinned to agree
-    with each other and with brute force. No corpus^2 anywhere; no
-    single-task window (suffixes.py module docstring)."""
+    Scale shape: one window-text aggregate (min/max doc id per
+    8-window, map-side combine), one join back to the window
+    positions, per-doc island windows over the duplicated positions
+    only, and the ordered output — 6 Spark jobs at sf0.01, where the
+    suffix-array construction it replaced took 15. No global sort of
+    suffixes, no corpus^2, no single-task window."""
     from product_etl_spark.operators.suffixes import (
         suffix_duplicated_spans,
     )
@@ -190,13 +182,11 @@ def q214_suffix_span_removal(spark, sf_dir):
     semantics, completing the suffix ladder (q212 names the spans,
     this removes them) beside the keeper-preserving gram rule
     (q177). The oracle replays the removed-position set as the
-    8-gram covered union — equal to the suffix cover by the module's
-    proven contract — and the same original-case reconstruction as
-    q177's tail.
+    8-gram covered union — the module's cover-equality contract — and
+    the same original-case reconstruction as q177's tail.
 
-    Scale shape: the q212 span frame plus one bounded interval
-    explode, one (id, pos) anti-join, one doc-sized reconstruction
-    groupBy (dedup._excise_positions)."""
+    Scale shape: the q212 position frame plus one span-count-bounded
+    groupBy and one doc-id join (dedup._excise_intervals)."""
     from product_etl_spark.operators.suffixes import (
         suffix_remove_duplicates,
     )
@@ -263,22 +253,18 @@ def q215_suffix_decontam_coverage(spark, sf_dir):
     split) — the exact-span upgrade of q112's fixed 5-gram collision
     flag. Same-color duplication is invisible by construction: a
     corpus doc copying another corpus doc is dedup's business
-    (q212), not contamination — the cross-COLOR nearest-neighbor
-    machinery never compares same-source suffixes.
+    (q212), not contamination — a 6-window counts only when its
+    min and max source differ.
 
     The oracle replays the covered set as the cross-source
-    duplicated 6-gram cover (the module's cover-equality contract,
-    color-generalized); the Spark side computes it from suffix ranks
-    and never builds a gram.
+    duplicated 6-gram cover; by the module's cover-equality contract,
+    color-generalized, that is exactly the operator's cover.
 
-    Scale shape: one suffix construction (blocked — documents
-    bounded), then the nearest-different-COLOR machinery on
-    SEGMENTED two-level scans (suffixes._segmented_running_min):
-    same-color runs in suffix order can be corpus-sized when one
-    source dominates (exactly this fixture: 98%% corpus), so the
-    per-run mins ride a (partition, run)-bounded carry frame, never
-    a per-run window. Benchmark sets are MBs against a 100 TB
-    corpus; nothing here is corpus x benchmark."""
+    Scale shape: q212's gate with the source as the window key — one
+    window-text aggregate taking min/max of struct(isnull(src), src)
+    (NULL is one source), one join back, per-doc island windows, one
+    doc-id join for the coverage. Benchmark sets are MBs against a
+    100 TB corpus; nothing here is corpus x benchmark."""
     from product_etl_spark.operators.suffixes import (
         suffix_shared_span_coverage,
     )
@@ -366,10 +352,8 @@ def q216_suffix_decontam_removal(spark, sf_dir):
     cover (the color-generalized cover-equality contract) with the
     q177/q214 original-case reconstruction tail.
 
-    Scale shape: the q215 position frame (blocked suffix
-    construction + segmented nearest-different-color scans) plus one
-    bounded interval explode, one (id, pos) anti-join, one doc-sized
-    reconstruction groupBy."""
+    Scale shape: the q215 position frame plus one span-count-bounded
+    groupBy and one doc-id join (dedup._excise_intervals)."""
     from product_etl_spark.operators.suffixes import (
         suffix_remove_contaminated,
     )

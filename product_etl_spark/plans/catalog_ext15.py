@@ -1,8 +1,7 @@
-"""Fifteenth extension catalog (q217+): round-13 additions — the
-doubling-construction twin of the suffix duplicated-span surface
-(q217: same semantics as q212, method='doubling' — the
-document-length-agnostic path a real 100 TB run needs gets its own
-driver hash instead of riding the pytest pin to 'blocked'), and the
+"""Fifteenth extension catalog (q217+): round-13 additions — q217,
+registered as the prefix-doubling twin of the duplicated-span surface
+and now q212's plan under its own name (the suffix constructions are
+gone; the catalog keeps its 236 entries), and the
 incremental suffix-span PROBE (q218, operators/
 dedup_incremental.probe_suffix_spans — a new batch's spans against a
 frozen history index, never rescanning accepted text; the r12
@@ -19,9 +18,8 @@ from pyspark.sql import functions as F
 
 from product_etl_spark.plans.catalog import _t, register
 
-# q212's oracle, verbatim: both constructions promise the SAME rows,
-# so they must answer the same SQL (the gram-cover-equality contract,
-# catalog_ext14 docstring).
+# q212's oracle, verbatim: q217 promises the SAME rows (the
+# gram-cover-equality contract, catalog_ext14 docstring).
 _SUFFIX_SPANS_ORACLE = r"""
     WITH t AS (
       SELECT doc_id,
@@ -60,30 +58,20 @@ _SUFFIX_SPANS_ORACLE = r"""
 @register("q217_suffix_doubling_spans", _SUFFIX_SPANS_ORACLE)
 def q217_suffix_doubling_spans(spark, sf_dir):
     """q212's surface — MAXIMAL cross-document duplicated spans with
-    true arbitrary lengths — computed by the PREFIX-DOUBLING suffix
-    construction (suffixes._position_dup_lengths_doubling) instead
-    of the blocked per-document arrays: O(log repeat) linear rounds
-    of rank refinement + binary-lifting LCP, with NO per-document
-    quadratic blow-up and therefore no max_doc_tokens guard. This is
-    the construction a 100 TB corpus with UNBOUNDED documents runs;
-    both methods are pytest-pinned identical (tests/
-    test_suffixes.py) and this row gives the doubling path its own
-    driver hash (r12 verdict item 3) against the same gram-cover
-    oracle as q212.
-
-    Scale shape: every round is (shuffle-rank, self-join on shifted
-    position) — linear in corpus positions, log in the longest
-    REPEAT (not document) length; binary-lifting LCP adds log-depth
-    doc-bounded lookups. No corpus^2; no single-task stage
-    (suffixes.py module docstring)."""
+    true arbitrary lengths — and, since the suffix constructions were
+    deleted, q212's plan too: suffixes.suffix_duplicated_spans at
+    min_len 8, the window-aggregate gate of the module's
+    cover-equality contract. The entry was registered for the
+    prefix-doubling construction, the document-length-agnostic path;
+    the gate has no document-length bound at all, so the entry stays
+    as a second driver hash of the same surface against the same
+    gram-cover oracle."""
     from product_etl_spark.operators.suffixes import (
         suffix_duplicated_spans,
     )
 
     d = _t(spark, sf_dir, "documents")
-    return suffix_duplicated_spans(
-        d, "text", "doc_id", min_len=8, method="doubling"
-    )
+    return suffix_duplicated_spans(d, "text", "doc_id", min_len=8)
 
 
 @register(
@@ -135,9 +123,10 @@ def q218_suffix_probe_spans(spark, sf_dir):
     verbatim spans (>= 8 tokens) against a frozen history index —
     even doc_ids play the accepted history, odd doc_ids the
     arriving batch. The store is the history's distinct-gram
-    inventory (the fixed-min_len sufficient statistic of the suffix
-    rank store by the module's cover-equality contract), so the
-    probe never rescans accepted text; pytest pins the ascending-
+    inventory (the fixed-min_len sufficient statistic of history by
+    the module's cover-equality contract) joined into q212's own
+    window gate, so the probe never rescans accepted text; pytest
+    pins the ascending-
     ingest contract: probe output == suffix_duplicated_spans over
     the union RESTRICTED to batch docs. The removal twin
     (probe_suffix_excision), the store-appending ingest

@@ -1,9 +1,9 @@
-"""Suffix-array exact-substring dedup (operators/suffixes): brute
-force on planted corpora, the identical-tails fast path, within-doc
-repetition exclusion, and the module's cross-check contract —
-coverage AND merged intervals equal the gram method at n = min_len
-(dedup.crossdoc_dup_span_coverage) on fixtures and a real corpus
-slice."""
+"""Exact duplicated-span family (operators/suffixes): brute force on
+planted corpora, identical documents, within-doc repetition
+exclusion, long documents, NULL ids and colors, and the module's
+cover-equality contract — coverage AND merged intervals equal the
+gram method at n = min_len (dedup.crossdoc_dup_span_coverage) on
+fixtures and a real corpus slice."""
 
 from __future__ import annotations
 
@@ -58,12 +58,11 @@ def _brute_spans(corpus: dict, min_len: int) -> list:
     return out
 
 
-def _spark_spans(spark, rows, min_len, method="blocked"):
+def _spark_spans(spark, rows, min_len):
     return [
         (r["doc_id"], r["span_start"], r["span_len"])
         for r in suffix_duplicated_spans(
-            _docs(spark, rows), "text", "doc_id", min_len=min_len,
-            method=method,
+            _docs(spark, rows), "text", "doc_id", min_len=min_len
         ).collect()
     ]
 
@@ -78,12 +77,9 @@ def test_planted_long_span_true_length(spark):
         (2, f"y1 {shared} y2 y3 y4"),
         (3, "clean words only never repeated anywhere at all"),
     ]
-    for method in ("blocked", "doubling"):
-        got = _spark_spans(spark, rows, 8, method)
-        assert got == [(1, 2, 10), (2, 1, 10)], method
-        assert got == _brute_spans(
-            {i: t.split() for i, t in rows}, 8
-        ), method
+    got = _spark_spans(spark, rows, 8)
+    assert got == [(1, 2, 10), (2, 1, 10)]
+    assert got == _brute_spans({i: t.split() for i, t in rows}, 8)
 
 
 def test_within_doc_repetition_does_not_count(spark):
@@ -95,10 +91,9 @@ def test_within_doc_repetition_does_not_count(spark):
 
 
 def test_identical_docs_full_coverage(spark):
-    """Two byte-identical docs: the identical-tails LCP fast path —
-    every position's tail matches the other doc, one span covering
-    the whole doc each; a third doc sharing only a mid prefix gets
-    its true shorter span."""
+    """Two byte-identical docs: every position's tail matches the
+    other doc, one span covering the whole doc each; a third doc
+    sharing only a mid prefix gets its true shorter span."""
     body = " ".join(f"w{i}" for i in range(12))
     rows = [(1, body), (2, body), (3, "zz " + " ".join(f"w{i}" for i in range(9)))]
     corpus = {i: t.split() for i, t in rows}
@@ -131,12 +126,7 @@ def test_brute_force_hash_corpus(spark):
     ]
     corpus = {i: t.split() for i, t in rows}
     for ml in (3, 5):
-        want = _brute_spans(corpus, ml)
-        for method in ("blocked", "doubling"):
-            assert _spark_spans(spark, rows, ml, method) == want, (
-                ml,
-                method,
-            )
+        assert _spark_spans(spark, rows, ml) == _brute_spans(corpus, ml), ml
 
 
 def test_coverage_equals_gram_method_on_real_slice(spark, sf_dir):
@@ -163,23 +153,20 @@ def test_coverage_equals_gram_method_on_real_slice(spark, sf_dir):
     assert a == b and len(a) == 150
 
 
-def test_blocked_mega_doc_guard(spark):
-    """The blocked method's O(len^2) per-doc blow-up is loud-guarded:
-    a document over max_doc_tokens FAILS with the switch-to-doubling
-    message; doubling happily processes the same corpus."""
-    import pytest
-
+def test_long_document_matches_brute(spark):
+    """A document longer than 2,048 tokens needs no guard and no
+    method switch: its planted shared span, placed past token 2,048,
+    comes back with its true length, equal to brute force."""
+    filler = [f"f{i}" for i in range(2100)]
+    shared = [f"s{i}" for i in range(12)]
+    long_doc = filler[:2070] + shared + filler[2070:]
     rows = [
-        (1, " ".join(f"a{i}" for i in range(30))),
-        (2, " ".join(f"a{i}" for i in range(30))),
+        (1, " ".join(long_doc)),
+        (2, " ".join(["y0", "y1", *shared, "y2"])),
     ]
-    with pytest.raises(Exception, match="doubling"):
-        suffix_duplicated_spans(
-            _docs(spark, rows), "text", "doc_id", min_len=8,
-            max_doc_tokens=10,
-        ).collect()
-    got = _spark_spans(spark, rows, 8, "doubling")
-    assert got == [(1, 0, 30), (2, 0, 30)]
+    got = _spark_spans(spark, rows, 8)
+    assert got == [(1, 2070, 12), (2, 2, 12)]
+    assert got == _brute_spans({i: t.split() for i, t in rows}, 8)
 
 
 def test_suffix_removal_planted_and_matches_coverage(spark):
@@ -254,7 +241,7 @@ def test_cross_source_coverage_brute_and_same_color_invisible(spark):
     contamination. A corpus doc copying ANOTHER CORPUS doc is
     invisible (same color); a corpus doc sharing a run with a
     BENCHMARK doc is covered for exactly that run; brute force
-    agrees on every doc for both methods."""
+    agrees on every doc."""
     from product_etl_spark.operators.suffixes import (
         suffix_shared_span_coverage,
     )
@@ -276,48 +263,53 @@ def test_cross_source_coverage_brute_and_same_color_invisible(spark):
     want = _brute_color_cover(
         {i: t.split() for i, t in rows}, colors, 8
     )
-    for method in ("blocked", "doubling"):
-        got = {
-            r["doc_id"]: r["covered"]
-            for r in suffix_shared_span_coverage(
-                df, "text", "doc_id", "src", min_len=8, method=method
-            ).collect()
-        }
-        assert got == want, method
-        assert got[1] == 9    # the benchmark leak, true length
-        assert got[2] == 0 and got[3] == 0  # same-color dup invisible
-        assert got[0] == 9    # benchmark side sees the corpus copy
+    got = {
+        r["doc_id"]: r["covered"]
+        for r in suffix_shared_span_coverage(
+            df, "text", "doc_id", "src", min_len=8
+        ).collect()
+    }
+    assert got == want
+    assert got[1] == 9    # the benchmark leak, true length
+    assert got[2] == 0 and got[3] == 0  # same-color dup invisible
+    assert got[0] == 9    # benchmark side sees the corpus copy
 
 
-def test_segmented_running_min_matches_pandas(spark):
-    """_segmented_running_min (both directions) == pandas
-    groupby-cummin on a deterministic frame whose segments span
-    multiple range partitions."""
-    import hashlib
-
-    import pandas as pd
-
+def test_null_color_is_one_color(spark):
+    """NULL is one color, as eqNullSafe treats it: two NULL-color
+    documents sharing a run are invisible to each other (same color),
+    while a NULL-color document sharing a run with a 'bench' document
+    is covered, on both the coverage and the removal operator. A
+    plain min/max over the color would skip the NULLs and get both
+    wrong."""
     from product_etl_spark.operators.suffixes import (
-        _segmented_running_mins,
+        suffix_remove_contaminated,
+        suffix_shared_span_coverage,
     )
 
-    rows = []
-    for s in range(1, 401):
-        seg = 1 + (s - 1) // 97  # segments of 97 rows: cross partitions
-        v = int(hashlib.md5(str(s).encode()).hexdigest()[:4], 16) % 100
-        rows.append((s, seg, v))
-    df = spark.createDataFrame(rows, "_s long, _run long, _lcp long")
-    both = _segmented_running_mins(
-        df, "_s", "_run", "_lcp", "_fm", "_bm"
-    ).collect()
-    fwd = {r["_s"]: r["_fm"] for r in both}
-    bwd = {r["_s"]: r["_bm"] for r in both}
-    pdf = pd.DataFrame(rows, columns=["_s", "_run", "_lcp"])
-    exp_f = pdf.groupby("_run")["_lcp"].cummin()
-    exp_b = pdf[::-1].groupby("_run")["_lcp"].cummin()[::-1]
-    for i, s in enumerate(pdf["_s"]):
-        assert fwd[s] == exp_f.iloc[i], ("fwd", s)
-        assert bwd[s] == exp_b.iloc[i], ("bwd", s)
+    leak = " ".join(f"L{i}" for i in range(9))
+    pair = " ".join(f"P{i}" for i in range(10))
+    rows = [
+        (0, f"n0 {pair} n1", None),       # NULL-NULL pair: invisible
+        (1, f"m0 m1 {pair}", None),
+        (2, f"c0 {leak} c1", None),       # NULL vs 'bench': covered
+        (3, f"b0 {leak} b1 b2", "bench"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string, src string")
+    cov = {
+        r["doc_id"]: r["covered"]
+        for r in suffix_shared_span_coverage(
+            df, "text", "doc_id", "src", min_len=8
+        ).collect()
+    }
+    assert cov == {0: 0, 1: 0, 2: 9, 3: 9}
+    out = {
+        r["doc_id"]: (r["text_clean"], r["n_removed"])
+        for r in suffix_remove_contaminated(
+            df, "text", "doc_id", "src", "bench", min_len=8
+        ).collect()
+    }
+    assert out == {3: ("b0 b1 b2", 9)}
 
 
 def test_segmented_prefix_sum_matches_pandas(spark):
@@ -397,13 +389,29 @@ from hypothesis import strategies as st
 )
 def test_property_spans_match_brute(spark, docs, min_len):
     """Property: over tiny 3-letter-alphabet corpora (dense accidental
-    repeats, adversarial for run/boundary logic), the blocked spans
-    surface equals the brute-force model for any min_len."""
+    repeats, adversarial for run/boundary logic), the spans surface
+    equals the brute-force model for any min_len."""
     rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
     corpus = {i: t.split() for i, t in rows}
     assert _spark_spans(spark, rows, min_len) == _brute_spans(
         corpus, min_len
     )
+
+
+def _oracle_spans(docs, tmp_path) -> set:
+    """q212's DuckDB oracle over ``docs`` written as a parquet view."""
+    import duckdb
+
+    from product_etl_spark import plans
+
+    pq = str(tmp_path / "oracle_docs")
+    docs.write.mode("overwrite").parquet(pq)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{pq}/*.parquet')"
+    )
+    oracle = plans.oracle_sql()["q212_suffix_duplicated_spans"]
+    return {tuple(r) for r in con.execute(oracle).fetchall()}
 
 
 def test_touching_spans_merge_on_both_engines(spark, tmp_path):
@@ -414,10 +422,6 @@ def test_touching_spans_merge_on_both_engines(spark, tmp_path):
     oracle fix: the island break is now pos > MAX(pos + 8) (exclusive
     ends touch-merge); the old pos > MAX(pos + 7) split touching
     islands and would have hash-mismatched on exactly this corpus."""
-    import duckdb
-
-    from product_etl_spark import plans
-
     s = " ".join(f"s{i}" for i in range(8))
     t = " ".join(f"t{i}" for i in range(8))
     rows = [
@@ -425,30 +429,47 @@ def test_touching_spans_merge_on_both_engines(spark, tmp_path):
         (1, f"x1 x2 x3 x4 x5 x6 x7 x8 {s}"),     # X carries s at pos 8
         (2, f"{t} y1 y2 y3 y4 y5 y6 y7 y8"),     # Y carries t at pos 0
     ]
-    docs = _docs(spark, rows)
-    got = {
-        (r["doc_id"], r["span_start"], r["span_len"])
-        for r in suffix_duplicated_spans(docs, "text", "doc_id", 8).collect()
-    }
     want = {(0, 0, 16), (1, 8, 8), (2, 0, 8)}
-    assert got == want
-    # doubling agrees
-    assert (
-        set(
-            (r["doc_id"], r["span_start"], r["span_len"])
-            for r in suffix_duplicated_spans(
-                docs, "text", "doc_id", 8, method="doubling"
-            ).collect()
-        )
-        == want
+    assert set(_spark_spans(spark, rows, 8)) == want
+    assert _oracle_spans(_docs(spark, rows), tmp_path) == want
+
+
+def test_null_id_document_is_no_other_document(spark, tmp_path):
+    """A NULL-id document is never "another document" — the oracle's
+    COUNT(DISTINCT doc_id) skips it. Doc 5 (12 tokens) shares a
+    10-token run only with a NULL-id document, so neither engine
+    reports a span; the old suffix-array path paired the two and
+    reported spans, one of them past the end of a document."""
+    shared = " ".join(f"s{i}" for i in range(10))
+    rows = [
+        (5, f"a {shared} b"),
+        (None, f"x {shared} y z"),
+        (7, "clean words only never repeated anywhere at all nope"),
+    ]
+    assert _spark_spans(spark, rows, 8) == []
+    assert _oracle_spans(_docs(spark, rows), tmp_path) == set()
+
+
+#: Spark jobs suffix_duplicated_spans submits on the sf0.001 documents
+#: (measured: the window aggregate, the join back, the island windows
+#: and the ordered output); the suffix-array construction it replaced
+#: took 7 there.
+SPANS_JOBS = 6
+
+
+def test_spans_job_count_gate(spark, sf_dir):
+    """suffix_duplicated_spans must not submit more Spark jobs than it
+    does today: a reintroduced suffix sort, rank ladder or driver-side
+    scan fails here."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
     )
-    # the ORACLE on the same corpus (DuckDB over a parquet view)
-    pq = str(tmp_path / "touch_docs")
-    docs.write.mode("overwrite").parquet(pq)
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{pq}/*.parquet')"
-    )
-    oracle = plans.oracle_sql()["q212_suffix_duplicated_spans"]
-    got_sql = {tuple(r) for r in con.execute(oracle).fetchall()}
-    assert got_sql == want
+    spans = suffix_duplicated_spans(docs, "text", "doc_id", 8)
+    sc = spark.sparkContext
+    sc.setJobGroup("suffix-spans-gate", "job count gate")
+    try:
+        spans.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n = len(sc.statusTracker().getJobIdsForGroup("suffix-spans-gate"))
+    assert n <= SPANS_JOBS, f"spans submitted {n} jobs, gate is {SPANS_JOBS}"

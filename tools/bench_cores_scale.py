@@ -4,8 +4,8 @@ item 6): the sf0.1 bench is overhead-bound (sub-second walls, 8-core
 / 32-core ratios <= 1.2 everywhere), so it cannot demonstrate that
 the rewritten operators parallelize. This probe runs the HOT BLOCK's
 operators over a synthetic corpus big enough to be data-bound —
-documents ~10x the sf0.1 token volume (the bench_suffix_scale corpus
-recipe: hashed-vocab tokens + planted cross-doc dup runs), embeddings
+documents ~10x the sf0.1 token volume (hashed-vocab tokens + planted
+cross-doc dup runs, ``_corpus``), embeddings
 ~10x rows — once on local[8] and once on local[32] (fresh session
 each), and prints low-core-sec / 32-core-sec per operator. A parallel
 operator approaches the core ratio (4.0); a serialized one sits at
@@ -38,8 +38,8 @@ REPS = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "1"))
 
 
 def _corpus(spark, n_docs):
-    # bench_suffix_scale recipe: token j of doc i hashed into the
-    # vocab; every (37k, 37k+1) doc pair shares tokens 10..29
+    # token j of doc i hashed into the vocab; every (37k, 37k+1) doc
+    # pair shares tokens 10..29
     tok = (
         F.when(
             (F.col("doc_id") % 37 < 2)
@@ -134,15 +134,12 @@ def run_block(cpus: int) -> dict[str, float]:
     rows = _sample_rows(spark, N_SAMPLE_ROWS)
 
     ops = {
-        "suffix_spans_blocked": lambda: suffix_duplicated_spans(
+        "suffix_spans": lambda: suffix_duplicated_spans(
             docs, "text", "doc_id", min_len=8
         ),
-        "suffix_spans_doubling": lambda: suffix_duplicated_spans(
-            docs, "text", "doc_id", min_len=8, method="doubling"
-        ),
         # suffix_remove_duplicates / suffix_shared_span_coverage share
-        # the spans_blocked construction + a small tail; timing them
-        # separately would triple the probe for no new information
+        # the spans gate + a small tail; timing them separately would
+        # triple the probe for no new information
         "suffix_removal": lambda: suffix_remove_duplicates(
             docs, "text", "doc_id", min_len=8
         ),

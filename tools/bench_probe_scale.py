@@ -2,7 +2,7 @@
 """Volume probe for the INCREMENTAL suffix-span rung
 (operators/dedup_incremental: build_suffix_span_index /
 probe_suffix_spans / ingest_suffix_spans): the same 200k-doc / 12M-
-position synthetic corpus as tools/bench_suffix_scale.py, split into
+position synthetic corpus recipe as tools/bench_cores_scale.py, split into
 a 190k-doc accepted HISTORY and a 10k-doc arriving BATCH (every 20th
 doc). Times (a) the one-off history index build + persist, (b) the
 in-memory probe, (c) the store-backed ingest (read store + probe +
@@ -35,7 +35,7 @@ from product_etl_spark.operators.dedup_incremental import (
     probe_suffix_spans,
 )
 from product_etl_spark.session import get_spark
-from tools.bench_suffix_scale import DOC_LEN, _corpus
+from tools.bench_cores_scale import DOC_LEN, _corpus
 
 N_DOCS = 200_000
 BATCH_MOD = 20  # every 20th doc arrives in the batch
