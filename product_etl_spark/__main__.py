@@ -3,9 +3,15 @@ user runs today, re-expressed over the Spark pipelines:
 
 - ``ingest``    — run_etl.py analog (``--csv --mapping --dry-run``,
   utils/importer/run_etl.py:14-30): raw export CSV -> the full
-  warehouse upsert cascade. ``--dry-run`` computes and reports every
-  table without writing (the reference runs the cascade and rolls the
-  transaction back).
+  warehouse upsert cascade. A path ending in ``.xlsx`` is read as an
+  Excel export (importer_etl.py:31, first sheet). ``--dry-run``
+  computes and reports every table without writing (the reference
+  runs the cascade and rolls the transaction back).
+- ``stream-ingest`` — the continuous twin of ``ingest``: every export
+  CSV dropped into ``--input-dir`` is merged into the warehouse
+  exactly once (``--checkpoint`` holds the processed-file log). Each
+  run drains what is there and prints one JSON progress line per
+  micro-batch (``batchId``, ``numInputRows``, ``durationMs``).
 - ``translate`` — the product_attributes_etl.py translation sweep:
   pending rows -> kernel -> idempotent insert.
 - ``enrich``    — run_orchestrator.py analog with the reference's
@@ -40,7 +46,12 @@ def _cmd_ingest(args) -> int:
     from product_etl_spark.sources.csv_reader import read_raw_products
 
     spark = _spark("petl-ingest")
-    raw = read_raw_products(spark, args.csv, sep=args.sep)
+    if args.csv.lower().endswith(".xlsx"):
+        from product_etl_spark.sources.excel import read_excel
+
+        raw = read_excel(spark, args.csv)
+    else:
+        raw = read_raw_products(spark, args.csv, sep=args.sep)
     if args.mapping:
         # older Type-column / 3-column mapping files drive per-table
         # projections inside the builders; surface a loud parse here
@@ -52,6 +63,40 @@ def _cmd_ingest(args) -> int:
         print(f"{name}\t{df.count()}")
     if args.dry_run:
         print("dry-run: nothing written")
+    return 0
+
+
+def _export_header(input_dir: str, sep: str) -> list[str]:
+    """Column names from the header of the first (by name) CSV in
+    ``input_dir`` — the schema a file-source stream must be given."""
+    import csv
+    import glob
+    import os
+
+    files = sorted(glob.glob(os.path.join(input_dir, "*.csv")))
+    if not files:
+        raise SystemExit(
+            f"stream-ingest: no .csv export in {input_dir}; the column "
+            "list is read from the first export's header"
+        )
+    with open(files[0], newline="", encoding="utf-8-sig") as fh:
+        return next(csv.reader(fh, delimiter=sep), [])
+
+
+def _cmd_stream_ingest(args) -> int:
+    import json
+
+    from product_etl_spark.pipelines.ingest import stream_ingest_csv
+
+    cols = _export_header(args.input_dir, args.sep)
+    spark = _spark("petl-stream-ingest")
+    query = stream_ingest_csv(
+        spark, args.input_dir, args.warehouse, args.checkpoint, cols,
+        sep=args.sep,
+    )
+    query.awaitTermination()
+    for p in query.recentProgress:
+        print(json.dumps({k: p[k] for k in ("batchId", "numInputRows", "durationMs")}))
     return 0
 
 
@@ -140,13 +185,21 @@ def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="product_etl_spark", description=__doc__)
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    s = sub.add_parser("ingest", help="bulk import a raw export CSV")
+    s = sub.add_parser("ingest", help="bulk import a raw export CSV or .xlsx")
     s.add_argument("--csv", required=True)
     s.add_argument("--mapping", default=None)
     s.add_argument("--warehouse", required=True)
     s.add_argument("--sep", default=";")
     s.add_argument("--dry-run", action="store_true")
     s.set_defaults(fn=_cmd_ingest)
+
+    s = sub.add_parser("stream-ingest",
+                       help="merge export CSVs dropped into a directory")
+    s.add_argument("--input-dir", required=True)
+    s.add_argument("--warehouse", required=True)
+    s.add_argument("--checkpoint", required=True)
+    s.add_argument("--sep", default=";")
+    s.set_defaults(fn=_cmd_stream_ingest)
 
     s = sub.add_parser("translate", help="translation sweep of pending rows")
     s.add_argument("--warehouse", required=True)

@@ -84,8 +84,8 @@ def exploded_shingles(
 ) -> DataFrame:
     """(id, shingle) rows: distinct word n-gram shingles per doc.
 
-    Row-based construction — explode tokens once, then n-1 LEAD
-    windows over (id, position) — instead of array expressions:
+    Row-based construction (``positional_shingles``) — explode tokens
+    once, then n-1 LEAD windows — instead of array expressions:
     higher-order functions are interpreted (no codegen, no CSE), so
     the array form re-tokenizes the document once per reference
     (measured ~4x the scan cost). Rows also survive documents of any
@@ -93,21 +93,7 @@ def exploded_shingles(
     The (id, shingle) output is distinct; the id partitioning from
     the window shuffle is reused by any following groupBy(id).
     """
-    tok = df.select(
-        F.col(id_col),
-        F.posexplode(T.tokens(F.lower(F.col(text_col)))).alias("pos", "tok"),
-    )
-    w = Window.partitionBy(id_col).orderBy("pos")
-    parts = [F.col("tok")] + [
-        F.lead("tok", i).over(w).alias(f"_t{i}") for i in range(1, n)
-    ]
-    last = F.lead("tok", n - 1).over(w) if n > 1 else F.col("tok")
-    return (
-        tok.select(F.col(id_col), F.concat_ws(" ", *parts).alias("sh"), last.alias("_last"))
-        .filter(F.col("_last").isNotNull())
-        .select(F.col(id_col), "sh")
-        .distinct()
-    )
+    return positional_shingles(df, text_col, id_col, n).select(id_col, "sh").distinct()
 
 
 def minhash_signatures(
@@ -771,29 +757,38 @@ def positional_shingles(
 ) -> DataFrame:
     """(id, pos, sh) rows: EVERY word n-gram with its 0-based token
     position (NOT distinct — the span-coverage input needs all
-    occurrences). Same row-wise construction as exploded_shingles
-    (explode tokens once + n-1 LEAD windows, codegen; lowercased).
-    ``keep`` names per-document columns of ``df`` carried onto every
-    row after ``id``."""
+    occurrences), lowercased. Tokens are exploded once and the gram
+    is built from n-1 LEAD windows (codegen). ``keep`` names
+    per-document columns of ``df`` carried onto every row after
+    ``id``.
+
+    The window is partitioned by id but ordered by input row first:
+    documents that share an id (or have a NULL one) stay separate
+    token streams, and a gram is kept only where its last token sits
+    n-1 positions after its first, i.e. in the same document."""
     tok = df.select(
         F.col(id_col),
         *keep,
+        F.col(text_col),
+        F.monotonically_increasing_id().alias("_doc"),
+    ).select(
+        F.col(id_col),
+        *keep,
+        "_doc",
         F.posexplode(T.tokens(F.lower(F.col(text_col)))).alias("pos", "tok"),
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
-    parts = [F.col("tok")] + [
-        F.lead("tok", i).over(w).alias(f"_t{i}") for i in range(1, n)
-    ]
-    last = F.lead("tok", n - 1).over(w) if n > 1 else F.col("tok")
+    w = Window.partitionBy(id_col).orderBy("_doc", "pos")
+    parts = [F.col("tok")] + [F.lead("tok", i).over(w) for i in range(1, n)]
+    end = F.lead("pos", n - 1).over(w) if n > 1 else F.col("pos")
     return (
         tok.select(
             F.col(id_col),
             *keep,
             "pos",
             F.concat_ws(" ", *parts).alias("sh"),
-            last.alias("_last"),
+            end.alias("_end"),
         )
-        .filter(F.col("_last").isNotNull())
+        .filter(F.col("_end") == F.col("pos") + (n - 1))
         .select(id_col, *keep, "pos", "sh")
     )
 

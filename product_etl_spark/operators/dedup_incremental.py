@@ -900,61 +900,3 @@ def probe_suffix_excision(
     return _excise_intervals(batch, text_col, id_col, spans)
 
 
-def ingest_suffix_spans(
-    spark: SparkSession,
-    batch: DataFrame,
-    store_path: str,
-    text_col: str,
-    id_col: str,
-    min_len: int = 8,
-    n_buckets: int = 64,
-) -> DataFrame:
-    """Probe a NEW batch's suffix spans against the persisted gram
-    store at ``store_path`` AND claim the batch's unseen grams for
-    future batches (append-only, first-seen owner = lowest batch doc
-    id) — the ``incremental_span_excision`` posture for the suffix
-    SPAN surface.
-
-    Rerun safety: a replayed batch finds its grams stored with the
-    owners decided in the first run; owner==self matches are not
-    duplication, so the span output is identical and the store gains
-    nothing (idempotent). RTBF: erase by ``keep`` within
-    ``gram_bucket`` partitions; an erased owner's grams re-enter as
-    new on next sighting, claimed by a surviving document.
-
-    SINGLE WRITER REQUIRED (ADVICE r13): the read-store-then-append
-    sequence is not safe for CONCURRENT ingests — two writers can
-    both see a gram as unseen and append duplicate ``sh`` rows under
-    different owners. Span extents would survive (islands take
-    min/max), but the store bloats and replay idempotence breaks (a
-    replayed batch then finds its own gram under a foreign owner and
-    reports extra spans). Serialize ingests per store — the posture
-    every fold-state store in this module shares; the streaming
-    wrapper (``stream_suffix_span_probe``) satisfies it by
-    construction (one micro-batch at a time per checkpoint).
-    Maintenance: ``table_maintenance.compact_partitions`` rewrites
-    the per-batch small files bucket-by-bucket without changing a
-    row — probe/replay parity and bucket-preserving erasure on the
-    compacted layout are pinned in tests/test_dedup_incremental."""
-    index = read_signature_store(spark, store_path)
-    if index is not None:
-        index = index.localCheckpoint(eager=True)  # one store read —
-        # the append below must not re-trigger reads of a store this
-        # call is itself appending to
-    spans = probe_suffix_spans(
-        index, batch, text_col, id_col, min_len
-    ).localCheckpoint(eager=True)
-    fresh = build_suffix_span_index(
-        batch, text_col, id_col, min_len, n_buckets
-    )
-    if index is not None:
-        fresh = fresh.join(
-            index.select("sh").withColumn("_hit", F.lit(True)),
-            "sh",
-            "left",
-        ).filter(F.col("_hit").isNull()).drop("_hit")
-    if fresh.limit(1).count():
-        fresh.write.mode("append").partitionBy("gram_bucket").parquet(
-            store_path
-        )
-    return spans

@@ -36,7 +36,6 @@ from pyspark.sql.types import (
     BinaryType,
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -477,157 +476,6 @@ def phash_near_dup_pairs(
     )
 
 
-AUDIO_FP_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("afp_words", ArrayType(LongType())),
-    ]
-)
-
-
-def audio_fingerprint(
-    media: DataFrame,
-    frame_len: int = 1024,
-    hop: int = 512,
-    n_bands: int = 33,
-) -> DataFrame:
-    """Robust 64-bit audio fingerprint (whole-file summary in the
-    Haitsma-Kalker sign-feature family): frame the mono signal,
-    compute ``n_bands`` band energies per frame, then take two
-    32-bit sign words — w0 = sign of (first-half mean energy -
-    second-half mean energy) per band (temporal structure), w1 = sign
-    of the time-averaged band slope E[m]-E[m+1] (spectral shape).
-    Output: (media_id, afp_words = [w0, w1], 32 bits each — the
-    image-pHash word layout, so the same banded-Hamming dedup
-    machinery applies).
-
-    Design note: the classic per-frame delta bits majority-voted
-    across frames were tried first and measured NON-discriminative on
-    smooth content (vote margins ~0.5: a lightly-noised copy landed
-    17 bits away while unrelated audio landed 15) — time-aggregated
-    sign features are the stable form at whole-file granularity.
-
-    Invariances: amplitude scaling multiplies every energy by one
-    constant, so every sign is unchanged — identical fingerprint
-    (measured 0 bits; int16 re-quantization can flip near-zero
-    bands); light noise flips few bits (measured 2); unrelated
-    broadband audio lands tens of bits away (measured 14-33).
-    Undecodable or too-short payloads yield NULL words (quarantine,
-    not failure). Narrowband content (a single moving tone) leaves
-    most bands noise-dominated and hashes unreliably — like pHash on
-    a blank image, the fingerprint is only as stable as the energy
-    it summarizes.
-
-    Scale shape: one Arrow-batched map (numpy rFFT per frame, O(n log
-    n) per file); everything downstream is JVM integer ops."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from product_etl_spark.functions import codecs
-
-        for pdf in it:
-            rows = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                words = None
-                try:
-                    rate, x = codecs.wav_samples(bytes(content))
-                    n_frames = (
-                        (x.size - frame_len) // hop + 1
-                        if x.size >= frame_len
-                        else 0
-                    )
-                    if n_frames >= 3:
-                        idx = (
-                            np.arange(frame_len)[None, :]
-                            + hop * np.arange(n_frames)[:, None]
-                        )
-                        frames = x[idx] * np.hanning(frame_len)[None, :]
-                        spec = np.abs(np.fft.rfft(frames, axis=1)) ** 2
-                        freqs = np.fft.rfftfreq(frame_len, d=1.0 / rate)
-                        edges = np.linspace(0, rate / 2, n_bands + 1)
-                        bi = np.minimum(
-                            np.searchsorted(edges, freqs, side="right") - 1,
-                            n_bands - 1,
-                        )
-                        E = np.zeros((n_frames, n_bands))
-                        np.add.at(E.T, bi, spec.T)
-                        slope = E[:, :-1] - E[:, 1:]       # (frames, 32)
-                        h = n_frames // 2
-                        b0 = (
-                            E[:h].mean(axis=0) - E[h:].mean(axis=0)
-                        )[:32] > 0
-                        b1 = slope.mean(axis=0) > 0
-                        pack = lambda bits: int(
-                            sum(int(v) << i for i, v in enumerate(bits))
-                        )
-                        words = [pack(b0[:32]), pack(b1[:32])]
-                except Exception:
-                    words = None
-                rows.append({"media_id": media_id, "afp_words": words})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FP_SCHEMA]
-            )
-
-    return media.select("media_id", "content").mapInPandas(
-        batches, schema=AUDIO_FP_SCHEMA
-    )
-
-
-def audio_near_dup_pairs(
-    media: DataFrame,
-    max_hamming: int = 6,
-    band_bits: int = 8,
-) -> DataFrame:
-    """Near-duplicate audio pairs by fingerprint Hamming distance —
-    the audio twin of ``image_near_dup_pairs`` (re-encoded, re-scaled,
-    lightly-noised copies of the same recording). Same exact
-    multi-index pigeonhole contract: band self-join is exact for
-    ``max_hamming <= n_bands - 1`` and raises beyond; bit_count
-    verify only on band-collided candidates — never all-pairs."""
-    from product_etl_spark.operators.embdedup import (
-        _hamming,
-        hamming_band_index,
-    )
-
-    n_bands = 64 // band_bits
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs > {max_hamming} bands for "
-            f"pigeonhole exactness; got {n_bands} (band_bits={band_bits})"
-        )
-    coded = audio_fingerprint(media).filter(
-        F.col("afp_words").isNotNull()
-    ).withColumnRenamed("afp_words", "_code")
-    bidx = hamming_band_index(coded, "media_id", "_code", 64, band_bits)
-    a = bidx.select(
-        F.col("media_id").alias("id_a"),
-        F.col("_code").alias("_code_a"),
-        "band",
-        "bv",
-    )
-    b = bidx.select(
-        F.col("media_id").alias("id_b"),
-        F.col("_code").alias("_code_b"),
-        F.col("band").alias("_band_b"),
-        F.col("bv").alias("_bv_b"),
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("band") == F.col("_band_b"))
-            & (F.col("bv") == F.col("_bv_b"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b", "_code_a", "_code_b")
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming", _hamming("_code_a", "_code_b"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
 def video_near_dup_pairs(
     media: DataFrame,
     every_n: int = 5,
@@ -636,8 +484,8 @@ def video_near_dup_pairs(
     band_bits: int = 8,
     method: str = "dct",
 ) -> DataFrame:
-    """Near-duplicate VIDEO pairs — the third rung of the multimodal
-    dedup triad (image pHash, audio fingerprint, and now video):
+    """Near-duplicate VIDEO pairs — the video twin of the image pHash
+    dedup:
     sample every ``every_n``-th frame (sample_video_frames), hash
     each sampled frame with the image perceptual hash, pair frames
     across videos through the SAME banded-Hamming machinery, and

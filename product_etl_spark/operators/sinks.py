@@ -1,105 +1,14 @@
-"""Simple sinks (reference S10/S11/S13/S14).
+"""Simple sinks (reference S10/S11).
 
 - ``append_csv``: header-once append CSV (2_ocr_from_images.py:35,64-66).
 - ``write_partitioned_by_entity``: one directory per entity
   (3_group...py:41-48 writes one CSV per product_id) — at scale this
   is ``partitionBy``, never a per-entity loop.
-- ``render_pdf_stage``: HTML column -> one PDF file per row
-  (utils/html_to_pdf/pupeeter.py:25-54 / html_to_pdf_printer.py:29-43).
-  No browser/pdfkit in this container, so the renderer is an
-  injectable kernel (deterministic stub in tests); the Spark side —
-  foreachPartition fan-out, sanitized deterministic filenames,
-  skip-if-exists idempotence — is real.
-- ``append_log``: append-only text log
-  (product_collection_img_array_processor.py:71-74); executor-side
-  logs go to task logs, driver-side to a text sink.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from product_etl_spark.functions.cleaners import sanitize_filename
-
-RenderKernel = Callable[[str], bytes]  # html -> pdf bytes
-
-#: CSS-reference-pixel to millimetre factor at 96 dpi — the exact
-#: constant the reference uses (html_to_pdf/pupeeter.py:43:
-#: ``height_px * 0.264583``).
-PX_TO_MM = 0.264583
-
-#: A4 width, the reference's fixed page width (pupeeter.py:48).
-A4_WIDTH_MM = 210.0
-
-#: measurement viewport: width 1280, tall scratch height, screen
-#: media (pupeeter.py:27,41).
-MEASURE_VIEWPORT = {"width": 1280, "height": 8000}
-
-
-def measured_height_kernel(
-    measure_px: Callable[[str], int],
-    render_page: Callable[[str, str, str], bytes],
-) -> RenderKernel:
-    """Default dynamic-page-size kernel reproducing the reference's
-    measured-height contract (html_to_pdf/pupeeter.py:41-50):
-
-    1. load the HTML in a ``MEASURE_VIEWPORT``-sized screen-media page
-       and measure ``document.body.scrollHeight`` -> ``measure_px``;
-    2. page height = ``f"{height_px * 0.264583}mm"`` (96 dpi px->mm);
-    3. render ONE page, width ``"210mm"``, that exact height,
-       backgrounds printed -> ``render_page(html, width, height)``.
-
-    The browser is injectable (no playwright in this container);
-    ``playwright_pdf_kernel`` wires the real one when available. The
-    sizing arithmetic — the part the reference encodes — lives HERE so
-    every backend renders identical page geometry.
-    """
-
-    def kernel(html: str) -> bytes:
-        height_px = measure_px(html)
-        height_mm = f"{height_px * PX_TO_MM}mm"
-        return render_page(html, f"{int(A4_WIDTH_MM)}mm", height_mm)
-
-    return kernel
-
-
-def playwright_pdf_kernel() -> RenderKernel:
-    """Production kernel: chromium via playwright, import-gated like
-    the tesseract/openai kernels (product_etl_spark.kernels)."""
-    try:
-        from playwright.sync_api import sync_playwright
-    except ImportError as e:  # pragma: no cover - not in test container
-        raise ImportError(
-            "playwright is required for the production PDF kernel; "
-            "inject a RenderKernel (e.g. via measured_height_kernel) "
-            "in environments without a browser"
-        ) from e
-
-    def kernel(html: str) -> bytes:  # pragma: no cover - needs browser
-        with sync_playwright() as p:
-            browser = p.chromium.launch()
-            page = browser.new_page(viewport=MEASURE_VIEWPORT)
-            page.set_content(html)
-            page.emulate_media(media="screen")
-
-            def measure(_html: str) -> int:
-                return page.evaluate("() => document.body.scrollHeight")
-
-            def render(_html: str, width: str, height: str) -> bytes:
-                return page.pdf(
-                    print_background=True, width=width, height=height
-                )
-
-            try:
-                return measured_height_kernel(measure, render)(html)
-            finally:
-                browser.close()
-
-    return kernel
 
 
 def append_csv(df: DataFrame, path: str) -> None:
@@ -115,38 +24,3 @@ def write_partitioned_by_entity(
         .format(fmt)
         .save(path)
     )
-
-
-def render_pdf_stage(
-    df: DataFrame,
-    out_dir: str,
-    kernel: RenderKernel,
-    html_col: str = "html",
-    name_col: str = "name",
-) -> int:
-    """Render one PDF per row into ``out_dir``; returns rendered
-    count. Filenames are sanitized + truncated exactly like the
-    reference (html_to_pdf_printer.py:18-19); existing files are
-    skipped (write-idempotent under task retry, SURVEY §7.4c)."""
-    prepared = df.select(
-        sanitize_filename(F.col(name_col)).alias("_fname"), F.col(html_col)
-    )
-
-    def render_partition(rows) -> None:
-        os.makedirs(out_dir, exist_ok=True)
-        for row in rows:
-            target = os.path.join(out_dir, f"{row['_fname']}.pdf")
-            if os.path.exists(target):
-                continue
-            payload = kernel(row[html_col] or "")
-            tmp = target + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(payload)
-            os.rename(tmp, target)
-
-    prepared.foreachPartition(render_partition)
-    return len(os.listdir(out_dir)) if os.path.isdir(out_dir) else 0
-
-
-def append_log(df: DataFrame, path: str) -> None:
-    df.select(F.col(df.columns[0]).cast("string")).write.mode("append").text(path)

@@ -129,10 +129,7 @@ def q218_suffix_probe_spans(spark, sf_dir):
     pins the ascending-
     ingest contract: probe output == suffix_duplicated_spans over
     the union RESTRICTED to batch docs. The removal twin
-    (probe_suffix_excision), the store-appending ingest
-    (ingest_suffix_spans, idempotent on replay via first-seen gram
-    owners) and the streaming wrapper (stream_suffix_span_probe)
-    ride the same position frame.
+    (probe_suffix_excision) rides the same position frame.
 
     Scale shape: one batch gram groupBy (map-side combine), ONE
     equi-join on the gram key against a vocabulary-sized store,

@@ -18,6 +18,9 @@ from pyspark.sql import functions as F
 #: Name of the injected ingest-order column.
 ROW_IDX = "_source_row_idx"
 
+#: Name of the source-file column ``total_order_row_idx`` orders by.
+SOURCE_FILE = "_source_file"
+
 
 def read_raw_products(
     spark: SparkSession, path: str, sep: str = ";", encoding: str = "UTF-8"
@@ -63,15 +66,17 @@ def read_raw_products_multi(
     frame — dimension-sized) broadcast back and added.
     """
     df = read_raw_products(spark, path, sep, encoding)
-    return total_order_row_idx(df)
+    return total_order_row_idx(df.withColumn(SOURCE_FILE, F.input_file_name()))
 
 
 def total_order_row_idx(df: DataFrame) -> DataFrame:
     """Re-derive ``ROW_IDX`` as a total (file name, in-file position)
     order for a frame whose existing ``ROW_IDX`` is only
     monotone-within-file (``monotonically_increasing_id`` on an
-    ordered file read). Also used by the streaming foreachBatch ingest,
-    where one micro-batch may contain several files.
+    ordered file read) and whose ``SOURCE_FILE`` column holds
+    ``input_file_name()`` taken at the scan. Also used by the
+    streaming foreachBatch ingest, where one micro-batch may contain
+    several files.
 
     Scale shape: in-file position is a window partitioned by file;
     cross-file offsets come from per-file counts cumulated over the
@@ -79,19 +84,18 @@ def total_order_row_idx(df: DataFrame) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    df = df.withColumn("_source_file", F.input_file_name())
-    w_in = Window.partitionBy("_source_file").orderBy(ROW_IDX)
+    w_in = Window.partitionBy(SOURCE_FILE).orderBy(ROW_IDX)
     df = df.withColumn("_in_file_rn", F.row_number().over(w_in))
-    counts = df.groupBy("_source_file").agg(F.count(F.lit(1)).alias("_n"))
-    w_files = Window.orderBy("_source_file").rowsBetween(
+    counts = df.groupBy(SOURCE_FILE).agg(F.count(F.lit(1)).alias("_n"))
+    w_files = Window.orderBy(SOURCE_FILE).rowsBetween(
         Window.unboundedPreceding, -1
     )
     offsets = counts.select(
-        "_source_file",
+        SOURCE_FILE,
         F.coalesce(F.sum("_n").over(w_files), F.lit(0).cast("long")).alias("_offset"),
     )
     return (
-        df.join(F.broadcast(offsets), "_source_file")
+        df.join(F.broadcast(offsets), SOURCE_FILE)
         .withColumn(ROW_IDX, F.col("_offset") + F.col("_in_file_rn"))
-        .drop("_source_file", "_in_file_rn", "_offset")
+        .drop(SOURCE_FILE, "_in_file_rn", "_offset")
     )

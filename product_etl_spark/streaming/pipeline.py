@@ -1,33 +1,24 @@
-"""Structured Streaming surface.
+"""Structured Streaming twins of batch operators.
 
 The reference is strictly batch (SURVEY.md §2.10): its incremental
-semantics are rerunnable scripts + anti-joins. This module provides
-the streaming twins for continuous ingest — same transforms, same
-sinks, with checkpointed exactly-once file sources:
+semantics are rerunnable scripts + anti-joins. This module holds the
+streaming postures of batch operators — same transforms, same sinks,
+with checkpointed exactly-once file sources:
 
 - ``stream_events_rollup``: the q23 hourly rollup as an event-time
   windowed aggregation with a watermark for late data;
 - ``stream_sessionize``: session windows (the q24 gaps-and-islands
-  logic, stateful);
-- ``stream_ingest_csv``: the product ingest as a file-source stream
-  under ``Trigger.AvailableNow`` — drop a new export into the input
-  directory, the pipeline picks it up exactly once (checkpoint holds
-  the processed-files log, replacing the reference's anti-join
-  incrementality for file arrival).
+  logic, stateful).
 
-All transforms are shared with the batch path — a streaming
-DataFrame goes through the same ``build_*`` functions, which is the
-point of declaring everything in the DataFrame API.
+The continuous product ingest, the one streaming path the CLI runs
+(``stream-ingest``), lives beside the batch ingest as
+``pipelines.ingest.stream_ingest_csv``.
 """
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from product_etl_spark.functions import cleaners as C  # noqa: F401  (re-export for sinks)
 
 
 def stream_events_rollup(
@@ -71,103 +62,6 @@ def stream_sessionize(
             F.col("sess.end").alias("session_end"),
             "n_events",
         )
-    )
-
-
-def stream_ingest_csv(
-    spark: SparkSession,
-    input_dir: str,
-    warehouse: str,
-    checkpoint: str,
-    schema_cols: list[str],
-    sep: str = ";",
-    max_files_per_trigger: int | None = None,
-    suppression_path: str | None = None,
-    suppression_key: str | None = None,
-):
-    """Continuous product ingest: a file-source stream over the raw
-    export directory; each micro-batch runs the full batch ingest
-    (pipelines/ingest.run_ingest) via foreachBatch — MERGE writes are
-    not a native streaming sink, and foreachBatch is exactly the
-    escape hatch for idempotent-batch sinks. The checkpoint tracks
-    processed files (exactly-once file pickup); the MERGE keyed on
-    natural keys makes replayed batches no-ops, so end-to-end the
-    pipeline is effectively exactly-once.
-
-    Run under Trigger.AvailableNow for drop-a-file batch operation or
-    a processing-time trigger for true continuous ingest.
-
-    ``max_files_per_trigger`` bounds each micro-batch; at 1, every
-    file is an independent import — the reference's
-    one-workbook-at-a-time semantics (each file's first row per
-    master upserts the collection template, later files win).
-    Unbounded, the whole available backlog is one consolidated
-    export ordered by (file name, in-file position). Both are
-    deterministic under checkpoint replay (the file-source log pins
-    each batch's file set); which contract you want depends on
-    whether the files are cumulative re-exports (use per-file) or
-    one export split into parts (use unbounded).
-
-    ``suppression_path``/``suppression_key``: anti-join every
-    micro-batch against the erasure suppression list
-    (operators/erasure.apply_suppression) BEFORE the merge — without
-    this, the next feed run silently re-creates every erased subject
-    (the ingest-side half of right-to-be-forgotten).
-    """
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from product_etl_spark.pipelines.ingest import run_ingest
-    from product_etl_spark.sources.csv_reader import ROW_IDX
-
-    schema = StructType([StructField(c, StringType()) for c in schema_cols])
-    reader = (
-        spark.readStream.schema(schema)
-        .option("sep", sep)
-        .option("header", True)
-        .option("multiLine", True)
-        .option("escape", '"')
-    )
-    if max_files_per_trigger is not None:
-        # Bound batch size for continuous (processing-time) operation:
-        # a backlog of thousands of export files otherwise lands in
-        # one giant first micro-batch. Row order stays deterministic
-        # either way — total_order_row_idx keys on (file, position),
-        # not on batch composition.
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw_stream = reader.csv(input_dir)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # A micro-batch may hold SEVERAL files (availableNow batches
-        # aren't one-file); partition-layout order is not a contract,
-        # and "first row per master code = template" must be stable
-        # across checkpoint replays for the MERGE no-op guarantee to
-        # hold. Total the order as (file, in-file position) exactly
-        # like the batch reader does.
-        from product_etl_spark.sources.csv_reader import total_order_row_idx
-
-        raw = total_order_row_idx(
-            batch_df.withColumn(ROW_IDX, F.monotonically_increasing_id())
-        )
-        if suppression_path is not None:
-            from product_etl_spark.operators.erasure import (
-                apply_suppression,
-            )
-
-            raw = apply_suppression(
-                raw, batch_df.sparkSession, suppression_path,
-                suppression_key,
-            )
-            if raw.isEmpty():
-                return  # the whole batch was erased subjects
-        run_ingest(batch_df.sparkSession, raw, warehouse)
-
-    return (
-        raw_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -1061,116 +955,6 @@ def read_quantile_sample(
     return quantile_sample_merge(parts, group_cols, k)
 
 
-def _gated_land(
-    batch_df: DataFrame,
-    batch_id: int,
-    out_dir: str,
-    quarantine_dir: str,
-    checks: dict,
-    metrics_path: str | None,
-) -> None:
-    """One micro-batch's observe-gate-land cycle (module-level so the
-    redelivery contract is directly testable): stage with metrics on
-    the write job, route to out/ or quarantine/ by verdict, rewrite
-    the batch's own audit row. Every write is keyed by batch_id and
-    idempotent — a redelivered batch converges to the same state."""
-    from pyspark.sql import Observation
-
-    if batch_df.isEmpty():
-        return
-    spark = batch_df.sparkSession
-    obs = Observation(f"gate_b{batch_id}")
-    observed = batch_df.observe(
-        obs, *[agg.alias(name) for name, (agg, _) in checks.items()]
-    )
-    staging = f"{out_dir}/.staging_batch_{batch_id}"
-    observed.write.mode("overwrite").parquet(staging)
-    metrics = dict(obs.get)
-    failures = {
-        n: metrics[n]
-        for n, (_, pred) in checks.items()
-        if not pred(metrics[n])
-    }
-    import os
-    import shutil
-
-    dest = (
-        f"{quarantine_dir}/batch={batch_id}"
-        if failures
-        else f"{out_dir}/batch={batch_id}"
-    )
-    os.makedirs(os.path.dirname(dest), exist_ok=True)
-    # replay convergence: this batch id owns exactly one dir
-    # across BOTH destinations, whatever the verdict
-    for twin in (
-        f"{out_dir}/batch={batch_id}",
-        f"{quarantine_dir}/batch={batch_id}",
-    ):
-        if os.path.exists(twin):
-            shutil.rmtree(twin)
-    os.rename(staging, dest)
-    if metrics_path is not None:
-        # per-batch dir overwrite, NOT append: a replayed batch
-        # re-lands its own audit row (no double count on retry)
-        spark.createDataFrame(
-            [(batch_id, not failures, json.dumps(metrics, default=str))],
-            "batch_id long, passed boolean, metrics string",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{metrics_path}/batch={batch_id}"
-        )
-
-
-def stream_gated_ingest(
-    values: DataFrame,
-    out_dir: str,
-    quarantine_dir: str,
-    checkpoint: str,
-    checks: dict,
-    metrics_path: str | None = None,
-):
-    """Continuous ingest with the ONE-PASS observe quality gate per
-    micro-batch (operators/observed.py semantics, streaming posture):
-    each batch's metric aggregates ride its own write job; a PASSING
-    batch lands under ``out_dir/batch=<id>``, a FAILING batch is
-    routed WHOLE to ``quarantine_dir/batch=<id>`` — the stream keeps
-    running (a continuous pipeline must not die because one feed
-    delivery was bad; the quarantined batch is inspectable and
-    re-playable after the upstream fix). Every batch's observed
-    metrics (plus its verdict) land under
-    ``metrics_path/batch=<id>`` when given — the audit trail data
-    contracts want.
-
-    Replay-safe WITHIN a checkpoint lineage (the contract of every
-    fold here): the file-source log pins each batch's file set, so a
-    redelivered batch has identical content, an identical verdict,
-    and rewrites the same directory. A batch id is additionally
-    cleared from BOTH destinations before landing, so no batch can
-    ever be double-counted across out/ and quarantine/ — and the
-    metrics write follows the same per-batch-dir overwrite shape
-    (``batch=<id>`` swap, not a bare append), so a batch replayed
-    after a crash-between-commit-points rewrites its OWN audit row
-    instead of appending a duplicate. Starting a
-    FRESH checkpoint over the same source is a NEW stream with new
-    batch boundaries — not a replay; point it at empty destinations.
-
-    ``checks``: {name: (aggregate Column, predicate)} — the
-    write_with_quality_gate contract."""
-
-    def gate(batch_df: DataFrame, batch_id: int) -> None:
-        _gated_land(
-            batch_df, batch_id, out_dir, quarantine_dir, checks, metrics_path
-        )
-
-    q = (
-        values.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
 def stream_span_excision(
     spark: SparkSession,
     input_dir: str,
@@ -1228,152 +1012,6 @@ def stream_span_excision(
         )
         cleaned.write.mode("overwrite").parquet(
             f"{cleaned_dir}/batch={batch_id}"
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_suffix_span_probe(
-    spark: SparkSession,
-    input_dir: str,
-    spans_dir: str,
-    gram_store: str,
-    checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_len: int = 8,
-):
-    """Continuous suffix-exact span detection (the q212 operator's
-    streaming posture, completing the suffix family's incremental
-    rung beside stream_span_excision's q177 gram rule): documents
-    land as json-lines files in ``input_dir``; each micro-batch is
-    probed against the persisted gram->owner store
-    (operators/dedup_incremental.ingest_suffix_spans) and the batch's
-    maximal shared spans land under ``spans_dir/batch=<id>`` —
-    spans shared with history or a same-batch sibling are named with
-    their true merged extents, and the batch's unseen grams are
-    claimed for future batches.
-
-    Same foreachBatch idempotence argument as stream_span_excision:
-    the gram append is keyed (only store-unseen grams land, with the
-    first run's owners), the span output is a per-batch-dir
-    overwrite, and a replayed batch's self-owned grams are not
-    duplication — so the replayed span rows are byte-identical and
-    the store gains nothing.
-    """
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from product_etl_spark.operators.dedup_incremental import (
-        ingest_suffix_spans,
-    )
-
-    schema = StructType(
-        [StructField(id_col, LongType()), StructField(text_col, StringType())]
-    )
-    stream = spark.readStream.schema(schema).json(input_dir)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spans = ingest_suffix_spans(
-            batch_df.sparkSession,
-            batch_df,
-            gram_store,
-            text_col,
-            id_col,
-            min_len=min_len,
-        )
-        spans.write.mode("overwrite").parquet(
-            f"{spans_dir}/batch={batch_id}"
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_semdedup(
-    spark: SparkSession,
-    input_dir: str,
-    accepted_dir: str,
-    rejected_dir: str,
-    store_path: str,
-    centroids_path: str,
-    checkpoint: str,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.3,
-):
-    """Continuous semantic dedup (the q189 operator's streaming
-    posture): vectors land as json-lines files in ``input_dir``; each
-    micro-batch splits against the cell-partitioned accepted-vector
-    store (operators/similarity.incremental_semdedup) and lands under
-    ``accepted_dir/batch=<id>`` / ``rejected_dir/batch=<id>``
-    (overwrite-mode per-batch dirs — the replay-safe audit-metrics
-    convention). ``centroids_path`` holds the FIXED cell geometry
-    (train once, e.g. ivf_centroids_kmeans on a bootstrap sample,
-    write once): the store's cross-batch contract.
-
-    foreachBatch retry idempotence: the store append is id-keyed
-    (already-stored ids never re-append), and a retried batch row
-    collides with its OWN stored copy (cos 1.0, matched_id == id) —
-    such self-matches are classified back to ACCEPTED (it IS the
-    stored copy), so the rewritten per-batch dirs carry the same rows
-    as the first attempt. Genuine rejections always name a DIFFERENT
-    id and stay rejected on retry.
-    """
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from product_etl_spark.operators.similarity import incremental_semdedup
-
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField(emb_col, ArrayType(DoubleType())),
-        ]
-    )
-    stream = spark.readStream.schema(schema).json(input_dir)
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        cents = s.read.parquet(centroids_path)
-        batch = batch_df.select(
-            F.col(id_col),
-            F.col(emb_col).cast("array<float>").alias(emb_col),
-        )
-        acc, rej = incremental_semdedup(
-            s, batch, store_path, cents,
-            emb_col=emb_col, id_col=id_col, threshold=threshold,
-        )
-        replayed = rej.filter(F.col("matched_id") == F.col(id_col))
-        acc_out = acc.unionByName(replayed.select(id_col, emb_col))
-        rej_out = rej.filter(F.col("matched_id") != F.col(id_col))
-        acc_out.write.mode("overwrite").parquet(
-            f"{accepted_dir}/batch={batch_id}"
-        )
-        rej_out.write.mode("overwrite").parquet(
-            f"{rejected_dir}/batch={batch_id}"
         )
 
     return (

@@ -66,3 +66,114 @@ def test_curate_and_profile_cli(spark, tmp_path, capsys, sf_dir):
 
     with pytest.raises(SystemExit):
         main(["nope"])
+
+
+def _export_rows():
+    """The test_ingest fixture as parsed (header, rows) cells."""
+    import csv
+    import io
+
+    import test_ingest as TI
+
+    header, *rows = csv.reader(
+        io.StringIO(TI.HEADER + "\n" + "\n".join(TI.ROWS)), delimiter=";"
+    )
+    return header, rows
+
+
+def _write_csv(path, header, rows):
+    import csv
+
+    with open(path, "w", newline="", encoding="utf-8") as fh:
+        csv.writer(fh, delimiter=";").writerows([header, *rows])
+
+
+def _tables(spark, wh):
+    """{table: sorted rows} of a warehouse, audit timestamps dropped
+    (they record when a run merged, not what it merged)."""
+    import os
+
+    out = {}
+    for name in sorted(os.listdir(wh)):
+        df = spark.read.parquet(f"{wh}/{name}")
+        cols = sorted(
+            f.name for f in df.schema.fields
+            if f.dataType.typeName() != "timestamp"
+        )
+        out[name] = sorted(map(repr, df.select(*cols).collect()))
+    return out
+
+
+def test_stream_ingest_cli_matches_batch_ingest(spark, tmp_path, capsys):
+    """Two exports dropped one at a time: each stream-ingest run merges
+    only the new file, prints one progress line for its micro-batch,
+    and the warehouse ends equal to one batch ingest of both."""
+    import json
+
+    header, rows = _export_rows()
+    first = rows[0][0]
+    parts = (
+        [r for r in rows if r[0] == first],
+        [r for r in rows if r[0] != first],
+    )
+    drop, both = tmp_path / "drop", tmp_path / "both"
+    drop.mkdir()
+    both.mkdir()
+    stream_wh, batch_wh = str(tmp_path / "swh"), str(tmp_path / "bwh")
+    argv = [
+        "stream-ingest", "--input-dir", str(drop), "--warehouse", stream_wh,
+        "--checkpoint", str(tmp_path / "ckpt"),
+    ]
+    for i, part in enumerate(parts):
+        _write_csv(both / f"export_{i}.csv", header, part)
+        _write_csv(drop / f"export_{i}.csv", header, part)
+        assert main(argv) == 0
+        lines = capsys.readouterr().out.splitlines()
+        assert len(lines) == 1
+        progress = json.loads(lines[0])
+        assert progress["batchId"] == i
+        assert progress["numInputRows"] == len(part)
+        assert progress["durationMs"]["triggerExecution"] >= 0
+
+    assert main(["ingest", "--csv", str(both), "--warehouse", batch_wh]) == 0
+    assert _tables(spark, stream_wh) == _tables(spark, batch_wh)
+
+
+def test_stream_ingest_cli_needs_an_export(tmp_path):
+    with pytest.raises(SystemExit, match="no .csv export"):
+        main([
+            "stream-ingest", "--input-dir", str(tmp_path),
+            "--warehouse", str(tmp_path / "wh"),
+            "--checkpoint", str(tmp_path / "ckpt"),
+        ])
+
+
+def test_ingest_cli_reads_xlsx_export(spark, tmp_path, capsys):
+    """An .xlsx export goes through the same cascade as its CSV."""
+    from xml.sax.saxutils import escape
+
+    from test_sources import _write_xlsx
+
+    header, rows = _export_rows()
+    csv_path, xlsx_path = tmp_path / "raw.csv", tmp_path / "raw.xlsx"
+    _write_csv(csv_path, header, rows)
+    sheet = "".join(
+        "<row>"
+        + "".join(
+            f'<c t="inlineStr"><is><t>{escape(v)}</t></is></c>'
+            if v else "<c/>"
+            for v in cells
+        )
+        + "</row>"
+        for cells in [header, *rows]
+    )
+    _write_xlsx(xlsx_path, sheet)
+
+    counts = []
+    for path in (csv_path, xlsx_path):
+        assert main([
+            "ingest", "--csv", str(path), "--warehouse",
+            str(tmp_path / "wh"), "--dry-run",
+        ]) == 0
+        counts.append(capsys.readouterr().out)
+    assert counts[0] == counts[1] and "product\t5" in counts[0]

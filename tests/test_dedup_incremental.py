@@ -467,180 +467,3 @@ def test_suffix_probe_excision_matches_batch_strip(spark):
     assert got[12][2] == 0
 
 
-@pytest.mark.slow
-def test_ingest_suffix_spans_idempotent_replay(spark, tmp_path):
-    """Replaying an ingested batch reproduces the first run's spans
-    byte-identically and appends nothing (owner==self matches are
-    not duplication)."""
-    from product_etl_spark.operators.dedup_incremental import (
-        ingest_suffix_spans,
-        read_signature_store,
-    )
-
-    store = str(tmp_path / "suffix_gram_store")
-    shared = " ".join(f"s{i}" for i in range(10))
-    b1 = [(1, f"a1 a2 {shared} a3"), (2, "some unique filler text here ok")]
-    b2 = [(11, f"c1 {shared} c2"), (12, "other unique filler text here ok")]
-
-    first1 = _span_set(
-        ingest_suffix_spans(spark, _sdocs(spark, b1), store, "text", "doc_id", 8)
-    )
-    assert first1 == set()
-    rows_after_1 = read_signature_store(spark, store).count()
-    first2 = _span_set(
-        ingest_suffix_spans(spark, _sdocs(spark, b2), store, "text", "doc_id", 8)
-    )
-    assert first2 == {(11, 1, 10)}
-    rows_after_2 = read_signature_store(spark, store).count()
-    assert rows_after_2 > rows_after_1  # batch 2's new grams claimed
-
-    # replay batch 1: self-owned grams are not duplication
-    replay1 = _span_set(
-        ingest_suffix_spans(spark, _sdocs(spark, b1), store, "text", "doc_id", 8)
-    )
-    assert replay1 == first1
-    # replay batch 2: spans identical, store unchanged
-    replay2 = _span_set(
-        ingest_suffix_spans(spark, _sdocs(spark, b2), store, "text", "doc_id", 8)
-    )
-    assert replay2 == first2
-    assert read_signature_store(spark, store).count() == rows_after_2
-
-
-@pytest.mark.slow
-def test_suffix_gram_store_compaction_and_erasure_lifecycle(spark, tmp_path):
-    """Gram-store lifecycle (r13 verdict item 3): repeated ingests
-    fragment the bucket partitions into per-batch small files;
-    compact_partitions rewrites them without changing a row, probes
-    and replays after compaction are byte-identical to before, and
-    bucket-preserving RTBF erasure by owner (the jaccard store's
-    path) still works on the compacted layout."""
-    from product_etl_spark.operators.dedup_incremental import (
-        ingest_suffix_spans,
-        probe_suffix_spans,
-        read_signature_store,
-    )
-    from product_etl_spark.operators.erasure import erase_from_stores
-    from product_etl_spark.operators.table_maintenance import (
-        compact_partitions,
-        partition_file_stats,
-    )
-
-    store = str(tmp_path / "suffix_gram_store")
-    shared = " ".join(f"s{i}" for i in range(10))
-    batches = [
-        [(1, f"a1 a2 {shared} a3"), (2, "unique alpha filler text here ok")],
-        [(11, "fresh beta words nothing shared at all today")],
-        [(21, "gamma content also entirely novel and unshared")],
-    ]
-    for b in batches:
-        ingest_suffix_spans(
-            spark, _sdocs(spark, b), store, "text", "doc_id", 8, n_buckets=4
-        )
-    probe_batch = _sdocs(spark, [(31, f"p1 {shared} p2")])
-
-    before_stats = partition_file_stats(store)
-    assert any(s.n_files >= 2 for s in before_stats), (
-        "fixture must fragment at least one bucket partition"
-    )
-    rows_before = sorted(
-        tuple(r) for r in read_signature_store(spark, store).collect()
-    )
-    idx = read_signature_store(spark, store).localCheckpoint(eager=True)
-    spans_before = _span_set(
-        probe_suffix_spans(idx, probe_batch, "text", "doc_id", 8)
-    )
-    assert spans_before == {(31, 1, 10)}
-
-    compacted = compact_partitions(spark, store, min_files=2)
-    assert compacted, "at least one partition must have been rewritten"
-    after_stats = partition_file_stats(store)
-    assert sum(s.n_files for s in after_stats) < sum(
-        s.n_files for s in before_stats
-    )
-    # bucket layout preserved (pruning survives)
-    assert {s.rel for s in after_stats} <= {s.rel for s in before_stats}
-    # not a row moved or lost
-    assert rows_before == sorted(
-        tuple(r) for r in read_signature_store(spark, store).collect()
-    )
-    # probe parity and replay idempotence on the compacted store
-    idx2 = read_signature_store(spark, store)
-    assert _span_set(
-        probe_suffix_spans(idx2, probe_batch, "text", "doc_id", 8)
-    ) == spans_before
-    n_rows = read_signature_store(spark, store).count()
-    assert _span_set(
-        ingest_suffix_spans(
-            spark, _sdocs(spark, batches[0]), store, "text", "doc_id", 8,
-            n_buckets=4,
-        )
-    ) == set()
-    assert read_signature_store(spark, store).count() == n_rows
-
-    # RTBF erasure by owner on the compacted layout: doc 1's grams
-    # leave the store, gram_bucket dirs survive, and the probe no
-    # longer sees doc 1's history
-    report = erase_from_stores(
-        spark,
-        spark.createDataFrame([(1,)], "keep long"),
-        [{"path": store, "id_col": "keep", "partition_by": ["gram_bucket"]}],
-    )
-    assert report[store] > 0
-    left = read_signature_store(spark, store)
-    assert left.filter(F.col("keep") == 1).count() == 0
-    assert any(
-        p.name.startswith("gram_bucket=")
-        for p in (tmp_path / "suffix_gram_store").iterdir()
-    )
-    assert _span_set(
-        probe_suffix_spans(
-            left.localCheckpoint(eager=True), probe_batch, "text", "doc_id", 8
-        )
-    ) == set()
-
-
-@pytest.mark.slow
-def test_stream_suffix_span_probe_end_to_end(spark, tmp_path):
-    """Streaming twin of the suffix-span probe: batches of json-lines
-    docs are probed against the gram store; a later drop names the
-    spans the first drop owns (true merged extents), and replay
-    (same checkpoint, no new files) changes nothing."""
-    import json as _json
-    import os
-
-    from product_etl_spark.streaming.pipeline import (
-        stream_suffix_span_probe,
-    )
-
-    src, out, store, ck = (
-        str(tmp_path / d) for d in ("in", "spans", "grams", "ck")
-    )
-    os.makedirs(src)
-    span = " ".join(f"w{i}" for i in range(9))
-
-    def drop(fname, rows):
-        with open(f"{src}/{fname}", "w") as f:
-            for rid, text in rows:
-                f.write(_json.dumps({"doc_id": rid, "text": text}) + "\n")
-
-    drop("b1.jsonl", [(1, f"{span} unique one two")])
-    q = stream_suffix_span_probe(spark, src, out, store, ck)
-    q.awaitTermination()
-    drop("b2.jsonl", [(2, f"p1 p2 p3 {span} s1"), (3, "all fresh here")])
-    q = stream_suffix_span_probe(spark, src, out, store, ck)
-    q.awaitTermination()
-
-    got = {
-        (r["doc_id"], r["span_start"], r["span_len"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got == {(2, 3, 9)}  # doc 2's span vs history doc 1, true extent
-
-    # replay: no new files -> no new batches -> outputs unchanged
-    q = stream_suffix_span_probe(spark, src, out, store, ck)
-    q.awaitTermination()
-    assert {
-        (r["doc_id"], r["span_start"], r["span_len"])
-        for r in spark.read.parquet(out).collect()
-    } == {(2, 3, 9)}

@@ -268,6 +268,24 @@ def test_minhash_estimates_track_jaccard(spark):
     est75 = sum(a == b for a, b in zip(sigs[0], sigs[75])) / 16
     assert est25 > est75
 
+    # documents sharing an id (NULL, or 1 twice) are separate token
+    # streams: no shingle spans two of them
+    twins = spark.createDataFrame(
+        [(None, "a b c"), (None, "x y z"), (1, "p q r"), (1, "p q s")],
+        "doc_id long, text string",
+    )
+    got = {}
+    for r in D.exploded_shingles(twins, "text", "doc_id").collect():
+        got.setdefault(r["doc_id"], set()).add(r["sh"])
+    assert got == {None: {"a b", "b c", "x y", "y z"}, 1: {"p q", "q r", "q s"}}
+    pos = {}
+    for r in D.positional_shingles(twins, "text", "doc_id", 2).collect():
+        pos.setdefault(r["doc_id"], []).append((r["pos"], r["sh"]))
+    assert {k: sorted(v) for k, v in pos.items()} == {
+        None: [(0, "a b"), (0, "x y"), (1, "b c"), (1, "y z")],
+        1: [(0, "p q"), (0, "p q"), (1, "q r"), (1, "q s")],
+    }
+
 
 def test_jaccard_unrestricted_guard_trips(spark):
     """The full shingle self-join must be unreachable by accident at

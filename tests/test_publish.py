@@ -112,11 +112,7 @@ def test_rewriters_respect_table_lock(spark, tmp_path, rewrite):
     assert _rows(spark, path) == [(1, "a"), (2, "b")]
 
 
-_RENAME_ALLOWED = {
-    ("fs.py", None),
-    ("streaming/pipeline.py", "_gated_land"),
-    ("operators/sinks.py", "render_pdf_stage"),
-}
+_RENAME_ALLOWED = {("fs.py", None)}
 
 
 def _renames(tree):

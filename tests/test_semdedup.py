@@ -204,71 +204,6 @@ def test_incremental_store_is_cell_partitioned_and_erasable(spark, tmp_path):
     assert [(r["vec_id"], r["matched_id"]) for r in got] == [(101, 1)]
 
 
-@pytest.mark.slow
-def test_stream_semdedup_end_to_end(spark, tmp_path):
-    """Streaming twin: vector drops drain against the cell store; the
-    cross-cell perfect dup survives across batches, the in-cell dup is
-    rejected, and a RETRIED drain (fresh checkpoint, same store)
-    rewrites identical per-batch outputs — the self-match rule."""
-    import json as _json
-    import os
-
-    from product_etl_spark.streaming.pipeline import stream_semdedup
-
-    src, acc_d, rej_d, store, cents_p, ck, ck2 = (
-        str(tmp_path / d)
-        for d in ("in", "acc", "rej", "store", "cents", "ck", "ck2")
-    )
-    os.makedirs(src)
-    corpus = _fixture(spark)
-    _seed_centroids(spark, corpus, 2).write.parquet(cents_p)
-
-    vecs = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in corpus.collect()
-    }
-
-    def drop(fname, ids):
-        with open(f"{src}/{fname}", "w") as f:
-            for i in ids:
-                f.write(
-                    _json.dumps({"vec_id": i, "embedding": vecs[i]}) + "\n"
-                )
-
-    drop("b1.jsonl", [0, 1, 2])
-    stream_semdedup(
-        spark, src, acc_d, rej_d, store, cents_p, ck, threshold=0.95
-    ).awaitTermination()
-    drop("b2.jsonl", [3, 4])
-    stream_semdedup(
-        spark, src, acc_d, rej_d, store, cents_p, ck, threshold=0.95
-    ).awaitTermination()
-
-    acc = sorted(r["vec_id"] for r in spark.read.parquet(acc_d).collect())
-    rej = [
-        (r["vec_id"], r["matched_id"])
-        for r in spark.read.parquet(rej_d).collect()
-    ]
-    assert acc == [0, 1, 2, 3]  # cross-cell dup (3 of 2) survives
-    assert rej == [(4, 0)]
-
-    # retry semantics: reprocessing every file from scratch (fresh
-    # checkpoint + fresh output dirs, SAME store) must classify
-    # identically — every stored row self-matches back to accepted,
-    # the genuine rejection stays rejected, the store gains nothing
-    acc2_d, rej2_d = str(tmp_path / "acc2"), str(tmp_path / "rej2")
-    stream_semdedup(
-        spark, src, acc2_d, rej2_d, store, cents_p, ck2, threshold=0.95
-    ).awaitTermination()
-    acc2 = sorted(r["vec_id"] for r in spark.read.parquet(acc2_d).collect())
-    rej2 = [
-        (r["vec_id"], r["matched_id"])
-        for r in spark.read.parquet(rej2_d).collect()
-    ]
-    assert (acc2, rej2) == (acc, rej)
-    assert spark.read.parquet(store).count() == 4
-
-
 def test_semdedup_degenerate_cell_guard(spark):
     """A planted degenerate cell (all vectors collapsing onto one
     list_id) must FAIL the job loudly before the O(cell^2) pair join

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from product_etl_spark.operators.sinks import (
     append_csv,
-    render_pdf_stage,
     write_partitioned_by_entity,
 )
 from product_etl_spark.pipelines.namer import run_namer
@@ -39,28 +38,6 @@ def test_namer_incremental(spark, tmp_path):
 
     out2 = {r["entity_id"]: r for r in run_namer(spark, rows, stage, kernel2).collect()}
     assert out2["e1"]["generated_name"] == "name-吧椅-963cef"
-
-
-def test_render_pdf_stage_idempotent(spark, tmp_path):
-    out_dir = str(tmp_path / "pdfs")
-    df = spark.createDataFrame(
-        [("prod/a:1", "<p>one</p>"), ("prod b", "<p>two</p>")], "name string, html string"
-    )
-    calls_dir = str(tmp_path / "calls")
-    os.makedirs(calls_dir)
-
-    def kernel(html: str) -> bytes:
-        with open(os.path.join(calls_dir, f"{abs(hash(html))}.t"), "w") as fh:
-            fh.write("x")
-        return b"%PDF-fake " + html.encode()
-
-    n = render_pdf_stage(df, out_dir, kernel)
-    assert n == 2
-    assert sorted(os.listdir(out_dir)) == ["prod b.pdf", "prod_a_1.pdf"]
-    n_calls = len(os.listdir(calls_dir))
-    # rerun: files exist -> kernel not called again
-    render_pdf_stage(df, out_dir, kernel)
-    assert len(os.listdir(calls_dir)) == n_calls
 
 
 def test_partitioned_sink_and_binaryfile_roundtrip(spark, tmp_path):
@@ -116,40 +93,3 @@ def test_introspection(spark):
     assert discover_translatable_fields(df) == ["name"]
 
 
-def test_measured_height_kernel_contract(spark, tmp_path):
-    """The dynamic page-size contract (html_to_pdf/pupeeter.py:41-50):
-    height measured at the 1280px screen viewport, px->mm via
-    0.264583, one 210mm-wide page of exactly that height."""
-    from product_etl_spark.operators.sinks import (
-        MEASURE_VIEWPORT,
-        measured_height_kernel,
-        render_pdf_stage,
-    )
-
-    calls = []
-
-    def measure(html: str) -> int:
-        # pretend scrollHeight scales with content length
-        return 1000 + len(html)
-
-    def render(html: str, width: str, height: str) -> bytes:
-        calls.append((html, width, height))
-        return f"pdf[{width}x{height}]".encode()
-
-    kernel = measured_height_kernel(measure, render)
-    html = "<body>" + "x" * 87 + "</body>"  # len 100 -> 1100 px
-    assert len(html) == 100
-    payload = kernel(html)
-    assert calls == [(html, "210mm", f"{1100 * 0.264583}mm")]
-    assert payload == f"pdf[210mmx{1100 * 0.264583}mm]".encode()
-    assert MEASURE_VIEWPORT == {"width": 1280, "height": 8000}
-
-    # and it plugs straight into the sink as the default RenderKernel
-    df = spark.createDataFrame([("p one", html)], "name string, html string")
-    out_dir = str(tmp_path / "pdfs")
-    n = render_pdf_stage(df, out_dir, kernel)
-    assert n == 1
-    import os
-    [f] = os.listdir(out_dir)
-    assert f.endswith(".pdf")
-    assert open(os.path.join(out_dir, f), "rb").read().startswith(b"pdf[210mm")

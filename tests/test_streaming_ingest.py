@@ -4,9 +4,8 @@ warehouse tables merge incrementally and exactly-once."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from product_etl_spark.streaming.pipeline import stream_ingest_csv
+from product_etl_spark.pipelines.ingest import stream_ingest_csv
 
 HEADER_COLS = ["Master Code", "SKU Code", "Product Name", "Price", "Inventory"]
 HEADER = ";".join(HEADER_COLS)
@@ -186,70 +185,3 @@ def test_stream_ingest_respects_suppression_list(spark, tmp_path):
     assert coll == {"m2"}
 
 
-def test_stream_gated_ingest_quarantines_bad_batches(spark, tmp_path):
-    """Per-micro-batch observe gate: passing batches publish under
-    out/batch=<id>, failing batches land WHOLE in quarantine (the
-    stream survives a bad feed delivery), every batch's metrics +
-    verdict append to the audit trail, and replay converges."""
-    from pyspark.sql import functions as F
-
-    from product_etl_spark.streaming.pipeline import stream_gated_ingest
-
-    src, out, qdir, mp = (
-        str(tmp_path / d) for d in ("in", "out", "quarantine", "metrics")
-    )
-    checks = {
-        "n": (F.count(F.lit(1)), lambda v: v >= 1),
-        "null_k": (F.count_if(F.col("k").isNull()), lambda v: v == 0),
-    }
-
-    def write(rows):
-        spark.createDataFrame(rows, "k int, v string").coalesce(
-            1
-        ).write.mode("append").parquet(src)
-
-    def run(ck):
-        stream_gated_ingest(
-            spark.readStream.schema("k int, v string").parquet(src),
-            out, qdir, ck, checks, metrics_path=mp,
-        )
-
-    write([(1, "a"), (2, "b")])          # good batch
-    run(str(tmp_path / "ck"))
-    write([(None, "x"), (3, "c")])       # bad batch (null key)
-    run(str(tmp_path / "ck"))
-
-    good = spark.read.parquet(out)
-    assert sorted(r["k"] for r in good.collect()) == [1, 2]
-    bad = spark.read.parquet(qdir)
-    assert bad.count() == 2 and bad.filter(F.col("k").isNull()).count() == 1
-    audit = {r["batch_id"]: r["passed"] for r in spark.read.parquet(mp).collect()}
-    assert audit == {0: True, 1: False}
-
-    # replay WITHIN the checkpoint lineage: no new files -> no new
-    # batches, destinations and audit unchanged
-    run(str(tmp_path / "ck"))
-    assert spark.read.parquet(out).count() == 2
-    assert spark.read.parquet(qdir).count() == 2
-
-    # crash window: batch 1 processed but its commit lost -> the
-    # engine REDELIVERS batch 1 with identical content. Data re-lands
-    # its own dir (clear-before-land) and the audit row must be
-    # REWRITTEN, not appended twice — the metrics write is a
-    # per-batch overwrite, not append. (Simulated by invoking the
-    # per-batch land directly; Spark 4's commit-log guard forbids
-    # checkpoint surgery in-session.)
-    from product_etl_spark.streaming.pipeline import _gated_land
-
-    redelivered = spark.createDataFrame(
-        [(None, "x"), (3, "c")], "k int, v string"
-    )
-    _gated_land(redelivered, 1, out, qdir, checks, mp)
-    assert spark.read.parquet(out).count() == 2
-    assert spark.read.parquet(qdir).count() == 2
-    audit_rows = spark.read.parquet(mp).collect()
-    assert len(audit_rows) == 2  # one row per batch, replay included
-    assert {r["batch_id"]: r["passed"] for r in audit_rows} == {
-        0: True,
-        1: False,
-    }

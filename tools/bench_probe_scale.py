@@ -1,12 +1,11 @@
 #!/usr/bin/env python3
 """Volume probe for the INCREMENTAL suffix-span rung
 (operators/dedup_incremental: build_suffix_span_index /
-probe_suffix_spans / ingest_suffix_spans): the same 200k-doc / 12M-
+probe_suffix_spans): the same 200k-doc / 12M-
 position synthetic corpus recipe as tools/bench_cores_scale.py, split into
 a 190k-doc accepted HISTORY and a 10k-doc arriving BATCH (every 20th
-doc). Times (a) the one-off history index build + persist, (b) the
-in-memory probe, (c) the store-backed ingest (read store + probe +
-claim new grams), and asserts EXACT planted-duplicate recovery: every
+doc). Times (a) the one-off history index build + persist and (b) the
+probe, and asserts EXACT planted-duplicate recovery: every
 batch doc whose planted 20-token partner lives in history must
 surface exactly its [10, 30) span.
 
@@ -31,7 +30,6 @@ from pyspark.sql import functions as F
 
 from product_etl_spark.operators.dedup_incremental import (
     build_suffix_span_index,
-    ingest_suffix_spans,
     probe_suffix_spans,
 )
 from product_etl_spark.session import get_spark
@@ -110,80 +108,7 @@ def main() -> None:
         "exact": True,
     }
 
-    # (c) store-backed ingest on a FRESH copy of the store (read +
-    # probe + claim new grams), then a replay to prove idempotence
-    store2 = tempfile.mkdtemp(prefix="probe_scale_store2_")
-    shutil.rmtree(store2)
-    build_suffix_span_index(hist, "text", "doc_id", min_len=8).write.mode(
-        "overwrite"
-    ).partitionBy("gram_bucket").parquet(store2)
-    t0 = time.time()
-    got2 = {
-        (r["doc_id"], r["span_start"], r["span_len"])
-        for r in ingest_suffix_spans(
-            spark, batch, store2, "text", "doc_id", min_len=8
-        ).collect()
-    }
-    t_ingest = round(time.time() - t0, 2)
-    assert got2 == expected
-    rows_after = spark.read.parquet(store2).count()
-    t0 = time.time()
-    got3 = {
-        (r["doc_id"], r["span_start"], r["span_len"])
-        for r in ingest_suffix_spans(
-            spark, batch, store2, "text", "doc_id", min_len=8
-        ).collect()
-    }
-    t_replay = round(time.time() - t0, 2)
-    assert got3 == expected, "replay changed the span output"
-    assert spark.read.parquet(store2).count() == rows_after, (
-        "replay grew the store"
-    )
-    out["ingest"] = {
-        "sec": t_ingest,
-        "replay_sec": t_replay,
-        "store_rows_after": rows_after,
-        "replay_idempotent": True,
-    }
-
-    # (d) lifecycle (r13 verdict item 3): the ingest appended the
-    # batch's grams as per-batch small files into every bucket
-    # partition — compact them and prove the probe is byte-identical
-    # on the compacted layout (same rows, same spans, fewer files)
-    from product_etl_spark.operators.table_maintenance import (
-        compact_partitions,
-        partition_file_stats,
-    )
-
-    files_before = sum(s.n_files for s in partition_file_stats(store2))
-    t0 = time.time()
-    compacted = compact_partitions(spark, store2, min_files=2)
-    t_compact = round(time.time() - t0, 2)
-    files_after = sum(s.n_files for s in partition_file_stats(store2))
-    t0 = time.time()
-    got4 = {
-        (r["doc_id"], r["span_start"], r["span_len"])
-        for r in probe_suffix_spans(
-            spark.read.parquet(store2), batch, "text", "doc_id", min_len=8
-        ).collect()
-    }
-    t_probe_compacted = round(time.time() - t0, 2)
-    assert got4 == expected, "post-compaction probe parity broke"
-    assert spark.read.parquet(store2).count() == rows_after, (
-        "compaction changed the store's row count"
-    )
-    out["compaction"] = {
-        "partitions_rewritten": len(compacted),
-        "files_before": files_before,
-        "files_after": files_after,
-        "sec": t_compact,
-        "probe_after_sec": t_probe_compacted,
-        "probe_parity": True,
-        "store_rows_unchanged": True,
-    }
-
     shutil.rmtree(store, ignore_errors=True)
-    shutil.rmtree(store2, ignore_errors=True)
     print(json.dumps(out, separators=(",", ":")))
 
 

@@ -11,8 +11,10 @@ Usage:
   SPARK_GRAFT_BENCH_REPS / _WARMUP as in bench.py.
 
 Query names may be prefixes (q217 matches q217_suffix_doubling_spans).
-Prints one line per query: median / per-rep walls / job count, and a
-final JSON line for scripting.
+Every selected query gets its warm-up passes before any timed rep,
+and reps run round-robin, so list order does not bias the walls.
+Prints one line per query: median / per-rep walls / job count (over
+all reps), and a final JSON line for scripting.
 """
 
 from __future__ import annotations
@@ -59,10 +61,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-    out = {}
-    for name, spec in selected.items():
-        if explain_dir:
-            os.makedirs(explain_dir, exist_ok=True)
+    if explain_dir:
+        os.makedirs(explain_dir, exist_ok=True)
+        for name, spec in selected.items():
             df = spec["fn"](spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
@@ -72,30 +73,37 @@ def main() -> None:
                 os.path.join(explain_dir, f"{short}{suffix}.txt"), "w"
             ) as f:
                 f.write(plan)
-        for _ in range(warmup):
-            spec["fn"](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        sc = spark.sparkContext
-        group = f"measure:{name}"
-        sc.setJobGroup(group, name)
-        runs = []
-        try:
-            for _ in range(reps):
+
+    def run(spec) -> None:
+        spec["fn"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    # Untimed passes over EVERY selected query before any timed rep,
+    # then reps round-robin: the first-listed query would otherwise
+    # time a JVM still warming up on the plan shapes of the others.
+    for _ in range(warmup):
+        for spec in selected.values():
+            run(spec)
+    sc = spark.sparkContext
+    runs: dict[str, list[float]] = {name: [] for name in selected}
+    for _ in range(reps):
+        for name, spec in selected.items():
+            sc.setJobGroup(f"measure:{name}", name)
+            try:
                 t0 = time.monotonic()
-                spec["fn"](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(round(time.monotonic() - t0, 3))
-        finally:
-            sc.setJobGroup("", "")
+                run(spec)
+                runs[name].append(round(time.monotonic() - t0, 3))
+            finally:
+                sc.setJobGroup("", "")
+
+    out = {}
+    for name, reps_s in runs.items():
         try:
-            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            jobs = len(sc.statusTracker().getJobIdsForGroup(f"measure:{name}"))
         except Exception:
             jobs = -1
-        med = sorted(runs)[len(runs) // 2]
-        out[name] = {"median": med, "reps": runs, "jobs": jobs}
-        print(f"{name}: median={med}s reps={runs} jobs={jobs}", flush=True)
+        med = sorted(reps_s)[len(reps_s) // 2]
+        out[name] = {"median": med, "reps": reps_s, "jobs": jobs}
+        print(f"{name}: median={med}s reps={reps_s} jobs={jobs}", flush=True)
     print(json.dumps(out, separators=(",", ":")))
     spark.stop()
 
