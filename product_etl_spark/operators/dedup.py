@@ -452,50 +452,29 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 10,
-    algorithm: str = "propagation",
 ) -> DataFrame:
     """Transitive closure of near-dup pairs -> (id, component) where
     component is the minimum id reachable (the GraphFrames-free
-    connected components).
+    connected components), by min-label propagation: every round each
+    node adopts the smallest label among itself and its neighbors.
 
-    algorithm:
-      'propagation' — min-label propagation: every round each node
-        adopts the smallest label among itself and its neighbors.
-        O(diameter) rounds; near-dup clusters are shallow, so this is
-        the cheap default, but a pathological long chain needs
-        diameter rounds and every round shuffles the FULL label frame.
-        Round 1 is folded into the label initialization (one groupBy
-        over the edge list), so ``max_iter`` bounds the rounds run
-        AFTER that fold — distance max_iter+1 propagation total.
-      'star' — alternating large-star / small-star contraction
-        (Kiveris et al. 2014, "Connected Components in MapReduce and
-        Beyond"): each round rewires every node's strictly-larger
-        neighbors to its neighborhood minimum (large-star), then
-        collapses the remaining edges onto that minimum (small-star).
-        Converges in O(log n) rounds REGARDLESS of diameter, and hub
-        fan-out is bounded because every rewrite goes through per-node
-        minima — the hub-safe choice for long chains or celebrity
-        nodes. Shuffles the edge frame (not a label frame) per round.
+    Cost: O(diameter) rounds, each one join + one groupBy over the
+    label frame. Round 1 is folded into the label initialization (one
+    groupBy over the edge list), so ``max_iter`` bounds the rounds run
+    AFTER that fold, the last of which only observes that no label
+    changed: a path of d edges converges at ``max_iter = d`` and
+    raises at ``d - 1``. A graph deeper than the cap raises
+    RuntimeError; the operator never returns a partial labeling.
+    Near-dup clusters are shallow, so the catalog's caps (10-20) hold.
 
-    Both return identical (id, component) labelings (asserted in
-    tests on chain/hub/fixture graphs), and both raise RuntimeError
-    rather than return a partial labeling when ``max_iter`` rounds end
-    short of the fixpoint. Intermediate frames are localCheckpointed
-    to cut the growing lineage, which otherwise re-executes the whole
-    chain per round. The checkpoint is LAZY and
-    the convergence check is the action that materializes it: the
-    changed-label count rides the update frame itself (a ``_chg``
-    column summed by the same job), so each round submits ONE Spark
-    job instead of an eager-checkpoint job plus a separate
-    join-and-count job (r10 verdict item 3 — q156/q164 job counts).
+    Intermediate frames are localCheckpointed to cut the growing
+    lineage, which otherwise re-executes the whole chain per round.
+    The checkpoint is LAZY and the convergence check is the action
+    that materializes it: the changed-label count rides the update
+    frame itself (a ``_chg`` column summed by the same job), so each
+    round submits ONE Spark job instead of an eager-checkpoint job
+    plus a separate join-and-count job.
     """
-    if algorithm == "star":
-        return _star_components(pairs, id_a, id_b, max_iter)
-    if algorithm != "propagation":
-        raise ValueError(
-            f"unknown connected-components algorithm: {algorithm!r} "
-            "(use 'propagation' or 'star')"
-        )
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(
@@ -581,92 +560,10 @@ def connected_components(
             break
     else:
         raise RuntimeError(
-            "connected_components(propagation): labels still changing "
-            f"after max_iter={max_iter} rounds; raise max_iter or use "
-            "algorithm='star'"
+            "connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds; raise max_iter"
         )
     return labels
-
-
-def _star_components(
-    pairs: DataFrame, id_a: str, id_b: str, max_iter: int
-) -> DataFrame:
-    """Large-star/small-star alternation (Kiveris et al. 2014). The
-    edge frame is kept in (u > v) canonical orientation; at the
-    fixpoint every component is a star — each node points directly at
-    the component minimum — so the labels fall out of the edge list.
-
-    large-star: for each node u with neighborhood Γ(u) (symmetric
-    view) and m = min(Γ(u) ∪ {u}), emit (v, m) for v ∈ Γ(u), v > u.
-    small-star: for each node u (canonical view, all neighbors < u)
-    and m = min(Γ(u)), emit (u, m) and (v, m) for v ∈ Γ(u) \\ {m}.
-    Both steps only ever connect nodes to a per-neighborhood MINIMUM,
-    which is what bounds hub fan-out and gives O(log n) convergence.
-    """
-    edges = (
-        pairs.select(
-            F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
-            F.least(F.col(id_a), F.col(id_b)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        both = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        lmin = (
-            both.groupBy("u")
-            .agg(F.min("v").alias("_mn"))
-            .select("u", F.least("_mn", "u").alias("m"))
-        )
-        large = (
-            both.join(lmin, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-        smin = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            large.join(smin, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(smin.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            # lazy: the star-property check below shuffles EVERY
-            # partition of `small` in its map stage, so it is the
-            # action that materializes the checkpoint — one job per
-            # round instead of checkpoint + compare (r10 verdict
-            # item 3: q170/q187 job counts)
-            .localCheckpoint(eager=False)
-        )
-        edges = small
-        # Exact fixpoint test, one self-semi-join instead of two
-        # exceptAlls against the previous round: the edge set is
-        # fully contracted iff NO 2-hop chain (a,b),(b,c) remains —
-        # then every component is a star, and canonical (u > v)
-        # orientation makes each star root the component MINIMUM, so
-        # the labeling read off `edges` is already the answer. This
-        # also exits one round earlier than compare-to-previous
-        # (which needed a whole no-change round to observe equality).
-        chain = (
-            small.select(F.col("v").alias("_mid"))
-            .join(small.select(F.col("u").alias("_mid")), "_mid", "left_semi")
-            .limit(1)
-            .count()
-        )
-        if chain == 0:
-            break
-    else:
-        raise RuntimeError(
-            "connected_components(star): not contracted to stars "
-            f"after max_iter={max_iter} rounds; raise max_iter"
-        )
-    return edges.select(F.col("u").alias("id"), F.col("v").alias("component")).unionByName(
-        edges.select(F.col("v").alias("id"), F.col("v").alias("component")).distinct()
-    )
 
 
 def dedup_corpus(
@@ -1317,7 +1214,9 @@ def merge_components(
     over (all old edges UNION new edges) — pytest-asserted. Input
     size: one row per historical NODE instead of one per historical
     EDGE (near-dup edge lists are the bigger side), and clusters
-    untouched by new edges keep their labels bit-identically.
+    untouched by new edges keep their labels bit-identically. Raises
+    RuntimeError, as ``connected_components`` does, when ``max_iter``
+    rounds end short of the fixpoint.
     """
     stars = old_labels.select(
         F.col("id").alias(id_a), F.col("component").alias(id_b)
@@ -1541,7 +1440,6 @@ def cluster_safe_folds(
     n_folds: int = 3,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    algorithm: str = "star",
     max_iter: int = 12,
 ) -> DataFrame:
     """Leakage-safe split assignment: every near-duplicate CLUSTER —
@@ -1558,16 +1456,16 @@ def cluster_safe_folds(
 
     Output: (id, component, fold) for every input document.
 
-    Scale shape: the closure is the q156/q170 edge-frame machinery
-    (O(log n) star rounds, never a label frame for hubs); singletons
-    join back with one left join; the fold is a map-side hash. The
-    pair frame comes from any upstream near-dup stage (LSH, PPJoin,
-    SemDeDup) — this operator never touches text or embeddings."""
+    Scale shape: the closure is ``connected_components`` (O(diameter)
+    propagation rounds; raises RuntimeError past ``max_iter``);
+    singletons join back with one left join; the fold is a map-side
+    hash. The pair frame comes from any upstream near-dup stage (LSH,
+    PPJoin, SemDeDup) — this operator never touches text or
+    embeddings."""
     from product_etl_spark.functions.text import hash64
 
     comp = connected_components(
-        pairs.select(id_a, id_b), id_a, id_b,
-        max_iter=max_iter, algorithm=algorithm,
+        pairs.select(id_a, id_b), id_a, id_b, max_iter=max_iter
     )
     labeled = (
         docs.select(F.col(id_col))

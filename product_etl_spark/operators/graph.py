@@ -1,18 +1,15 @@
-"""Iterative graph operators over edge DataFrames — the
-GraphFrames-free versions of the two algorithms a data-curation
-pipeline actually reaches for: connected components lives in
-``dedup.connected_components`` (duplicate clusters); this module adds
-PageRank (authority scoring over link/transition graphs — e.g.
-ranking crawl hosts by link authority before sampling, the CommonCrawl
-curation recipe) and label propagation (community detection over the
-same edges).
+"""Graph operators over edge DataFrames — the GraphFrames-free
+versions of the two a data-curation pipeline runs besides duplicate
+clustering (``dedup.connected_components``, the one fixpoint loop):
 
-Scale shape (both): state is one (node, value) frame partitioned by
-node id; each round is join-on-src + groupBy-dst — two hash shuffles
-keyed on node id, no driver-side state beyond the iteration counter,
-``localCheckpoint`` per round to cut the growing lineage exactly like
-``connected_components``. Rounds are O(diameter)/O(n_iters), each a
-constant number of stages regardless of graph size.
+- ``pagerank``: authority scoring over link/transition graphs (q114),
+  e.g. ranking crawl hosts by link authority before sampling, the
+  CommonCrawl curation recipe. A fixed ``n_iters`` power iteration,
+  not a fixpoint: it needs no convergence test and has no cap to hit.
+  State is one (node, rank) frame partitioned by node id; each round
+  is join-on-src + groupBy-dst, two hash shuffles keyed on node id,
+  with ``localCheckpoint`` per round to cut the growing lineage.
+- ``triangle_count``: one-pass degree-ordered wedge count (q141).
 """
 
 from __future__ import annotations
@@ -90,52 +87,6 @@ def pagerank(
     return ranks
 
 
-def label_propagation(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    n_iters: int = 5,
-) -> DataFrame:
-    """Community detection by synchronous label propagation:
-    (node, label). Each round every node adopts the most frequent
-    label among its neighbors (ties broken by the smaller label for
-    determinism — synchronous updates + a total tiebreak make the
-    result partitioning-independent, unlike the random-order
-    asynchronous variant). Node ids must be integral (the tiebreak
-    negates the label inside a max-struct).
-    """
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        # one materialization; every round's join re-reads e
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        e.select(F.col("a").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(n_iters):
-        neigh = (
-            e.join(labels, e.b == labels.node)
-            .groupBy("a", "label")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        # max(struct(n, negated-label)) picks highest count, then the
-        # SMALLEST label among ties; Spark structs compare field-wise
-        best = (
-            neigh.select("a", "label", "n",
-                         (-F.col("label").cast("long")).alias("_neg"))
-            .groupBy("a")
-            .agg(F.max(F.struct("n", "_neg")).alias("_best"))
-            .select(F.col("a").alias("node"),
-                    (-F.col("_best._neg")).cast("long").alias("label"))
-        )
-        labels = best.localCheckpoint(eager=True)
-    return labels
-
-
 def triangle_count(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
@@ -204,75 +155,3 @@ def triangle_count(
     ).join(closing, ["v", "w"], "inner")
     return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
 
-
-def k_core(
-    edges: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Nodes of the k-CORE: the maximal subgraph where every node has
-    degree >= k, computed by iterative peeling (drop all nodes with
-    degree < k, recompute degrees on the induced subgraph, repeat to
-    the fixpoint). The standard graph-curation gate: in a link or
-    co-occurrence graph, low-core nodes are leaves/spam tendrils and
-    the dense core is the reusable backbone (2-core drops all trees
-    hanging off the graph; higher k isolates communities worth
-    keeping). Deterministic — the k-core is unique, so peeling order
-    cannot matter (pytest pins this against a brute-force peel).
-
-    Not expressible as a monotone recursive CTE (peeling DELETES
-    non-monotonically), so this ships pytest-pinned like the other
-    iterative operators pre-q156.
-
-    Output: (id, degree) — the node's degree WITHIN the k-core.
-
-    Scale shape: edges are canonicalized undirected once; each round
-    is one symmetric degree groupBy + two semi-joins to induce the
-    surviving subgraph — shuffles bounded by the (shrinking) edge
-    frame, localCheckpoint per round cuts lineage. Rounds are
-    bounded by the peeling depth (degeneracy ordering length /
-    batch peel: all sub-k nodes drop together each round, so depth
-    is the number of 'onion layers', typically << n). Raises
-    RuntimeError if ``max_iter`` rounds end while nodes still drop."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        sym = und.unionByName(
-            und.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.filter(F.col("degree") >= k).select("u")
-        pruned = (
-            und.join(keep, "u", "left_semi")
-            .join(
-                keep.select(F.col("u").alias("v")), "v", "left_semi"
-            )
-            .localCheckpoint(eager=True)
-        )
-        dropped = und.count() - pruned.count()
-        und = pruned
-        if dropped == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"k_core: still peeling after max_iter={max_iter} rounds; "
-            "raise max_iter"
-        )
-    sym = und.unionByName(
-        und.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    return (
-        sym.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .filter(F.col("degree") >= k)
-        .select(F.col("u").alias("id"), "degree")
-    )

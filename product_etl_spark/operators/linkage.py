@@ -23,7 +23,8 @@ Scale shape (the blocked-cosine / LSH contract, SCALING.md):
 - Scoring is `levenshtein()` — JVM codegen, no Python, evaluated
   only on candidate pairs.
 - Clustering reuses dedup.connected_components (iterative min-label
-  propagation, O(diameter) rounds, lineage checkpointed); records
+  propagation, O(diameter) rounds, lineage checkpointed; raises
+  RuntimeError past ``max_iter`` rounds); records
   that matched nothing keep their own id as entity_id via one left
   join against the component table.
 """

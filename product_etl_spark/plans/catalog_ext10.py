@@ -83,8 +83,10 @@ def q156_dedup_cluster_components(spark, sf_dir):
     reachability (the oracle's reach set is quadratic in cluster
     size; the Spark plan's state is one label row per node).
     Converges in O(diameter) rounds with early exit; near-dup
-    clusters are shallow. localCheckpoint per round cuts the growing
-    lineage (dedup.py:connected_components)."""
+    clusters are shallow, and a graph deeper than ``max_iter=20``
+    raises RuntimeError rather than return a partial labeling.
+    localCheckpoint per round cuts the growing lineage
+    (dedup.py:connected_components)."""
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     pairs = set_similarity_pairs(d, "text", "doc_id", 3, 5)
     comp = connected_components(

@@ -1,8 +1,8 @@
 """Eleventh extension catalog (q169-q176): the portable QUANTILE
 sketch that completes the cross-engine-verifiable sketch family
-(CMS q165 / HLL q167 / KMV q168), the hub-safe star-contraction
-connected components (the O(log n) twin of q156's propagation
-closure), and the integer-decided robust/corpus statistics family —
+(CMS q165 / HLL q167 / KMV q168), connected components on a second
+bounded document slice (q156's propagation closure), and the
+integer-decided robust/corpus statistics family —
 weighted median, vocabulary coverage cutpoints, trimmed mean, and
 (registered after the r9 window froze, leading the r10 queue) exact
 grouped mode, weight-concentration cutpoints, and the
@@ -135,34 +135,28 @@ def q169_quantile_sample_sketch(spark, sf_dir):
     """,
 )
 def q170_star_components(spark, sf_dir):
-    """Connected components via LARGE-STAR/SMALL-STAR contraction
-    (dedup.connected_components(algorithm='star'), Kiveris et al.
-    2014) on the exact-Jaccard edge set — the same closure contract
-    as q156's min-label propagation, driver-hashed against the same
-    recursive-CTE fixpoint on a disjoint document slice (bounded on
-    BOTH sides — a lower-bound-only slice is 350 docs at the driver's
-    sf0.01 but 4850 at sf0.1, which made the all-pairs-shaped oracle
-    block and the closure balloon to ~129 s in the r9 bench; the
-    operator itself is corpus-scale, the BLOCK the oracle brute-forces
-    must stay block-sized). Star
-    contraction converges in O(log n) rounds REGARDLESS of graph
-    diameter and bounds hub fan-out (every rewrite goes through
-    per-neighborhood minima), so it is the shape that survives the
-    pathological graphs propagation cannot: long chains (diameter
-    rounds) and celebrity nodes (full label frame reshuffled per
-    round). Equality to propagation is additionally pytest-pinned on
-    planted chain/hub graphs (test_dedup_similarity).
+    """Connected components (dedup.connected_components, min-label
+    propagation) on the exact-Jaccard edge set of a second document
+    slice (150 <= doc_id < 500; q156 reads doc_id < 300),
+    driver-hashed against the same recursive-CTE fixpoint as q156.
+    The slice is bounded on BOTH sides — a lower-bound-only slice is
+    350 docs at the driver's sf0.01 but 4850 at sf0.1, which made the
+    all-pairs-shaped oracle block and the closure balloon to ~129 s
+    in the r9 bench; the operator itself is corpus-scale, the BLOCK
+    the oracle brute-forces must stay block-sized. The registered
+    name is kept from when the entry ran star contraction, which gave
+    the same labels.
 
-    Scale shape: each round shuffles the EDGE frame twice (two
-    groupBy-min + two joins), never a per-node label frame; edges
-    only ever point at neighborhood minima, so frame size is
-    non-increasing. localCheckpoint per round cuts lineage."""
+    Scale shape: O(diameter) rounds, each one edge-list join + one
+    groupBy-min over the label frame, localCheckpointed. The slice's
+    clusters are shallow; a graph deeper than ``max_iter=12`` raises
+    RuntimeError rather than return a partial labeling."""
     d = _t(spark, sf_dir, "documents").filter(
         (F.col("doc_id") >= 150) & (F.col("doc_id") < 500)
     )
     pairs = set_similarity_pairs(d, "text", "doc_id", 3, 5)
     comp = connected_components(
-        pairs.select("id_a", "id_b"), algorithm="star", max_iter=12
+        pairs.select("id_a", "id_b"), max_iter=12
     )
     return comp.select(F.col("id").alias("doc_id"), "component")
 

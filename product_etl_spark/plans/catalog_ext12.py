@@ -608,12 +608,13 @@ def q187_dedup_cluster_histogram(spark, sf_dir):
     singleton (size-1 rows count docs with NO near-duplicate — the
     left-anti complement of the component frame, so the histogram's
     weighted total equals the slice size and removal impact is
-    sum((size-1)*n_clusters)). Components via star contraction on
-    the exact-Jaccard edge set (q170's closure, disjoint smaller
-    slice, bounded both ends); driver-hashed against the
-    recursive-CTE fixpoint.
+    sum((size-1)*n_clusters)). Components via min-label propagation
+    on the exact-Jaccard edge set (q170's closure, smaller slice,
+    bounded both ends); driver-hashed against the recursive-CTE
+    fixpoint. Raises RuntimeError if the slice's graph is deeper
+    than ``max_iter=12``.
 
-    Scale shape: q170's edge-frame contraction, then two
+    Scale shape: q170's propagation closure, then two
     vocab-tiny groupBys (component -> size -> histogram) and one
     anti-join for singletons. The oracle's all-pairs block stays
     block-sized by the two-sided slice."""
@@ -627,7 +628,7 @@ def q187_dedup_cluster_histogram(spark, sf_dir):
     )
     pairs = set_similarity_pairs(d, "text", "doc_id", 3, 5)
     comp = connected_components(
-        pairs.select("id_a", "id_b"), algorithm="star", max_iter=12
+        pairs.select("id_a", "id_b"), max_iter=12
     )
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("size"))
     singles = d.join(

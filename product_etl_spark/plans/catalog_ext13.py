@@ -463,15 +463,16 @@ def q193_cluster_safe_folds(spark, sf_dir):
     """Leakage-safe split assignment (dedup.cluster_safe_folds): every
     near-duplicate CLUSTER lands in one fold — fold = portable
     md5-hash(component) mod 3 over the q187 slice's exact-Jaccard
-    components (star contraction; singletons label themselves) — so
-    train and held-out folds can never share near-duplicates. The
-    fold is a pure function of the cluster id, making "no cluster
-    straddles folds" true by construction (pytest-asserted on a
-    planted graph) and assignments stable under re-runs; per-row
-    folds (q183) cannot give that guarantee. The oracle replays the
-    closure with a recursive CTE and the identical portable hash.
+    components (min-label propagation, raising past its 12-round
+    cap; singletons label themselves) — so train and held-out folds
+    can never share near-duplicates. The fold is a pure function of
+    the cluster id, making "no cluster straddles folds" true by
+    construction (pytest-asserted on a planted graph) and
+    assignments stable under re-runs; per-row folds (q183) cannot
+    give that guarantee. The oracle replays the closure with a
+    recursive CTE and the identical portable hash.
 
-    Scale shape: the q170 edge-frame closure plus one left join back
+    Scale shape: the q170 propagation closure plus one left join back
     for singletons and a map-side hash; the fold step adds zero
     shuffles beyond the closure it consumes."""
     from product_etl_spark.operators.dedup import (

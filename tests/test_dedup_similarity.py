@@ -182,6 +182,17 @@ def test_connected_components_chain_and_islands(spark):
     assert comp[10] == comp[11] == 10
     assert comp[20] == comp[21] == 20
 
+    # hub 100 wired to spokes 101..140, pendant chain 140-141-142,
+    # island (7, 8): labels in closed form
+    hub_edges = [(100, i) for i in range(101, 141)] + [
+        (140, 141),
+        (141, 142),
+        (7, 8),
+    ]
+    hub = spark.createDataFrame(hub_edges, "id_a long, id_b long")
+    got = {r["id"]: r["component"] for r in D.connected_components(hub).collect()}
+    assert got == {7: 7, 8: 7, **{i: 100 for i in range(100, 143)}}
+
 
 def test_connected_components_with_lsh_pipeline(spark):
     # end-to-end: docs -> minhash -> lsh pairs -> components
@@ -865,98 +876,22 @@ def test_weighted_set_similarity_matches_bruteforce(spark):
     assert (3, 4) in got and (1, 2) not in got
 
 
-def test_star_components_equal_propagation_on_fixtures(spark):
-    """algorithm='star' (large-star/small-star contraction) must
-    produce the identical (id, component) labeling as min-label
-    propagation on the standard fixtures."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21)], "id_a long, id_b long"
-    )
-    prop = sorted(
-        map(tuple, D.connected_components(pairs).collect())
-    )
-    star = sorted(
-        map(tuple, D.connected_components(pairs, algorithm="star").collect())
-    )
-    assert star == prop
-
-    docs = _docs(spark)
-    sig = D.minhash_signatures(docs, "text", "doc_id", k=8)
-    lsh_pairs = D.lsh_candidate_pairs(sig, "doc_id")
-    prop2 = sorted(map(tuple, D.connected_components(lsh_pairs).collect()))
-    star2 = sorted(
-        map(
-            tuple,
-            D.connected_components(lsh_pairs, algorithm="star").collect(),
-        )
-    )
-    assert star2 == prop2
-
-
 def test_connected_components_raise_at_cap(spark):
-    """A 41-node chain (diameter 40) needs more propagation rounds
-    than max_iter=10 allows: the operator must raise, not return the
-    partial 30-component labeling. Star contraction converges on the
-    same chain within the same cap, and raises when given too few
-    rounds."""
+    """A path of 4 edges needs 3 rounds after the folded first one,
+    plus a round that sees no label change: max_iter=3 must raise,
+    not return the partial labeling, and max_iter=4 converges."""
     chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "id_a long, id_b long"
+        [(i, i + 1) for i in range(4)], "id_a long, id_b long"
     )
-    with pytest.raises(RuntimeError, match=r"propagation.*max_iter=10\b"):
-        D.connected_components(chain, max_iter=10)
-    star = D.connected_components(chain, algorithm="star", max_iter=10)
-    assert star.count() == 41
-    assert star.select("component").distinct().collect() == [(0,)]
-    with pytest.raises(RuntimeError, match=r"star.*max_iter=1\b"):
-        D.connected_components(chain, algorithm="star", max_iter=1)
-
-
-@pytest.mark.slow
-def test_star_components_long_chain_and_hub(spark):
-    """The shapes star contraction exists for: a 60-node path (the
-    propagation default would need 60 rounds — diameter — while star
-    converges in O(log n)) and a hub-heavy graph (one celebrity node
-    touching everything plus a pendant chain). Expected labels are
-    known in closed form."""
-    n = 60
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "id_a long, id_b long"
-    )
+    with pytest.raises(
+        RuntimeError, match=r"connected_components.*max_iter=3\b"
+    ):
+        D.connected_components(chain, max_iter=3)
     got = {
         r["id"]: r["component"]
-        for r in D.connected_components(
-            chain, algorithm="star", max_iter=12
-        ).collect()
+        for r in D.connected_components(chain, max_iter=4).collect()
     }
-    assert got == {i: 0 for i in range(n + 1)}
-
-    # hub 100 wired to 101..140, plus chain 140-141-142, island (7,8)
-    hub_edges = [(100, i) for i in range(101, 141)] + [
-        (140, 141),
-        (141, 142),
-        (7, 8),
-    ]
-    hub = spark.createDataFrame(hub_edges, "id_a long, id_b long")
-    got_h = {
-        r["id"]: r["component"]
-        for r in D.connected_components(hub, algorithm="star").collect()
-    }
-    assert got_h[7] == got_h[8] == 7
-    assert all(got_h[i] == 100 for i in range(100, 143))
-    # and star == propagation on the same graph
-    prop = {
-        r["id"]: r["component"]
-        for r in D.connected_components(hub).collect()
-    }
-    assert got_h == prop
-
-
-def test_connected_components_unknown_algorithm_rejected(spark):
-    import pytest
-
-    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with pytest.raises(ValueError, match="unknown connected-components"):
-        D.connected_components(pairs, algorithm="bogus")
+    assert got == {i: 0 for i in range(5)}
 
 
 def test_cluster_safe_folds_never_split_a_cluster(spark):

@@ -1,11 +1,11 @@
 """Graph operators (operators/graph.py): PageRank against known
-closed-form results; label propagation on planted communities."""
+closed-form results; association rules on hand-checked baskets."""
 
 from __future__ import annotations
 
 import pytest
 
-from product_etl_spark.operators.graph import label_propagation, pagerank
+from product_etl_spark.operators.graph import pagerank
 
 
 def _edges(spark, pairs, weights=None):
@@ -41,77 +41,6 @@ def test_pagerank_weighted_shares(spark):
              for row in pagerank(e, weight="w", n_iters=30).collect()}
     assert ranks[1] > ranks[2]
     assert sum(ranks.values()) == pytest.approx(3.0, rel=1e-9)
-
-
-def test_label_propagation_two_planted_communities(spark):
-    # two triangles joined by one weak bridge edge
-    tri1 = [(1, 2), (2, 3), (1, 3)]
-    tri2 = [(10, 11), (11, 12), (10, 12)]
-    bridge = [(3, 10)]
-    labels = {r["node"]: r["label"] for r in
-              label_propagation(_edges(spark, tri1 + tri2 + bridge),
-                                n_iters=5).collect()}
-    assert labels[1] == labels[2] == labels[3]
-    assert labels[10] == labels[11] == labels[12]
-    assert labels[1] != labels[10]
-
-
-def _brute_k_core(edge_list, k):
-    adj = {}
-    for a, b in edge_list:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    while True:
-        weak = [n for n, nb in adj.items() if len(nb) < k]
-        if not weak:
-            break
-        for n in weak:
-            for m in adj[n]:
-                adj[m].discard(n)
-            del adj[n]
-    return {n: len(nb) for n, nb in adj.items()}
-
-
-def test_k_core_matches_bruteforce_peel(spark):
-    """k-core via iterative batch peeling == the one-at-a-time
-    brute-force peel (the k-core is unique, so peel order cannot
-    matter): a 5-clique survives k=3; the attached triangle survives
-    k=2 but not k=3; chains and the clique-triangle bridge peel off
-    at k=2."""
-    from itertools import combinations
-
-    from product_etl_spark.operators.graph import k_core
-
-    edge_list = (
-        list(combinations([1, 2, 3, 4, 5], 2))      # 5-clique
-        + [(10, 11), (11, 12), (10, 12)]            # triangle
-        + [(5, 20), (20, 21), (21, 22)]             # pendant chain
-        + [(5, 10)]                                 # bridge
-    )
-    edges = spark.createDataFrame(edge_list, "src long, dst long")
-    for k in (2, 3, 4, 5):
-        got = {
-            r["id"]: r["degree"] for r in k_core(edges, k).collect()
-        }
-        assert got == _brute_k_core(edge_list, k), k
-    # spot-check the semantics the docstring claims
-    assert set(_brute_k_core(edge_list, 3)) == {1, 2, 3, 4, 5}
-    assert set(_brute_k_core(edge_list, 2)) == {1, 2, 3, 4, 5, 10, 11, 12}
-    assert _brute_k_core(edge_list, 5) == {}
-
-
-def test_k_core_raises_at_cap(spark):
-    """A 6-node path peels one layer from each end per round (three
-    peeling rounds, then a round that drops nothing): max_iter=2 must
-    raise instead of returning the half-peeled graph."""
-    from product_etl_spark.operators.graph import k_core
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(5)], "src long, dst long"
-    )
-    with pytest.raises(RuntimeError, match=r"k_core.*max_iter=2\b"):
-        k_core(edges, 2, max_iter=2)
-    assert k_core(edges, 2, max_iter=4).count() == 0
 
 
 def test_association_rules_hand_check(spark):

@@ -13,8 +13,9 @@ Usage:
 Query names may be prefixes (q217 matches q217_suffix_doubling_spans).
 Every selected query gets its warm-up passes before any timed rep,
 and reps run round-robin, so list order does not bias the walls.
-Prints one line per query: median / per-rep walls / job count (over
-all reps), and a final JSON line for scripting.
+Each timed rep runs in its own job group, so job counts are per rep.
+Prints one line per query: median / per-rep walls / per-rep job
+counts, and a final JSON line for scripting.
 """
 
 from __future__ import annotations
@@ -85,9 +86,9 @@ def main() -> None:
             run(spec)
     sc = spark.sparkContext
     runs: dict[str, list[float]] = {name: [] for name in selected}
-    for _ in range(reps):
+    for rep in range(reps):
         for name, spec in selected.items():
-            sc.setJobGroup(f"measure:{name}", name)
+            sc.setJobGroup(f"measure:{name}:{rep}", name)
             try:
                 t0 = time.monotonic()
                 run(spec)
@@ -95,12 +96,15 @@ def main() -> None:
             finally:
                 sc.setJobGroup("", "")
 
+    def jobs_in(group: str) -> int:
+        try:
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+        except Exception:
+            return -1
+
     out = {}
     for name, reps_s in runs.items():
-        try:
-            jobs = len(sc.statusTracker().getJobIdsForGroup(f"measure:{name}"))
-        except Exception:
-            jobs = -1
+        jobs = [jobs_in(f"measure:{name}:{rep}") for rep in range(reps)]
         med = sorted(reps_s)[len(reps_s) // 2]
         out[name] = {"median": med, "reps": reps_s, "jobs": jobs}
         print(f"{name}: median={med}s reps={reps_s} jobs={jobs}", flush=True)
