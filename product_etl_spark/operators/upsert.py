@@ -90,6 +90,8 @@ def _outer_merge(
     from_upd = F.col("_u").isNotNull() if mode == "upsert" else ~matched
 
     if audit:
+        # `now` folds to a literal that codegen inlines: this projection
+        # compiles new classes on every call, whatever the cache size.
         now = F.current_timestamp()
         created = U.get("created_on", now)
         modified = now

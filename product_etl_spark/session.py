@@ -43,6 +43,11 @@ def configure_session(spark: SparkSession) -> SparkSession:
     live session — crucially ``nanosAsLong`` (the events table is
     unreadable without it) and the UTC session timezone (timestamp
     arithmetic parity with the oracle).
+
+    Static confs cannot be applied here. Such a session (e.g. the one
+    ``__spark_entry__.py`` is handed) keeps Spark's 100-entry codegen
+    class cache: ``spark.sql.codegen.cache.maxEntries`` is read once per
+    JVM, so only ``get_spark``'s builder can size it.
     """
     for k, v in _DEFAULTS.items():
         try:
@@ -78,6 +83,14 @@ def get_spark(
     conf.setdefault(
         "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     )
+    # JVM-wide codegen class cache, static (read when the cache is first
+    # used). Spark's 100-entry LRU is below the engine's working set:
+    # corpus_dedup's five queries compile 127 classes, one
+    # product_journey pass 350-370. At 100, classes were evicted before
+    # reuse and warm runs recompiled (seed 1: 91 classes a warm
+    # corpus_dedup pass, 110 / 2.9 s in the journey's refresh verify).
+    # At 1000 a warm corpus_dedup pass compiles none.
+    conf.setdefault("spark.sql.codegen.cache.maxEntries", "1000")
     # Keep the UI off for test/bench runs (port churn, memory).
     conf.setdefault("spark.ui.enabled", "false")
     if extra_conf:

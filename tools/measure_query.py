@@ -14,8 +14,12 @@ Query names may be prefixes (q217 matches q217_suffix_doubling_spans).
 Every selected query gets its warm-up passes before any timed rep,
 and reps run round-robin, so list order does not bias the walls.
 Each timed rep runs in its own job group, so job counts are per rep.
+Codegen compiles (count, and summed janino ms) are read from the JVM
+around each timed rep, outside the timed region; a warm rep that still
+compiles is paying for classes the codegen cache evicted.
 Prints one line per query: median / per-rep walls / per-rep job
-counts, and a final JSON line for scripting.
+counts / per-rep compiles and compile ms, and a final JSON line for
+scripting.
 """
 
 from __future__ import annotations
@@ -85,16 +89,29 @@ def main() -> None:
         for spec in selected.values():
             run(spec)
     sc = spark.sparkContext
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
+    def compiled() -> tuple[int, int]:
+        # JVM-wide totals: compile count, summed compile time in ns
+        return metrics.METRIC_COMPILATION_TIME().getCount(), codegen.compileTime()
+
     runs: dict[str, list[float]] = {name: [] for name in selected}
+    compiles: dict[str, list[int]] = {name: [] for name in selected}
+    compile_ms: dict[str, list[int]] = {name: [] for name in selected}
     for rep in range(reps):
         for name, spec in selected.items():
             sc.setJobGroup(f"measure:{name}:{rep}", name)
+            n0, ns0 = compiled()
             try:
                 t0 = time.monotonic()
                 run(spec)
                 runs[name].append(round(time.monotonic() - t0, 3))
             finally:
                 sc.setJobGroup("", "")
+            n1, ns1 = compiled()
+            compiles[name].append(n1 - n0)
+            compile_ms[name].append(round((ns1 - ns0) / 1e6))
 
     def jobs_in(group: str) -> int:
         try:
@@ -106,8 +123,18 @@ def main() -> None:
     for name, reps_s in runs.items():
         jobs = [jobs_in(f"measure:{name}:{rep}") for rep in range(reps)]
         med = sorted(reps_s)[len(reps_s) // 2]
-        out[name] = {"median": med, "reps": reps_s, "jobs": jobs}
-        print(f"{name}: median={med}s reps={reps_s} jobs={jobs}", flush=True)
+        out[name] = {
+            "median": med,
+            "reps": reps_s,
+            "jobs": jobs,
+            "compiles": compiles[name],
+            "compile_ms": compile_ms[name],
+        }
+        print(
+            f"{name}: median={med}s reps={reps_s} jobs={jobs}"
+            f" compiles={compiles[name]} compile_ms={compile_ms[name]}",
+            flush=True,
+        )
     print(json.dumps(out, separators=(",", ":")))
     spark.stop()
 
