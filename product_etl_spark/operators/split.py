@@ -35,10 +35,25 @@ def split_master_variants(
     ``in_collection_index`` (1-based position among the non-template
     rows, matching ``enumerate(..., start=1)`` semantics).
     """
+    return split_numbered(number_masters(raw, master_code_col, row_idx_col))
+
+
+def number_masters(
+    raw: DataFrame,
+    master_code_col: str = "Master Code",
+    row_idx_col: str = ROW_IDX,
+) -> DataFrame:
+    """The rows with a master code, numbered ``_rn`` in file order
+    within their master: the window both halves of the split filter."""
     mc = F.col(master_code_col)
     keyed = raw.filter(mc.isNotNull() & (F.trim(mc) != ""))
     w = Window.partitionBy(master_code_col).orderBy(row_idx_col)
-    numbered = keyed.withColumn("_rn", F.row_number().over(w))
+    return keyed.withColumn("_rn", F.row_number().over(w))
+
+
+def split_numbered(numbered: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(templates, variants) of a ``number_masters`` frame, as two
+    filters: a caller that caches ``numbered`` runs the window once."""
     templates = numbered.filter(F.col("_rn") == 1).drop("_rn")
     variants = (
         numbered.filter(F.col("_rn") > 1)

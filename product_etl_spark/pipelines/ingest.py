@@ -19,6 +19,7 @@ gets the same property from upsert-by-natural-key, one row at a time.
 
 from __future__ import annotations
 
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,7 +27,7 @@ from pyspark.sql import functions as F
 
 from product_etl_spark import ids
 from product_etl_spark.functions import cleaners as C
-from product_etl_spark.operators.split import split_master_variants
+from product_etl_spark.operators.split import number_masters, split_numbered
 from product_etl_spark.operators.upsert import upsert_parquet
 from product_etl_spark.schemas import NATURAL_KEYS
 from product_etl_spark.sources.csv_reader import (
@@ -336,7 +337,11 @@ def seed_lang_table(spark: SparkSession, warehouse: str) -> DataFrame:
     """Idempotent seed of the ``lang`` dimension (the reference
     get-or-creates 'en' at startup, ETL.py:111-124; we insert-only
     merge the full seed set with deterministic ids)."""
-    rows = spark.createDataFrame([(c,) for c in SEED_LANGS], "lang_code string")
+    # Built on the JVM from one single-partition row: a frame from a
+    # Python list scans a Python RDD, which starts the Python worker
+    # daemon (and one worker per row) to write four constants.
+    codes = F.explode(F.array(*[F.lit(c) for c in SEED_LANGS])).alias("lang_code")
+    rows = spark.range(1, numPartitions=1).select(codes)
     langs = rows.select(
         ids.uuid5_col(ids.NS_LANG, "lang_code").alias("id"), "lang_code"
     )
@@ -358,68 +363,62 @@ def run_ingest(
     into ``{warehouse}/{table}`` on its natural key — rerunning the
     same input is a no-op by construction.
     """
-    templates, variants = split_master_variants(raw)
-    split = []
+    numbered = number_masters(raw)
     if write:
-        # All 11 table plans start from the split: cache it, so that
-        # the export is read and the window run once, before the merge
-        # threads start, not in each MERGE; released after the merges.
-        # Coalesced to the export's partitions: the cached plan would
-        # otherwise keep the window's spark.sql.shuffle.partitions
-        # (an empty frame can have none).
+        # All 11 table plans start from the split: cache the one
+        # numbered frame both halves filter, so that the export is read
+        # and the window run once, before the merge threads start, not
+        # in each MERGE; released after the merges. Coalesced to the
+        # export's partitions: the cached plan would otherwise keep the
+        # window's spark.sql.shuffle.partitions (an empty frame can
+        # have none).
         n = max(raw.rdd.getNumPartitions(), 1)
-        split = [df.coalesce(n).persist() for df in (templates, variants)]
-        for df in split:
-            df.count()
-        templates, variants = split
+        numbered = numbered.coalesce(n).persist()
+        numbered.count()
+    templates, variants = split_numbered(numbered)
 
-    collections = build_collections(templates)
-    products = build_products(variants, collections)
-    translations = build_translations(templates)
-    category, cat_tr, cat_links = build_categories(templates)
-    attr_raw, attr_parsed = build_raw_attributes(templates)
-    pk, pv, plinks = build_product_attributes(variants)
-    images = build_collection_images(collections)
+    # The lang seed and the 11 output tables are independent: each
+    # MERGE is submitted as soon as its frame is built, so the driver
+    # plans the later tables while the earlier merges run (Spark's
+    # scheduler interleaves their jobs; on a cluster this keeps
+    # executors busy instead of draining between small jobs). Thread
+    # count bounded — each thread holds a job's driver-side state.
+    tables: dict[str, DataFrame] = {}
+    merges: dict[str, Future] = {}
+    pool = ThreadPoolExecutor(max_workers=4) if write else None
 
-    result = IngestResult(
-        tables={
-            "product_collection": collections,
-            "product": products,
-            "translations": translations.unionByName(cat_tr),
-            "category": category,
-            "product_collection_category": cat_links,
-            "custom_attributes_raw": attr_raw,
-            "custom_attributes_parsed": attr_parsed,
-            "product_attribute_keys": pk,
-            "product_attribute_values": pv,
-            "product_attribute_product": plinks,
-            "product_collection_images": images,
-        }
-    )
-    if write:
-        from concurrent.futures import ThreadPoolExecutor
+    def emit(name: str, df: DataFrame) -> None:
+        tables[name] = df
+        if pool is not None:
+            path = f"{warehouse}/{name}"
+            merges[name] = pool.submit(upsert_parquet, spark, df, path, keys=NATURAL_KEYS[name])
 
-        def merge(item):
-            name, df = item
-            return name, upsert_parquet(
-                spark, df, f"{warehouse}/{name}", keys=NATURAL_KEYS[name]
-            )
-
-        # The lang seed and the 11 output tables are independent:
-        # submit their MERGE jobs concurrently (Spark's scheduler
-        # interleaves them; on a cluster this keeps executors busy
-        # instead of draining between small jobs). Thread count
-        # bounded — each thread holds a job's driver-side state.
-        try:
-            with ThreadPoolExecutor(max_workers=4) as pool:
-                lang = pool.submit(seed_lang_table, spark, warehouse)
-                for name, merged in pool.map(merge, list(result.tables.items())):
-                    result.tables[name] = merged
-                result.tables["lang"] = lang.result()
-        finally:
-            for df in split:
-                df.unpersist()
-    return result
+    try:
+        if pool is not None:
+            lang = pool.submit(seed_lang_table, spark, warehouse)
+        collections = build_collections(templates)
+        emit("product_collection", collections)
+        emit("product", build_products(variants, collections))
+        category, cat_tr, cat_links = build_categories(templates)
+        emit("translations", build_translations(templates).unionByName(cat_tr))
+        emit("category", category)
+        emit("product_collection_category", cat_links)
+        attr_raw, attr_parsed = build_raw_attributes(templates)
+        emit("custom_attributes_raw", attr_raw)
+        emit("custom_attributes_parsed", attr_parsed)
+        pk, pv, plinks = build_product_attributes(variants)
+        emit("product_attribute_keys", pk)
+        emit("product_attribute_values", pv)
+        emit("product_attribute_product", plinks)
+        emit("product_collection_images", build_collection_images(collections))
+        if pool is not None:
+            tables = {name: merge.result() for name, merge in merges.items()}
+            tables["lang"] = lang.result()
+    finally:
+        if pool is not None:
+            pool.shutdown()  # waits for every submitted merge
+            numbered.unpersist()
+    return IngestResult(tables=tables)
 
 
 def stream_ingest_csv(

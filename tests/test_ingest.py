@@ -214,10 +214,11 @@ def test_empty_export_frame(spark, raw_csv, tmp_path):
     assert result.tables["lang"].count() > 0
 
 
-#: Spark jobs one refresh of the fixture submits: 44 with footer-schema
-#: table reads, the one-join MERGE and the split cached once
-#: (the anti-join MERGE with schema-inference reads took 108).
-REFRESH_JOBS = 44
+#: Spark jobs one refresh of the fixture submits: 41 with footer-schema
+#: table reads, the one-join MERGE and the one numbered split frame
+#: cached (caching the two halves apart took 44, the anti-join MERGE
+#: with schema-inference reads 108).
+REFRESH_JOBS = 41
 
 
 def _job_ids(spark) -> set[int]:
@@ -237,3 +238,33 @@ def test_refresh_job_count_gate(spark, raw_csv, tmp_path):
     run_ingest(spark, read_raw_products(spark, raw_csv), wh)
     n = len(_job_ids(spark) - before)
     assert n <= REFRESH_JOBS, f"refresh submitted {n} jobs, gate is {REFRESH_JOBS}"
+
+
+#: Plan nodes that run Python on the executors (or scan a Python RDD).
+PYTHON_NODES = (
+    "ExistingRDD", "BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    "FlatMapGroupsInPandas",
+)
+
+
+def _plans_since(spark, after: int) -> dict[int, str]:
+    """Physical plan text of every SQL execution with an id > ``after``."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    out = {}
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() > after:
+            out[e.executionId()] = e.physicalPlanDescription()
+    return out
+
+
+def test_ingest_runs_no_python(spark, raw_csv, tmp_path):
+    """A writing ingest, the lang seed included, plans no Python RDD
+    scan or Python UDF: the Python worker never starts."""
+    before = max(_plans_since(spark, -1), default=-1)
+    result = run_ingest(spark, read_raw_products(spark, raw_csv), str(tmp_path / "wh"))
+    plans = _plans_since(spark, before)
+    assert len(plans) >= len(result.tables)
+    bad = {i: n for i, p in plans.items() for n in PYTHON_NODES if n in p}
+    assert not bad, bad

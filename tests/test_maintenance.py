@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from product_etl_spark import ids
@@ -16,12 +17,13 @@ from product_etl_spark.pipelines.maintenance import (
     relink_products_by_master_code,
 )
 from product_etl_spark.pipelines.verification import (
+    Inheritance,
+    NoOrphans,
+    UniqueKey,
     assert_all,
-    check_inheritance,
-    check_no_orphans,
-    check_unique_keys,
-    collect_checks,
+    run_checks,
     run_warehouse_checks,
+    warehouse_checks,
 )
 
 
@@ -82,26 +84,63 @@ def test_consistency_report(spark):
 
 def test_checks_catch_violations(spark):
     def alone(check):
-        return collect_checks([check])[0]
+        return run_checks([check])[0]
 
     df = spark.createDataFrame([("a", 1), ("a", 2)], "k string, v int")
-    assert not alone(check_unique_keys(df, ["k"], "t")).ok
+    assert not alone(UniqueKey("t", df, ("k",))).ok
     # NULL keys group together, as under distinct(): two NULLs collide
     nulls = spark.createDataFrame(
         [(None, 1), (None, 2), ("b", 3)], "k string, v int"
     )
-    dup_null = alone(check_unique_keys(nulls, ["k"], "t"))
+    dup_null = alone(UniqueKey("t", nulls, ("k",)))
     assert not dup_null.ok and dup_null.details == "3 rows / 2 distinct"
     child = spark.createDataFrame([("x", "missing")], "id string, fk string")
     parent = spark.createDataFrame([("other",)], "pk string")
-    assert not alone(check_no_orphans(child, parent, "fk", "pk", "t")).ok
+    assert not alone(NoOrphans("t", child, parent, "fk", "pk")).ok
     p = spark.createDataFrame([("p1", "c1", "http://wrong")], "id string, collection_id string, url string")
     c = spark.createDataFrame([("c1", "http://right")], "id string, url string")
-    assert not alone(check_inheritance(p, c)).ok
+    assert not alone(Inheritance(p, c)).ok
+
+
+def test_composite_key_null_patterns(spark):
+    """A composite key's NULL pattern is part of the key: (NULL,'x'),
+    ('x',NULL), ('','x') and (NULL,NULL) are four keys, each NULL
+    pattern groups with itself, as under ``distinct()``. Integral
+    columns join string ones in the same key tuple."""
+    df = spark.createDataFrame(
+        [
+            (None, "x", 1), ("x", None, 1), ("", "x", 1), (None, None, 1),
+            (None, "x", 1), (None, None, 1), (None, None, 2),
+        ],
+        "a string, b string, n int",
+    )
+    assert df.select("a", "b").distinct().count() == 4
+    got = run_checks([UniqueKey("t", df, ("a", "b")), UniqueKey("t", df, ("a", "b", "n"))])
+    assert [(r.name, r.ok, r.details) for r in got] == [
+        ("unique:t(a,b)", False, "7 rows / 4 distinct"),
+        ("unique:t(a,b,n)", False, "7 rows / 5 distinct"),
+    ]
+    # a NULL FK is skipped, not an orphan; a NULL PK matches nothing
+    child = spark.createDataFrame([(None,), ("p1",), ("p2",)], "fk string")
+    parent = spark.createDataFrame([("p1",), (None,)], "pk string")
+    orphans = run_checks([NoOrphans("t", child, parent, "fk", "pk")])[0]
+    assert (orphans.ok, orphans.details) == (False, "1 orphans")
+
+
+def test_key_checks_reject_non_injective_types(spark):
+    """Keys are compared as strings, which is exact only for string
+    and integral columns of one type: anything else raises."""
+    floats = spark.createDataFrame([(1.0,), (1.0,)], "k double")
+    with pytest.raises(TypeError, match="double"):
+        run_checks([UniqueKey("t", floats, ("k",))])
+    child = spark.createDataFrame([(1,)], "fk int")
+    parent = spark.createDataFrame([("1",)], "pk string")
+    with pytest.raises(TypeError, match="key types differ"):
+        run_checks([NoOrphans("t", child, parent, "fk", "pk")])
 
 
 def test_warehouse_checks_names_order_and_details(spark):
-    """The one-action audit reports every check, in order, with the
+    """The one-plan audit reports every check, in order, with the
     same name, verdict and details text as each check run alone."""
     product = spark.createDataFrame(
         [
@@ -132,19 +171,13 @@ def test_warehouse_checks_names_order_and_details(spark):
         ("product_url_inheritance", False, "1 mismatched"),
         ("no_orphans:attr_link->product", False, "1 orphans"),
     ]
-    alone = [
-        collect_checks([check])[0]
-        for check in (
-            check_unique_keys(collection, ["master_code"], "product_collection"),
-            check_unique_keys(product, ["sku"], "product"),
-            check_unique_keys(links, ["product_id", "value_id"], "product_attribute_product"),
-            check_no_orphans(product, collection, "collection_id", "id", "product->collection"),
-            check_inheritance(product, collection),
-            check_no_orphans(links, product, "product_id", "id", "attr_link->product"),
-        )
-    ]
+    alone = [run_checks([check])[0] for check in warehouse_checks(tables)]
     assert got == [(r.name, r.ok, r.details) for r in alone]
     assert run_warehouse_checks({}) == []
+
+
+#: Spark jobs the full audit of the F1 fixture warehouse submits.
+AUDIT_JOBS = 5
 
 
 def test_warehouse_audit_on_ingest_fixture(spark, tmp_path):
@@ -158,9 +191,13 @@ def test_warehouse_audit_on_ingest_fixture(spark, tmp_path):
     result = run_ingest(
         spark, read_raw_products(spark, str(csv)), str(tmp_path / "wh")
     )
+    before = TI._job_ids(spark)
     results = run_warehouse_checks(result.tables)
+    jobs = len(TI._job_ids(spark) - before)
     assert_all(results)
     assert len(results) > 15
+    # One plan for all 16 checks (16 plans took 36 jobs)
+    assert jobs <= AUDIT_JOBS, f"audit submitted {jobs} jobs, gate is {AUDIT_JOBS}"
 
 
 def test_compact_table(spark, tmp_path):
@@ -224,6 +261,15 @@ def test_seeded_lang_table(spark, tmp_path):
     # swaps the directory, so pre-merge handles must be re-read)
     again = seed_lang_table(spark, wh)
     assert sorted(map(str, again.select("id", "lang_code").collect())) == snapshot
+    # ids are uuid5 of the code; four rows in one part file
+    assert {r["lang_code"]: r["id"] for r in again.collect()} == {
+        c: str(uuid.uuid5(ids.NS_LANG, c)) for c in codes
+    }
+    import pathlib
+
+    parts = list(pathlib.Path(wh, "lang").glob("part-*.parquet"))
+    assert len(parts) == 1
+    assert spark.read.parquet(str(parts[0])).count() == 4
 
 
 def test_snapshot_table(spark, tmp_path):

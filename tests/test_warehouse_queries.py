@@ -63,29 +63,3 @@ def test_resolve_names_with_fallback(spark, wh):
     assert by_code["963cef"] == "Cream pillow cover"  # en hit
     assert by_code["aa11bb"] == "地毯A"  # zh fallback
 
-
-def test_apply_expectations_split_and_labels(spark):
-    from pyspark.sql import functions as F
-    from product_etl_spark.pipelines.verification import apply_expectations
-
-    df = spark.createDataFrame(
-        [
-            (1, "ok", 10.0),
-            (2, "", 5.0),        # fails non_empty_name
-            (3, "x", -1.0),      # fails positive_price
-            (4, None, None),     # fails both (NULL rule result = fail)
-        ],
-        "id int, name string, price double",
-    )
-    rules = {
-        "non_empty_name": F.length("name") > 0,
-        "positive_price": F.col("price") > 0,
-    }
-    valid, bad = apply_expectations(df, rules)
-    assert [r.id for r in valid.orderBy("id").collect()] == [1]
-    got = {r.id: sorted(r.violations) for r in bad.collect()}
-    assert got == {
-        2: ["non_empty_name"],
-        3: ["positive_price"],
-        4: ["non_empty_name", "positive_price"],
-    }

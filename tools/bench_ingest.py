@@ -6,7 +6,12 @@ ingest pipeline, print one JSON line with rows/sec.
 Context: the reference ingests serially with O(10) SQL round-trips
 per row (SURVEY.md §6 — implied throughput on the order of tens of
 rows/sec). This measures our end-to-end pipeline (split, clean,
-parse, dictionaries, 12 MERGE writes) on the same machine.
+parse, dictionaries, 12 MERGE writes) on the same machine, then the
+warehouse audit (``run_warehouse_checks``) over its result.
+
+Spark jobs are counted from the status store outside the timed
+regions: ``ingest_jobs`` covers the timed ingest (the product count
+that closes it included), ``audit_jobs`` the audit.
 """
 
 from __future__ import annotations
@@ -20,6 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from product_etl_spark.pipelines.ingest import run_ingest  # noqa: E402
+from product_etl_spark.pipelines.verification import run_warehouse_checks  # noqa: E402
 from product_etl_spark.session import get_spark  # noqa: E402
 from product_etl_spark.sources.csv_reader import read_raw_products  # noqa: E402
 
@@ -53,6 +59,15 @@ def synthesize(path: str, n_collections: int, n_variants: int) -> int:
     return n
 
 
+def job_ids(spark) -> set[int]:
+    """Ids of every job in the status store, the merge threads' too
+    (a job group would miss them: it is per thread)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
 def main() -> None:
     n_collections = int(os.environ.get("BENCH_INGEST_COLLECTIONS", "5000"))
     n_variants = int(os.environ.get("BENCH_INGEST_VARIANTS", "9"))
@@ -64,11 +79,19 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
+    before = job_ids(spark)
     t0 = time.monotonic()
     raw = read_raw_products(spark, csv)
     result = run_ingest(spark, raw, os.path.join(tmp, "wh"))
     n_products = result.tables["product"].count()
     wall = time.monotonic() - t0
+    ingest_jobs = len(job_ids(spark) - before)
+
+    before = job_ids(spark)
+    t0 = time.monotonic()
+    checks = run_warehouse_checks(result.tables)
+    audit_wall = time.monotonic() - t0
+    audit_jobs = len(job_ids(spark) - before)
 
     print(
         json.dumps(
@@ -80,6 +103,10 @@ def main() -> None:
                 "products": n_products,
                 "wall_sec": round(wall, 2),
                 "tables": len(result.tables),
+                "ingest_jobs": ingest_jobs,
+                "audit_wall_sec": round(audit_wall, 2),
+                "audit_jobs": audit_jobs,
+                "audit_failed": [c.name for c in checks if not c.ok],
             }
         )
     )
