@@ -1,5 +1,4 @@
 from product_etl_spark.operators import (  # noqa: F401
-    bloom,
     bucketing,
     cms,
     dedup,

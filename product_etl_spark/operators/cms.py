@@ -83,8 +83,8 @@ def cms_partials(
 ) -> DataFrame:
     """One pass over raw data -> per-group CMS partial as rows
     ``(group..., row_idx, bucket, n)``. At most depth*width rows per
-    group (zero-count cells are implicit), mergeable with
-    ``cms_merge``. Store this instead of vocabulary-sized counts."""
+    group (zero-count cells are implicit); partials merge by cellwise
+    SUM. Store this instead of vocabulary-sized counts."""
     return (
         df.select(
             *group_cols,
@@ -94,14 +94,6 @@ def cms_partials(
         )
         .groupBy(*group_cols, "row_idx", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def cms_merge(sketch_df: DataFrame, coarser_cols: list[str]) -> DataFrame:
-    """Merge finer partials (per-day, per-batch) up to
-    ``coarser_cols`` granularity: cellwise SUM, the CMS union."""
-    return sketch_df.groupBy(*coarser_cols, "row_idx", "bucket").agg(
-        F.sum("n").alias("n")
     )
 
 

@@ -1022,9 +1022,7 @@ def set_similarity_pairs(
     co-occurrence. Hot stop-token risk is structural: a token can
     only generate candidates from docs where it lands in the prefix,
     i.e. docs with almost no rarer tokens. ``shingle_n`` switches the
-    set element to word n-gram shingles (dedup_incremental shares the
-    same convention so intra-batch and cross-batch passes compare the
-    same unit)."""
+    set element to word n-gram shingles."""
     if shingle_n > 1:
         toks = exploded_shingles(df, text_col, id_col, shingle_n).select(
             F.col(id_col), F.col("sh").alias("tok")

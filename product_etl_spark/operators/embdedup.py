@@ -1,31 +1,24 @@
-"""Incremental EMBEDDING near-duplicate detection across batches —
-the vector-space sibling of dedup_incremental's MinHash store.
+"""Hamming-space near-duplicate candidates by multi-index hashing
+(Norouzi/Punjani/Fleet "Fast Search in Hamming Space with
+Multi-Index Hashing", CVPR 2012) — the band index and exact Hamming
+distance the perceptual-hash dedup in ``multimodal.py`` runs on.
 
-Recipe (multi-index hashing, Norouzi/Punjani/Fleet "Fast Search in
-Hamming Space with Multi-Index Hashing", CVPR 2012): binary sign
-codes (sq.bin_sign_encode, 1 bit/dim) split into B disjoint bands;
-by pigeonhole, ANY pair within Hamming distance < B matches exactly
-in at least one band, so an equality join on (band, band_value)
-generates a candidate set with ZERO false negatives for
-``max_hamming <= B - 1`` — never an all-pairs comparison. Exact
-integer Hamming verifies candidates.
+Recipe: packed binary codes (e.g. sq.bin_sign_encode, 1 bit/dim)
+split into B disjoint bands; by pigeonhole, ANY pair within Hamming
+distance < B matches exactly in at least one band, so an equality
+join on (band, band_value) generates a candidate set with ZERO false
+negatives for ``max_hamming <= B - 1`` — never an all-pairs
+comparison. Exact integer Hamming verifies candidates.
 
-Scale shape: the store grows by O(accepted vectors) signature rows
-(8 bytes of code each at dim=64); per batch the work is one map-only
-encode, a band join of batch-bands x (store + batch) bands, and an
-integer verify on candidates. New batches never rescan history
-embeddings — only the 32x-compressed codes. The band join key is
-(band, value): uniform under random signs, so no skew; a pathological
-constant-dimension corpus concentrates band values — raise
-``band_bits`` or pre-split (operators/skew.py).
+The band join key is (band, value): uniform under random signs, so
+no skew; a pathological constant-dimension corpus concentrates band
+values — raise ``band_bits`` or pre-split (operators/skew.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from product_etl_spark.operators.sq import bin_sign_encode
 
 _WORD_BITS = 32
 
@@ -72,128 +65,3 @@ def _hamming(a: str, b: str) -> F.Column:
         "CAST(bit_count(x ^ y) AS BIGINT)), CAST(0 AS BIGINT), "
         "(acc, v) -> acc + v)"
     )
-
-
-def incremental_embedding_dedup(
-    spark: SparkSession,
-    batch: DataFrame,
-    store_path: str,
-    thresholds: list[float],
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-    max_hamming: int = 3,
-    band_bits: int = 16,
-) -> tuple[DataFrame, DataFrame]:
-    """Split ``batch`` into (accepted, rejected) against the binary-
-    signature store at ``store_path`` AND within itself, then append
-    the accepted signatures (idempotently — ids already stored are
-    not re-appended).
-
-    A batch row is REJECTED when some stored vector, or an accepted
-    batch vector with a smaller id, lies within ``max_hamming`` bits.
-    Exactness contract: with B = dim/band_bits bands the band index
-    is exhaustive for ``max_hamming <= B - 1`` (pigeonhole); a larger
-    radius would silently lose candidates, so it RAISES instead.
-
-    Rejected rows carry (id, matched_id, hamming) of their NEAREST
-    offending match (ties -> lowest id). Re-running an already-
-    ingested batch rejects every row against its OWN stored signature
-    (matched_id == id, hamming 0) and appends nothing — so a caller
-    appending ``accepted`` to a corpus never double-accepts across
-    replays."""
-    dim = len(thresholds)
-    n_bands = (dim + band_bits - 1) // band_bits
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs > {max_hamming} bands for "
-            f"pigeonhole exactness; got {n_bands} (dim={dim}, "
-            f"band_bits={band_bits}) — lower max_hamming or band_bits"
-        )
-    coded = bin_sign_encode(batch, emb_col, thresholds, out_col="_code")
-    bidx = hamming_band_index(coded, id_col, "_code", dim, band_bits)
-
-    try:
-        store = spark.read.parquet(store_path)
-        have_store = True
-    except Exception:
-        store = None
-        have_store = False
-
-    # candidates: batch x store (INCLUDING a row's own stored
-    # signature — a replayed batch must re-collide with itself and
-    # accept nothing, the incremental_dedup corpus-append idempotence
-    # contract) plus batch x smaller-id batch member
-    cand = None
-    if have_store:
-        sidx = hamming_band_index(
-            store.withColumnRenamed("sig_id", "_sid"), "_sid", "code",
-            dim, band_bits,
-        ).select(
-            F.col("_sid"), F.col("code").alias("_s_code"), "band", "bv"
-        )
-        c1 = (
-            bidx.join(sidx, ["band", "bv"])
-            .select(
-                F.col(id_col),
-                F.col("_code"),
-                F.col("_sid").alias("matched_id"),
-                F.col("_s_code").alias("_m_code"),
-            )
-        )
-        cand = c1
-    a = bidx.select(
-        F.col(id_col), F.col("_code"), "band", "bv"
-    )
-    b = bidx.select(
-        F.col(id_col).alias("_oid"), F.col("_code").alias("_o_code"),
-        "band", "bv",
-    )
-    c2 = (
-        a.join(b, ["band", "bv"])
-        .filter(F.col("_oid") < F.col(id_col))
-        .select(
-            F.col(id_col),
-            F.col("_code"),
-            F.col("_oid").alias("matched_id"),
-            F.col("_o_code").alias("_m_code"),
-        )
-    )
-    cand = c2 if cand is None else cand.unionByName(c2)
-    verified = (
-        cand.distinct()
-        .withColumn("hamming", _hamming("_code", "_m_code"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    # NOTE: in-batch rejection is vs SMALLER-ID members (canonical
-    # first-id-wins); a chain a~b~c rejects both b and c even though
-    # b is itself rejected — the connected-component collapse rule,
-    # same as dedup_corpus.
-    nearest = (
-        verified.groupBy(id_col)
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("hamming").alias("h"),
-                    F.col("matched_id").alias("m"),
-                )
-            ).alias("_n")
-        )
-        .select(
-            id_col,
-            F.col("_n.m").alias("matched_id"),
-            F.col("_n.h").alias("hamming"),
-        )
-    )
-    rejected = batch.join(nearest, id_col)
-    accepted = batch.join(nearest.select(id_col), id_col, "left_anti")
-
-    to_append = coded.join(nearest.select(id_col), id_col, "left_anti").select(
-        F.col(id_col).alias("sig_id"), F.col("_code").alias("code")
-    )
-    if have_store:
-        to_append = to_append.join(
-            store.select(F.col("sig_id")), "sig_id", "left_anti"
-        )
-    if to_append.limit(1).count():
-        to_append.write.mode("append").parquet(store_path)
-    return accepted, rejected

@@ -66,11 +66,10 @@ def _erase_keyed_table(
     import os
 
     def _batch_dir_committed() -> bool:
-        # the streaming fold writers commit PER-BATCH dirs
-        # (state/batch=N/_SUCCESS) with no root marker — without this
-        # probe, erasure on exactly the stores the docstring promises
-        # (fold state, shard manifests) silently no-oped (r15 finding,
-        # pinned in test_streaming_state's shard lifecycle test)
+        # a store appended one partition per batch
+        # (state/batch=N/_SUCCESS) has no root _SUCCESS marker; such
+        # stores may already be on disk, and without this probe
+        # erasure on them would silently no-op
         if not os.path.isdir(path):
             return False
         return any(
@@ -121,7 +120,7 @@ def erase_subjects(
     for ``apply_suppression``.
 
     RAW tables only erase half the lake: persisted DERIVED stores
-    (token indexes, postings, code stores, fold state) still carry
+    (token indexes, postings, code stores) still carry
     the subjects' doc-derived rows — use ``erase_from_stores`` /
     ``erase_from_inverted_index`` for those, in the same pass.
     """
@@ -177,11 +176,11 @@ def erase_from_stores(
     rewrite, and a probe against it can resurface the subject.
 
     Each spec is ``{"path": ..., "id_col": ..., "partition_by":
-    [...]?}``; any id-keyed parquet store qualifies — the jaccard
-    token fold state (``partition_by=["batch"]``), trigram postings
-    (``["gram_bucket"]``), BM25 postings (``["term_bucket"]`` — but
+    [...]?}``; any id-keyed parquet store qualifies — the suffix-span
+    gram store (``id_col="keep"``, ``["gram_bucket"]``), trigram
+    postings (``["gram_bucket"]``), BM25 postings (``["term_bucket"]`` — but
     prefer ``erase_from_inverted_index``, which also re-freezes the
-    corpus stats), signature stores, PQ/IVF code stores. The rewrite
+    corpus stats), PQ/IVF code stores, quantile samples. The rewrite
     preserves each store's partition layout through the staged swap,
     so partition pruning (the reason the store is bucketed) survives
     erasure. Returns {path: rows_deleted}; idempotent.
@@ -190,20 +189,11 @@ def erase_from_stores(
     frequencies, prefix flags, idf, avgdl) must be recomputed over
     the remaining rows — stores here follow the repo convention of
     persisting RAW per-doc rows and deriving corpus-relative state
-    at read time (read_jaccard_index recomputes df/prefix ranks;
-    bm25_topk_indexed recounts df from postings), so dropping the
-    subject's rows IS the full fix; the exceptions (the inverted
-    index's frozen stats/) get their own function below. Pytest pins
-    probe-after-erasure == index-rebuilt-from-erased-corpus for the
-    jaccard, trigram, and BM25 stores (tests/test_erasure.py).
-
-    Streaming caveat: fold-state dirs are replay-safe per batch — a
-    Structured Streaming RESTART that replays an old batch from its
-    checkpoint re-derives that batch's rows from the original source
-    and would resurrect the subject. Erase fold state with the
-    stream stopped and the checkpoint at-or-past the erased batches,
-    and gate the stream's SOURCE with apply_suppression so a future
-    replay cannot re-ingest the subjects.
+    at read time (bm25_topk_indexed recounts df from postings), so
+    dropping the subject's rows IS the full fix; the exceptions (the
+    inverted index's frozen stats/) get their own function below.
+    Pytest pins probe-after-erasure == index-rebuilt-from-erased-corpus
+    for the trigram, BM25 and IVF-PQ stores (tests/test_erasure.py).
     """
     keys = _checkpointed_keys(subject_doc_ids)
     return {

@@ -83,20 +83,3 @@ def table_checksum(df: DataFrame, value_cols: list[str]) -> DataFrame:
         F.min(fp).alias("min_fp"),
         F.max(fp).alias("max_fp"),
     )
-
-
-def merge_group_checksums(partials: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Fold per-batch checksum partials into the combined summary —
-    count/xor/min/max are all associative and commutative, so
-    checksums of disjoint batches MERGE without rescanning any batch:
-    validate a continuously-ingested 100 TB table from kilobytes of
-    per-batch state (the same mergeable-partial contract as the
-    sketch rollups). Input: a union of group_checksums outputs over
-    disjoint row sets; output: identical schema, one row per group,
-    equal to group_checksums over the union of the rows."""
-    return partials.groupBy(*group_cols).agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.bit_xor("xor_fp").alias("xor_fp"),
-        F.min("min_fp").alias("min_fp"),
-        F.max("max_fp").alias("max_fp"),
-    )

@@ -585,10 +585,9 @@ def append_to_ivf_pq_index(
     Idempotence contract: the append is AT-LEAST-ONCE (a retried
     batch writes its rows twice — parquet appends are not
     transactional). Callers ingesting from an unreliable queue should
-    dedup upstream (operators/dedup_incremental) or rebuild the
-    affected lists; the probe path itself tolerates duplicate
-    neighbor rows (duplicates rank adjacently and are collapsible by
-    id downstream).
+    dedup upstream or rebuild the affected lists; the probe path
+    itself tolerates duplicate neighbor rows (duplicates rank
+    adjacently and are collapsible by id downstream).
     """
     books = read_codebooks(spark, index_path)
     _check_books(books, dim)

@@ -235,9 +235,8 @@ def psi_bin_counts(
 ) -> DataFrame:
     """(bin, <out>) equi-width bin counts of ``value_col`` framed by
     ``stats`` (a 1-row (_lo, _hi) frame — the BASELINE's min/max, so
-    every snapshot and every streaming micro-batch bins identically).
-    Out-of-range values clamp to the edge bins. Shared by the batch
-    PSI and the streaming drift monitor so the two cannot drift."""
+    every snapshot bins identically). Out-of-range values clamp to
+    the edge bins."""
     v = F.col(value_col).cast("double")
     width = (F.col("_hi") - F.col("_lo")) / F.lit(float(n_bins))
     raw = F.floor((v - F.col("_lo")) / width)
@@ -255,9 +254,7 @@ def psi_from_counts(
     e: DataFrame, a: DataFrame, n_bins: int
 ) -> DataFrame:
     """Per-bin PSI terms from two (bin, count) tables — the smoothing
-    + term arithmetic of population_stability_index, reusable over
-    counts that were accumulated elsewhere (e.g. folded from
-    streaming micro-batch partials)."""
+    + term arithmetic of population_stability_index."""
     j = e.join(a, "bin", "full_outer")
     tot_e = e.agg(F.sum("n_expected").alias("_te"))
     tot_a = a.agg(F.sum("n_actual").alias("_ta"))
@@ -310,10 +307,8 @@ def ks_drift(
 
 
 def ks_from_counts(e: DataFrame, a: DataFrame) -> DataFrame:
-    """KS report from two (bin, count) frames — shared by the batch
-    operator (q148) and the STREAMING drift monitor (the same frozen
-    baseline + folded micro-batch partials that feed read_psi_drift
-    serve KS with no new streaming state)."""
+    """KS report from two (bin, count) frames — the tail of the
+    batch operator (q148)."""
     from pyspark.sql import Window
 
     j = e.join(a, "bin", "full_outer").select(
@@ -576,9 +571,7 @@ def segment_divergence(
 
 def segment_divergence_from_counts(s: DataFrame, n_bins: int) -> DataFrame:
     """The smoothing + term arithmetic of ``segment_divergence`` over
-    a (seg, bin, n_seg) count table — reusable over counts folded
-    elsewhere (streaming micro-batch partials), so the batch operator
-    and the monitor cannot drift. Global counts derive as the sum
+    a (seg, bin, n_seg) count table. Global counts derive as the sum
     over segments."""
     g = s.groupBy("bin").agg(F.sum("n_seg").alias("n_global"))
     tot_g = g.agg(F.sum("n_global").alias("_tg"))
@@ -627,11 +620,9 @@ def grouped_weighted_median(
     frames only, no global sort.
 
     The (group, value) -> weight table is ADDITIVE mergeable state:
-    per-batch partials fold by summing weights, so the streaming
-    scaffold (streaming.pipeline.stream_continuous_rollup with
-    keys=[*group_cols, value] and a SUM measure) maintains it
-    continuously and ``weighted_median_from_counts`` reads the exact
-    batch answer back out — asserted equal in tests."""
+    per-batch partials fold by summing weights, and
+    ``weighted_median_from_counts`` reads the exact answer back out
+    of any such table."""
     gw = (
         df.groupBy(*group_cols, F.col(value_col).alias("_v"))
         .agg(F.sum(F.col(weight_col).cast("long")).alias("_w"))
@@ -642,10 +633,9 @@ def grouped_weighted_median(
 def weighted_median_from_counts(
     gw: DataFrame, group_cols: list[str]
 ) -> DataFrame:
-    """The pick tail shared by the batch operator and the streaming
-    fold: (group..., _v, _w) weight-per-distinct-value rows -> the
-    weighted lower median. Input rows must be unique per (group, _v)
-    (both producers aggregate, so they are)."""
+    """The pick tail of ``weighted_median``: (group..., _v, _w)
+    weight-per-distinct-value rows -> the weighted lower median.
+    Input rows must be unique per (group, _v)."""
     from pyspark.sql import Window
 
     wc = Window.partitionBy(*group_cols).orderBy("_v").rowsBetween(

@@ -9,9 +9,9 @@ needs distincts/quantiles (HLL/KLL merge the same way).
 
 Delivery contract: each batch must be folded exactly once — drive
 batches from `operators/incremental.py`'s only-unprocessed anti-join
-or a streaming checkpoint (`streaming/pipeline.py` foreachBatch), the
-same way the MERGE ingest does. Re-folding a batch double-counts, by
-definition of additive state.
+or a streaming checkpoint's foreachBatch, the way
+`pipelines/ingest.stream_ingest_csv` drives the MERGE ingest.
+Re-folding a batch double-counts, by definition of additive state.
 """
 
 from __future__ import annotations

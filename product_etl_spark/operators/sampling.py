@@ -422,14 +422,11 @@ def append_balanced_shards(
     Scale shape: ONE two-level global rank over the BATCH
     (linkage.global_sort_ranks), pure integer snake arithmetic, and
     an n_shards-bounded literal array lookup for the lightest-first
-    permutation. History is never read — the state is n_shards rows,
-    the natural per-batch fold for the streaming wrapper
-    (streaming.pipeline.stream_balanced_shard_append).
+    permutation. History is never read — the state is n_shards rows.
 
-    Erasure posture (r14 verdict item 5, pinned in
-    tests/test_streaming_state.py): after ``erase_from_stores`` on
-    the manifests + ``rebuild_shard_totals_state`` the totals are
-    EXACT again, but the balance contract above restarts from the
+    Erasure posture (r14 verdict item 5): after ``erase_from_stores``
+    on the manifests, totals recomputed with ``shard_weight_totals``
+    are EXACT again, but the balance contract above restarts from the
     post-erasure spread — the snake's direction alternation cancels
     within-pass bias by design, so appends bound the spread at
     (post-erasure spread + 2x max weight) rather than healing the

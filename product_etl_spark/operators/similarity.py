@@ -1043,9 +1043,7 @@ def incremental_semdedup(
     into (accepted, rejected) against the accepted-vector store at
     ``store_path`` AND within itself — comparing ONLY within IVF
     cells — then append the accepted rows (idempotently: ids already
-    stored are never re-appended). The vector-space sibling of
-    ``dedup_incremental.incremental_span_excision``'s gram store and
-    ``embdedup``'s signature store, for the exact-cosine regime.
+    stored are never re-appended).
 
     ``centroids`` (list_id, _cent) must be the SAME frame every batch
     — the cell geometry is the store's partition contract (train once

@@ -23,23 +23,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hll_partials(
-    df: DataFrame, group_cols: list[str], col: str, lg_k: int = 12
-) -> DataFrame:
-    """One pass over the raw data -> per-group HLL sketch binaries
-    (column ``sketch``). This is the ingest-time step; store the
-    result (kilobytes per group) instead of the raw keys."""
-    return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(F.col(col), F.lit(lg_k)).alias("sketch")
-    )
-
-
 def hll_rollup(
     sketch_df: DataFrame, coarser_cols: list[str], estimate_alias: str = "n_distinct"
 ) -> DataFrame:
     """Merge fine-grained HLL partials up a hierarchy (day->week,
-    (day,type)->type, ...) and estimate. Input is a ``hll_partials``
-    output; no raw data is touched."""
+    (day,type)->type, ...) and estimate. Input is per-group HLL
+    sketch binaries (column ``sketch``, from ``hll_sketch_agg``); no
+    raw data is touched."""
     return sketch_df.groupBy(*coarser_cols).agg(
         F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias(estimate_alias)
     )
@@ -112,7 +102,8 @@ def hll_portable_partials(
     _hll_rmax). Any md5-capable engine
     rebuilds the registers cell-for-cell, so a replica can verify or
     merge a sketch it didn't build — unlike the binary DataSketches
-    form (hll_partials), which stays the fast in-family default.
+    form (``hll_sketch_agg``), which stays the fast in-family
+    default.
 
     Merge = MAX per (group, bucket): plain SQL, commutative,
     associative — per-batch partials roll up like every other
@@ -328,11 +319,8 @@ def quantile_sample_partials(
     and a replica can VERIFY a sketch it didn't build. Hashing the
     unique key (not the value) keeps the sample uniform over ROWS —
     duplicated values occupy independent slots — which is what makes
-    rank estimates unbiased. Mergeable exactly like KMV: union of
-    bottom-k samples re-cut to k IS the bottom-k sample of the union
-    (quantile_sample_merge), so per-batch partials fold across ingest
-    without rescanning; the sample cut is ordered (hv, val), so even
-    non-unique keys cannot make two engines cut different rows.
+    rank estimates unbiased. The sample cut is ordered (hv, val), so
+    even non-unique keys cannot make two engines cut different rows.
     Standard bottom-k error: quantile ranks are
     within O(1/sqrt(k)) of truth with high probability (Cohen &
     Kaplan 2007 summarize the bottom-k estimator family).
@@ -391,34 +379,6 @@ def quantile_sample_partials(
     w = Window.partitionBy(*group_cols).orderBy("hv", "val")
     return (
         pruned.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
-def quantile_sample_merge(
-    parts: DataFrame, coarser_cols: list[str], k: int = 256
-) -> DataFrame:
-    """Union finer partials up a hierarchy: merge rows, dedup on the
-    (group, hv, val) cell (a key seen by two batches carries the
-    same val), keep the k smallest by (hv, val) per coarser group —
-    associative and commutative.
-
-    PRECONDITION (same as quantile_sample_partials's row-key
-    contract): ``rk`` values are unique per logical row. Under it the
-    merge is identical to a single-pass build over the concatenated
-    input (asserted in tests). If one input batch carries two
-    IDENTICAL (key, val) rows, the ``.distinct()`` here collapses
-    them while a single-pass build keeps both slots — so equivalence
-    holds only for unique row keys; duplicate-row inputs degrade
-    gracefully (fewer slots, never wrong values)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*coarser_cols).orderBy("hv", "val")
-    return (
-        parts.select(*coarser_cols, "hv", "val")
-        .distinct()
-        .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= k)
         .drop("_rk")
     )

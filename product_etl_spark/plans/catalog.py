@@ -642,8 +642,8 @@ def q22_url_extraction(spark, sf_dir):
     """,
 )
 def q23_hourly_event_rollup(spark, sf_dir):
-    """Tumbling-window rollup (the batch shape of the streaming
-    windowed agg; streaming variant in streaming/pipeline.py)."""
+    """Tumbling-window rollup (the batch shape of a streaming
+    windowed agg)."""
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy(
         F.unix_timestamp(F.date_trunc("hour", "ts")).alias("hour_epoch"),
@@ -681,8 +681,8 @@ def q23_hourly_event_rollup(spark, sf_dir):
 )
 def q24_sessionization(spark, sf_dir):
     """Gaps-and-islands sessionization (30-min inactivity gap): lag +
-    running sum. The streaming twin is a session window with
-    watermark; batch semantics here are identical and oracle-checkable.
+    running sum. A streaming form would be a session window with
+    watermark; batch semantics here are oracle-checkable.
     """
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

@@ -345,8 +345,7 @@ def q161_brand_size_price_ols(spark, sf_dir):
     """,
 )
 def q162_last_touch_attribution(spark, sf_dir):
-    """Batch last-touch attribution — the driver-checked twin of
-    streaming/pipeline.stream_purchase_attribution: every purchase
+    """Batch last-touch attribution: every purchase
     attributes to the same user's LATEST prior view within 1 hour
     (NULL when none), gap surfaced in exact integer microseconds.
     Built on timeseries.asof_join (the q46 union-window shape): both

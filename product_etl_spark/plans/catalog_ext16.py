@@ -2,8 +2,7 @@
 incremental twin of the balanced-shard manifest deal (q226,
 operators/sampling.append_balanced_shards — a NEW batch dealt into
 EXISTING shard totals lightest-first, the r13 verdict's missing
-incremental rung for the sharding family; its streaming posture is
-streaming/pipeline.stream_balanced_shard_append).
+incremental rung for the sharding family).
 
 Reference parity note: the reference (pandas+psycopg2 row loops,
 ETL.py / main.py) computes none of this; these rows extend the
@@ -482,9 +481,7 @@ def q232_incremental_budget_select(spark, sf_dir):
     cum_weight across the batch seam hash-mismatches.
 
     Scale shape: one two-level prefix sum PER BATCH plus a 1-row
-    state aggregate; the streaming posture is
-    streaming.pipeline.stream_token_budget_select (per-batch 1-row
-    partials, strictly-lower-fold replay determinism)."""
+    state aggregate."""
     from product_etl_spark.functions import text as T_
     from product_etl_spark.operators.sampling import (
         append_token_budget_select,

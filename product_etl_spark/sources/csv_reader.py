@@ -74,9 +74,9 @@ def total_order_row_idx(df: DataFrame) -> DataFrame:
     order for a frame whose existing ``ROW_IDX`` is only
     monotone-within-file (``monotonically_increasing_id`` on an
     ordered file read) and whose ``SOURCE_FILE`` column holds
-    ``input_file_name()`` taken at the scan. Also used by the
-    streaming foreachBatch ingest, where one micro-batch may contain
-    several files.
+    ``input_file_name()`` taken at the scan. Also used by
+    ``pipelines.ingest.stream_ingest_csv``'s foreachBatch, where one
+    micro-batch may contain several files.
 
     Scale shape: in-file position is a window partitioned by file;
     cross-file offsets come from per-file counts cumulated over the

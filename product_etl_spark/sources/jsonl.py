@@ -41,8 +41,8 @@ def split_parsed(
     lines: DataFrame, schema: T.StructType
 ) -> tuple[DataFrame, DataFrame]:
     """Split a DataFrame of raw lines (column ``value``) into
-    (good, quarantine). Shared by the batch reader and the streaming
-    ingest — both halves are map-only projections of the input.
+    (good, quarantine) — both halves are map-only projections of
+    the input.
 
     good: one row per parseable line, columns = ``schema`` fields.
     quarantine: (line, input_file) for every line that failed to

@@ -1,26 +1,18 @@
-"""Count-min sketch + Bloom pre-filter: the bounded-state membership
-and frequency family (operators/cms.py, operators/bloom.py).
+"""Count-min sketch: the bounded-state frequency operator
+(operators/cms.py).
 
 Invariants asserted:
 - CMS never underestimates; overestimate bounded by the eps*N bound.
 - CMS partials merge by SUM to exactly the whole-corpus sketch
   (commutative/associative union), estimates identical either way.
 - Sketch size is bounded at depth*width regardless of vocabulary.
-- Bloom has ZERO false negatives (every stored key flags maybe_seen),
-  small false-positive rate at the textbook m/n ratio, and composes
-  with the exact signature store without changing dedup decisions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from product_etl_spark.operators.bloom import (
-    bloom_partials,
-    bloom_union,
-    split_by_bloom,
-)
-from product_etl_spark.operators.cms import cms_estimate, cms_merge, cms_partials
+from product_etl_spark.operators.cms import cms_estimate, cms_partials
 
 
 def _zipfish(spark, n_kinds=200, rep_top=50):
@@ -53,7 +45,7 @@ def test_cms_partials_merge_to_whole(spark):
     df = _zipfish(spark)
     whole = cms_partials(df, [], "token", depth=3, width=512)
     by_part = cms_partials(df, ["part"], "token", depth=3, width=512)
-    merged = cms_merge(by_part, [])
+    merged = by_part.groupBy("row_idx", "bucket").agg(F.sum("n").alias("n"))
     # cellwise identical sketches
     a = {(r["row_idx"], r["bucket"]): r["n"] for r in whole.collect()}
     b = {(r["row_idx"], r["bucket"]): r["n"] for r in merged.collect()}
@@ -72,61 +64,3 @@ def test_cms_grouped_estimates(spark):
     joined = est.join(exact, ["token", "part"]).collect()
     assert len(joined) > 0
     assert all(r["est_count"] >= r["count"] for r in joined)
-
-
-def test_bloom_no_false_negatives_and_fpr(spark):
-    seen = spark.range(0, 2000).select(F.concat(F.lit("doc"), "id").alias("key"))
-    bloom = bloom_partials(seen, "key", m_bits=1 << 15, k=4)
-    # every seen key must flag maybe_seen
-    tagged = split_by_bloom(seen, bloom, "key", m_bits=1 << 15, k=4).collect()
-    assert all(r["_maybe_seen"] for r in tagged)
-    # fresh keys: fpr should be small at m/n = 16.4 bits/key
-    fresh = spark.range(0, 2000).select(F.concat(F.lit("new"), "id").alias("key"))
-    fp = (
-        split_by_bloom(fresh, bloom, "key", m_bits=1 << 15, k=4)
-        .filter("_maybe_seen")
-        .count()
-    )
-    assert fp / 2000 < 0.05
-
-
-def test_bloom_union_idempotent_merge(spark):
-    a = spark.createDataFrame([("a",), ("b",)], "key string")
-    b = spark.createDataFrame([("b",), ("c",)], "key string")
-    pa = bloom_partials(a, "key", m_bits=4096, k=3)
-    pb = bloom_partials(b, "key", m_bits=4096, k=3)
-    merged = bloom_union(pa, pb)
-    whole = bloom_partials(a.unionByName(b), "key", m_bits=4096, k=3)
-    assert {r["bucket"] for r in merged.collect()} == {
-        r["bucket"] for r in whole.collect()
-    }
-    # re-merging the same partial changes nothing
-    again = bloom_union(merged, pa)
-    assert again.count() == merged.count()
-
-
-def test_bloom_composes_with_exact_store(spark):
-    """The production wiring: definitely-new rows skip the store
-    check; maybe-seen rows get the exact join. Decisions must equal
-    the pure-exact path."""
-    store_keys = spark.createDataFrame(
-        [(f"k{i}",) for i in range(100)], "key string"
-    )
-    batch = spark.createDataFrame(
-        [(f"k{i}",) for i in range(80, 180)], "key string"
-    )
-    bloom = bloom_partials(store_keys, "key", m_bits=1 << 14, k=4)
-    tagged = split_by_bloom(batch, bloom, "key", m_bits=1 << 14, k=4)
-    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    candidates = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    # exact check only on candidates
-    survivors = candidates.join(store_keys, "key", "left_anti").unionByName(
-        definitely_new
-    )
-    expected = batch.join(store_keys, "key", "left_anti")
-    assert {r["key"] for r in survivors.collect()} == {
-        r["key"] for r in expected.collect()
-    }
-    # and the bloom actually saved exact checks (some of k100..k179
-    # are definitely-new)
-    assert definitely_new.count() > 0

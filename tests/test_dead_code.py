@@ -28,7 +28,7 @@ ALLOWED = {
     "compare_exact": "the exact comparator tools/verify_subset.py and tools/sweep_exact.py run",
 }
 
-#: Surface that only tests reach today, per module: 139 definitions
+#: Surface that only tests reach today, per module: 100 definitions
 #: whose tests would go with them, retired a few at a time. The list
 #: only shrinks: an entry fails the gate once its definition is
 #: deleted or gains a production caller. Retire an entry by deleting
@@ -45,16 +45,11 @@ TEST_ONLY = {
     "functions/vectors.py": "cosine",
     "ids.py": "stable_long",
     "kernels.py": "gpt4o_namer_kernel",
-    "operators/bloom.py": "bloom_union",
     "operators/bpe.py": (
         "encode_bpe encode_maxmunch merges_to_pieces train_bpe "
         "train_wordpiece"
     ),
     "operators/bucketing.py": "bucketed_join write_bucketed",
-    "operators/dedup_incremental.py": (
-        "build_jaccard_index compact_bloom_sidecar "
-        "probe_containment_index"
-    ),
     "operators/embeddings.py": "dequantize_int8 quantize_int8 unit_normalize",
     "operators/erasure.py": "erase_from_inverted_index erase_from_stores",
     "operators/grouped.py": "groupwise_minmax_scale groupwise_zscore",
@@ -115,24 +110,6 @@ TEST_ONLY = {
     "sources/introspection.py": "collect_fields collect_keys discover_translatable_fields",
     "sources/jsonl.py": "read_jsonl write_jsonl",
     "sources/mapping.py": "translation_fields",
-    "streaming/pipeline.py": (
-        "compact_distinct_sketch_state prepare_psi_baseline "
-        "read_cms_state read_daily_rate read_distinct_sketch_state "
-        "read_jaccard_index read_ks_drift read_psi_drift "
-        "read_quantile_sample read_rollup_state "
-        "read_segment_divergence read_table_checksums "
-        "rebuild_shard_totals_state run_available_now "
-        "stream_balanced_shard_append stream_checksum_monitor "
-        "stream_cms_rollup stream_continuous_rollup stream_daily_rate "
-        "stream_dedup_corpus stream_dedup_embeddings "
-        "stream_dedup_events stream_distinct_sketch_rollup "
-        "stream_enrich_with_dimension stream_events_rollup "
-        "stream_ingest_jsonl stream_jaccard_token_rows "
-        "stream_psi_monitor stream_purchase_attribution "
-        "stream_quantile_sample stream_segment_divergence_monitor "
-        "stream_sessionize stream_span_excision "
-        "stream_token_budget_select stream_user_running_totals"
-    ),
 }
 
 

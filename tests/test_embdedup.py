@@ -1,15 +1,13 @@
-"""Incremental embedding dedup via multi-index Hamming banding:
-planted near-dups across batches, rerun idempotence, pigeonhole
-radius guard."""
+"""Multi-index Hamming banding (operators/embdedup.py): the
+pigeonhole band index and its band-width guard."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
-from product_etl_spark.operators.embdedup import (
-    hamming_band_index,
-    incremental_embedding_dedup,
-)
+from product_etl_spark.operators.embdedup import hamming_band_index
+from product_etl_spark.operators.sq import bin_sign_encode
 
 DIM = 64
 THR = [0.0] * DIM
@@ -28,86 +26,23 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-@pytest.mark.slow
-def test_cross_batch_and_in_batch_dedup(spark, tmp_path):
-    store = str(tmp_path / "sigstore")
-    base = _bits(1, 5, 9, 40)
-    near = _bits(1, 5, 9, 40, 63)          # 1 bit away
-    far = _bits(2, 6, 10, 30, 50, 60)       # far from base
-    b1 = _df(spark, [(0, _vec(base)), (1, _vec(near)), (2, _vec(far))])
-    acc, rej = incremental_embedding_dedup(spark, b1, store, THR)
-    assert sorted(r["vec_id"] for r in acc.collect()) == [0, 2]
-    r = rej.collect()
-    assert [(x["vec_id"], x["matched_id"], x["hamming"]) for x in r] == [(1, 0, 1)]
-
-    # batch 2: near-dup of the STORED base rejected; novel accepted
-    b2 = _df(spark, [(10, _vec(_bits(1, 5, 9))), (11, _vec(_bits(20, 21, 22, 23, 24, 25)))])
-    acc2, rej2 = incremental_embedding_dedup(spark, b2, store, THR)
-    assert [r["vec_id"] for r in acc2.collect()] == [11]
-    got = rej2.collect()[0]
-    assert got["vec_id"] == 10 and got["matched_id"] == 0 and got["hamming"] == 1
-
-    # rerun batch 2: every row now collides with the store (11 with
-    # its OWN signature at hamming 0) -> nothing accepted, nothing
-    # appended — the corpus-append idempotence contract
-    n_before = spark.read.parquet(store).count()
-    acc3, rej3 = incremental_embedding_dedup(spark, b2, store, THR)
-    assert acc3.count() == 0
-    own = {r["vec_id"]: (r["matched_id"], r["hamming"]) for r in rej3.collect()}
-    assert own[11] == (11, 0)
-    assert spark.read.parquet(store).count() == n_before
-
-
-def test_radius_at_pigeonhole_limit_and_guard(spark, tmp_path):
-    store = str(tmp_path / "s2")
+def test_radius_at_pigeonhole_limit_and_guard(spark):
+    """Four 16-bit bands: a pair exactly B-1 = 3 bits apart still
+    matches on some (band, value), so the band join finds it; a band
+    width that does not divide the 32-bit words raises."""
     base = _bits(0)
-    d3 = _bits(0, 10, 20, 30)  # distance exactly 3 = B-1: must be found
-    d4 = _bits(50, 51, 52, 53, 54)  # >3 bits from BOTH others: accepted
-    df = _df(spark, [(0, _vec(base)), (1, _vec(d3)), (2, _vec(d4))])
-    acc, rej = incremental_embedding_dedup(spark, df, store, THR, max_hamming=3)
-    rj = {r["vec_id"]: r["hamming"] for r in rej.collect()}
-    assert rj == {1: 3}
-    assert sorted(r["vec_id"] for r in acc.collect()) == [0, 2]
-    with pytest.raises(ValueError, match="pigeonhole"):
-        incremental_embedding_dedup(spark, df, str(tmp_path / "s3"), THR, max_hamming=4)
+    d3 = _bits(0, 10, 20, 30)
+    df = _df(spark, [(0, _vec(base)), (1, _vec(d3))])
+    idx = hamming_band_index(bin_sign_encode(df, "embedding", THR), "vec_id")
+    a = idx.select(F.col("vec_id").alias("a"), "band", "bv")
+    b = idx.select(F.col("vec_id").alias("b"), "band", "bv")
+    pairs = {
+        (r["a"], r["b"])
+        for r in a.join(b, ["band", "bv"]).filter("a < b").collect()
+    }
+    assert pairs == {(0, 1)}
+    assert idx.select("band").distinct().count() == 4
     with pytest.raises(ValueError, match="band_bits"):
-        coded = _df(spark, [(0, _vec(base))])
-        from product_etl_spark.operators.sq import bin_sign_encode
-
         hamming_band_index(
-            bin_sign_encode(coded, "embedding", THR), "vec_id", band_bits=12
+            bin_sign_encode(df, "embedding", THR), "vec_id", band_bits=12
         )
-
-
-def test_streaming_wrapper_accepts_once_across_batches(spark, tmp_path):
-    """Two landed files with an overlapping near-dup: the survivor set
-    holds the first-seen vector once and the cross-file near-dup is
-    dropped; a replayed pipeline run (fresh checkpoint, same store)
-    accepts nothing new."""
-    import os
-
-    from product_etl_spark.streaming.pipeline import stream_dedup_embeddings
-
-    src = str(tmp_path / "in")
-    os.makedirs(src, exist_ok=True)
-    store = str(tmp_path / "store")
-    acc = str(tmp_path / "acc")
-    ck = str(tmp_path / "ck")
-    base = _bits(3, 7, 11)
-    _df(spark, [(0, _vec(base)), (1, _vec(_bits(30, 31, 32, 33, 34)))]).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    q = stream_dedup_embeddings(spark, src, acc, store, ck, THR)
-    q.awaitTermination()
-    _df(spark, [(5, _vec(_bits(3, 7, 11, 60)))]).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q = stream_dedup_embeddings(spark, src, acc, store, ck, THR)
-    q.awaitTermination()
-    got = sorted(r["vec_id"] for r in spark.read.parquet(acc).collect())
-    assert got == [0, 1]  # 5 is 1 bit from stored 0 -> dropped
-    # replay with a fresh checkpoint: same files, nothing new accepted
-    q = stream_dedup_embeddings(spark, src, acc, store, ck + "_2", THR)
-    q.awaitTermination()
-    got2 = sorted(r["vec_id"] for r in spark.read.parquet(acc).collect())
-    assert got2 == [0, 1]

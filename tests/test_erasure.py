@@ -56,6 +56,27 @@ def test_erasure_respects_single_writer_lock(spark, tmp_path):
     assert spark.read.parquet(t1).count() == 1
 
 
+def test_erase_store_committed_per_batch_dir(spark, tmp_path):
+    """A store appended one ``batch=N`` partition at a time has a
+    _SUCCESS marker per partition but none at the root; erasure must
+    still find and rewrite it, keeping the partition layout."""
+    from product_etl_spark.operators.erasure import erase_from_stores
+
+    state = tmp_path / "state"
+    for b, ids in ((0, [1, 2]), (1, [3, 1])):
+        spark.createDataFrame(
+            [(i, f"t{i}") for i in ids], "id long, tok string"
+        ).write.parquet(str(state / f"batch={b}"))
+    assert not (state / "_SUCCESS").exists()
+
+    spec = [{"path": str(state), "id_col": "id", "partition_by": ["batch"]}]
+    subjects = spark.createDataFrame([(1,)], "doc_id long")
+    assert erase_from_stores(spark, subjects, spec)[str(state)] == 2
+    left = spark.read.parquet(str(state))
+    assert sorted((r["batch"], r["id"]) for r in left.collect()) == [(0, 2), (1, 3)]
+    assert erase_from_stores(spark, subjects, spec)[str(state)] == 0
+
+
 def _doc_frame(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
@@ -67,66 +88,6 @@ _CORPUS = [
     (4, "alpha beta gamma delta common"),   # near-dup of 1
     (5, "kappa lambda mu nu xi common"),
 ]
-
-
-def test_erase_jaccard_fold_state_probe_equals_rebuild(spark, tmp_path):
-    """The verdict contract: after erasing a subject from the
-    PERSISTED jaccard token state, a probe against the read-back
-    index must equal a probe against an index REBUILT from the
-    erased corpus — including the corpus-relative parts (token df
-    and prefix ranks recompute over the remaining rows, so another
-    doc's prefix set may legitimately change)."""
-    from product_etl_spark.operators.dedup_incremental import (
-        _doc_token_rows,
-        build_jaccard_index,
-        probe_jaccard_index,
-    )
-    from product_etl_spark.operators.erasure import erase_from_stores
-    from product_etl_spark.streaming.pipeline import read_jaccard_index
-
-    docs = _doc_frame(spark, _CORPUS)
-    state = str(tmp_path / "jaccard_state")
-    # fold-state layout: per-batch partition dirs of (id, tok) rows
-    toks = _doc_token_rows(docs, "text", "doc_id", "id", 1).withColumn(
-        "batch", (F.col("id") % 2).cast("long")
-    )
-    toks.write.partitionBy("batch").parquet(state)
-
-    report = erase_from_stores(
-        spark,
-        spark.createDataFrame([(1,)], "doc_id long"),
-        [{"path": state, "id_col": "id", "partition_by": ["batch"]}],
-    )
-    assert report[state] > 0
-    # partition layout preserved through the swap
-    assert any(
-        p.name.startswith("batch=") for p in (tmp_path / "jaccard_state").iterdir()
-    )
-    # doc 1's rows are gone from the store
-    left = spark.read.parquet(state)
-    assert left.filter(F.col("id") == 1).count() == 0
-
-    batch = _doc_frame(
-        spark, [(100, "alpha beta gamma delta common zz")]
-    )
-    probed = probe_jaccard_index(
-        read_jaccard_index(spark, state), batch, "text", "doc_id"
-    )
-    rebuilt_index = build_jaccard_index(
-        docs.filter(F.col("doc_id") != 1), "text", "doc_id"
-    )
-    expected = probe_jaccard_index(rebuilt_index, batch, "text", "doc_id")
-    assert sorted(map(tuple, probed.collect())) == sorted(
-        map(tuple, expected.collect())
-    )
-    # and the erased doc can never match
-    assert probed.filter(F.col("store_id") == 1).count() == 0
-    # idempotent: rerun deletes nothing
-    assert erase_from_stores(
-        spark,
-        spark.createDataFrame([(1,)], "doc_id long"),
-        [{"path": state, "id_col": "id", "partition_by": ["batch"]}],
-    )[state] == 0
 
 
 def test_erase_trigram_index_search_equals_rebuild(spark, tmp_path):
@@ -389,74 +350,6 @@ def test_erase_ivf_pq_index_probe_equals_rebuild(spark, tmp_path):
           "partition_by": ["list_id"]}],
     )
     assert again[f"{idx}/codes"] == 0
-
-
-def test_erase_embedding_signature_store_probe_equals_rebuild(spark, tmp_path):
-    """RTBF through the Hamming-banding signature store: after
-    erase_from_stores on sig_id, a probe batch near an ERASED vector
-    is ACCEPTED (the store has genuinely forgotten it), and the
-    accept/reject split equals a store REBUILT from the erased
-    corpus."""
-    from product_etl_spark.operators.embdedup import (
-        incremental_embedding_dedup,
-    )
-    from product_etl_spark.operators.erasure import erase_from_stores
-
-    DIM = 64
-    THR = [0.0] * DIM
-
-    def vec(*on):
-        return [1.0 if j in on else -1.0 for j in range(DIM)]
-
-    store = str(tmp_path / "sigstore")
-    base = spark.createDataFrame(
-        [
-            (0, vec(1, 5, 9, 40)),
-            (1, vec(2, 6, 10, 30, 50)),
-            (2, vec(12, 22, 32, 42, 52, 62)),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    acc, _ = incremental_embedding_dedup(spark, base, store, THR)
-    assert acc.count() == 3
-
-    report = erase_from_stores(
-        spark,
-        spark.createDataFrame([(0,)], "id long"),
-        [{"path": store, "id_col": "sig_id"}],
-    )
-    assert report[store] == 1
-
-    rebuilt = str(tmp_path / "sig_rebuilt")
-    incremental_embedding_dedup(
-        spark, base.filter(F.col("vec_id") != 0), rebuilt, THR
-    )
-
-    # probe: near-dup of ERASED vec 0 (must now be accepted), near-dup
-    # of surviving vec 1 (must still be rejected)
-    probe = spark.createDataFrame(
-        [(100, vec(1, 5, 9, 40, 63)), (101, vec(2, 6, 10, 30, 50, 63))],
-        "vec_id long, embedding array<double>",
-    )
-    got_acc, got_rej = incremental_embedding_dedup(spark, probe, store, THR)
-    want_acc, want_rej = incremental_embedding_dedup(
-        spark, probe, rebuilt, THR
-    )
-    got = (
-        sorted(r["vec_id"] for r in got_acc.collect()),
-        sorted(
-            (r["vec_id"], r["matched_id"], r["hamming"])
-            for r in got_rej.collect()
-        ),
-    )
-    want = (
-        sorted(r["vec_id"] for r in want_acc.collect()),
-        sorted(
-            (r["vec_id"], r["matched_id"], r["hamming"])
-            for r in want_rej.collect()
-        ),
-    )
-    assert got == want == ([100], [(101, 1, 1)])
 
 
 def test_bm25_indexed_survives_total_erasure(spark, tmp_path):

@@ -258,33 +258,6 @@ def test_kmeans_exact_fused_matches_crossjoin_path(spark, sf_dir):
     assert fused == ref and len(fused) > 0
 
 
-def test_merge_group_checksums_equals_whole(spark):
-    """Checksum partials over disjoint batches fold to EXACTLY the
-    whole-table checksums — the incremental copy-validation contract
-    (no history rescan)."""
-    from product_etl_spark.operators.integrity import merge_group_checksums
-
-    rows = [(i % 3, f"v{i}") for i in range(90)]
-    df = spark.createDataFrame(rows, "g int, v string")
-    whole = {
-        r["g"]: r for r in group_checksums(df, ["g"], ["g", "v"]).collect()
-    }
-    batches = [
-        spark.createDataFrame(rows[i : i + 30], "g int, v string")
-        for i in range(0, 90, 30)
-    ]
-    partials = None
-    for b in batches:
-        p = group_checksums(b, ["g"], ["g", "v"])
-        partials = p if partials is None else partials.unionByName(p)
-    folded = {
-        r["g"]: r for r in merge_group_checksums(partials, ["g"]).collect()
-    }
-    assert set(folded) == set(whole)
-    for g in whole:
-        assert tuple(folded[g]) == tuple(whole[g])
-
-
 def test_fd_violations_finds_only_violators(spark):
     from product_etl_spark.operators.profile import fd_violations
 

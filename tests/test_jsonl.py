@@ -94,42 +94,3 @@ def test_gzip_sink(spark, tmp_path):
     assert gz
     with gzip.open(os.path.join(out, gz[0]), "rt") as f:
         assert json.loads(f.readline())["doc_id"] in {0, 1, 2}
-
-
-def test_stream_ingest_jsonl_quarantine_and_incremental(spark, tmp_path):
-    """Streaming twin: exactly-once file pickup, per-batch immutable
-    dirs, quarantine carried alongside the corpus."""
-    from product_etl_spark.streaming.pipeline import stream_ingest_jsonl
-
-    src = tmp_path / "in"
-    src.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    (src / "a.jsonl").write_text(
-        '{"doc_id": 1, "text": "x"}\nBAD\n{"doc_id": 2, "text": "y"}\n'
-    )
-    corpus = str(tmp_path / "corpus")
-    quar = str(tmp_path / "quar")
-    ckpt = str(tmp_path / "ckpt")
-
-    def drain():
-        q = stream_ingest_jsonl(spark, str(src), corpus, quar, ckpt, schema)
-        q.awaitTermination(120)
-
-    drain()
-    got = spark.read.parquet(f"{corpus}/batch=*")
-    assert sorted(r["doc_id"] for r in got.collect()) == [1, 2]
-    badr = spark.read.parquet(f"{quar}/batch=*").collect()
-    assert [r["line"] for r in badr] == ["BAD"]
-    assert badr[0]["input_file"].endswith("a.jsonl")
-
-    # second file arrives; first is NOT reprocessed (checkpoint log)
-    (src / "b.jsonl").write_text('{"doc_id": 3, "text": "z"}\n')
-    drain()
-    got2 = spark.read.parquet(f"{corpus}/batch=*")
-    assert sorted(r["doc_id"] for r in got2.collect()) == [1, 2, 3]
-    assert spark.read.parquet(f"{quar}/batch=*").count() == 1

@@ -246,17 +246,3 @@ def test_cms_estimate_broadcasts_sketch(spark):
     plan = est._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_bloom_probe_broadcasts_filter_side(spark):
-    """split_by_bloom: the bounded bloom table broadcasts; the batch
-    side never shuffles for the membership probe."""
-    from pyspark.sql import functions as F
-
-    from product_etl_spark.operators.bloom import bloom_partials, split_by_bloom
-
-    keys = spark.range(500).select(F.concat(F.lit("k"), "id").alias("key"))
-    bloom = bloom_partials(keys, "key", m_bits=1 << 14, k=4)
-    tagged = split_by_bloom(keys, bloom, "key", m_bits=1 << 14, k=4)
-    plan = tagged._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan

@@ -196,52 +196,19 @@ def test_bpe_encode_reconstructs_words(words):
 )
 @pytest.mark.slow
 def test_cms_one_sided_error_property(spark, freq_spec):
-    """For ANY corpus: CMS estimate >= exact count for every item,
-    and the whole-corpus sketch equals the merge of per-part
-    partials (union = cellwise sum)."""
-    from product_etl_spark.operators.cms import (
-        cms_estimate, cms_merge, cms_partials,
-    )
+    """For ANY corpus: the whole-corpus CMS estimate >= exact count
+    for every item."""
+    from product_etl_spark.operators.cms import cms_estimate, cms_partials
 
     rows = [(w, i % 3) for w, n in freq_spec for i in range(n)]
     df = spark.createDataFrame(rows, "w string, part int")
     sk = cms_partials(df, [], "w", depth=3, width=256)
-    merged = cms_merge(cms_partials(df, ["part"], "w", depth=3, width=256), [])
-    a = {(r["row_idx"], r["bucket"]): r["n"] for r in sk.collect()}
-    b = {(r["row_idx"], r["bucket"]): r["n"] for r in merged.collect()}
-    assert a == b
     est = {
         r["w"]: r["est_count"]
         for r in cms_estimate(sk, df.select("w"), "w", depth=3, width=256).collect()
     }
     for w, n in freq_spec:
         assert est[w] >= n
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    st.lists(st.text(alphabet="abcdef", min_size=1, max_size=6),
-             min_size=1, max_size=30),
-    st.lists(st.text(alphabet="uvwxyz", min_size=1, max_size=6),
-             min_size=0, max_size=10),
-)
-def test_bloom_never_false_negative_property(spark, seen, probes):
-    """For ANY stored key set and ANY probe set: every stored key
-    flags maybe_seen (zero false negatives, the invariant exact-dedup
-    composition relies on)."""
-    from product_etl_spark.operators.bloom import bloom_partials, split_by_bloom
-
-    seen_df = spark.createDataFrame([(k,) for k in set(seen)], "key string")
-    bloom = bloom_partials(seen_df, "key", m_bits=2048, k=3)
-    batch = spark.createDataFrame(
-        [(k,) for k in set(seen) | set(probes)], "key string"
-    )
-    tagged = {
-        r["key"]: r["_maybe_seen"]
-        for r in split_by_bloom(batch, bloom, "key", m_bits=2048, k=3).collect()
-    }
-    for k in set(seen):
-        assert tagged[k] is True
 
 
 @settings(max_examples=8, deadline=None)

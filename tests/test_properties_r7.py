@@ -1,6 +1,6 @@
 """Property-based tests (hypothesis) for the r7 operators, each
-against a pure-Python model: checksum merge/order invariance, skyline
-minimality+completeness, entropy bounds, Gini range.
+against a pure-Python model: skyline minimality+completeness,
+entropy bounds, Gini range.
 
 Strategy note: hypothesis drives small Python datasets; each property
 evaluates through Spark in one createDataFrame+collect, and example
@@ -12,50 +12,6 @@ import math
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
-import pytest
-
-_rows = st.lists(
-    st.tuples(st.integers(0, 2), st.text("abc", min_size=0, max_size=3)),
-    min_size=1,
-    max_size=24,
-)
-
-
-@settings(max_examples=12, deadline=None)
-@given(_rows, st.integers(1, 5))
-@pytest.mark.slow
-def test_checksum_split_invariance(spark, rows, cut):
-    """Any 2-way split of the rows folds to the same checksums as the
-    whole — and therefore any batching does (associativity)."""
-    from product_etl_spark.operators.integrity import (
-        group_checksums,
-        merge_group_checksums,
-    )
-
-    cut = min(cut, len(rows))
-    df = spark.createDataFrame(rows, "g int, v string")
-    whole = {
-        r["g"]: tuple(r) for r in group_checksums(df, ["g"], ["g", "v"]).collect()
-    }
-    parts = []
-    for chunk in (rows[:cut], rows[cut:]):
-        if chunk:
-            parts.append(
-                group_checksums(
-                    spark.createDataFrame(chunk, "g int, v string"),
-                    ["g"],
-                    ["g", "v"],
-                )
-            )
-    folded_df = parts[0]
-    for p in parts[1:]:
-        folded_df = folded_df.unionByName(p)
-    folded = {
-        r["g"]: tuple(r)
-        for r in merge_group_checksums(folded_df, ["g"]).collect()
-    }
-    assert folded == whole
-
 
 _pts = st.lists(
     st.tuples(st.integers(0, 8), st.integers(0, 8)), min_size=1, max_size=30

@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import functions as F
-
 from product_etl_spark.operators.dedup import remove_duplicate_spans
 
 
@@ -175,122 +173,6 @@ def test_within_equals_brute_force_on_seeded_random_corpus(spark):
         )
 
 
-def test_incremental_equals_batch_over_union(spark, tmp_path):
-    """Ingesting batches in ascending doc-id order must reproduce the
-    batch operator exactly: every doc's incremental output equals
-    remove_duplicate_spans over the union of all batches."""
-    from product_etl_spark.operators.dedup_incremental import (
-        incremental_span_excision,
-    )
-
-    rng = random.Random(733)
-    vocab = [f"w{i}" for i in range(8)]
-    docs = [
-        (d, " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 35))))
-        for d in range(15)
-    ]
-    store = str(tmp_path / "gramstore")
-    got = {}
-    for lo, hi in ((0, 5), (5, 10), (10, 15)):
-        bdf = spark.createDataFrame(docs[lo:hi], "doc_id long, text string")
-        out = incremental_span_excision(
-            spark, bdf, store, "text", "doc_id", n=4
-        )
-        got.update(
-            {
-                r["doc_id"]: (r["text_clean"], r["n_tokens"], r["n_removed"])
-                for r in out.collect()
-            }
-        )
-    want = _brute(docs, n=4, min_df=2)
-    # the batch contract: every dup gram's keeper is its lowest-id doc
-    # == first-seen under ascending ingest; the incremental result for
-    # each doc must match the batch result over the full union --
-    # except that an incremental batch cannot excise text from docs
-    # ALREADY ingested when a later batch introduces the second
-    # occurrence (history is immutable; the later copy is excised
-    # instead). Under keeper=lowest-id that asymmetry never fires:
-    # the keeper is always in the earlier batch.
-    assert got == want
-
-
-def test_incremental_replay_is_idempotent(spark, tmp_path):
-    from product_etl_spark.operators.dedup_incremental import (
-        incremental_span_excision,
-    )
-
-    store = str(tmp_path / "gramstore")
-    span = "alpha beta gamma delta epsilon"
-    b1 = spark.createDataFrame(
-        [(1, f"{span} one two three")], "doc_id long, text string"
-    )
-    b2 = spark.createDataFrame(
-        [(2, f"intro words here {span} outro")], "doc_id long, text string"
-    )
-    incremental_span_excision(spark, b1, store, "text", "doc_id", n=5)
-    first = {
-        r["doc_id"]: (r["text_clean"], r["n_removed"])
-        for r in incremental_span_excision(
-            spark, b2, store, "text", "doc_id", n=5
-        ).collect()
-    }
-    assert first[2] == ("intro words here outro", 5)
-    n_rows = spark.read.parquet(store).count()
-
-    # replay batch 2: same cleaned output, store unchanged
-    again = {
-        r["doc_id"]: (r["text_clean"], r["n_removed"])
-        for r in incremental_span_excision(
-            spark, b2, store, "text", "doc_id", n=5
-        ).collect()
-    }
-    assert again == first
-    assert spark.read.parquet(store).count() == n_rows
-    # bucket layout for compaction/erasure
-    assert any(
-        p.name.startswith("gram_bucket=")
-        for p in (tmp_path / "gramstore").iterdir()
-        if p.is_dir()
-    )
-
-
-def test_incremental_store_erasure_forgets_keeper(spark, tmp_path):
-    """RTBF: erasing a subject's doc id from the gram store removes
-    its ownership rows; a later batch re-introducing the span gets to
-    keep it (the store has genuinely forgotten)."""
-    from product_etl_spark.operators.dedup_incremental import (
-        incremental_span_excision,
-    )
-    from product_etl_spark.operators.erasure import erase_from_stores
-
-    store = str(tmp_path / "gramstore")
-    span = "one two three four five"
-    b1 = spark.createDataFrame(
-        [(1, f"{span} unique tail a")], "doc_id long, text string"
-    )
-    incremental_span_excision(spark, b1, store, "text", "doc_id", n=5)
-    report = erase_from_stores(
-        spark,
-        spark.createDataFrame([(1,)], "id long"),
-        [{"path": store, "id_col": "keep", "partition_by": ["gram_bucket"]}],
-    )
-    assert report[store] > 0
-
-    b2 = spark.createDataFrame(
-        [(9, f"fresh head {span} fresh tail")], "doc_id long, text string"
-    )
-    out = incremental_span_excision(
-        spark, b2, store, "text", "doc_id", n=5
-    ).collect()
-    assert out[0]["n_removed"] == 0  # doc 9 now keeps the span
-    # and doc 9 is the new keeper on record
-    keeps = {
-        r["keep"]
-        for r in spark.read.parquet(store).select("keep").distinct().collect()
-    }
-    assert 1 not in keeps and 9 in keeps
-
-
 def test_hard_negative_pairs_contract(spark):
     """Hard negatives: (a) every pair IS an LSH candidate, (b) exact
     jaccard recomputed in python is below the ceiling and matches the
@@ -338,44 +220,3 @@ def test_hard_negative_pairs_contract(spark):
         assert len(rows) <= 3
         # rank order == (jaccard asc, id_b asc)
         assert rows == sorted(rows, key=lambda x: (x[1], x[2]))
-
-
-def test_stream_span_excision_end_to_end(spark, tmp_path):
-    """Streaming twin: batches of json-lines docs are cleaned against
-    the gram store; a later drop loses spans the first drop owns, and
-    replay (same checkpoint, no new files) changes nothing."""
-    import json as _json
-
-    from product_etl_spark.streaming.pipeline import stream_span_excision
-
-    src, out, store, ck = (
-        str(tmp_path / d) for d in ("in", "cleaned", "grams", "ck")
-    )
-    import os
-
-    os.makedirs(src)
-    span = "alpha beta gamma delta epsilon"
-
-    def drop(fname, rows):
-        with open(f"{src}/{fname}", "w") as f:
-            for rid, text in rows:
-                f.write(_json.dumps({"doc_id": rid, "text": text}) + "\n")
-
-    drop("b1.jsonl", [(1, f"{span} unique one two")])
-    q = stream_span_excision(spark, src, out, store, ck)
-    q.awaitTermination()
-    drop("b2.jsonl", [(2, f"prefix words here {span} suffix")])
-    q = stream_span_excision(spark, src, out, store, ck)
-    q.awaitTermination()
-
-    got = {
-        r["doc_id"]: (r["text_clean"], r["n_removed"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got[1] == (f"{span} unique one two", 0)   # keeper batch
-    assert got[2] == ("prefix words here suffix", 5)  # span excised
-
-    # replay: no new files -> no new batches -> outputs unchanged
-    q = stream_span_excision(spark, src, out, store, ck)
-    q.awaitTermination()
-    assert spark.read.parquet(out).count() == 2

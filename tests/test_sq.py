@@ -60,10 +60,16 @@ def test_encode_is_map_only_and_streamable(vecs, spark, tmp_path):
     stream = spark.readStream.schema(
         "vec_id int, embedding array<float>"
     ).parquet(src)
-    from product_etl_spark.streaming.pipeline import run_available_now
-
     out, ckpt = str(tmp_path / "sq_out"), str(tmp_path / "sq_ckpt")
-    run_available_now(SQ.sq8_encode(stream, "embedding", bounds), out, ckpt)
+    (
+        SQ.sq8_encode(stream, "embedding", bounds)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
     got = {
         (r["vec_id"], tuple(r["sq_code"]))
         for r in spark.read.parquet(out).collect()

@@ -1,166 +1,24 @@
-"""Structured Streaming tests: windowed rollup and session windows
-under Trigger.AvailableNow with exactly-once file-source semantics.
-
-Append mode only emits windows the watermark has closed, so each
-batch carries a far-future 'flush' event that advances the watermark
-past the windows under test.
+"""Map-only batch operators run unchanged on a Structured Streaming
+source: the same call on a ``readStream`` frame, drained once under
+Trigger.AvailableNow, emits exactly the batch result.
 """
 
 from __future__ import annotations
 
-import datetime as dt
-
-from product_etl_spark.streaming.pipeline import (
-    run_available_now,
-    stream_events_rollup,
-    stream_sessionize,
-)
-
-SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
-BASE = dt.datetime(2024, 1, 1, 10, 0, 0)
+import pytest
 
 
-def _write_events(spark, path, rows):
-    spark.createDataFrame(rows, SCHEMA).write.mode("append").parquet(path)
-
-
-def _stream(spark, src):
-    return spark.readStream.schema(SCHEMA).parquet(src)
-
-
-def test_rollup_available_now_exactly_once(spark, tmp_path):
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    _write_events(
-        spark,
-        src,
-        [
-            (1, BASE, 1, "click", 1.0),
-            (2, BASE + dt.timedelta(minutes=30), 1, "click", 2.0),
-            (3, BASE + dt.timedelta(hours=1, minutes=5), 2, "view", 5.0),
-            # watermark pusher: closes the 10:00 and 11:00 windows
-            (99, BASE + dt.timedelta(hours=10), 9, "flush", 0.0),
-        ],
+def _drain(stream_df, out_path, checkpoint):
+    """Write everything currently available to parquet, exactly once,
+    then stop."""
+    q = (
+        stream_df.writeStream.format("parquet")
+        .option("path", out_path)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    run_available_now(
-        stream_events_rollup(_stream(spark, src), watermark="1 second"), out, ckpt
-    )
-    got = {
-        (r["window_start"], r["event_type"]): (r["n"], str(r["total_value"]))
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got[(BASE, "click")] == (2, "3.00")
-    assert got[(BASE + dt.timedelta(hours=1), "view")] == (1, "5.00")
-    n_rows = spark.read.parquet(out).count()
-    assert n_rows == 2  # flush window still open
-
-    # second drain with no new files: nothing re-emitted (exactly-once)
-    run_available_now(
-        stream_events_rollup(_stream(spark, src), watermark="1 second"), out, ckpt
-    )
-    assert spark.read.parquet(out).count() == n_rows
-
-    # new file arrives -> next drain emits only newly closed windows
-    _write_events(
-        spark, src, [(100, BASE + dt.timedelta(hours=20), 9, "flush", 0.0)]
-    )
-    run_available_now(
-        stream_events_rollup(_stream(spark, src), watermark="1 second"), out, ckpt
-    )
-    got2 = {
-        (r["window_start"], r["event_type"]): r["n"]
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got2[(BASE + dt.timedelta(hours=10), "flush")] == 1
-    assert spark.read.parquet(out).count() == n_rows + 1
-
-
-def test_sessionize_gap_semantics(spark, tmp_path):
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    _write_events(
-        spark,
-        src,
-        [
-            (1, BASE, 1, "click", 1.0),
-            (2, BASE + dt.timedelta(minutes=10), 1, "click", 1.0),
-            # 40-min gap -> new session
-            (3, BASE + dt.timedelta(minutes=50), 1, "click", 1.0),
-            (4, BASE, 2, "view", 1.0),
-            (99, BASE + dt.timedelta(hours=10), 9, "flush", 0.0),
-        ],
-    )
-    run_available_now(
-        stream_sessionize(_stream(spark, src), watermark="1 second"), out, ckpt
-    )
-    by_user: dict[int, list[int]] = {}
-    for r in spark.read.parquet(out).collect():
-        by_user.setdefault(r["user_id"], []).append(r["n_events"])
-    assert sorted(by_user[1]) == [1, 2]  # two sessions: 2 events + 1 event
-    assert by_user[2] == [1]
-
-
-def test_purchase_attribution_stream_stream_join(spark, tmp_path):
-    from product_etl_spark.streaming.pipeline import stream_purchase_attribution
-
-    src = str(tmp_path / "ss_src")
-    out = str(tmp_path / "ss_out")
-    ckpt = str(tmp_path / "ss_ckpt")
-    _write_events(
-        spark,
-        src,
-        [
-            (1, BASE, 7, "view", 0.0),
-            # purchase 30 min after the view: attributed
-            (2, BASE + dt.timedelta(minutes=30), 7, "purchase", 9.99),
-            # purchase 3 h after the view: outside the 1 h window
-            (3, BASE + dt.timedelta(hours=3), 7, "purchase", 5.00),
-            # other user's purchase with no view: never attributed
-            (4, BASE + dt.timedelta(minutes=10), 8, "purchase", 1.00),
-            # watermark pushers on both sides
-            (98, BASE + dt.timedelta(hours=10), 9, "view", 0.0),
-            (99, BASE + dt.timedelta(hours=10), 9, "purchase", 0.0),
-        ],
-    )
-    stream = _stream(spark, src)
-    run_available_now(
-        stream_purchase_attribution(stream, stream, "1 hour", watermark="1 second"),
-        out,
-        ckpt,
-    )
-    rows = spark.read.parquet(out).collect()
-    attributed = {(r.purchase_event_id, r.view_event_id) for r in rows}
-    assert (2, 1) in attributed  # inside the window
-    assert all(p != 3 for p, _ in attributed)  # too late
-    assert all(p != 4 for p, _ in attributed)  # no prior view
-
-
-def test_continuous_rollup_replay_safe_additive_state(spark, tmp_path):
-    from pyspark.sql import functions as F
-    from product_etl_spark.streaming.pipeline import (
-        read_rollup_state,
-        stream_continuous_rollup,
-    )
-
-    src = str(tmp_path / "cr_src")
-    state = str(tmp_path / "cr_state")
-    ckpt = str(tmp_path / "cr_ckpt")
-    measures = {"n": F.lit(1).cast("bigint"), "total": F.col("value")}
-
-    _write_events(spark, src, [(1, BASE, 1, "click", 1.0), (2, BASE, 1, "view", 2.0)])
-    stream_continuous_rollup(_stream(spark, src), state, ["event_type"], measures, ckpt)
-    # second drop folds as a new batch; third drain with nothing new is a no-op
-    _write_events(spark, src, [(3, BASE, 2, "click", 4.0)])
-    stream_continuous_rollup(_stream(spark, src), state, ["event_type"], measures, ckpt)
-    stream_continuous_rollup(_stream(spark, src), state, ["event_type"], measures, ckpt)
-
-    got = {
-        r.event_type: (r.n, r.total)
-        for r in read_rollup_state(spark, state, ["event_type"], ["n", "total"]).collect()
-    }
-    assert got == {"click": (2, 5.0), "view": (1, 2.0)}
+    q.awaitTermination()
 
 
 def test_map_only_operators_run_unchanged_on_streams(spark, tmp_path):
@@ -170,7 +28,6 @@ def test_map_only_operators_run_unchanged_on_streams(spark, tmp_path):
     the batch result."""
     from product_etl_spark.operators import pq as PQ
     from product_etl_spark.operators.packing import chunk_documents
-    from product_etl_spark.streaming.pipeline import run_available_now
 
     dsrc = str(tmp_path / "docs_src")
     spark.createDataFrame(
@@ -179,7 +36,7 @@ def test_map_only_operators_run_unchanged_on_streams(spark, tmp_path):
     ).write.parquet(dsrc)
     docs_stream = spark.readStream.schema("doc_id int, text string").parquet(dsrc)
     out, ckpt = str(tmp_path / "chunks_out"), str(tmp_path / "chunks_ckpt")
-    run_available_now(chunk_documents(docs_stream, 20, 5), out, ckpt)
+    _drain(chunk_documents(docs_stream, 20, 5), out, ckpt)
     got = {
         (r["doc_id"], r["chunk_id"], r["chunk_text"])
         for r in spark.read.parquet(out).collect()
@@ -202,7 +59,7 @@ def test_map_only_operators_run_unchanged_on_streams(spark, tmp_path):
         "vec_id int, embedding array<float>"
     ).parquet(esrc)
     out2, ckpt2 = str(tmp_path / "pq_out"), str(tmp_path / "pq_ckpt")
-    run_available_now(
+    _drain(
         PQ.pq_encode(emb_stream, "embedding", books, dim=16),
         out2,
         ckpt2,
@@ -224,10 +81,7 @@ def test_streaming_dim_mismatch_fails_batch(spark, tmp_path):
     """A mis-dimensioned embedding stream must FAIL, not checkpoint-
     commit garbage codes (the batch path raises eagerly; streams get
     a per-row raise_error guard)."""
-    import pytest as _pytest
-
     from product_etl_spark.operators import pq as PQ
-    from product_etl_spark.streaming.pipeline import run_available_now
 
     src = str(tmp_path / "bad_emb_src")
     spark.createDataFrame(
@@ -237,8 +91,8 @@ def test_streaming_dim_mismatch_fails_batch(spark, tmp_path):
         "vec_id int, embedding array<float>"
     ).parquet(src)
     books = PQ.md5_codebooks(4, 8, 4)  # dim 16, data is dim 8
-    with _pytest.raises(Exception, match="dim"):
-        run_available_now(
+    with pytest.raises(Exception, match="dim"):
+        _drain(
             PQ.pq_encode(stream, "embedding", books, dim=16),
             str(tmp_path / "bad_out"),
             str(tmp_path / "bad_ckpt"),
@@ -250,7 +104,6 @@ def test_pca_projection_runs_unchanged_on_streams(spark, tmp_path):
     the same call must run on a readStream frame and emit exactly the
     batch projection — the embedding-firehose preprocessing story."""
     from product_etl_spark.operators.pca import pca_project, pca_train
-    from product_etl_spark.streaming.pipeline import run_available_now
 
     src = str(tmp_path / "pca_src")
     rows = [(i, [float((i * 7 + j * 3) % 11) / 5.0 for j in range(8)])
@@ -262,7 +115,7 @@ def test_pca_projection_runs_unchanged_on_streams(spark, tmp_path):
         "vec_id int, embedding array<double>"
     ).parquet(src)
     out, ckpt = str(tmp_path / "pca_out"), str(tmp_path / "pca_ckpt")
-    run_available_now(pca_project(stream, mean, comps, "embedding"), out, ckpt)
+    _drain(pca_project(stream, mean, comps, "embedding"), out, ckpt)
     got = {
         r["vec_id"]: tuple(round(v, 9) for v in r["pca_emb"])
         for r in spark.read.parquet(out).collect()
@@ -272,58 +125,3 @@ def test_pca_projection_runs_unchanged_on_streams(spark, tmp_path):
         for r in pca_project(batch, mean, comps, "embedding").collect()
     }
     assert got == want and len(got) == 20
-
-
-def test_stream_daily_rate_equals_batch_and_feeds_analyzers(spark, tmp_path):
-    """Streaming-fed daily-rate state must equal the batch daily
-    counts row-for-row (incl. replay no-op), and the materialized
-    frame drives the batch rate analyzers: seasonal_naive_backtest
-    over the state equals the same backtest over the raw events."""
-    import datetime as _dt
-
-    from pyspark.sql import functions as F
-
-    from product_etl_spark.streaming.pipeline import (
-        read_daily_rate,
-        stream_daily_rate,
-    )
-    from product_etl_spark.operators.timeseries import (
-        seasonal_naive_backtest,
-    )
-
-    src = str(tmp_path / "dr_src")
-    state = str(tmp_path / "dr_state")
-    ckpt = str(tmp_path / "dr_ckpt")
-    rows1 = [(i, BASE + _dt.timedelta(days=i % 3), 1, "click", 0.0)
-             for i in range(8)]
-    _write_events(spark, src, rows1)
-    stream_daily_rate(_stream(spark, src), state, ckpt)
-    rows2 = [(100 + i, BASE + _dt.timedelta(days=9), 2, "view", 0.0)
-             for i in range(2)]
-    _write_events(spark, src, rows2)
-    stream_daily_rate(_stream(spark, src), state, ckpt)
-    # third drain with nothing new must be a no-op (replay contract)
-    stream_daily_rate(_stream(spark, src), state, ckpt)
-
-    got = {
-        str(r["day"]): r["n_events"]
-        for r in read_daily_rate(spark, state).collect()
-    }
-    batch = spark.read.parquet(src)
-    want = {
-        str(r["day"]): r["n"]
-        for r in batch.groupBy(F.to_date("ts").alias("day"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want
-    # the state frame drives the batch analyzer identically: compare
-    # the backtest computed from raw events vs from a re-expanded
-    # state (one synthetic row per counted event, same days)
-    from_state = read_daily_rate(spark, state).select(
-        F.expr("explode(sequence(1, n_events))").alias("_i"),
-        F.col("day").cast("timestamp").alias("ts"),
-    )
-    a = seasonal_naive_backtest(batch, "ts", period=2).collect()[0]
-    b = seasonal_naive_backtest(from_state, "ts", period=2).collect()[0]
-    assert a.asDict() == b.asDict()

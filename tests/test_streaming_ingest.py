@@ -3,8 +3,6 @@ warehouse tables merge incrementally and exactly-once."""
 
 from __future__ import annotations
 
-import pytest
-
 from product_etl_spark.pipelines.ingest import stream_ingest_csv
 
 HEADER_COLS = ["Master Code", "SKU Code", "Product Name", "Price", "Inventory"]
@@ -110,56 +108,6 @@ def test_max_files_per_trigger_per_file_import_semantics(spark, tmp_path):
     assert prods == {"var2-sku"}
 
 
-@pytest.mark.parametrize("bloom", [False, True])
-def test_stream_dedup_corpus_cross_batch(spark, tmp_path, bloom):
-    import json
-    import os
-
-    from product_etl_spark.streaming.pipeline import stream_dedup_corpus
-
-    inp = tmp_path / "incoming"
-    inp.mkdir()
-    accepted = str(tmp_path / "accepted")
-    store = str(tmp_path / "sigs")
-    ckpt = str(tmp_path / "ckpt")
-
-    doc_a = "the quick brown fox jumps over the lazy dog again tonight"
-    doc_b = "four score and seven years ago our fathers brought forth"
-    doc_c = "completely fresh content about corpus building at scale"
-
-    def drop_file(name, rows):
-        with open(inp / name, "w") as f:
-            for doc_id, text in rows:
-                f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-
-    # batch 1: internal dup (2 repeats 1)
-    drop_file("b1.jsonl", [(1, doc_a), (2, doc_a), (3, doc_b)])
-    q = stream_dedup_corpus(spark, str(inp), accepted, store, ckpt,
-                            bloom_prefilter=bloom)
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(accepted)
-    assert {r["doc_id"] for r in got.collect()} == {1, 3}
-
-    # batch 2 lands later: one cross-batch dup + one fresh doc
-    drop_file("b2.jsonl", [(10, doc_a), (11, doc_c)])
-    q2 = stream_dedup_corpus(spark, str(inp), accepted, store, ckpt,
-                             bloom_prefilter=bloom)
-    q2.awaitTermination(120)
-
-    got2 = spark.read.parquet(accepted)
-    assert {r["doc_id"] for r in got2.collect()} == {1, 3, 11}
-
-    # replaying with a FRESH checkpoint (simulated pipeline restart
-    # that re-reads everything) appends nothing: every doc collides
-    # with its own stored signature
-    q3 = stream_dedup_corpus(spark, str(inp), accepted, store,
-                             str(tmp_path / "ckpt2"), bloom_prefilter=bloom)
-    q3.awaitTermination(120)
-    got3 = spark.read.parquet(accepted)
-    assert sorted(r["doc_id"] for r in got3.collect()) == [1, 3, 11]
-
-
 def test_stream_ingest_respects_suppression_list(spark, tmp_path):
     """The ingest-side half of erasure: a feed re-delivering an erased
     subject must not re-create it in the warehouse."""
@@ -183,5 +131,3 @@ def test_stream_ingest_respects_suppression_list(spark, tmp_path):
     coll = {r["master_code"] for r in
             spark.read.parquet(str(wh / "product_collection")).collect()}
     assert coll == {"m2"}
-
-

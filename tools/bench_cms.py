@@ -1,11 +1,10 @@
 #!/usr/bin/env python3
-"""Scaling probe for the bounded-state membership/frequency ops:
-CMS build + probe and bloom build + probe over the documents table
-at sf0.001 / sf0.01 / sf0.1. Prints one JSON line with per-sf wall
-times and the 0.01 -> 0.1 growth factor (10x data; <=10 means
-at-most-linear). The interesting invariant: PROBE time should be
-~flat across sfs when the probe set is fixed, because both probes
-join against bounded broadcast state."""
+"""Scaling probe for the count-min sketch: CMS build + probe over
+the documents table at sf0.001 / sf0.01 / sf0.1. Prints one JSON line
+with per-sf wall times and the 0.01 -> 0.1 growth factor (10x data;
+<=10 means at-most-linear). The interesting invariant: PROBE time
+should be ~flat across sfs when the probe set is fixed, because the
+probe joins against bounded broadcast state."""
 
 from __future__ import annotations
 
@@ -18,7 +17,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from product_etl_spark.operators.bloom import bloom_partials, split_by_bloom  # noqa: E402
 from product_etl_spark.operators.cms import cms_estimate, cms_partials  # noqa: E402
 from product_etl_spark.session import get_spark, load_tables  # noqa: E402
 
@@ -33,11 +31,11 @@ def timed(fn):
 
 
 def main() -> None:
-    spark = get_spark("bench-cms-bloom")
+    spark = get_spark("bench-cms")
     spark.sparkContext.setLogLevel("ERROR")
     base = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
     out: dict[str, dict[str, float]] = {
-        k: {} for k in ("cms_build", "cms_probe", "bloom_build", "bloom_probe")
+        k: {} for k in ("cms_build", "cms_probe")
     }
     probes = spark.createDataFrame(
         [("the",), ("and",), ("data",), ("zzz-absent",)], "tok string"
@@ -56,17 +54,9 @@ def main() -> None:
             lambda: cms_estimate(sk_c, probes, "tok", depth=4, width=8192)
             .write.format("noop").mode("overwrite").save()
         )
-        ids = docs.select("doc_id")
-        bl = bloom_partials(ids, "doc_id", m_bits=1 << 22, k=4)
-        out["bloom_build"][sf] = timed(lambda: bl.write.format("noop").mode("overwrite").save())
-        bl_c = bl.localCheckpoint(eager=True)
-        out["bloom_probe"][sf] = timed(
-            lambda: split_by_bloom(ids, bl_c, "doc_id", m_bits=1 << 22, k=4)
-            .write.format("noop").mode("overwrite").save()
-        )
     for k, per in out.items():
         per["growth_10x"] = round(per["sf0.1"] / max(per["sf0.01"], 1e-9), 2)
-    print(json.dumps({"metric": "cms_bloom_scaling", "ops": out}))
+    print(json.dumps({"metric": "cms_scaling", "ops": out}))
     spark.stop()
 
 

@@ -1,16 +1,8 @@
 #!/usr/bin/env python3
-"""Throughput benchmark for the round-4 curation operators on a
-synthetic corpus: benchmark decontamination and incremental
-cross-batch dedup.
-
-Decontamination: N docs (~60 words), a B-doc benchmark set, a known
-fraction of corpus docs containing verbatim benchmark spans. Reports
-docs/sec end-to-end plus flag recall/precision against the planted
-truth.
-
-Incremental dedup: the same corpus split into two batches with a
-planted cross-batch duplicate fraction; reports batch-2 docs/sec
-(the steady-state cost: sketch + store join) and cross-batch recall.
+"""Throughput benchmark for benchmark decontamination on a synthetic
+corpus: N docs (~60 words), a B-doc benchmark set, a known fraction
+of corpus docs containing verbatim benchmark spans. Reports docs/sec
+end-to-end plus flag recall/precision against the planted truth.
 
 Env: BENCH_DECON_DOCS (default 100000), BENCH_DECON_BENCH (1000),
 BENCH_DECON_CONTAM_FRAC (0.05).
@@ -20,9 +12,7 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -30,9 +20,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from product_etl_spark.operators import decontam as DC  # noqa: E402
-from product_etl_spark.operators.dedup_incremental import (  # noqa: E402
-    incremental_dedup,
-)
 from product_etl_spark.session import get_spark  # noqa: E402
 
 
@@ -97,27 +84,6 @@ def main() -> None:
     recall = agg["true_pos"] / max(1, n_contam)
     precision = agg["true_pos"] / max(1, agg["n_flagged"])
 
-    # incremental dedup steady state: batch2 vs a warmed store
-    store = tempfile.mkdtemp() + "/sigs"
-    half = n_docs // 2
-    b1 = corpus.filter(F.col("doc_id") < n_bench + half)
-    b2_fresh = corpus.filter(F.col("doc_id") >= n_bench + half)
-    # plant cross-batch dups: re-send 5% of batch1 under new ids
-    resend = b1.limit(int(half * 0.05)).select(
-        (F.col("doc_id") + 50_000_000).alias("doc_id"), "text"
-    )
-    b2 = b2_fresh.unionByName(resend)
-    incremental_dedup(spark, b1, "text", "doc_id", store,
-                      strategy="fingerprint")
-    n_b2 = b2.count()
-    t1 = time.time()
-    survivors = incremental_dedup(spark, b2, "text", "doc_id", store,
-                                  strategy="fingerprint")
-    n_kept = survivors.count()
-    dt2 = time.time() - t1
-    n_resent = int(half * 0.05)
-    cross_caught = n_b2 - n_kept
-
     print(json.dumps({
         "metric": "decontam_docs_per_s",
         "value": round((n_docs + n_bench) / dt, 1),
@@ -126,11 +92,7 @@ def main() -> None:
         "n_benchmark": n_bench,
         "flag_recall": round(recall, 4),
         "flag_precision": round(precision, 4),
-        "incremental_dedup_docs_per_s": round(n_b2 / dt2, 1),
-        "cross_batch_planted": n_resent,
-        "cross_batch_caught": cross_caught,
     }))
-    shutil.rmtree(os.path.dirname(store), ignore_errors=True)
     spark.stop()
 
 

@@ -71,7 +71,13 @@ def job_ids(spark) -> set[int]:
 def main() -> None:
     n_collections = int(os.environ.get("BENCH_INGEST_COLLECTIONS", "5000"))
     n_variants = int(os.environ.get("BENCH_INGEST_VARIANTS", "9"))
-    tmp = tempfile.mkdtemp(prefix="bench_ingest_")
+    with tempfile.TemporaryDirectory(prefix="bench_ingest_") as tmp:
+        _run(tmp, n_collections, n_variants)
+
+
+def _run(tmp: str, n_collections: int, n_variants: int) -> None:
+    """Synthesize the export under ``tmp``, ingest it into a
+    warehouse there and audit it; the caller removes ``tmp``."""
     csv = os.path.join(tmp, "raw.csv")
     n_rows = synthesize(csv, n_collections, n_variants)
 
