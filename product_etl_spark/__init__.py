@@ -5,7 +5,7 @@ data-processing capabilities of the reference product-catalog ETL
 system (spec-vova/product-etl): multilingual product ingest,
 attribute normalization, translation sidecars, enrichment pipelines,
 verification queries — plus the large-scale training-data operators
-(dedup, similarity search, multimodal columns, text analysis) a
+(dedup, similarity search, text analysis) a
 100 TB pipeline needs.
 
 Everything is declared with the DataFrame / Spark SQL API so Catalyst

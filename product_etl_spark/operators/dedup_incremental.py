@@ -40,9 +40,7 @@ def read_signature_store(spark: SparkSession, path: str) -> DataFrame | None:
     try:
         return spark.read.parquet(path)
     except AnalysisException as e:
-        if getattr(e, "getErrorClass", lambda: None)() == "PATH_NOT_FOUND" or (
-            "PATH_NOT_FOUND" in str(e)
-        ):
+        if e.getCondition() == "PATH_NOT_FOUND" or "PATH_NOT_FOUND" in str(e):
             return None
         raise
 

@@ -223,7 +223,23 @@ def population_stability_index(
     )
     e = psi_bin_counts(expected, value_col, stats, n_bins, "n_expected")
     a = psi_bin_counts(actual, value_col, stats, n_bins, "n_actual")
-    return psi_from_counts(e, a, n_bins)
+    j = e.join(a, "bin", "full_outer")
+    tot_e = e.agg(F.sum("n_expected").alias("_te"))
+    tot_a = a.agg(F.sum("n_actual").alias("_ta"))
+    j = j.crossJoin(F.broadcast(tot_e)).crossJoin(F.broadcast(tot_a))
+    k = F.lit(float(n_bins))
+    p_e = (F.coalesce("n_expected", F.lit(0)) + 1).cast("double") / (
+        F.col("_te").cast("double") + k
+    )
+    p_a = (F.coalesce("n_actual", F.lit(0)) + 1).cast("double") / (
+        F.col("_ta").cast("double") + k
+    )
+    return j.select(
+        "bin",
+        F.coalesce("n_expected", F.lit(0)).alias("n_expected"),
+        F.coalesce("n_actual", F.lit(0)).alias("n_actual"),
+        F.round((p_a - p_e) * (F.log(p_a) - F.log(p_e)), 6).alias("psi_term"),
+    )
 
 
 def psi_bin_counts(
@@ -250,30 +266,6 @@ def psi_bin_counts(
     )
 
 
-def psi_from_counts(
-    e: DataFrame, a: DataFrame, n_bins: int
-) -> DataFrame:
-    """Per-bin PSI terms from two (bin, count) tables — the smoothing
-    + term arithmetic of population_stability_index."""
-    j = e.join(a, "bin", "full_outer")
-    tot_e = e.agg(F.sum("n_expected").alias("_te"))
-    tot_a = a.agg(F.sum("n_actual").alias("_ta"))
-    j = j.crossJoin(F.broadcast(tot_e)).crossJoin(F.broadcast(tot_a))
-    k = F.lit(float(n_bins))
-    p_e = (F.coalesce("n_expected", F.lit(0)) + 1).cast("double") / (
-        F.col("_te").cast("double") + k
-    )
-    p_a = (F.coalesce("n_actual", F.lit(0)) + 1).cast("double") / (
-        F.col("_ta").cast("double") + k
-    )
-    return j.select(
-        "bin",
-        F.coalesce("n_expected", F.lit(0)).alias("n_expected"),
-        F.coalesce("n_actual", F.lit(0)).alias("n_actual"),
-        F.round((p_a - p_e) * (F.log(p_a) - F.log(p_e)), 6).alias("psi_term"),
-    )
-
-
 def ks_drift(
     expected: DataFrame,
     actual: DataFrame,
@@ -297,20 +289,14 @@ def ks_drift(
     then a single window over <= n_bins rows (driver-trivial).
     Float policy: cumulative counts are exact integers; each CDF is
     ONE double division; ROUND(.,6) at the surface."""
+    from pyspark.sql import Window
+
     stats = expected.agg(
         F.min(F.col(value_col).cast("double")).alias("_lo"),
         F.max(F.col(value_col).cast("double")).alias("_hi"),
     )
     e = psi_bin_counts(expected, value_col, stats, n_bins, "n_expected")
     a = psi_bin_counts(actual, value_col, stats, n_bins, "n_actual")
-    return ks_from_counts(e, a)
-
-
-def ks_from_counts(e: DataFrame, a: DataFrame) -> DataFrame:
-    """KS report from two (bin, count) frames — the tail of the
-    batch operator (q148)."""
-    from pyspark.sql import Window
-
     j = e.join(a, "bin", "full_outer").select(
         "bin",
         F.coalesce("n_expected", F.lit(0)).alias("n_expected"),
@@ -566,13 +552,6 @@ def segment_divergence(
         .select(F.col(seg_col).alias("seg"), bin_.alias("bin"))
     )
     s = binned.groupBy("seg", "bin").agg(F.count(F.lit(1)).alias("n_seg"))
-    return segment_divergence_from_counts(s, n_bins)
-
-
-def segment_divergence_from_counts(s: DataFrame, n_bins: int) -> DataFrame:
-    """The smoothing + term arithmetic of ``segment_divergence`` over
-    a (seg, bin, n_seg) count table. Global counts derive as the sum
-    over segments."""
     g = s.groupBy("bin").agg(F.sum("n_seg").alias("n_global"))
     tot_g = g.agg(F.sum("n_global").alias("_tg"))
     tot_s = s.groupBy("seg").agg(F.sum("n_seg").alias("_ts"))
@@ -617,27 +596,13 @@ def grouped_weighted_median(
     Scale shape: one (group, value) pre-aggregation (map-side
     combine collapses ties before any window), then one
     group-partitioned window cumsum over DISTINCT values — per-group
-    frames only, no global sort.
+    frames only, no global sort."""
+    from pyspark.sql import Window
 
-    The (group, value) -> weight table is ADDITIVE mergeable state:
-    per-batch partials fold by summing weights, and
-    ``weighted_median_from_counts`` reads the exact answer back out
-    of any such table."""
     gw = (
         df.groupBy(*group_cols, F.col(value_col).alias("_v"))
         .agg(F.sum(F.col(weight_col).cast("long")).alias("_w"))
     )
-    return weighted_median_from_counts(gw, group_cols)
-
-
-def weighted_median_from_counts(
-    gw: DataFrame, group_cols: list[str]
-) -> DataFrame:
-    """The pick tail of ``weighted_median``: (group..., _v, _w)
-    weight-per-distinct-value rows -> the weighted lower median.
-    Input rows must be unique per (group, _v)."""
-    from pyspark.sql import Window
-
     wc = Window.partitionBy(*group_cols).orderBy("_v").rowsBetween(
         Window.unboundedPreceding, 0
     )

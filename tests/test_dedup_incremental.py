@@ -5,6 +5,8 @@ touching historical text."""
 
 from __future__ import annotations
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,8 +16,11 @@ from product_etl_spark.operators.dedup_incremental import read_signature_store
 def test_store_probe_read_based_not_fs_based(spark, tmp_path):
     """ADVICE fix: the store probe attempts the read (works for any
     Hadoop-FS URI) — missing path -> None, any OTHER failure (e.g. a
-    corrupt store file) propagates instead of silently re-seeding."""
-    assert read_signature_store(spark, str(tmp_path / "absent")) is None
+    corrupt store file) propagates instead of silently re-seeding. The
+    absent-path probe uses no deprecated PySpark API."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        assert read_signature_store(spark, str(tmp_path / "absent")) is None
 
     corrupt = tmp_path / "store"
     corrupt.mkdir()

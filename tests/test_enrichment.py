@@ -1,15 +1,11 @@
 """Enrichment pipeline tests: HTML img extraction, staged OCR ->
 group-concat -> translate -> logistics with resumability, and the
-multimodal binary-column plumbing."""
+driving-set predicates."""
 
 from __future__ import annotations
 
 import os
 
-from product_etl_spark.operators.multimodal import (
-    extract_image_features,
-    synthesize_media,
-)
 from product_etl_spark.pipelines.enrichment import (
     extract_image_urls,
     group_ocr_text,
@@ -101,22 +97,6 @@ def test_full_pipeline_and_resume(spark, tmp_path):
     )
     assert len(os.listdir(track)) == n_ocr_calls
     assert stages2["logistics"].count() == 2
-
-
-def test_multimodal_feature_extraction(spark):
-    df = spark.createDataFrame(
-        [("https://x/1.jpg",), ("https://x/2.jpg",)], "url string"
-    )
-    media = synthesize_media(df, "url", "image/jpeg")
-    feats = extract_image_features(media).collect()
-    assert len(feats) == 2
-    for r in feats:
-        assert r["n_bytes"] == 64  # 16-byte md5 repeated 4x
-        assert 64 <= r["width"] < 64 + 1920
-        assert len(r["phash"]) == 16
-    # deterministic: same input -> same features
-    again = extract_image_features(media).collect()
-    assert sorted(map(str, feats)) == sorted(map(str, again))
 
 
 def test_driving_set_predicates(spark, tmp_path):
