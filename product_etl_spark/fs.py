@@ -22,8 +22,8 @@ incremental rollup's state read, ``read_stage_table`` and the
 translation sweep read through it.
 
 Publish. Every writer that rewrites or deletes a table in place (MERGE,
-subject erasure, quality-gated load, compaction, audit retrofit,
-partition retention, shard-state rebuild) does it the same way:
+quality-gated load, compaction, audit retrofit, partition retention)
+does it the same way:
 
     with table_write_lock(path, "op"):   # covers read through publish
         current = read_table(spark, path)
@@ -315,13 +315,3 @@ def swap_in(spark: SparkSession, staged: str, target: str) -> None:
     os.rename(staged, target)
     shutil.rmtree(aside, ignore_errors=True)
     spark.catalog.refreshByPath(target)
-
-
-def drop_table(spark: SparkSession, path: str) -> None:
-    """Remove the table at ``path`` atomically (renamed aside, then
-    deleted) and refresh Spark's cached listings of it. For a table
-    rewritten to zero rows: absent is its faithful empty state."""
-    aside = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, aside)
-    shutil.rmtree(aside, ignore_errors=True)
-    spark.catalog.refreshByPath(path)

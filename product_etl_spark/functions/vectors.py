@@ -3,7 +3,7 @@
 Two forms of the same arithmetic: each product is taken in double and
 the terms are folded left from 0.0 in element order.
 
-- ``dot``, ``norm``, ``cosine``, ``l2_distance``: Catalyst
+- ``dot``, ``norm``, ``l2_distance``: Catalyst
   higher-order functions (``zip_with`` + ``aggregate``), no UDF, so
   scans column-prune down to (id, embedding) at the parquet reader.
 - ``dot_udf``, ``pq_codes_udf``, ``adc_dist2_udf``: Arrow-batched
@@ -54,10 +54,6 @@ def sq_norm_fold(v: list[float]) -> float:
     for x in v:
         acc = acc + float(x) * float(x)
     return acc
-
-
-def cosine(a: Column | str, b: Column | str) -> Column:
-    return safe_cosine(dot(a, b), norm(a), norm(b))
 
 
 def safe_cosine(dot_col: Column, norm_a: Column, norm_b: Column) -> Column:

@@ -1,48 +1,26 @@
-"""Cross-batch probes against persisted stores: what of a NEW batch
+"""Cross-batch probe against a persisted store: what of a NEW batch
 is already in the accepted corpus, answered without re-reading the
 accepted text.
 
-- ``read_signature_store``: a persisted store, or None before the
-  first write (the suppression list's existence probe).
-- The suffix-span probe store (q218/q219): incremental twin of the
-  exact duplicated-span family (operators/suffixes.py, q212/q214):
-  "which spans of a NEW batch are shared verbatim (>= min_len
-  tokens) with the accepted corpus?". By the suffix module's
-  cover-equality contract a position starts a shared span of
-  >= min_len tokens iff its min_len-window occurs in another
-  document, so for a FIXED min_len the distinct-window inventory is
-  a complete sufficient statistic of history, and it is append-only.
-  The probe runs the batch operators' own gate
-  (suffixes._shared_window_positions) with the store joined in: one
-  batch-window aggregate plus one equi-join on the window key
-  against a vocabulary-sized store; the merged islands equal
-  suffix_duplicated_spans over the combined corpus restricted to the
-  batch (pinned in tests/test_dedup_incremental.py).
+The suffix-span probe store (q218/q219) is the incremental twin of
+the exact duplicated-span family (operators/suffixes.py, q212/q214):
+"which spans of a NEW batch are shared verbatim (>= min_len tokens)
+with the accepted corpus?". By the suffix module's cover-equality
+contract a position starts a shared span of >= min_len tokens iff its
+min_len-window occurs in another document, so for a FIXED min_len
+the distinct-window inventory is a complete sufficient statistic of
+history, and it is append-only. The probe runs the batch operators'
+own gate (suffixes._shared_window_positions) with the store joined
+in: one batch-window aggregate plus one equi-join on the window key
+against a vocabulary-sized store; the merged islands equal
+suffix_duplicated_spans over the combined corpus restricted to the
+batch (pinned in tests/test_dedup_incremental.py).
 """
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def read_signature_store(spark: SparkSession, path: str) -> DataFrame | None:
-    """The persisted store, or None before the first write.
-
-    Probed by ATTEMPTING the read and catching the path-not-found
-    AnalysisException — NOT via os.path.exists, which silently returns
-    False for any non-local URI (s3://, hdfs://) and would make a
-    caller skip the store (re-admitting suppressed rows) with no
-    error. Any other read failure (corrupt store, permission)
-    propagates loudly.
-    """
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() == "PATH_NOT_FOUND" or "PATH_NOT_FOUND" in str(e):
-            return None
-        raise
 
 
 def build_suffix_span_index(
@@ -54,10 +32,9 @@ def build_suffix_span_index(
 ) -> DataFrame:
     """Persistable probe index for the suffix-span family: one row
     per DISTINCT ``min_len``-gram of the accepted corpus with its
-    first-seen owner — (sh, keep, gram_bucket), hash-bucketed for
-    compaction and bucket-preserving RTBF erasure via
-    ``erase_from_stores(..., id_col='keep', partition_by=
-    ['gram_bucket'])``. ``keep`` is the lowest doc id carrying the
+    first-seen owner — (sh, keep, gram_bucket), hash-bucketed so a
+    store written ``partitionBy("gram_bucket")`` compacts one bucket
+    at a time. ``keep`` is the lowest doc id carrying the
     gram in THIS corpus; it exists so a replayed batch can recognize
     its own grams (self-matches are not duplication) — the
     idempotence keystone.

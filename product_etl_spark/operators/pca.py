@@ -1,111 +1,25 @@
-"""PCA over embedding columns — train by distributed sufficient
-statistics, project as a pure map.
+"""PCA sufficient statistics over embedding columns — the exact
+moment surface (mean and sample covariance) a PCA fit consumes.
 
 Why in a training-data engine: PCA (or its rotation cousin OPQ) is
 the standard preprocessing step before product quantization — axis-
 aligned subspace splits (pq.py) quantize better after decorrelating
 dimensions — and the cheap dimensionality reducer for similarity
-sweeps (SemDeDup runs on PCA-reduced embeddings).
+sweeps (SemDeDup runs on PCA-reduced embeddings). The d x d
+eigendecomposition runs wherever the moments land (d is bounded by
+contract, the same k·dim driver-state contract as IVF centroids);
+this module produces its whole input, engine-exactly.
 
 Scale shape (the sufficient-statistics pattern): each Arrow batch
-reduces to (count, sum_vec[d], outer_sum[d*d]) — one numpy matmul per
-batch — and those partials SUM (order-insensitive float addition is
-the only nondeterminism; at d=64 a partial is 33 KB, so a 1000-
-executor tree-reduce moves megabytes, not data). The d x d eigen-
-decomposition happens once on the driver (d is bounded by contract —
-the same k·dim driver-state contract as IVF centroids/codebooks).
-Projection inlines mean + components as literal arrays: map-only,
-no shuffle, streaming-transparent.
+reduces to exact integer Gram partials, and those partials SUM in
+one dim-keyed aggregate — at d=64 a partial is 2080 rows, so a
+1000-executor reduce moves megabytes, not data.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def pca_train(
-    corpus: DataFrame,
-    emb_col: str,
-    k: int,
-    dim: int = 64,
-) -> tuple[list[float], list[list[float]], list[float]]:
-    """Fit PCA: returns (mean[dim], components[k][dim], explained[k])
-    with components = top-k eigenvectors of the sample covariance
-    (unit length, sign fixed so each component's largest-|coord|
-    entry is positive — eigenvector sign is otherwise arbitrary and
-    would flip between runs), explained = their eigenvalue share.
-    """
-    import numpy as np
-
-    if not (0 < k <= dim):
-        raise ValueError(f"pca_train: need 0 < k <= dim, got k={k} dim={dim}")
-    from product_etl_spark.operators.similarity import _check_dim
-
-    _check_dim(corpus, emb_col, dim)
-
-    from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
-
-    part_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("s", ArrayType(DoubleType())),
-            StructField("ss", ArrayType(DoubleType())),
-        ]
-    )
-
-    def partials(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[emb_col]]
-            )
-            if X.shape[1] != dim:
-                raise ValueError(
-                    f"pca_train: embedding dim {X.shape[1]} != {dim}"
-                )
-            yield pd.DataFrame(
-                {
-                    "n": [len(pdf)],
-                    "s": [X.sum(axis=0)],
-                    "ss": [(X.T @ X).reshape(-1)],
-                }
-            )
-
-    agg = (
-        corpus.select(emb_col)
-        .mapInPandas(partials, part_schema)
-        .agg(
-            F.sum("n").alias("n"),
-            F.array(
-                *[F.sum(F.col("s")[i]) for i in range(dim)]
-            ).alias("s"),
-            F.array(
-                *[F.sum(F.col("ss")[i]) for i in range(dim * dim)]
-            ).alias("ss"),
-        )
-        .collect()[0]
-    )
-    n = agg["n"] or 0
-    if n < 2:
-        raise ValueError(f"pca_train: need >= 2 vectors, got {n}")
-    s = np.asarray(agg["s"], dtype=np.float64)
-    ss = np.asarray(agg["ss"], dtype=np.float64).reshape(dim, dim)
-    mean = s / n
-    cov = (ss - n * np.outer(mean, mean)) / (n - 1)
-    evals, evecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(evals)[::-1][:k]
-    comps = evecs[:, order].T  # (k, dim)
-    for i in range(k):  # deterministic sign
-        j = int(np.argmax(np.abs(comps[i])))
-        if comps[i][j] < 0:
-            comps[i] = -comps[i]
-    total = float(evals.sum()) or 1.0
-    explained = [float(evals[o]) / total for o in order]
-    return mean.tolist(), comps.tolist(), explained
 
 
 def pca_moments(
@@ -118,13 +32,13 @@ def pca_moments(
     (i, j, n, s_i, s_j, gram) where s_i = SUM(round(x_i, 6)) and
     gram = SUM(round(x_i, 6) * round(x_j, 6)) as EXACT decimal sums
     (the q102/q161 moment recipe lifted to the Gram matrix), cast to
-    double once at the surface. mean and covariance — everything
-    ``pca_train``'s eigendecomposition consumes — reconstruct from
-    this frame alone: mean_i = s_i/n (from the (i,i) row), cov_ij =
+    double once at the surface. mean and covariance — everything a
+    PCA eigendecomposition consumes — reconstruct from this frame
+    alone: mean_i = s_i/n (from the (i,i) row), cov_ij =
     (gram_ij - n*mean_i*mean_j)/(n-1). The eigensolve itself is not
     ANSI-expressible, but its entire input is — this query is the
     driver-hashable pin for the PCA family (the q142 seeding-rule
-    pattern applied to q90's trainer).
+    pattern).
 
     Scale shape: PURE MAP + one map-side-combined groupBy on
     dim*(dim+1)/2 keys — each row expands to its own upper-triangle
@@ -192,13 +106,12 @@ def pca_moments(
                 if len(lst) > n_dim:
                     # LOUD guard (r12 ADVICE): silently truncating a
                     # too-long embedding would surface as an opaque
-                    # parity failure; fail like pca_train does.
+                    # parity failure
                     raise ValueError(
                         f"pca_moments: embedding has {len(lst)} dims"
                         f" > dim={n_dim} — reading only 0..{n_dim - 1}"
                         " would silently truncate the vector; pass the"
-                        " true dim (pca_train raises on the same"
-                        " mismatch)"
+                        " true dim"
                     )
                 for i, x in enumerate(lst):
                     if x is not None:
@@ -268,93 +181,3 @@ def pca_moments(
         )
         .orderBy("i", "j")
     )
-
-
-def pca_train_from_moments(
-    moments: list,
-    k: int,
-    dim: int = 64,
-) -> tuple[list[float], list[list[float]], list[float]]:
-    """The eigensolve half of ``pca_train``, consuming EXACTLY the
-    ``pca_moments`` surface (collected rows): rebuilds mean and
-    sample covariance from (i, j, n, s_i, s_j, gram) and runs the
-    identical eigh + deterministic-sign + explained-share tail. The
-    parity test asserts this path reproduces ``pca_train``'s
-    projection on the same corpus up to the 1e-6 input rounding the
-    moment surface commits to."""
-    import numpy as np
-
-    if not (0 < k <= dim):
-        raise ValueError(
-            f"pca_train_from_moments: need 0 < k <= dim, got k={k} dim={dim}"
-        )
-    s = np.zeros(dim)
-    gram = np.zeros((dim, dim))
-    seen = 0
-    n_by_diag: dict[int, int] = {}
-    for r in moments:
-        i, j = int(r["i"]), int(r["j"])
-        gram[i][j] = gram[j][i] = float(r["gram"])
-        if i == j:
-            s[i] = float(r["s_i"])
-            n_by_diag[i] = int(r["n"])
-        seen += 1
-    # r12 ADVICE: pca_moments drops null/short-vector terms PER PAIR,
-    # so on a malformed corpus the per-dimension row counts diverge
-    # and mean_i = s_i/n built from any single n silently skews the
-    # fit. Require every diagonal to agree (a corpus whose malformed
-    # vectors are entirely-null drops them uniformly and still
-    # passes); anything else must be cleaned upstream, matching
-    # pca_train's raise-on-mismatch policy.
-    if len(set(n_by_diag.values())) > 1:
-        lo, hi = min(n_by_diag.values()), max(n_by_diag.values())
-        raise ValueError(
-            "pca_train_from_moments: per-dimension row counts disagree "
-            f"(min n={lo}, max n={hi}) — the corpus has partially-null "
-            "or short vectors; drop/repair them before fitting"
-        )
-    n = next(iter(n_by_diag.values()), None)
-    if seen != dim * (dim + 1) // 2 or n is None or n < 2:
-        raise ValueError(
-            "pca_train_from_moments: incomplete moment frame "
-            f"({seen} rows, n={n})"
-        )
-    mean = s / n
-    cov = (gram - n * np.outer(mean, mean)) / (n - 1)
-    evals, evecs = np.linalg.eigh(cov)
-    order = np.argsort(evals)[::-1][:k]
-    comps = evecs[:, order].T
-    for i in range(k):
-        j = int(np.argmax(np.abs(comps[i])))
-        if comps[i][j] < 0:
-            comps[i] = -comps[i]
-    total = float(evals.sum()) or 1.0
-    explained = [float(evals[o]) / total for o in order]
-    return mean.tolist(), comps.tolist(), explained
-
-
-def pca_project(
-    df: DataFrame,
-    mean: list[float],
-    components: list[list[float]],
-    emb_col: str = "embedding",
-    out_col: str = "pca_emb",
-) -> DataFrame:
-    """Project embeddings onto the fitted components: ``out_col`` is
-    array<double> of length k. Pure map — mean and components inline
-    as literal arrays (k*dim driver state), one zip_with/aggregate
-    dot per component, no UDF, no shuffle; works on batch AND
-    streaming frames."""
-    dim = len(mean)
-    mean_arr = "array(" + ", ".join(f"{float(v)!r}D" for v in mean) + ")"
-    dots = []
-    for comp in components:
-        if len(comp) != dim:
-            raise ValueError("pca_project: component/mean length mismatch")
-        comp_arr = "array(" + ", ".join(f"{float(v)!r}D" for v in comp) + ")"
-        dots.append(
-            f"aggregate(zip_with(zip_with({emb_col}, {mean_arr}, "
-            "(x, mu) -> CAST(x AS DOUBLE) - mu), "
-            f"{comp_arr}, (c, w) -> c * w), 0.0D, (acc, v) -> acc + v)"
-        )
-    return df.withColumn(out_col, F.expr("array(" + ", ".join(dots) + ")"))

@@ -63,8 +63,7 @@ def _normalize_terms(terms: list[str]) -> list[str]:
 
 def _bm25_contrib_expr(k1: float, b: float) -> F.Column:
     """Per-(doc, term) BM25 contribution from columns tf/df/dl/
-    n_docs/avgdl — shaped EXACTLY like the oracle SQL, shared by the
-    corpus-scan and persisted-index paths:
+    n_docs/avgdl — shaped EXACTLY like the oracle's ``scored`` CTE:
       idf  = ln(1 + (N - df + 0.5) / (df + 0.5))
       tfn  = (tf * (k1+1)) / (tf + k1 * (1 - b + b * dl / avgdl))
     rounded to 9 decimals and summed as DECIMAL(18,9) (order-
@@ -425,230 +424,6 @@ def hybrid_rrf_oracle_sql(
     """
 
 
-def mmr_rerank(
-    candidates: DataFrame,
-    k: int = 10,
-    lam: float = 0.5,
-    query_col: str = "query_id",
-    id_col: str = "doc_id",
-    score_col: str = "rel_score",
-    emb_col: str = "embedding",
-) -> DataFrame:
-    """Maximal-marginal-relevance diversification (Carbonell/Goldstein
-    1998) of a per-query candidate set: greedily pick the candidate
-    maximizing ``lam * relevance - (1 - lam) * max_sim_to_selected``
-    until ``k`` are chosen. The anti-redundancy second stage of a
-    retrieval pipeline — run it on the (bounded) output of
-    hybrid_rrf_topk / knn / BM25, never on a raw corpus.
-
-    Returns (query_col, id_col, mmr_rank, mmr_score).
-
-    Shape: the greedy argmax is inherently sequential IN k, so this
-    is the documented applyInPandas case — one Arrow-batched pandas
-    group per query (bounded by the candidate depth contract, which
-    the operator ENFORCES via max_candidates), parallel ACROSS
-    queries. Relevance scores are min-max normalized within the
-    candidate set so ``lam`` weighs comparable [0,1] quantities
-    against cosine similarity.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    max_candidates = 10_000  # greedy is O(k * n * dim) per query
-
-    out_schema = StructType(
-        [
-            candidates.schema[query_col],
-            candidates.schema[id_col],
-            StructField("mmr_rank", IntegerType()),
-            StructField("mmr_score", DoubleType()),
-        ]
-    )
-
-    def _pick(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n > max_candidates:
-            raise ValueError(
-                f"mmr_rerank: {n} candidates for one query exceeds the "
-                f"bounded-candidate contract ({max_candidates}); rerank "
-                "a top-N retrieval output, not a corpus"
-            )
-        pdf = pdf.sort_values(
-            [score_col, id_col], ascending=[False, True], kind="mergesort"
-        ).reset_index(drop=True)
-        X = np.array([np.asarray(v, dtype=np.float64) for v in pdf[emb_col]])
-        norms = np.linalg.norm(X, axis=1)
-        norms[norms == 0.0] = 1.0
-        U = X / norms[:, None]
-        rel = pdf[score_col].to_numpy(dtype=np.float64)
-        span = rel.max() - rel.min()
-        rel = (rel - rel.min()) / span if span > 0 else np.ones_like(rel)
-        chosen: list[int] = []
-        scores: list[float] = []
-        max_sim = np.full(n, -np.inf)
-        for _ in range(min(k, n)):
-            if chosen:
-                sim_new = U @ U[chosen[-1]]
-                max_sim = np.maximum(max_sim, sim_new)
-                mmr = lam * rel - (1.0 - lam) * max_sim
-            else:
-                mmr = lam * rel
-            mmr[chosen] = -np.inf
-            best = int(np.argmax(mmr))  # ties -> first = best rel, lowest id
-            chosen.append(best)
-            scores.append(float(mmr[best]))
-        return pd.DataFrame(
-            {
-                query_col: pdf[query_col].iloc[chosen].to_numpy(),
-                id_col: pdf[id_col].iloc[chosen].to_numpy(),
-                "mmr_rank": np.arange(1, len(chosen) + 1, dtype=np.int32),
-                "mmr_score": np.array(scores, dtype=np.float64),
-            }
-        )
-
-    return candidates.groupBy(query_col).applyInPandas(_pick, out_schema)
-
-
-# ---------------------------------------------------------------------------
-# Persisted inverted index — the lexical twin of similarity.py's
-# persisted IVF index: build once, serve queries that READ ONLY the
-# postings buckets containing the query's terms (partition pruning).
-
-
-def _term_bucket_py(term: str, n_buckets: int) -> int:
-    """Python mirror of functions.text.hash64(term) % n_buckets —
-    needed driver-side to turn query terms into partition filters.
-    Bit-exact with the Spark expression (same md5/15-hex recipe);
-    asserted in tests/test_retrieval_index.py."""
-    import hashlib
-
-    h = int(hashlib.md5(term.encode("utf-8")).hexdigest()[:15], 16)
-    return h % n_buckets
-
-
-def build_inverted_index(
-    docs: DataFrame,
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 64,
-    mode: str = "error",
-) -> None:
-    """Materialize a BM25-servable inverted index:
-
-    - ``postings/`` — (term, doc_id, tf) parquet PARTITIONED BY
-      term_bucket = hash64(term) % n_buckets, so a query touches
-      ~|query terms| buckets out of n_buckets;
-    - ``doclens/`` — (doc_id, dl);
-    - ``stats/`` — 1 row (n_docs, avgdl), Okapi definition (all docs
-      counted, empty docs included — same contract as _bm25_scored).
-
-    Build cost: one tokenize pass + one (doc,term) shuffle — the same
-    work a single bm25_topk query pays; every query after reads only
-    its buckets. Buckets, not raw term partitions: one directory per
-    distinct term would create vocabulary-many partitions (millions of
-    tiny files at corpus scale); hashed buckets keep file counts fixed
-    and partition pruning exact.
-    """
-    from product_etl_spark.functions.text import hash64, index_terms
-
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(index_terms(text_col)).alias("term"),
-    )
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    stats = (
-        docs.agg(F.count(F.lit(1)).alias("n_docs"))
-        .crossJoin(dl.agg(F.sum("dl").alias("_sum_dl")))
-        .withColumn(
-            "avgdl",
-            F.col("_sum_dl").cast("double") / F.col("n_docs").cast("double"),
-        )
-        .drop("_sum_dl")
-    )
-    (
-        tf.withColumn("term_bucket", hash64(F.col("term")) % n_buckets)
-        .write.mode(mode)
-        .partitionBy("term_bucket")
-        .parquet(f"{index_path}/postings")
-    )
-    dl.write.mode(mode).parquet(f"{index_path}/doclens")
-    stats.write.mode(mode).parquet(f"{index_path}/stats")
-
-
-def bm25_topk_indexed(
-    spark,
-    index_path: str,
-    terms: list[str],
-    top_n: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    n_buckets: int = 64,
-    doc_id_type: str = "bigint",
-) -> DataFrame:
-    """BM25 top-k served FROM the persisted index: reads only the
-    postings buckets of the query terms (PartitionFilters — asserted
-    in tests), plus the doclens of matching docs and the 1-row stats.
-    Scores are bit-identical to ``bm25_topk`` over the same corpus:
-    the contribution expression is shared, df is counted from the
-    pruned postings (equal to the batch df by construction), and the
-    decimal-sum contract makes aggregation order irrelevant.
-
-    A FULLY-ERASED index (``erase_from_stores`` deletes a partitioned
-    table outright when every row is erased) is a documented state,
-    not an error: when the postings or doclens table is absent this
-    returns an empty top-k frame (``doc_id_type`` names the erased
-    store's id type, since an absent table carries no schema).
-    """
-    from product_etl_spark.fs import table_exists
-
-    qterms = _normalize_terms(terms)
-    if not (
-        table_exists(spark, f"{index_path}/postings")
-        and table_exists(spark, f"{index_path}/doclens")
-    ):
-        return spark.createDataFrame(
-            [],
-            f"doc_id {doc_id_type}, score double, n_hit_terms bigint",
-        )
-    buckets = sorted({_term_bucket_py(t, n_buckets) for t in qterms})
-    tf = (
-        spark.read.parquet(f"{index_path}/postings")
-        .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(qterms))
-        .select("doc_id", "term", "tf")
-    )
-    dl = spark.read.parquet(f"{index_path}/doclens")
-    stats = spark.read.parquet(f"{index_path}/stats")
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("_contrib", _bm25_contrib_expr(k1, b))
-    )
-    agg = scored.groupBy("doc_id").agg(
-        F.sum("_contrib").alias("_score_dec"),
-        F.count(F.lit(1)).alias("n_hit_terms"),
-    )
-    return (
-        agg.orderBy(F.col("_score_dec").desc(), F.col("doc_id").asc())
-        .limit(top_n)
-        .select(
-            "doc_id",
-            F.round(F.col("_score_dec").cast("double"), 6).alias("score"),
-            "n_hit_terms",
-        )
-    )
-
-
 def trigram_contains_search(
     docs: DataFrame,
     text_col: str,
@@ -664,11 +439,9 @@ def trigram_contains_search(
     1-based INSTR positions.
 
     Replaces the reference's full-table ``LIKE '%...%'`` scans
-    (check_sku_status.py:36-44 family) with an indexable shape: the
-    exploded (trigram, id) rows are exactly a persistable posting
-    frame (partition by trigram hash like retrieval.build_inverted_
-    index) for repeated-query workloads; inline derivation here keeps
-    the catalog query self-contained.
+    (check_sku_status.py:36-44 family) with a pre-filtered scan: the
+    trigram gate is derived from the documents on every call, so no
+    posting store has to be kept in step with the corpus.
 
     Needles shorter than 3 chars have no trigram and fall back to the
     direct scan. Case-insensitive (both sides lowercased)."""
@@ -693,86 +466,6 @@ def trigram_contains_search(
             .select(id_col)
         )
         base = base.join(cand, id_col, "left_semi")
-    return (
-        base.withColumn("first_pos", F.instr(F.col("_t"), nl))
-        .filter(F.col("first_pos") > 0)
-        .select(id_col, "first_pos")
-    )
-
-
-def build_trigram_index(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    index_path: str,
-    n_buckets: int = 64,
-    mode: str = "overwrite",
-) -> None:
-    """Persist the trigram posting frame ``trigram_contains_search``
-    derives inline: distinct (gram, doc_id) rows, written partitioned
-    by ``gram_bucket = hash64(gram) % n_buckets`` (the
-    build_inverted_index recipe), so repeated-needle workloads — the
-    reference's per-sweep LIKE families (check_sku_status.py:36-44,
-    fix_sku_dot_zero.py:39-44) — read only the needle's gram buckets
-    instead of re-shingling the corpus per query.
-
-    The index does NOT duplicate the corpus text (pg_trgm's index
-    doesn't either): searches verify against the caller's docs frame,
-    restricted to candidates first."""
-    from product_etl_spark.functions import text as TX
-    from product_etl_spark.functions.text import hash64
-
-    lowered = F.lower(F.coalesce(F.col(text_col), F.lit("")))
-    grams = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(TX.char_ngrams(lowered, 3))).alias(
-            "gram"
-        ),
-    )
-    (
-        grams.withColumn("gram_bucket", hash64(F.col("gram")) % n_buckets)
-        .write.mode(mode)
-        .partitionBy("gram_bucket")
-        .parquet(f"{index_path}/postings")
-    )
-
-
-def trigram_search_indexed(
-    spark,
-    index_path: str,
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    needle: str,
-    n_buckets: int = 64,
-) -> DataFrame:
-    """Exact substring search served FROM the persisted trigram index:
-    candidate ids come from the needle's gram buckets only (partition
-    filters — asserted in tests), gated on containing EVERY needle
-    trigram; the contains verification then runs on the caller's docs
-    restricted to candidates (left-semi; the candidate set is
-    needle-bounded, so the join broadcasts). Results are identical to
-    ``trigram_contains_search`` over the same corpus: same gram gate,
-    same INSTR verify.
-
-    Needles shorter than 3 chars have no trigram: falls back to the
-    direct scan (identical to the inline operator's fallback)."""
-    nl = needle.lower()
-    qgrams = sorted({nl[i : i + 3] for i in range(len(nl) - 2)})
-    lowered = F.lower(F.coalesce(F.col(text_col), F.lit("")))
-    base = docs.select(F.col(id_col), lowered.alias("_t"))
-    if qgrams:
-        buckets = sorted({_term_bucket_py(g, n_buckets) for g in qgrams})
-        cand = (
-            spark.read.parquet(f"{index_path}/postings")
-            .filter(F.col("gram_bucket").isin(buckets))
-            .filter(F.col("gram").isin(qgrams))
-            .groupBy("doc_id")
-            .agg(F.countDistinct("gram").alias("_ng"))
-            .filter(F.col("_ng") == len(qgrams))
-            .select(F.col("doc_id").alias(id_col))
-        )
-        base = base.join(F.broadcast(cand), id_col, "left_semi")
     return (
         base.withColumn("first_pos", F.instr(F.col("_t"), nl))
         .filter(F.col("first_pos") > 0)

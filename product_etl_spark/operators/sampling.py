@@ -424,14 +424,14 @@ def append_balanced_shards(
     an n_shards-bounded literal array lookup for the lightest-first
     permutation. History is never read — the state is n_shards rows.
 
-    Erasure posture (r14 verdict item 5): after ``erase_from_stores``
-    on the manifests, totals recomputed with ``shard_weight_totals``
+    Deletion posture (r14 verdict item 5): after rows are anti-joined
+    out of the manifests, totals recomputed with ``shard_weight_totals``
     are EXACT again, but the balance contract above restarts from the
-    post-erasure spread — the snake's direction alternation cancels
+    post-deletion spread — the snake's direction alternation cancels
     within-pass bias by design, so appends bound the spread at
-    (post-erasure spread + 2x max weight) rather than healing the
-    hole. Light erasure therefore just rides along; after HEAVY
-    erasure, re-deal the remaining corpus with ``balanced_shards``
+    (post-deletion spread + 2x max weight) rather than healing the
+    hole. Light deletion therefore just rides along; after HEAVY
+    deletion, re-deal the remaining corpus with ``balanced_shards``
     (one batch pass) to restore the 2x bound."""
     if n_shards < 1:
         raise ValueError(

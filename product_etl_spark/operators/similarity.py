@@ -4,11 +4,10 @@
   against the fully-partitioned corpus; per-query top-k via window.
   The corpus side never shuffles: at 100 TB this is a map + window
   over query-id partitions (queries are small by construction).
-- ``lsh_assign_buckets`` / ``knn_lsh``: random-hyperplane LSH — the
-  scale path. Vectors hash to 2^planes buckets by dot-product sign
-  against deterministic hyperplanes; queries probe only their bucket,
-  cutting the candidate set ~2^planes-fold with the usual recall
-  trade-off (probe neighboring buckets for higher recall).
+- ``lsh_assign_buckets``: random-hyperplane LSH buckets. Vectors
+  hash to 2^planes buckets by dot-product sign against deterministic
+  hyperplanes; a bucket id is a blocking key for the within-block
+  scans (``cosine_near_dup_pairs``).
 
 Hyperplanes are md5-derived constants (portable + reproducible in
 the DuckDB oracle); norms are zip_with/aggregate expressions and
@@ -89,43 +88,6 @@ def _check_dim(df: DataFrame, emb_col: str, dim: int) -> None:
             f"dim={row['_d']} so vector ops (LSH buckets, PQ codes) "
             "line up with the data"
         )
-
-
-def _with_list_id(df: DataFrame, centroids: DataFrame, emb_col: str) -> DataFrame:
-    """Attach the nearest-centroid list_id as a PURE MAP (fused
-    literal argmin — centroids are k·dim driver state by contract).
-    Falls back to the broadcast crossJoin assignment only above the
-    expression-size guard."""
-    cent_rows = sorted(
-        (r["list_id"], list(r["centroid"])) for r in centroids.collect()
-    )
-    if not cent_rows:
-        return df.withColumn("list_id", F.lit(None).cast("int")).filter(
-            F.lit(False)
-        )
-    if len(cent_rows) * len(cent_rows[0][1]) > _FUSED_ASSIGN_MAX_LITERALS:
-        spark = df.sparkSession
-        cents = spark.createDataFrame(
-            cent_rows, "list_id int, centroid array<float>"
-        )
-        nearest = (
-            df.crossJoin(F.broadcast(cents))
-            .groupBy(*df.columns)
-            .agg(
-                F.min(
-                    F.struct(
-                        V.l2_distance(emb_col, "centroid").alias("dist"),
-                        F.col("list_id").alias("list_id"),
-                    )
-                ).alias("_best")
-            )
-            .withColumn("list_id", F.col("_best.list_id"))
-            .drop("_best")
-        )
-        return nearest
-    return df.withColumn(
-        "list_id", _argmin_literal_expr(cent_rows, emb_col)["list_id"]
-    )
 
 
 def topk_per_key(
@@ -506,83 +468,6 @@ def ivf_assign(
     )
 
 
-def knn_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    emb_col: str,
-    id_col: str,
-    k: int = 5,
-    n_lists: int = 4,
-) -> DataFrame:
-    """IVF-style approximate top-k: probe only the query's nearest
-    inverted list (nprobe=1). Candidate set ~|corpus|/n_lists; same
-    output schema as knn_bruteforce."""
-    cents = ivf_centroids(corpus, emb_col, id_col, n_lists)
-    # map-only list attach (fused literal argmin): the former
-    # ivf_assign + join-back on id shuffled the corpus twice for what
-    # is a pure per-row computation against k centroids
-    assigned = _with_list_id(corpus, cents, emb_col)
-    q_assigned = _with_list_id(queries, cents, emb_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(emb_col).alias("_q_emb"),
-        V.norm(emb_col).alias("_q_norm"),
-        F.col("list_id").alias("_q_list"),
-    )
-    sims = assigned.withColumn("_c_norm", V.norm(emb_col)).join(
-        F.broadcast(q_assigned),
-        (F.col("list_id") == F.col("_q_list")) & (F.col(id_col) != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        V.safe_cosine(V.dot_udf()(F.col("_q_emb"), F.col(emb_col)), F.col("_q_norm"), F.col("_c_norm")).alias("sim"),
-    )
-    return topk_per_key(
-        sims,
-        ["query_id"],
-        [F.desc("sim"), F.asc("neighbor_id")],
-        k,
-        rank_col="rn",
-    ).select("query_id", "neighbor_id", F.round("sim", 4).alias("cos_sim"))
-
-
-def knn_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    emb_col: str,
-    id_col: str,
-    k: int = 5,
-    n_planes: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """Approximate top-k: brute-force cosine *within the query's LSH
-    bucket only*. Same output schema as knn_bruteforce; recall < 1.0
-    by construction, candidate set ~|corpus| / 2^n_planes."""
-    planes = hyperplanes(n_planes, dim)
-    c = corpus.withColumn("bucket", bucket_expr(emb_col, planes))
-    q = queries.withColumn("_q_bucket", bucket_expr(emb_col, planes)).select(
-        F.col(id_col).alias("query_id"),
-        F.col(emb_col).alias("_q_emb"),
-        V.norm(emb_col).alias("_q_norm"),
-        "_q_bucket",
-    )
-    sims = c.withColumn("_c_norm", V.norm(emb_col)).join(
-        F.broadcast(q),
-        (F.col("bucket") == F.col("_q_bucket"))
-        & (F.col(id_col) != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        V.safe_cosine(V.dot_udf()(F.col("_q_emb"), F.col(emb_col)), F.col("_q_norm"), F.col("_c_norm")).alias("sim"),
-    )
-    return topk_per_key(
-        sims,
-        ["query_id"],
-        [F.desc("sim"), F.asc("neighbor_id")],
-        k,
-        rank_col="rn",
-    ).select("query_id", "neighbor_id", F.round("sim", 4).alias("cos_sim"))
-
-
 def cosine_near_dup_pairs(
     corpus: DataFrame,
     emb_col: str,
@@ -600,8 +485,7 @@ def cosine_near_dup_pairs(
     work is O(sum of block_size^2), never corpus^2 — the blocking
     key is the semantic contract (cluster id from k-means / LSH
     bucket / source shard), exactly how SemDeDup restricts cosine
-    comparisons to within-cluster pairs. For unblocked approximate
-    variants use ``knn_lsh`` (hyperplane buckets) instead. The join
+    comparisons to within-cluster pairs. The join
     shuffles both sides by the block key once; skewed giant blocks
     should be pre-split upstream (see operators/skew.py).
     """
@@ -644,110 +528,6 @@ def cosine_near_dup_pairs(
             block_col, "id_a", "id_b", F.round("sim", 4).alias("cos_sim")
         )
     )
-
-
-def write_ivf_index(
-    corpus: DataFrame,
-    emb_col: str,
-    id_col: str,
-    path: str,
-    n_lists: int = 4,
-    kmeans_iters: int = 0,
-) -> None:
-    """Build and persist an IVF index: ``<path>/centroids`` (k rows)
-    and ``<path>/lists`` — the corpus with its list assignment,
-    written ``partitionBy(list_id)``.
-
-    The partition layout is the index: each inverted list is its own
-    parquet directory, so a probe reads ONLY its nprobe lists via
-    partition pruning (PartitionFilters on list_id — asserted in
-    tests). Build once, serve many: at 100 TB the build is one
-    broadcast-assign pass + a partitioned write, and every subsequent
-    query batch touches ~nprobe/n_lists of the bytes.
-
-    ``kmeans_iters > 0`` trains real Lloyd's centroids
-    (ivf_centroids_kmeans); 0 keeps the deterministic lowest-id seeds
-    the oracle can reproduce.
-    """
-    if kmeans_iters > 0:
-        cents = ivf_centroids_kmeans(
-            corpus, emb_col, id_col, n_lists=n_lists, n_iters=kmeans_iters
-        )
-    else:
-        cents = ivf_centroids(corpus, emb_col, id_col, n_lists=n_lists)
-    # map-only fused assignment: the index build is ONE pass over the
-    # corpus + the partitioned write — no assignment join-back shuffle
-    assigned = _with_list_id(corpus, cents, emb_col)
-    assigned.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/lists"
-    )
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def knn_ivf_index(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    emb_col: str,
-    id_col: str,
-    k: int = 5,
-    nprobe: int = 1,
-) -> DataFrame:
-    """Approximate top-k against a persisted IVF index, reading only
-    the probed inverted lists.
-
-    Per query: rank the (broadcast, k-row) centroid table by L2
-    distance and keep the ``nprobe`` nearest lists; the union of
-    probed list ids — at most n_lists values, collected driver-side
-    like any partition-pruning predicate — becomes an ``isin`` filter
-    on the lists directory's partition column, so the scan's
-    PartitionFilters skip every unprobed list's files entirely.
-    Then exact cosine within the candidate set and a per-query
-    top-k window, same output schema as knn_bruteforce/knn_ivf.
-    """
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    ranked = (
-        queries.crossJoin(F.broadcast(cents))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(emb_col).alias("_q_emb"),
-            V.norm(emb_col).alias("_q_norm"),
-            "list_id",
-            V.l2_distance(emb_col, "centroid").alias("_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("_dist", "list_id")
-    q_probe = (
-        ranked.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "_q_emb", "_q_norm", F.col("list_id").alias("_q_list"))
-    )
-    probe_lists = [
-        r["_q_list"] for r in q_probe.select("_q_list").distinct().collect()
-    ]
-    lists = spark.read.parquet(f"{index_path}/lists").filter(
-        F.col("list_id").isin(probe_lists)
-    )
-    sims = lists.withColumn("_c_norm", V.norm(emb_col)).join(
-        F.broadcast(q_probe),
-        (F.col("list_id") == F.col("_q_list"))
-        & (F.col(id_col) != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        V.safe_cosine(
-            V.dot_udf()(F.col("_q_emb"), F.col(emb_col)),
-            F.col("_q_norm"),
-            F.col("_c_norm"),
-        ).alias("sim"),
-    )
-    return topk_per_key(
-        sims,
-        ["query_id"],
-        [F.desc("sim"), F.asc("neighbor_id")],
-        k,
-        rank_col="rn",
-    ).select("query_id", "neighbor_id", F.round("sim", 4).alias("cos_sim"))
 
 
 # ------------------------------------------------------- exact Lloyd step
@@ -1030,134 +810,6 @@ def semdedup_exact(
     )
 
 
-def incremental_semdedup(
-    spark,
-    batch: DataFrame,
-    store_path: str,
-    centroids: DataFrame,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.3,
-) -> tuple[DataFrame, DataFrame]:
-    """Continuous-ingest twin of ``semdedup_exact``: split ``batch``
-    into (accepted, rejected) against the accepted-vector store at
-    ``store_path`` AND within itself — comparing ONLY within IVF
-    cells — then append the accepted rows (idempotently: ids already
-    stored are never re-appended).
-
-    ``centroids`` (list_id, _cent) must be the SAME frame every batch
-    — the cell geometry is the store's partition contract (train once
-    on a bootstrap sample via ``ivf_centroids_kmeans``, or use the
-    ``semdedup_exact`` seed rule on the first batch). A batch row is
-    REJECTED when some stored vector, or an accepted batch vector
-    with a smaller id, in ITS OWN cell clears ``threshold``; rejected
-    rows carry (id, list_id, matched_id, cos_sim) of their nearest
-    offender (highest similarity, ties -> lowest id). Cross-cell
-    near-duplicates are never compared — the SemDeDup contract.
-
-    Ingesting batches in ascending id order reproduces the batch
-    operator exactly: accepted ids == semdedup_exact(union).kept
-    (pytest-pinned; same centroid frame, same IEEE cosine order).
-    Replay-safe: a re-ingested row collides with its OWN stored copy
-    (cos = 1.0 >= any threshold) and appends nothing. RTBF:
-    ``erase_from_stores(..., id_col, partition_by=["list_id"])``
-    forgets a subject while preserving the cell layout; a later
-    near-dup of the erased vector is accepted again (pytest).
-
-    Scale shape: the store holds one (id, cell, embedding, norm) row
-    per ACCEPTED vector, partitioned by list_id — each batch reads
-    only the cells the batch touches (partition pruning); candidates
-    join on the cell id (never all-pairs, never cross-cell); history
-    embeddings are touched only for same-cell candidates. Norms are
-    stored, not recomputed per comparison."""
-    from product_etl_spark.fs import table_exists
-
-    assigned = _assign_exact_map(
-        batch, centroids, emb_col, id_col, keep_emb=True
-    ).localCheckpoint(eager=True)
-    a = assigned.select(
-        F.col(id_col),
-        "list_id",
-        F.col(emb_col).alias("_emb"),
-        V.norm(emb_col).alias("_nrm"),
-    ).localCheckpoint(eager=True)
-
-    cells = [r["list_id"] for r in a.select("list_id").distinct().collect()]
-    cand = None
-    if table_exists(spark, store_path):
-        stored = (
-            spark.read.parquet(store_path)
-            # touch only the cells this batch occupies
-            .filter(F.col("list_id").isin(cells))
-            .select(
-                F.col(id_col).alias("_mid"),
-                "list_id",
-                F.col(emb_col).alias("_memb"),
-                F.col("norm").alias("_mnrm"),
-            )
-        )
-        cand = a.join(stored, "list_id")
-    peers = a.select(
-        F.col(id_col).alias("_mid"),
-        "list_id",
-        F.col("_emb").alias("_memb"),
-        F.col("_nrm").alias("_mnrm"),
-    )
-    c2 = a.join(peers, "list_id").filter(F.col("_mid") < F.col(id_col))
-    cand = c2 if cand is None else cand.unionByName(c2)
-    scored = cand.select(
-        F.col(id_col),
-        "list_id",
-        F.col("_mid"),
-        V.safe_cosine(
-            V.dot_udf()(F.col("_emb"), F.col("_memb")),
-            F.col("_nrm"),
-            F.col("_mnrm"),
-        ).alias("_sim"),
-    ).filter(F.col("_sim") >= threshold)
-    nearest = (
-        scored.groupBy(id_col)
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("_sim")).alias("ns"),
-                    F.col("_mid").alias("m"),
-                )
-            ).alias("_n"),
-            F.first("list_id").alias("list_id"),
-        )
-        .select(
-            id_col,
-            "list_id",
-            F.col("_n.m").alias("matched_id"),
-            F.round(-F.col("_n.ns"), 4).alias("cos_sim"),
-        )
-    )
-    rejected = batch.drop("list_id").join(nearest, id_col)
-    keep_ids = a.select(id_col).join(
-        nearest.select(id_col), id_col, "left_anti"
-    )
-    accepted = batch.join(keep_ids, id_col, "left_semi")
-
-    to_append = (
-        a.join(keep_ids, id_col, "left_semi")
-        .select(
-            F.col(id_col),
-            "list_id",
-            F.col("_emb").alias(emb_col),
-            F.col("_nrm").alias("norm"),
-        )
-    )
-    if table_exists(spark, store_path):
-        existing = spark.read.parquet(store_path).select(F.col(id_col))
-        to_append = to_append.join(existing, id_col, "left_anti")
-    if to_append.limit(1).count():
-        to_append.write.mode("append").partitionBy("list_id").parquet(
-            store_path
-        )
-    return accepted, rejected
-
-
 def signbit_bands(
     df: DataFrame,
     emb_col: str,
@@ -1213,9 +865,7 @@ def ann_recall_audit(
     candidate search (``signbit_bands``) against the exact cosine
     ground truth (``knn_bruteforce``), per query — the audit a
     pipeline runs before trusting an approximate index for
-    retrieval-based dedup or similarity search (the repo has the
-    searchers — LSH/IVF/PQ/Hamming — but until this operator, no
-    measurement of what they give up).
+    retrieval-based dedup or similarity search.
 
     Queries are the ``n_queries`` lowest-id vectors (deterministic).
     Output: (query_id, n_candidates, hits, recall) — candidate-set

@@ -326,7 +326,7 @@ def quantile_sample_partials(
     Kaplan 2007 summarize the bottom-k estimator family).
 
     Subject erasure: rows are (group, hv, val) — anti-join on
-    hv = hash64(erased key) via erasure.erase_from_stores. Dropping
+    hv = hash64(erased key) to drop a subject's row. Dropping
     sampled rows is SAFE but lossy (the survivors are still a
     uniform hash sample of the remaining corpus, just possibly
     fewer than k — erased slots are not backfilled without a

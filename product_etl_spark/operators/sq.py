@@ -4,14 +4,13 @@ recipe), next to product quantization (pq.py).
 
 SQ8 stores one byte per DIMENSION (64-dim float32: 256 B -> 64 B,
 4x) with near-exact distances; PQ stores ~4 bits per SUBSPACE (64x)
-with coarser distances. A 100 TB deployment typically serves
-candidates from the PQ index and re-ranks the survivors against SQ8
-codes — both corpus-side states fit where float32 cannot.
+with coarser distances. Both corpus-side states fit where float32
+cannot.
 
 Spark-first shape: training is ONE pass computing per-dimension
 min/max (posexplode -> dim-keyed agg, map-side combined, never
-corpus-keyed; driver state is 2*dim doubles). Encode/decode/distance
-are PURE MAP transform-lambdas over literal bounds arrays — no
+corpus-keyed; driver state is 2*dim doubles). Encode and the sign
+bits are PURE MAP transform-lambdas over literal bounds arrays — no
 shuffle, no UDF, streaming-transparent. The DuckDB oracle reproduces
 encode exactly: bounds are data-derived but both engines compute the
 identical doubles from the identical floats, and the quantization
@@ -58,8 +57,7 @@ def _bounds_struct_array(mins: list[float], maxs: list[float]) -> str:
     pattern) — a runtime zip_with over two literal arrays would
     rebuild the same structs per ROW, which Catalyst does not
     constant-fold. Constant dimensions (max == min) get span 1 so the
-    division is guarded and the decode reproduces the constant
-    exactly (code 0)."""
+    division is guarded and the constant encodes to code 0."""
     return "array(" + ", ".join(
         f"named_struct('l', {float(l)!r}D, 's', "
         f"{(float(h) - float(l)) if h != l else 1.0!r}D)"
@@ -71,8 +69,8 @@ def _row_guard(emb_col: str, dim: int, fn_name: str, code: str) -> str:
     """Shared per-row integrity guard: wrong-length or NULL-element
     embeddings RAISE (GREATEST/LEAST and zip_with skip NULLs, so an
     unguarded path would fabricate plausible values from corrupt
-    input). One definition so the three guarded paths (sq8_encode,
-    bin_sign_encode, sq8_l2_rerank) cannot drift."""
+    input). One definition so the guarded paths (sq8_encode,
+    bin_sign_encode) cannot drift."""
     return (
         f"IF(size({emb_col}) = {dim} AND NOT exists({emb_col}, "
         f"x -> x IS NULL), {code}, "
@@ -92,7 +90,7 @@ def sq8_encode(
     byte per dimension in Tungsten rows and parquet, which is the
     whole point of SQ8 (an int array would silently keep the float32
     footprint). The stored value is ``code - 128`` (codes 0..255 ->
-    -128..127); ``sq8_decode_expr`` adds the offset back.
+    -128..127); a reader adds 128 back.
 
     Every row is integrity-guarded: a wrong-length embedding or a
     NULL element RAISES instead of quantizing to the per-dimension
@@ -113,62 +111,6 @@ def sq8_encode(
     return df.withColumn(
         out_col, F.expr(_row_guard(emb_col, dim, "sq8_encode", code))
     )
-
-
-def sq8_decode_expr(code_col: str, bounds: Bounds) -> F.Column:
-    """Dequantized embedding (array<double>) from SQ8 tinyint codes:
-    ``min + (code + 128) * span / 255`` — for re-ranking or feeding
-    the exact-distance kernels."""
-    mins, maxs = bounds
-    b = _bounds_struct_array(mins, maxs)
-    return F.expr(
-        f"zip_with({code_col}, {b}, (c, b) -> "
-        "b.l + (CAST(c AS DOUBLE) + 128.0D) * b.s / 255.0D)"
-    )
-
-
-def sq8_l2_rerank(
-    coded_corpus: DataFrame,
-    queries: DataFrame,
-    bounds: Bounds,
-    k_neighbors: int = 5,
-    corpus_id: str = "vec_id",
-    query_id: str = "vec_id",
-    query_emb: str = "embedding",
-    code_col: str = "sq_code",
-) -> DataFrame:
-    """Asymmetric L2 top-k against SQ8 codes: the query stays float,
-    the corpus is dequantized inside the distance lambda — the
-    re-rank stage of a PQ-then-SQ8 serving stack. Broadcast queries,
-    corpus never shuffles, bounded top-k (topk_per_key)."""
-    from product_etl_spark.operators.similarity import topk_per_key
-
-    dim = len(bounds[0])
-    q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.expr(
-            _row_guard(query_emb, dim, "sq8_l2_rerank", query_emb)
-        ).alias("_q_emb"),
-    )
-    pairs = coded_corpus.select(
-        F.col(corpus_id).alias("neighbor_id"), code_col
-    ).crossJoin(F.broadcast(q))
-    scored = pairs.withColumn(
-        "_deq", sq8_decode_expr(code_col, bounds)
-    ).withColumn(
-        "sq_dist2",
-        F.expr(
-            "aggregate(zip_with(_q_emb, _deq, (x, y) -> "
-            "(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-            "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        ),
-    ).drop("_deq")
-    return topk_per_key(
-        scored,
-        ["query_id"],
-        [F.col("sq_dist2").asc(), F.col("neighbor_id").asc()],
-        k_neighbors,
-    ).select("query_id", "neighbor_id", "sq_dist2", "rank")
 
 
 def sq8_codes_oracle_sql() -> str:

@@ -429,8 +429,6 @@ def stream_ingest_csv(
     schema_cols: list[str],
     sep: str = ";",
     max_files_per_trigger: int | None = None,
-    suppression_path: str | None = None,
-    suppression_key: str | None = None,
 ):
     """Continuous product ingest: a file-source stream over the raw
     export directory; each micro-batch runs the full batch ingest
@@ -454,12 +452,6 @@ def stream_ingest_csv(
     each batch's file set); which contract you want depends on
     whether the files are cumulative re-exports (use per-file) or
     one export split into parts (use unbounded).
-
-    ``suppression_path``/``suppression_key``: anti-join every
-    micro-batch against the erasure suppression list
-    (operators/erasure.apply_suppression) BEFORE the merge — without
-    this, the next feed run silently re-creates every erased subject
-    (the ingest-side half of right-to-be-forgotten).
     """
     from pyspark.sql.types import StringType, StructField, StructType
 
@@ -500,17 +492,6 @@ def stream_ingest_csv(
             # hold. Total the order as (file, in-file position) exactly
             # like the batch reader does.
             raw = total_order_row_idx(batch)
-            if suppression_path is not None:
-                from product_etl_spark.operators.erasure import (
-                    apply_suppression,
-                )
-
-                raw = apply_suppression(
-                    raw, batch.sparkSession, suppression_path,
-                    suppression_key,
-                )
-                if raw.isEmpty():
-                    return  # the whole batch was erased subjects
             run_ingest(batch.sparkSession, raw, warehouse)
         finally:
             batch.unpersist()

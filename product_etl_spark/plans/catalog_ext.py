@@ -434,10 +434,9 @@ def q55_events_per_day_of_week(spark, sf_dir):
 )
 def q56_ivf_assignment(spark, sf_dir):
     """IVF inverted-list build: every vector assigned to its nearest
-    coarse centroid (operators/similarity.ivf_assign). The probe-side
-    twin (knn_ivf) is covered by pytest; this pins the assignment —
-    the part whose distribution matters at 100 TB (broadcast
-    centroids, corpus never shuffles, one window argmin)."""
+    coarse centroid (operators/similarity.ivf_assign) — the part
+    whose distribution matters at 100 TB (broadcast centroids, corpus
+    never shuffles, one window argmin)."""
     from product_etl_spark.operators import similarity as SIM_
 
     e = _t(spark, sf_dir, "embeddings")

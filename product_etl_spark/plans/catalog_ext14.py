@@ -45,12 +45,12 @@ from product_etl_spark.plans.catalog import _t, register
 def q213_pca_gram_moments(spark, sf_dir):
     """PCA sufficient statistics as exact decimal Gram moments
     (pca.pca_moments): one row per upper-triangle dim pair with
-    (n, s_i, s_j, gram) — mean and covariance, the ENTIRE input of
-    pca_train's eigendecomposition, reconstruct from this frame
-    alone (pca.pca_train_from_moments; parity pytest asserts the
-    moment-trained projection matches the direct trainer). The
-    eigensolve isn't ANSI-expressible; its sufficient statistics are
-    — the q102/q161 exact-moment recipe lifted to the Gram matrix.
+    (n, s_i, s_j, gram). The mean (s_i / n on the diagonal rows) and
+    the sample covariance ((gram - n * mean_i * mean_j) / (n - 1))
+    reconstruct from this frame alone, so it is the entire input of
+    a PCA eigendecomposition. The eigensolve isn't ANSI-expressible;
+    its sufficient statistics are — the q102/q161 exact-moment recipe
+    lifted to the Gram matrix.
 
     Engine-exact: inputs round to 6 dp then DECIMAL(18,6); products
     and sums stay exact decimals (order-free), one double cast at

@@ -8,10 +8,6 @@ the same left-to-right order as Spark's aggregate(zip_with(...)),
 argmin ties break to the first (lowest) code in both engines
 (array_position vs list_position on the min), and the code-selected
 centroid in ADC is a nested-list-literal index in both.
-
-Trained codebooks (pq.train_codebooks, iterative Lloyd's) follow the
-q93 precedent: pytest-bounded (tests/test_pq.py quantization-error
-descent + recall), not ANSI-expressible.
 """
 
 from __future__ import annotations
@@ -118,9 +114,7 @@ def q116_pq_adc_topk(spark, sf_dir):
     is looked up through the codebooks — never decompressed. The
     coded corpus side NEVER shuffles (broadcast queries + map +
     query-keyed window); at 100 TB the scan reads 4-byte codes, not
-    256-byte embeddings. Scale twin with coarse pruning:
-    pq.knn_ivf_pq (FAISS IVFPQ shape), recall-tested in
-    tests/test_pq.py."""
+    256-byte embeddings."""
     emb = _t(spark, sf_dir, "embeddings")
     corpus = PQ.pq_encode(
         emb.filter(F.col("vec_id") >= 3), "embedding", _BOOKS, dim=_DIM

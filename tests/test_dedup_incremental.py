@@ -1,32 +1,10 @@
-"""Cross-batch probes against persisted stores
-(operators/dedup_incremental.py): the store-existence probe, and the
-suffix-span probe (q218/q219) that answers for a new batch without
-touching historical text."""
+"""Cross-batch probe against a persisted store
+(operators/dedup_incremental.py): the suffix-span probe (q218/q219)
+that answers for a new batch without touching historical text."""
 
 from __future__ import annotations
 
-import warnings
-
-import pytest
 from pyspark.sql import functions as F
-
-from product_etl_spark.operators.dedup_incremental import read_signature_store
-
-
-def test_store_probe_read_based_not_fs_based(spark, tmp_path):
-    """ADVICE fix: the store probe attempts the read (works for any
-    Hadoop-FS URI) — missing path -> None, any OTHER failure (e.g. a
-    corrupt store file) propagates instead of silently re-seeding. The
-    absent-path probe uses no deprecated PySpark API."""
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", FutureWarning)
-        assert read_signature_store(spark, str(tmp_path / "absent")) is None
-
-    corrupt = tmp_path / "store"
-    corrupt.mkdir()
-    (corrupt / "part-00000.parquet").write_bytes(b"not parquet at all")
-    with pytest.raises(Exception):
-        read_signature_store(spark, str(corrupt)).collect()
 
 
 def _sdocs(spark, rows):

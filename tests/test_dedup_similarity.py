@@ -105,37 +105,6 @@ def test_knn_bruteforce_finds_clone(spark):
     assert out[0]["cos_sim"] == 1.0
 
 
-def test_knn_lsh_same_bucket_clone(spark):
-    emb = _embeddings(spark)
-    out = S.knn_lsh(
-        emb, emb.filter(F.col("vec_id") == 0), "embedding", "vec_id", k=3, dim=8
-    ).collect()
-    # the clone hashes to the same bucket (identical signs) and wins
-    assert out and out[0]["neighbor_id"] == 1000
-    # candidate set is bucket-restricted: fewer rows examined than corpus
-    buckets = S.lsh_assign_buckets(emb, "embedding", dim=8)
-    bucket0 = buckets.filter(F.col("vec_id") == 0).collect()[0]["bucket"]
-    n_in_bucket = buckets.filter(F.col("bucket") == bucket0).count()
-    assert n_in_bucket < 65
-
-
-def test_knn_ivf_finds_clone_when_colocated(spark):
-    emb = _embeddings(spark)
-    from product_etl_spark.operators.similarity import ivf_assign, ivf_centroids, knn_ivf
-
-    out = knn_ivf(
-        emb, emb.filter(F.col("vec_id") == 0), "embedding", "vec_id", k=3, n_lists=4
-    ).collect()
-    # the clone (1000) is a scaled copy of vec 0 -> same nearest
-    # centroid -> same inverted list -> found at rank 1
-    assert out and out[0]["neighbor_id"] == 1000
-    # assignment is total: every vector lands in exactly one list
-    cents = ivf_centroids(emb, "embedding", "vec_id", 4)
-    assigned = ivf_assign(emb, cents, "embedding", "vec_id")
-    assert assigned.count() == emb.count()
-    assert assigned.select("vec_id").distinct().count() == emb.count()
-
-
 def test_winnowing_shared_fingerprints(spark):
     from product_etl_spark.operators.dedup import winnowing_fingerprints
 
@@ -203,33 +172,6 @@ def test_connected_components_with_lsh_pipeline(spark):
     # 0,1,2,4 are all near/exact dups of each other -> one cluster
     assert comp[0] == comp[1] == comp[2] == comp[4] == 0
     assert 3 not in comp  # unrelated doc has no pairs at all
-
-
-def test_embedding_normalize_and_quantize(spark):
-    from product_etl_spark.operators.embeddings import (
-        dequantize_int8,
-        quantize_int8,
-        unit_normalize,
-    )
-    from product_etl_spark.functions import vectors as V
-
-    emb = _embeddings(spark, n=16, dim=8)
-    normed = unit_normalize(emb, "embedding", "unit")
-    norms = normed.select(F.round(V.norm("unit"), 6).alias("n")).collect()
-    assert all(r["n"] == 1.0 for r in norms)
-
-    q = quantize_int8(emb, "embedding")
-    deq = dequantize_int8(q, "q_embedding", "scale_embedding", "restored")
-    # cosine(original, dequantized) ~ 1 (int8 keeps direction)
-    sims = deq.select(
-        F.round(V.cosine("embedding", "restored"), 3).alias("c")
-    ).collect()
-    assert all(r["c"] >= 0.99 for r in sims)
-    # codes bounded to int8 range
-    rng = q.select(
-        F.array_max("q_embedding").alias("hi"), F.array_min("q_embedding").alias("lo")
-    ).collect()
-    assert all(-127 <= r["lo"] and r["hi"] <= 127 for r in rng)
 
 
 def test_multi_file_ingest_order(spark, tmp_path):
@@ -450,57 +392,6 @@ def test_cosine_near_dup_pairs_salted_identical(spark):
     )
     as_set = lambda d: {tuple(r) for r in d.collect()}  # noqa: E731
     assert as_set(plain) == as_set(salted) and plain.count() > 0
-
-
-@pytest.mark.slow
-def test_ivf_index_persist_and_pruned_probe(spark, sf_dir, tmp_path):
-    from pyspark.sql import functions as F
-
-    from product_etl_spark.operators import similarity as SIM
-    from product_etl_spark.session import load_tables
-
-    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    idx = str(tmp_path / "ivf_index")
-    SIM.write_ivf_index(emb, "embedding", "vec_id", idx, n_lists=4)
-
-    queries = emb.filter(F.col("vec_id") < 3)
-    got = SIM.knn_ivf_index(spark, idx, queries, "embedding", "vec_id",
-                            k=5, nprobe=1)
-    # identical results to the non-persisted IVF path (same seed
-    # centroids, nprobe=1)
-    want = SIM.knn_ivf(emb, queries, "embedding", "vec_id", k=5, n_lists=4)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    # the probe scan prunes unprobed lists at the PARTITION level
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    scan_lines = [ln for ln in plan.splitlines()
-                  if "Scan parquet" in ln or "PartitionFilters" in ln]
-    assert any("PartitionFilters: [list_id" in ln
-               for ln in scan_lines), scan_lines
-    # nprobe=1 over 3 near-identical queries probes 1 list of 4; the
-    # candidate read is a strict subset of the corpus
-    probed = got.select("neighbor_id").distinct().count()
-    assert probed < emb.count()
-
-
-def test_ivf_index_nprobe_widens_candidates(spark, sf_dir, tmp_path):
-    from pyspark.sql import functions as F
-
-    from product_etl_spark.operators import similarity as SIM
-    from product_etl_spark.session import load_tables
-
-    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    idx = str(tmp_path / "ivf_index2")
-    SIM.write_ivf_index(emb, "embedding", "vec_id", idx, n_lists=4)
-    q = emb.filter(F.col("vec_id") == 0)
-    n1 = SIM.knn_ivf_index(spark, idx, q, "embedding", "vec_id",
-                           k=1000, nprobe=1).count()
-    n4 = SIM.knn_ivf_index(spark, idx, q, "embedding", "vec_id",
-                           k=1000, nprobe=4).count()
-    # probing every list must see at least as many candidates, and
-    # all-but-self at nprobe=n_lists
-    assert n4 >= n1
-    assert n4 == emb.count() - 1
 
 
 @pytest.mark.slow

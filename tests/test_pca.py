@@ -1,5 +1,5 @@
-"""PCA: planted low-rank recovery, numpy cross-check, projection
-properties, streaming-transparent map."""
+"""PCA moments: the exact Gram surface q213 returns, checked against
+numpy, and its malformed-row policy."""
 
 from __future__ import annotations
 
@@ -7,9 +7,8 @@ import hashlib
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from product_etl_spark.operators.pca import pca_project, pca_train
+from product_etl_spark.operators.pca import pca_moments
 
 
 def _h(s, m=2001):
@@ -33,127 +32,38 @@ def planted(spark):
         )
         rows.append((i, [float(v) for v in x]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    return df, rows, a, b
-
-
-def test_recovers_planted_subspace_and_matches_numpy(planted):
-    df, rows, a, b = planted
-    mean, comps, explained = pca_train(df, "embedding", k=2, dim=8)
-    # the top-2 subspace spans {a, b}: projecting a and b onto the
-    # component span preserves nearly all their norm
-    C = np.array(comps)
-    for v in (a, b):
-        u = v / np.linalg.norm(v)
-        proj = C.T @ (C @ u)
-        assert np.linalg.norm(proj) > 0.99
-    assert explained[0] > explained[1] > 0
-    assert sum(explained) > 0.99  # rank-2 + 1% noise
-    # exact cross-check vs numpy on the same data
-    X = np.array([r[1] for r in rows])
-    mu = X.mean(axis=0)
-    cov = np.cov(X, rowvar=False)
-    evals, evecs = np.linalg.eigh(cov)
-    top = evecs[:, np.argsort(evals)[::-1][:2]].T
-    assert np.allclose(np.asarray(mean), mu, atol=1e-9)
-    for i in range(2):
-        dot = abs(np.dot(top[i], C[i]))
-        assert dot > 1.0 - 1e-8  # same direction up to sign
-
-
-def test_projection_matches_numpy_and_is_map_only(planted):
-    df, rows, *_ = planted
-    mean, comps, _ = pca_train(df, "embedding", k=2, dim=8)
-    out = pca_project(df, mean, comps, "embedding")
-    got = {r["vec_id"]: np.asarray(r["pca_emb"]) for r in out.collect()}
-    X = np.array([r[1] for r in rows])
-    expected = (X - np.asarray(mean)) @ np.array(comps).T
-    for i, r in enumerate(rows):
-        assert np.allclose(got[r[0]], expected[i], atol=1e-9)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan.split("== Initial Plan ==")[0]
-
-
-def test_guards(spark, planted):
-    df, *_ = planted
-    with pytest.raises(ValueError, match="0 < k <= dim"):
-        pca_train(df, "embedding", k=9, dim=8)
-    with pytest.raises(ValueError, match="embedding dim"):
-        pca_train(df, "embedding", k=2, dim=16)
-    two = df.limit(1)
-    with pytest.raises(Exception, match=">= 2 vectors"):
-        pca_train(two, "embedding", k=1, dim=8)
-    with pytest.raises(ValueError, match="length mismatch"):
-        pca_project(df, [0.0] * 8, [[0.0] * 7])
-
-
-def test_pca_rotation_improves_pq_quantization(spark):
-    """The OPQ motivation end-to-end: on CORRELATED data, PQ over the
-    PCA-rotated (decorrelated, variance-sorted) embeddings quantizes
-    with lower trained reconstruction error than PQ over raw
-    embeddings — the reason the rotation precedes quantization in
-    FAISS OPQ pipelines."""
-    from product_etl_spark.operators import pq as PQ
-
-    d, m, k = 8, 4, 4
-    # strongly correlated dims: x_j ~ base + small per-dim jitter
-    rows = []
-    for i in range(400):
-        base = 2.0 * _h(f"base{i}")
-        vec = [float(base + 0.15 * _h(f"j{i},{j}")) for j in range(d)]
-        rows.append((i, vec))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").persist()
-    df.count()
-    mean, comps, _ = pca_train(df, "embedding", k=d, dim=d)
-    rotated = pca_project(df, mean, comps, "embedding", out_col="rot").select(
-        "vec_id", F.col("rot").alias("embedding")
-    ).persist()
-    rotated.count()
-    init = PQ.md5_codebooks(m, k, d // m)
-    raw_books = PQ.train_codebooks(df, "embedding", m=m, k=k, n_iters=3, dim=d, init=init)
-    rot_books = PQ.train_codebooks(rotated, "embedding", m=m, k=k, n_iters=3, dim=d, init=init)
-    err_raw = PQ.quantization_error(df, "embedding", raw_books, dim=d)
-    err_rot = PQ.quantization_error(rotated, "embedding", rot_books, dim=d)
-    assert err_rot < err_raw * 0.95  # measured ~13% gain on this fixture
-    df.unpersist(); rotated.unpersist()
+    return df, rows
 
 
 def test_moments_pin_trainer(planted):
     """q213's contract: the exact-decimal Gram-moment surface
-    (pca_moments) is a complete sufficient statistic for the trainer
-    — pca_train_from_moments consuming EXACTLY the collected q213
-    rows must reproduce pca_train's mean, components, explained
-    shares and projection up to the 1e-6 input rounding the moment
-    surface commits to."""
-    from product_etl_spark.operators.pca import (
-        pca_moments,
-        pca_train_from_moments,
-    )
-
-    df, rows, a, b = planted
-    mean_d, comps_d, expl_d = pca_train(df, "embedding", k=2, dim=8)
+    (pca_moments) is a complete sufficient statistic for a PCA fit —
+    mean and sample covariance rebuilt from EXACTLY the collected
+    q213 rows match numpy's on the same data up to the 1e-6 input
+    rounding the moment surface commits to."""
+    df, rows = planted
     mom = pca_moments(df, "embedding", dim=8).collect()
     assert len(mom) == 8 * 9 // 2
-    mean_m, comps_m, expl_m = pca_train_from_moments(mom, k=2, dim=8)
-    assert np.allclose(mean_m, mean_d, atol=1e-5)
-    assert np.allclose(comps_m, comps_d, atol=1e-4)
-    assert np.allclose(expl_m, expl_d, atol=1e-5)
-    proj_d = pca_project(df, mean_d, comps_d, "embedding").select(
-        "vec_id", "pca_emb"
-    )
-    proj_m = pca_project(df, mean_m, comps_m, "embedding").select(
-        "vec_id", F.col("pca_emb").alias("pca_m")
-    )
-    both = proj_d.join(proj_m, "vec_id").collect()
-    for r in both:
-        assert np.allclose(r["pca_emb"], r["pca_m"], atol=1e-3)
+    n = {r["n"] for r in mom}
+    assert n == {len(rows)}
+    n = n.pop()
+    s = np.zeros(8)
+    gram = np.zeros((8, 8))
+    for r in mom:
+        gram[r["i"], r["j"]] = gram[r["j"], r["i"]] = r["gram"]
+        if r["i"] == r["j"]:
+            s[r["i"]] = r["s_i"]
+    mean = s / n
+    cov = (gram - n * np.outer(mean, mean)) / (n - 1)
+    X = np.array([r[1] for r in rows])
+    assert np.allclose(mean, X.mean(axis=0), atol=1e-6)
+    assert np.allclose(cov, np.cov(X, rowvar=False), atol=1e-5)
 
 
 def test_moments_drop_malformed_pairs(spark):
     """A short vector contributes only to the pairs whose BOTH dims
     it carries — n varies per pair and well-formed rows are never
     contaminated (the documented drop policy)."""
-    from product_etl_spark.operators.pca import pca_moments
-
     df = spark.createDataFrame(
         [(0, [1.0, 2.0]), (1, [3.0, 4.0]), (2, [5.0])],
         "vec_id long, embedding array<double>",
@@ -166,62 +76,11 @@ def test_moments_drop_malformed_pairs(spark):
 
 def test_moments_oversize_embedding_raises(spark):
     """r12 ADVICE guard: an embedding LONGER than dim must FAIL the
-    job loudly (pca_train's raise-on-mismatch policy), never be
-    silently truncated to the first dim positions."""
-    import pytest
-
-    from product_etl_spark.operators.pca import pca_moments
-
+    job loudly, never be silently truncated to the first dim
+    positions."""
     df = spark.createDataFrame(
         [(0, [1.0, 2.0]), (1, [3.0, 4.0, 5.0])],
         "vec_id long, embedding array<double>",
     )
     with pytest.raises(Exception, match="pca_moments.*dims > dim"):
         pca_moments(df, "embedding", dim=2).collect()
-
-
-def test_train_from_moments_inconsistent_n_raises(spark):
-    """r12 ADVICE guard: per-pair drops make the diagonal row counts
-    diverge on a partially-null corpus; the trainer must refuse the
-    inconsistent moment frame instead of silently fitting mean_i =
-    s_i/n with a single n."""
-    import pytest
-
-    from product_etl_spark.operators.pca import (
-        pca_moments,
-        pca_train_from_moments,
-    )
-
-    df = spark.createDataFrame(
-        [(0, [1.0, 2.0]), (1, [3.0, 4.0]), (2, [5.0]), (3, [6.0])],
-        "vec_id long, embedding array<double>",
-    )
-    mom = pca_moments(df, "embedding", dim=2).collect()
-    with pytest.raises(ValueError, match="row counts disagree"):
-        pca_train_from_moments(mom, k=1, dim=2)
-
-
-def test_train_from_moments_uniform_null_ok(spark):
-    """Entirely-null vectors drop uniformly across every pair, so the
-    diagonal counts still agree and the fit proceeds — only
-    PARTIALLY-malformed corpora are refused."""
-    from product_etl_spark.operators.pca import (
-        pca_moments,
-        pca_train_from_moments,
-        pca_train,
-    )
-
-    clean = spark.createDataFrame(
-        [(i, [float(i), float(2 * i + 1)]) for i in range(6)],
-        "vec_id long, embedding array<double>",
-    )
-    noisy = spark.createDataFrame(
-        [(i, [float(i), float(2 * i + 1)]) for i in range(6)]
-        + [(99, None)],
-        "vec_id long, embedding array<double>",
-    )
-    mom = pca_moments(noisy, "embedding", dim=2).collect()
-    mean_m, comps_m, expl_m = pca_train_from_moments(mom, k=1, dim=2)
-    mean_d, comps_d, expl_d = pca_train(clean, "embedding", k=1, dim=2)
-    assert np.allclose(mean_m, mean_d, atol=1e-5)
-    assert np.allclose(comps_m, comps_d, atol=1e-4)

@@ -1,6 +1,6 @@
 """Product quantization: encode determinism + map-only plan, ADC
-ranking vs exact ranking, trained codebooks beating the md5 init,
-IVF-PQ recall on planted clusters, salted top-k equivalence."""
+ranking vs exact ranking on planted clusters, salted top-k
+equivalence."""
 
 from __future__ import annotations
 
@@ -35,6 +35,30 @@ def _planted(spark, n_clusters=4, per_cluster=40, dim=64, spread=0.05):
     return spark.createDataFrame(
         rows, "vec_id int, cluster int, embedding array<float>"
     )
+
+
+def _kmeans_codebooks(df, m=8, k=16, n_iters=3):
+    """Per-subspace Lloyd's k-means in numpy, seeded from every
+    len/k-th vector, so the codebooks fit the planted clusters."""
+    import numpy as np
+
+    X = np.array(
+        [r["embedding"] for r in df.orderBy("vec_id").collect()],
+        dtype=np.float64,
+    )
+    dsub = X.shape[1] // m
+    books = []
+    for s in range(m):
+        sub = X[:, s * dsub : (s + 1) * dsub]
+        cents = sub[:: len(sub) // k][:k].copy()
+        for _ in range(n_iters):
+            d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+            code = d2.argmin(axis=1)
+            for c in range(k):
+                if (code == c).any():
+                    cents[c] = sub[code == c].mean(axis=0)
+        books.append(cents.tolist())
+    return books
 
 
 @pytest.fixture(scope="module")
@@ -79,7 +103,7 @@ def test_adc_topk_matches_exact_neighbors_on_clusters(planted):
     the top-5 neighbors of a query must come from its own cluster —
     and the queries side must broadcast (corpus never shuffles before
     the rank step)."""
-    books = PQ.train_codebooks(planted, "embedding", n_iters=2)
+    books = _kmeans_codebooks(planted)
     queries = planted.filter(F.col("vec_id").isin(0, 45, 90))
     corpus = PQ.pq_encode(
         planted.join(queries.select("vec_id"), "vec_id", "left_anti"),
@@ -99,50 +123,6 @@ def test_adc_topk_matches_exact_neighbors_on_clusters(planted):
             f"query {r['query_id']} pulled neighbor {r['neighbor_id']} "
             "from another cluster"
         )
-
-
-def test_training_reduces_quantization_error(planted):
-    init = PQ.md5_codebooks(8, 16, 8)
-    before = PQ.quantization_error(planted, "embedding", init)
-    trained = PQ.train_codebooks(planted, "embedding", n_iters=3, init=init)
-    after = PQ.quantization_error(planted, "embedding", trained)
-    assert after < before * 0.5, (before, after)
-    # Lloyd's never increases the objective: one more round stays <=
-    more = PQ.train_codebooks(planted, "embedding", n_iters=1, init=trained)
-    assert PQ.quantization_error(planted, "embedding", more) <= after * 1.0001
-
-
-def test_ivf_pq_recall_on_planted_clusters(planted):
-    """IVF coarse-prune + ADC: with nprobe=2 over 4 lists on planted
-    clusters, every query's top-5 stays within its cluster."""
-    books = PQ.train_codebooks(planted, "embedding", n_iters=2)
-    cents = S.ivf_centroids_kmeans(
-        planted, "embedding", "vec_id", n_lists=4, n_iters=3
-    )
-    queries = planted.filter(F.col("vec_id").isin(10, 50, 130))
-    corpus = planted.join(queries.select("vec_id"), "vec_id", "left_anti")
-    got = PQ.knn_ivf_pq(
-        corpus, queries, cents, books, k_neighbors=5, nprobe=2
-    ).collect()
-    assert len(got) == 15
-    cluster_of = {
-        r["vec_id"]: r["cluster"] for r in planted.select("vec_id", "cluster").collect()
-    }
-    for r in got:
-        assert cluster_of[r["neighbor_id"]] == cluster_of[r["query_id"]]
-    # the production path — a prebuilt (persisted) index frame — must
-    # return the identical result set
-    index = PQ.build_ivf_pq_index(corpus, cents, books).persist()
-    try:
-        via_index = PQ.knn_ivf_pq(
-            corpus, queries, cents, books, k_neighbors=5, nprobe=2,
-            coded_corpus=index,
-        ).collect()
-        assert {(r["query_id"], r["neighbor_id"], r["rank"]) for r in got} == {
-            (r["query_id"], r["neighbor_id"], r["rank"]) for r in via_index
-        }
-    finally:
-        index.unpersist()
 
 
 def test_salted_topk_equals_single_window(planted):
@@ -169,43 +149,6 @@ def test_salted_topk_equals_single_window(planted):
         assert got == base, f"n_salt={n_salt} diverged"
 
 
-def test_persisted_ivf_pq_index_matches_inmemory(spark, planted, tmp_path):
-    """write_ivf_pq_index -> knn_ivf_pq_index must (a) partition-prune
-    the codes scan to the probed lists and (b) return exactly what the
-    in-memory composition returns for the same centroids/codebooks."""
-    path = str(tmp_path / "pq_index")
-    PQ.write_ivf_pq_index(planted, "embedding", "vec_id", path, n_lists=4)
-    queries = planted.filter(F.col("vec_id").isin(7, 77))
-    got = PQ.knn_ivf_pq_index(
-        spark, path, queries, k_neighbors=5, nprobe=2
-    )
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    scan_lines = [
-        ln for ln in plan.splitlines()
-        if "Scan parquet" in ln or "PartitionFilters" in ln
-    ]
-    assert any(
-        "PartitionFilters: [list_id" in ln for ln in scan_lines
-    ), scan_lines
-    books = PQ.md5_codebooks(8, 16, 8)
-    cents = S.ivf_centroids(planted, "embedding", "vec_id", n_lists=4)
-    expected = PQ.knn_ivf_pq(
-        planted, queries, cents, books, k_neighbors=5, nprobe=2
-    )
-    assert {(r["query_id"], r["neighbor_id"], r["rank"]) for r in got.collect()} == {
-        (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in expected.collect()
-    }
-    # round-trip of the stored codebooks is exact
-    assert PQ.read_codebooks(spark, path) == books
-
-
-def test_train_codebooks_deterministic(planted):
-    a = PQ.train_codebooks(planted, "embedding", n_iters=2)
-    b = PQ.train_codebooks(planted, "embedding", n_iters=2)
-    assert a == b
-
-
 def test_query_dim_mismatch_raises(spark, planted):
     """A query frame with wrong-dim embeddings must fail LOUDLY —
     otherwise NULL distances sort NULLS FIRST and the top-k is
@@ -217,25 +160,6 @@ def test_query_dim_mismatch_raises(spark, planted):
     )
     with pytest.raises(ValueError, match="dim 32"):
         PQ.pq_adc_topk(corpus, bad_q, books, k_neighbors=3)
-    cents = S.ivf_centroids(planted, "embedding", "vec_id", n_lists=4)
-    with pytest.raises(ValueError, match="dim 32"):
-        PQ.knn_ivf_pq(planted, bad_q, cents, books, k_neighbors=3)
-
-
-def test_train_init_geometry_mismatch_raises(planted):
-    init = PQ.md5_codebooks(16, 16, 4)  # tiles 64 dims, but m=8 asked
-    with pytest.raises(ValueError, match="init codebooks"):
-        PQ.train_codebooks(planted, "embedding", m=8, k=16, init=init)
-
-
-def test_quantization_error_empty_raises(planted):
-    from pyspark.sql import functions as F2
-
-    books = PQ.md5_codebooks(8, 16, 8)
-    with pytest.raises(ValueError, match="empty"):
-        PQ.quantization_error(
-            planted.filter(F2.lit(False)), "embedding", books
-        )
 
 
 def test_topk_reserved_column_collision_raises(planted):
@@ -294,50 +218,3 @@ def test_encode_corrupt_row_behind_valid_first_raises(spark, planted):
     with pytest.raises((Py4JJavaError, SparkRuntimeException, Exception)) as ei:
         PQ.pq_encode(good.unionByName(nulled), "embedding", books).collect()
     assert "pq_encode" in str(ei.value)
-
-
-def test_append_to_index_equals_full_build(spark, planted, tmp_path):
-    """Build an index on half the corpus, append the other half: every
-    probe must return exactly what a full-corpus build returns (same
-    frozen centroids/codebooks -> same codes -> same ADC ranks)."""
-    first = planted.filter(F.col("vec_id") % 2 == 0)
-    second = planted.filter(F.col("vec_id") % 2 == 1)
-    inc_path = str(tmp_path / "inc")
-    full_path = str(tmp_path / "full")
-    PQ.write_ivf_pq_index(first, "embedding", "vec_id", inc_path)
-    n = PQ.append_to_ivf_pq_index(spark, inc_path, second)
-    assert n == second.count()
-    # full build with the SAME deterministic centroids: seed from the
-    # same half so coarse centroids match the incremental index
-    from product_etl_spark.operators.similarity import ivf_centroids
-
-    cents = ivf_centroids(first, "embedding", "vec_id", n_lists=4)
-    books = PQ.md5_codebooks(8, 16, 8)
-    coded_full = PQ.build_ivf_pq_index(planted, cents, books)
-    coded_full.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{full_path}/codes"
-    )
-    cents.write.mode("overwrite").parquet(f"{full_path}/centroids")
-    rows = [(s, c, books[s][c]) for s in range(8) for c in range(16)]
-    spark.createDataFrame(
-        rows, "sub int, code int, centroid array<double>"
-    ).write.mode("overwrite").parquet(f"{full_path}/codebooks")
-
-    queries = planted.filter(F.col("vec_id") < 3)
-    got_inc = PQ.knn_ivf_pq_index(spark, inc_path, queries, k_neighbors=5)
-    got_full = PQ.knn_ivf_pq_index(spark, full_path, queries, k_neighbors=5)
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    inc_rows = sorted(
-        ((r["query_id"], r["rank"], r["neighbor_id"]) for r in got_inc.collect())
-    )
-    full_rows = sorted(
-        ((r["query_id"], r["rank"], r["neighbor_id"]) for r in got_full.collect())
-    )
-    assert inc_rows == full_rows and len(inc_rows) == 15
-    # appended rows landed in the existing partition layout
-    import os
-
-    lists = sorted(
-        d for d in os.listdir(f"{inc_path}/codes") if d.startswith("list_id=")
-    )
-    assert lists and all("=" in d for d in lists)

@@ -168,52 +168,6 @@ def test_hybrid_rrf_lex_only_and_vec_only_docs_surface(spark):
     assert 0 in by_id
 
 
-def test_mmr_rerank_diversifies(spark):
-    """Two near-identical top candidates: plain relevance order keeps
-    both at 1-2; MMR demotes the redundant twin below a less-relevant
-    but novel doc. Singleton scores degrade gracefully; candidate-
-    bound violations raise."""
-    import pytest as _pt
-
-    from product_etl_spark.operators.retrieval import mmr_rerank
-
-    rows = [
-        # (query, doc, rel, embedding)
-        (1, 10, 1.00, [1.0, 0.0]),
-        (1, 11, 0.99, [1.0, 0.001]),   # near-clone of 10
-        (1, 12, 0.50, [0.0, 1.0]),     # novel direction
-        (1, 13, 0.10, [0.7, 0.7]),
-    ]
-    cand = spark.createDataFrame(
-        rows, "query_id int, doc_id int, rel_score double, embedding array<double>"
-    )
-    got = mmr_rerank(cand, k=3, lam=0.5).orderBy("mmr_rank").collect()
-    order = [r["doc_id"] for r in got]
-    assert order[0] == 10            # most relevant first
-    assert order[1] == 12            # novel beats the clone
-    assert order[2] == 11
-    assert [r["mmr_rank"] for r in got] == [1, 2, 3]
-
-    # per-query groups are independent
-    two_q = cand.unionByName(
-        spark.createDataFrame(
-            [(2, 20, 1.0, [1.0, 0.0]), (2, 21, 0.9, [0.0, 1.0])],
-            "query_id int, doc_id int, rel_score double, embedding array<double>",
-        )
-    )
-    per_q = mmr_rerank(two_q, k=2).groupBy("query_id").count().collect()
-    assert {r["query_id"]: r["count"] for r in per_q} == {1: 2, 2: 2}
-
-    big = spark.range(10_001).select(
-        F.lit(1).alias("query_id"),
-        F.col("id").alias("doc_id"),
-        F.lit(1.0).alias("rel_score"),
-        F.array(F.lit(1.0), F.lit(0.0)).alias("embedding"),
-    )
-    with _pt.raises(Exception, match="bounded-candidate"):
-        mmr_rerank(big, k=2).collect()
-
-
 def test_trigram_contains_search_gate_and_verify(spark):
     """The trigram gate may admit a false candidate (all needle
     trigrams present, not contiguous) — verification must reject it;

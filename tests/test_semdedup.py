@@ -91,119 +91,6 @@ def test_semdedup_idempotent_on_survivors(spark):
     assert second.filter("kept = 0").count() == 0
 
 
-def _seed_centroids(spark, corpus, n_cells):
-    """The semdedup_exact seed rule, materialized once so every batch
-    shares the same cell geometry."""
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.col("vec_id"))
-    return (
-        corpus.orderBy(F.col("vec_id").asc())
-        .limit(n_cells)
-        .select(
-            (F.row_number().over(w) - 1).alias("list_id"),
-            F.col("embedding").alias("_cent"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-
-def test_incremental_ascending_ingest_equals_batch(spark, tmp_path):
-    """Two ascending-id batches through the store reproduce
-    semdedup_exact over the union: same kept ids, and the cross-cell
-    perfect dup still survives."""
-    from product_etl_spark.operators.similarity import (
-        incremental_semdedup,
-        semdedup_exact,
-    )
-
-    corpus = _fixture(spark)
-    cents = _seed_centroids(spark, corpus, 2)
-    store = str(tmp_path / "sem_store")
-
-    b1 = corpus.filter(F.col("vec_id") <= 2)
-    b2 = corpus.filter(F.col("vec_id") > 2)
-    acc1, rej1 = incremental_semdedup(
-        spark, b1, store, cents, threshold=0.95
-    )
-    acc2, rej2 = incremental_semdedup(
-        spark, b2, store, cents, threshold=0.95
-    )
-    got_kept = sorted(
-        [r["vec_id"] for r in acc1.collect()]
-        + [r["vec_id"] for r in acc2.collect()]
-    )
-    want_kept = sorted(
-        r["vec_id"]
-        for r in semdedup_exact(
-            corpus, "embedding", "vec_id", n_cells=2, threshold=0.95
-        ).filter("kept = 1").collect()
-    )
-    assert got_kept == want_kept == [0, 1, 2, 3]
-    rej = rej2.collect()
-    assert [(r["vec_id"], r["matched_id"]) for r in rej] == [(4, 0)]
-    assert rej[0]["cos_sim"] >= 0.95
-
-
-def test_incremental_replay_is_idempotent(spark, tmp_path):
-    """Re-ingesting a batch rejects every row against its OWN stored
-    copy (cos 1.0) and appends nothing."""
-    from product_etl_spark.operators.similarity import incremental_semdedup
-
-    corpus = _fixture(spark)
-    cents = _seed_centroids(spark, corpus, 2)
-    store = str(tmp_path / "sem_store")
-
-    acc1, _ = incremental_semdedup(spark, corpus, store, cents, threshold=0.95)
-    n_stored = spark.read.parquet(store).count()
-    assert n_stored == acc1.count() == 4
-
-    acc2, rej2 = incremental_semdedup(
-        spark, corpus, store, cents, threshold=0.95
-    )
-    assert acc2.count() == 0
-    replays = {
-        r["vec_id"]: (r["matched_id"], r["cos_sim"]) for r in rej2.collect()
-    }
-    for vid in (0, 1, 2, 3):
-        assert replays[vid] == (vid, 1.0)  # self-collision
-    assert spark.read.parquet(store).count() == n_stored
-
-
-def test_incremental_store_is_cell_partitioned_and_erasable(spark, tmp_path):
-    """RTBF through the cell-partitioned store: erase vec 0, its
-    near-dup is accepted on the next ingest; a near-dup of a SURVIVOR
-    is still rejected; the list_id layout survives the rewrite."""
-    import os
-
-    from product_etl_spark.operators.erasure import erase_from_stores
-    from product_etl_spark.operators.similarity import incremental_semdedup
-
-    corpus = _fixture(spark)
-    cents = _seed_centroids(spark, corpus, 2)
-    store = str(tmp_path / "sem_store")
-    incremental_semdedup(spark, corpus, store, cents, threshold=0.95)
-    assert any(e.startswith("list_id=") for e in os.listdir(store))
-
-    erased = spark.createDataFrame([(0,)], "vec_id long")
-    report = erase_from_stores(
-        spark,
-        erased,
-        [{"path": store, "id_col": "vec_id", "partition_by": ["list_id"]}],
-    )
-    assert report[store] == 1
-    assert any(e.startswith("list_id=") for e in os.listdir(store))
-
-    probe = spark.createDataFrame(
-        [(100, [1.0, 0.001]), (101, [9.8, 0.1])],
-        "vec_id long, embedding array<float>",
-    )
-    acc, rej = incremental_semdedup(spark, probe, store, cents, threshold=0.95)
-    assert [r["vec_id"] for r in acc.collect()] == [100]  # vec 0 forgotten
-    got = rej.collect()
-    assert [(r["vec_id"], r["matched_id"]) for r in got] == [(101, 1)]
-
-
 def test_semdedup_degenerate_cell_guard(spark):
     """A planted degenerate cell (all vectors collapsing onto one
     list_id) must FAIL the job loudly before the O(cell^2) pair join

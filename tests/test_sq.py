@@ -1,6 +1,6 @@
 """SQ8 scalar quantization: round-trip error bounds, constant-dim
-edge, re-rank recall, streaming transparency (cross-engine parity
-via q119 in tests/test_oracle_parity.py)."""
+edge, streaming transparency (cross-engine parity via q119 in
+tests/test_oracle_parity.py)."""
 
 from __future__ import annotations
 
@@ -34,13 +34,13 @@ def test_roundtrip_error_bounded_and_constant_dim_exact(vecs):
     bounds = SQ.sq8_train(vecs, "embedding", dim=16)
     mins, maxs = bounds
     assert mins[7] == maxs[7] == pytest.approx(0.25, abs=1e-6)
-    coded = SQ.sq8_encode(vecs, "embedding", bounds)
-    deq = coded.withColumn("_deq", SQ.sq8_decode_expr("sq_code", bounds))
-    rows = deq.select("embedding", "_deq", "sq_code").collect()
+    rows = SQ.sq8_encode(vecs, "embedding", bounds).collect()
     for r in rows:
         assert all(-128 <= c <= 127 for c in r["sq_code"])  # tinyint
-        for j, (x, y) in enumerate(zip(r["embedding"], r["_deq"])):
+        for j, (x, c) in enumerate(zip(r["embedding"], r["sq_code"])):
             span = maxs[j] - mins[j]
+            # decode: min + (code + 128) * span / 255, span 1 if constant
+            y = mins[j] + (c + 128) * (span or 1.0) / 255.0
             if span == 0:
                 assert y == pytest.approx(x, abs=1e-6)  # exact constant
             else:
@@ -81,39 +81,6 @@ def test_encode_is_map_only_and_streamable(vecs, spark, tmp_path):
     assert got == want
 
 
-def test_sq8_rerank_finds_true_neighbor(vecs):
-    """SQ8 distances are near-exact: the top-1 by sq8 re-rank must be
-    the true L2 top-1 (quantization error half-step per dim)."""
-    from product_etl_spark.functions import vectors as V
-
-    bounds = SQ.sq8_train(vecs, "embedding", dim=16)
-    queries = vecs.filter(F.col("vec_id") < 2)
-    corpus = vecs.filter(F.col("vec_id") >= 2)
-    coded = SQ.sq8_encode(corpus, "embedding", bounds)
-    got = {
-        r["query_id"]: r["neighbor_id"]
-        for r in SQ.sq8_l2_rerank(coded, queries, bounds, k_neighbors=1).collect()
-    }
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_q")
-    )
-    exact = (
-        corpus.crossJoin(q)
-        .select(
-            "query_id",
-            "vec_id",
-            V.l2_distance("_q", "embedding").alias("d"),
-        )
-        .collect()
-    )
-    best = {}
-    for r in exact:
-        cur = best.get(r["query_id"])
-        if cur is None or (r["d"], r["vec_id"]) < cur:
-            best[r["query_id"]] = (r["d"], r["vec_id"])
-    assert got == {k: v[1] for k, v in best.items()}
-
-
 def test_train_rejects_empty(spark):
     with pytest.raises(ValueError, match="dimensions"):
         SQ.sq8_train(
@@ -138,12 +105,6 @@ def test_encode_rejects_short_and_null_rows(spark, vecs):
         )
         with pytest.raises(Exception, match="sq8_encode"):
             SQ.sq8_encode(df, "embedding", bounds).collect()
-    with pytest.raises(Exception, match="sq8_l2_rerank"):
-        SQ.sq8_l2_rerank(
-            SQ.sq8_encode(vecs, "embedding", bounds),
-            spark.createDataFrame(short, "vec_id int, embedding array<float>"),
-            bounds,
-        ).collect()
 
 
 def test_binary_hash_matches_python_model(vecs):

@@ -97,31 +97,3 @@ def test_streaming_dim_mismatch_fails_batch(spark, tmp_path):
             str(tmp_path / "bad_out"),
             str(tmp_path / "bad_ckpt"),
         )
-
-
-def test_pca_projection_runs_unchanged_on_streams(spark, tmp_path):
-    """pca_project inlines mean+components as literals (pure map), so
-    the same call must run on a readStream frame and emit exactly the
-    batch projection — the embedding-firehose preprocessing story."""
-    from product_etl_spark.operators.pca import pca_project, pca_train
-
-    src = str(tmp_path / "pca_src")
-    rows = [(i, [float((i * 7 + j * 3) % 11) / 5.0 for j in range(8)])
-            for i in range(20)]
-    spark.createDataFrame(rows, "vec_id int, embedding array<double>").write.parquet(src)
-    batch = spark.read.parquet(src)
-    mean, comps, _ = pca_train(batch, "embedding", k=3, dim=8)
-    stream = spark.readStream.schema(
-        "vec_id int, embedding array<double>"
-    ).parquet(src)
-    out, ckpt = str(tmp_path / "pca_out"), str(tmp_path / "pca_ckpt")
-    _drain(pca_project(stream, mean, comps, "embedding"), out, ckpt)
-    got = {
-        r["vec_id"]: tuple(round(v, 9) for v in r["pca_emb"])
-        for r in spark.read.parquet(out).collect()
-    }
-    want = {
-        r["vec_id"]: tuple(round(v, 9) for v in r["pca_emb"])
-        for r in pca_project(batch, mean, comps, "embedding").collect()
-    }
-    assert got == want and len(got) == 20

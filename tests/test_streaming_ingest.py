@@ -106,28 +106,3 @@ def test_max_files_per_trigger_per_file_import_semantics(spark, tmp_path):
     assert coll[0]["sku"] == "var-sku" and coll[0]["inventory"] == 2
     prods = {r["sku"] for r in spark.read.parquet(str(wh / "product")).collect()}
     assert prods == {"var2-sku"}
-
-
-def test_stream_ingest_respects_suppression_list(spark, tmp_path):
-    """The ingest-side half of erasure: a feed re-delivering an erased
-    subject must not re-create it in the warehouse."""
-    src = tmp_path / "incoming"
-    src.mkdir()
-    wh, ckpt, sup = tmp_path / "wh", tmp_path / "ckpt", str(tmp_path / "sup")
-
-    # the suppression list says master m1 was erased
-    spark.createDataFrame([("m1",)], "subject_key string").write.parquet(sup)
-
-    _drop_file(src, "batch1.csv", [
-        "m1;s1;沙发;100;5",     # erased subject, must not land
-        "m2;s3;地毯;50;9",
-        "m2;s4;;60;2",
-    ])
-    q = stream_ingest_csv(
-        spark, str(src), str(wh), str(ckpt), HEADER_COLS,
-        suppression_path=sup, suppression_key="Master Code",
-    )
-    q.awaitTermination()
-    coll = {r["master_code"] for r in
-            spark.read.parquet(str(wh / "product_collection")).collect()}
-    assert coll == {"m2"}

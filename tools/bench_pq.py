@@ -7,12 +7,13 @@ Measures, at BENCH_PQ_VECS vectors x 64 dims:
   number that scales linearly with cluster cores at 100 TB),
 - pq_adc_topk wall for BENCH_PQ_QUERIES queries over the coded
   corpus (broadcast queries + bounded single-window top-k),
-- knn_ivf_pq wall for the same queries with nprobe/n_lists pruning,
+- sq8_encode, bin_sign_encode and hamming_topk walls over the same
+  corpus,
 - ADC top-1 agreement with exact (uncompressed) L2 top-1 on planted
   clusters — the compression-quality sanity number.
 
 Env: BENCH_PQ_VECS (default 200000), BENCH_PQ_QUERIES (8),
-BENCH_PQ_LISTS (16).
+BENCH_PQ_LISTS (16 planted clusters).
 """
 
 from __future__ import annotations
@@ -27,7 +28,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from product_etl_spark.operators import pq as PQ  # noqa: E402
-from product_etl_spark.operators import similarity as S  # noqa: E402
 from product_etl_spark.session import get_spark  # noqa: E402
 
 N = int(os.environ.get("BENCH_PQ_VECS", "200000"))
@@ -80,21 +80,6 @@ def main():
     adc_rows = adc.collect()
     t_adc = time.time() - t0
 
-    cents = S.ivf_centroids_kmeans(
-        corpus, "embedding", "vec_id", n_lists=NLISTS, n_iters=2
-    )
-    t0 = time.time()
-    index = PQ.build_ivf_pq_index(rest, cents, books, dim=DIM).persist()
-    index.count()
-    t_index = time.time() - t0
-    t0 = time.time()
-    ivfpq = PQ.knn_ivf_pq(
-        rest, queries, cents, books, k_neighbors=5, nprobe=2, dim=DIM,
-        coded_corpus=index,
-    )
-    ivfpq_rows = ivfpq.collect()
-    t_ivfpq = time.time() - t0
-
     # SQ8 + binary-hash throughput over the same corpus
     from product_etl_spark.operators import sq as SQmod
 
@@ -103,11 +88,6 @@ def main():
     sq_coded = SQmod.sq8_encode(rest, "embedding", bounds).persist()
     sq_coded.count()
     t_sq_encode = time.time() - t0
-    t0 = time.time()
-    sq_rows = SQmod.sq8_l2_rerank(
-        sq_coded, queries, bounds, k_neighbors=5
-    ).collect()
-    t_sq_rerank = time.time() - t0
 
     thr = SQmod.midrange_thresholds(bounds)
     t0 = time.time()
@@ -141,15 +121,10 @@ def main():
                 "encode_sec": round(t_encode, 2),
                 "encode_vecs_per_sec": round(n / t_encode),
                 "adc_topk_sec": round(t_adc, 2),
-                "ivfpq_index_build_sec": round(t_index, 2),
-                "ivfpq_topk_sec": round(t_ivfpq, 2),
                 "n_queries": NQ,
                 "adc_rows": len(adc_rows),
-                "ivfpq_rows": len(ivfpq_rows),
                 "adc_top1_cluster_agreement": f"{agree}/{NQ}",
                 "sq8_encode_sec": round(t_sq_encode, 2),
-                "sq8_rerank_sec": round(t_sq_rerank, 2),
-                "sq8_rows": len(sq_rows),
                 "bin_encode_sec": round(t_bin_encode, 2),
                 "hamming_topk_sec": round(t_hamming, 2),
                 "hamming_rows": len(ham_rows),
